@@ -13,6 +13,9 @@ import org.apache.spark.sql.functions._
   */
 object EtlOps {
 
+  /** The surrogate-key column every sink is keyed and anti-joined on. */
+  val KeyColumn = "surrogate_key"
+
   /** P1 + P2 — select the configured raw columns, rename to canonical
     * names (data_manager.py:49–53). */
   def selectAndRename(originalFields: Map[String, String])(df: DataFrame): DataFrame =
@@ -30,7 +33,7 @@ object EtlOps {
     * (data_manager.py:62–63). 32-char lowercase hex, same as
     * hashlib.md5(...).hexdigest(). */
   def withSurrogateKey(keyCols: Seq[String])(df: DataFrame): DataFrame =
-    df.withColumn("surrogate_key", md5(concatKey(keyCols)))
+    df.withColumn(KeyColumn, md5(concatKey(keyCols)))
 
   /** P4 — per-file literal metadata + UTC load timestamp
     * (data_manager.py:66). */
@@ -74,14 +77,8 @@ object EtlOps {
   def withYm(src: String, dst: String)(df: DataFrame): DataFrame =
     df.withColumn(dst, date_format(col(src), "yyyy-MM"))
 
-  /** F7 — decimal-comma amount normalization with coerce-to-null
-    * (data_manager.py:75): "1.234,56"-style -> 1234.56, junk -> null. */
-  def parseDecimalComma(src: String, dst: String)(df: DataFrame): DataFrame =
-    df.withColumn(dst,
-      expr(s"try_cast(replace(replace(`$src`, '.', ''), ',', '.') as double)"))
-
-  /** F7 (plain variant) — comma-as-decimal-separator only, no thousands
-    * separators: "1234,56" -> 1234.56. */
+  /** F7 — comma-as-decimal-separator amount with coerce-to-null
+    * (data_manager.py:75): "1234,56" -> 1234.56, junk -> null. */
   def parseCommaDecimal(src: String, dst: String)(df: DataFrame): DataFrame =
     df.withColumn(dst, expr(s"try_cast(replace(`$src`, ',', '.') as double)"))
 
@@ -110,7 +107,6 @@ object EtlOps {
     * against a huge key table, pre-bucket the sink by surrogate_key so
     * this join is shuffle-free on the keys side.
     */
-  def antiJoinNewRecords(src: DataFrame, existingKeys: DataFrame,
-      keyColumn: String = "surrogate_key"): DataFrame =
-    src.join(existingKeys.select(keyColumn), Seq(keyColumn), "left_anti")
+  def antiJoinNewRecords(src: DataFrame, existingKeys: DataFrame): DataFrame =
+    src.join(existingKeys.select(KeyColumn), Seq(KeyColumn), "left_anti")
 }

@@ -1,10 +1,10 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -83,7 +83,7 @@ object EtlPipeline {
     * scalar battery applied (data_manager.py:69–87). */
   def buildFilePlan(spark: SparkSession, path: String, bank: String,
       accType: String, mappingType: String, cfg: FileMappingConfig): DataFrame = {
-    val fileName = Paths.get(path).getFileName.toString
+    val fileName = new Path(path).getName
     val base = readCsv(spark, path, cfg.csvSeparator, csvHeader(spark, path, cfg.csvSeparator))
     val shaped = EtlOps.selectAndRename(cfg.originalFields)(base)
     val keyed = EtlOps.withFileMetadata(bank, accType, fileName)(
@@ -122,12 +122,14 @@ object EtlPipeline {
     * parallel across the cluster.
     */
   def processCsvFiles(spark: SparkSession, dir: String, config: EtlConfig): Map[String, DataFrame] = {
-    val files = Files.list(Paths.get(dir)).iterator().asScala
-      .map(_.toString).filter(_.toLowerCase.endsWith(".csv")).toSeq.sorted
+    val root = new Path(dir)
+    val files = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(root)
+      .filter(f => f.isFile && f.getPath.getName.toLowerCase.endsWith(".csv"))
+      .map(_.getPath).sortBy(_.getName).toSeq
     if (files.isEmpty)
       throw new IllegalArgumentException(s"no csv files found in $dir") // settings.py:41–44
-    val plans = files.flatMap { path =>
-      val name = Paths.get(path).getFileName.toString
+    val plans = files.flatMap { file =>
+      val name = file.getName
       val routed = for {
         (bank, accType, mappingType) <- extractFileMeta(config, name)
         cfg <- routeConfig(config, mappingType, bank)
@@ -137,7 +139,7 @@ object EtlPipeline {
           log.warn(s"skipping $name: unroutable (pattern/config miss)")
           None
         case Some((bank, accType, mappingType, cfg)) =>
-          try Some(mappingType -> buildFilePlan(spark, path, bank, accType, mappingType, cfg))
+          try Some(mappingType -> buildFilePlan(spark, file.toString, bank, accType, mappingType, cfg))
           catch {
             case NonFatal(e) =>
               log.warn(s"skipping $name: ${e.getMessage}")
@@ -150,68 +152,50 @@ object EtlPipeline {
     }
   }
 
-  /** EP1 steps 4–6 — incremental load (J1 + S6): anti-join the batch
-    * against the sink's existing keys, append only new records,
-    * partitioned by the config's year-month column when present
-    * (scale: partition pruning for downstream readers + bounded file
-    * counts per partition). */
-  def incrementalAppend(spark: SparkSession, batch: DataFrame, sinkPath: String,
-      ymColumn: Option[String] = None): Long = {
-    val fresh =
-      if (Files.exists(Paths.get(sinkPath))) {
-        val existing = spark.read.parquet(sinkPath).select("surrogate_key")
-        EtlOps.antiJoinNewRecords(batch, existing)
-      } else batch
-    val toWrite = fresh.cache()
-    try {
-      val n = toWrite.count()
-      if (n > 0) {
-        val w = toWrite.write.mode("append")
-        ymColumn.fold(w)(c => w.partitionBy(c)).parquet(sinkPath)
-      }
-      n
-    } finally toWrite.unpersist()
+  /** EP1 steps 4–6 — the incremental load (J1 + S6) every sink shares
+    * (data_manager.py:172–201), as ONE action: anti-join `batch`
+    * against the sink's loaded keys (`None`: no sink yet, every key is
+    * new), collapse same-key survivors to one row, and hand the result
+    * to the sink's `write`. Returns the rows appended, counted by an
+    * `observe()` on that write: no cache, no second job.
+    *
+    * Intra-batch dedup: the anti-join only sees keys already in the
+    * sink, so two same-key rows inside one batch would both pass it
+    * (no engine-side unique constraint). The survivor is the max over
+    * all non-key columns — arbitrary but DETERMINISTIC, so re-running
+    * the identical pipeline persists identical rows (dropDuplicates
+    * would pick by task order). Anti-joining first means only the new
+    * rows reach the dedup shuffle.
+    *
+    * The write runs even for an empty result: a parquet sink then
+    * holds only `_SUCCESS`, which is why adapters read keys with an
+    * explicit schema rather than inferring one. */
+  def appendNewRecords(batch: DataFrame, loadedKeys: Option[DataFrame])(
+      write: DataFrame => Unit): Long = {
+    val fresh = loadedKeys.fold(batch)(EtlOps.antiJoinNewRecords(batch, _))
+    val survivor = Window.partitionBy(EtlOps.KeyColumn)
+      .orderBy(fresh.columns.map(col(_).desc).toSeq: _*)
+    val deduped = fresh.withColumn("__rn", row_number().over(survivor))
+      .filter(col("__rn") === 1).drop("__rn")
+    val obs = Observation()
+    write(deduped.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
   }
 
-  /** Load-reconciliation metrics for [[incrementalAppendObserved]].
-    * `nRows`/`nNullKeys` are exact; `nYmApprox` is an HLL estimate
-    * (DISTINCT is disallowed in observed metrics) — treat it as a
-    * sanity signal, and read the written partition directories when
-    * an exact partition count matters. */
-  final case class LoadMetrics(nRows: Long, nNullKeys: Long, nYmApprox: Long)
-
-  /** Single-pass observed variant of [[incrementalAppend]]: the
-    * reconciliation counters every production load wants (rows
-    * appended, null surrogate keys, distinct partitions touched) ride
-    * the write itself via `observe()` — ONE pass over the batch, no
-    * cache, no separate count job. The 100 TB shape: instrumentation
-    * must never double-scan the data it audits.
-    *
-    * Trade-off vs [[incrementalAppend]]: an empty batch still runs
-    * the (empty) write, so prefer this on paths where batches are
-    * rarely empty — or follow with [[Compaction]] which absorbs
-    * stray small files anyway. */
-  def incrementalAppendObserved(
-      spark: SparkSession, batch: DataFrame, sinkPath: String,
-      ymColumn: Option[String] = None): LoadMetrics = {
-    import org.apache.spark.sql.Observation
-    val fresh =
-      if (Files.exists(Paths.get(sinkPath))) {
-        val existing = spark.read.parquet(sinkPath).select("surrogate_key")
-        EtlOps.antiJoinNewRecords(batch, existing)
-      } else batch
-    val obs = Observation()
-    val observed = fresh.observe(obs,
-      count(lit(1)).as("n_rows"),
-      (count(lit(1)) - count(col("surrogate_key"))).as("n_null_keys"),
-      ymColumn.map(c => approx_count_distinct(col(c)))
-        .getOrElse(lit(0L)).as("n_ym"))
-    val w = observed.write.mode("append")
-    ymColumn.fold(w)(c => w.partitionBy(c)).parquet(sinkPath)
-    val m = obs.get
-    LoadMetrics(
-      m("n_rows").asInstanceOf[Long],
-      m("n_null_keys").asInstanceOf[Long],
-      m("n_ym").asInstanceOf[Long])
+  /** The parquet sink adapter: loaded keys come from `sinkPath`
+    * (located through the Hadoop FileSystem API, so HDFS/S3/local all
+    * work), and the append is partitioned by the config's year-month
+    * column when present (scale: partition pruning for downstream
+    * readers + bounded file counts per partition). */
+  def incrementalAppend(spark: SparkSession, batch: DataFrame, sinkPath: String,
+      ymColumn: Option[String] = None): Long = {
+    val sink = new Path(sinkPath)
+    val fs = sink.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val loaded = Option.when(fs.exists(sink))(
+      spark.read.schema(s"${EtlOps.KeyColumn} STRING").parquet(sinkPath))
+    appendNewRecords(batch, loaded) { fresh =>
+      val w = fresh.write.mode("append")
+      ymColumn.fold(w)(c => w.partitionBy(c)).parquet(sinkPath)
+    }
   }
 }

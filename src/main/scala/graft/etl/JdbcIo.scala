@@ -6,17 +6,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reads existing surrogate keys from and appends new records to an
   * RDBMS (db_manager.py:56–57 key scan, :85–91 `to_sql` append), with
   * tables bootstrapped drop-and-recreate by db_init.py:91–95. The
-  * parquet twins in [[EtlPipeline]]/[[SchemaInit]] remain the lake
-  * path; this module is the database path, exercised in tests against
+  * parquet sink of [[EtlPipeline.incrementalAppend]] is the lake path;
+  * this module is the database path, exercised in tests against
   * embedded Derby (on the Spark classpath — no network, no server).
+  * Both are adapters of the one load, [[EtlPipeline.appendNewRecords]]
+  * (anti-join, deterministic intra-batch dedup, one observed write):
+  * the sink only changes where keys come from and where rows go.
   *
-  * Scale design (100 TB): the key scan pulls ONLY the key column and
-  * pushes the projection into the database (`query` option — the
+  * Scale design (100 TB): the key scan pulls ONLY the key column, and
+  * Spark's JDBC scan pushes that projection into the database (the
   * database sends keys, never full rows); the append streams
-  * partition-parallel INSERTs sized by `batchsize`. The anti-join
-  * itself is the same [[EtlOps.antiJoinNewRecords]] broadcast/shuffle
-  * plan as the parquet twin — the sink only changes where keys come
-  * from and where rows go.
+  * partition-parallel INSERTs sized by `batchsize`.
   *
   * PostgreSQL dialect seam: the reference's actual sink is Postgres
   * (db_manager.py:15–17). The full Spark JDBC path is proven against
@@ -33,14 +33,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * mapping go through Spark's per-database `JdbcDialect`; note the
   * TIMESTAMP_NTZ round-trip pinned there (a bare TIMESTAMP fragment
   * re-renders as `timestamptz` on pg). Transactionality is the other
-  * deliberate gap: the
-  * reference wraps DDL+insert in one session_scope transaction
-  * (db_manager.py:24–41); Spark's JDBC append commits per partition
-  * batch, so a mid-write failure can leave a partial append. The
+  * deliberate gap: the reference wraps DDL+insert in one session_scope
+  * transaction (db_manager.py:24–41); Spark's JDBC append commits per
+  * partition, so a mid-write failure can leave a partial append. The
   * pipeline's correctness does not rest on rollback — the surrogate-key
   * anti-join makes re-runs idempotent (a retry appends only the rows
-  * that didn't land) — and the streaming side's exactly-once
-  * foreachBatch sink covers the continuous path.
+  * that didn't land; `IncrementalLoadSpec`'s crash re-run test pins a
+  * crashed-then-re-run sink equal to a clean single run) — and the
+  * streaming side's foreachBatch sink covers the continuous path.
   */
 object JdbcIo {
 
@@ -94,12 +94,11 @@ object JdbcIo {
     * Spark's JDBC scan (JDBCRDD emits `SELECT "key" FROM table` with
     * dialect-correct identifier quoting — a hand-written `query` option
     * would have to re-solve per-database case folding). */
-  def existingKeys(spark: SparkSession, target: JdbcTarget, table: String,
-      keyColumn: String = "surrogate_key"): DataFrame =
+  def existingKeys(spark: SparkSession, target: JdbcTarget, table: String): DataFrame =
     reader(spark, target)
       .option("dbtable", table)
       .load()
-      .select(keyColumn)
+      .select(EtlOps.KeyColumn)
 
   /** Existence probe through driver-level JDBC metadata — an explicit
     * check, NOT a swallowed read failure: a connection error during the
@@ -117,44 +116,14 @@ object JdbcIo {
     } finally conn.close()
   }
 
-  /** S6 — incremental append (db_manager.py:85–91): anti-join the
-    * batch against the sink's existing keys, append only new records.
-    * A missing table (bootstrap not run) means no existing keys — the
-    * whole batch is fresh, and the append creates the table. Returns
-    * the number of rows appended, like the parquet twin. */
+  /** S6 — the JDBC sink adapter of [[EtlPipeline.appendNewRecords]]
+    * (db_manager.py:85–91). A missing table (bootstrap not run) means
+    * no loaded keys — the whole batch is fresh, and the append creates
+    * the table. Returns the number of rows appended. */
   def incrementalAppend(spark: SparkSession, batch: DataFrame,
-      target: JdbcTarget, table: String,
-      keyColumn: String = "surrogate_key"): Long = {
-    // intra-batch dedup first: the anti-join only sees keys already in
-    // the SINK, so two same-key rows inside one batch would both pass
-    // it and land as duplicates (no engine-side unique constraint).
-    // The survivor is the max over all non-key columns — an arbitrary
-    // but DETERMINISTIC rule, so re-running the identical pipeline
-    // persists identical rows (dropDuplicates would pick by task order)
-    val others = batch.columns.filterNot(_ == keyColumn)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyColumn)
-      .orderBy(others.map(c => org.apache.spark.sql.functions.col(c).desc): _*)
-    val deduped =
-      if (others.isEmpty) batch.dropDuplicates(keyColumn)
-      else batch
-        .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-        .filter(org.apache.spark.sql.functions.col("__rn") === 1)
-        .drop("__rn")
-    val fresh =
-      if (tableExists(target, table))
-        EtlOps.antiJoinNewRecords(
-          deduped, existingKeys(spark, target, table, keyColumn), keyColumn)
-      else deduped // table absent: every record is new, append creates it
-    val toWrite = fresh.cache()
-    try {
-      val n = toWrite.count()
-      if (n > 0)
-        writer(toWrite, target)
-          .option("dbtable", table)
-          .mode("append")
-          .save()
-      n
-    } finally toWrite.unpersist()
-  }
+      target: JdbcTarget, table: String): Long =
+    EtlPipeline.appendNewRecords(batch,
+        Option.when(tableExists(target, table))(existingKeys(spark, target, table))) {
+      writer(_, target).option("dbtable", table).mode("append").save()
+    }
 }

@@ -1865,7 +1865,7 @@ object Learn {
         base.join(lab, Seq("vec_id"))
           .groupBy(col("sd"), col("pos"), qb.as("qb"), col("label"))
           .agg(count(lit(1)).as("c"))
-          // r14 adjudication of the r13 +0.37 s: `.ckpt(eager = true)`
+          // r14 adjudication of the r13 +0.37 s: an eager checkpoint
           // here measured 2.67 s vs 2.66 s lazy (targeted best-of-3,
           // sf0.1/32c) — the regression is not this seam; lazy kept
           .ckpt()

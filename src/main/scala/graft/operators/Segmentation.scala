@@ -97,7 +97,7 @@ object Segmentation {
       |  GROUP BY 1, 2),
       |r AS (
       |  SELECT seg, cents,
-      |    row_number() OVER (PARTITION BY seg ORDER BY cents, cust) AS rk
+      |    row_number() OVER (PARTITION BY seg ORDER BY cents, cust, seg) AS rk
       |  FROM sp),
       |a AS (
       |  SELECT seg, CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS tot,
@@ -116,7 +116,11 @@ object Segmentation {
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("seg"), col("o_custkey").as("cust"))
       .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("bigint")).as("cents"))
-    ScaleRank.withRowNumber(sp, Seq("seg"), Seq(col("cents"), col("cust")),
+    // (seg, cust) is the aggregate's key: naming seg on the sort axis
+    // too (constant within a group, so ranks are unchanged) keeps the
+    // axis visibly unique where the two-level path partitions by a
+    // chunk id and a struct of the group columns instead of seg itself
+    ScaleRank.withRowNumber(sp, Seq("seg"), Seq(col("cents"), col("cust"), col("seg")),
         "rk", "n_in_seg")
       .groupBy(col("seg"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("tot"),

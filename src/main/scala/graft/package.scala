@@ -1,7 +1,7 @@
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Engine-wide checkpoint seam: every eager `localCheckpoint()` in the
+/** Engine-wide checkpoint seam: every `localCheckpoint()` in the
   * query surface goes through `.ckpt()` so plan audits can see the
   * subtrees a checkpoint would otherwise hide.
   *
@@ -65,19 +65,23 @@ package object graft {
   }
 
   implicit class CkptOps[T](private val ds: Dataset[T]) extends AnyVal {
-    /** Eager local checkpoint (lineage cut + materialization). In
+    /** Lazy local checkpoint: the lineage cut happens here, at plan
+      * construction (the subtree is swapped for a LogicalRDD at once);
+      * the segment materializes — persisted once computed — inside
+      * the first action that consumes it, not as a job of its own. In
       * plan-audit mode, additionally records this segment's optimized
       * plan so the sweep sees what the checkpoint hides — both as a
       * flat segment list and keyed by the checkpoint RDD's id so join
-      * sites over LogicalRDD leaves can be classified. */
-    def ckpt(): Dataset[T] = ckpt(eager = false)
-
-    /** `eager = true` is the r14 per-site escape hatch for the lazy
-      * default below: a handful of hot seams (adjudicated in
-      * OPTIMIZATION_r14.md) materialize faster as their own job than
-      * folded into the first consumer. Values are identical either
-      * way — only WHEN the segment computes changes. */
-    def ckpt(eager: Boolean): Dataset[T] = {
+      * sites over LogicalRDD leaves can be classified.
+      *
+      * Lazy since r13: with AQE the segment's shuffle stages still run
+      * at build time, but the final result-stage pass (one full job per
+      * checkpoint — iterative queries carry 5-15 of them) folds into
+      * the first consuming action, and every multi-consumer site still
+      * reads the materialized blocks. Measured r13: -0.5..-1.4 s on the
+      * checkpoint-heavy heavies at sf0.1, value-identical results
+      * (447/447 oracle-green). */
+    def ckpt(): Dataset[T] =
       if (Ckpt.auditing) {
         val seg = ds.queryExecution.optimizedPlan
         Ckpt.record(seg)
@@ -88,19 +92,6 @@ package object graft {
           case _ => ()
         }
         out
-      // eager = false default (r13): the lineage cut — the reason every
-      // one of these sites exists — happens at plan-construction time
-      // either way (the subtree is swapped for a LogicalRDD
-      // immediately), and the RDD is still persisted-once-computed, so
-      // every multi-consumer site reads the materialized blocks exactly
-      // as before. What laziness removes is the SEPARATE
-      // materialization job per call site: with AQE the segment's
-      // shuffle stages still run at build time, but the final
-      // result-stage pass (one full job per ckpt — iterative queries
-      // carry 5-15 of them) folds into the first consuming action.
-      // Measured r13: -0.5..-1.4 s on the checkpoint-heavy heavies at
-      // sf0.1, value-identical results (447/447 oracle-green).
-      } else ds.localCheckpoint(eager)
-    }
+      } else ds.localCheckpoint(eager = false)
   }
 }

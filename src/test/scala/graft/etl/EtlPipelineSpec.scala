@@ -76,18 +76,14 @@ class EtlPipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(sink).count() == 3)
   }
 
-  test("observed load: metrics ride the write in one pass and match the data") {
-    val dir = Files.createTempDirectory("graft-etl-observe")
+  test("input listing goes through the Hadoop FileSystem: a file:// URI works") {
+    val dir = Files.createTempDirectory("graft-etl-uri")
     writeFixtures(dir)
-    val sink = dir.resolve("sink-obs").toString
-    val byType = EtlPipeline.processCsvFiles(spark, dir.toString, config)
-    val m1 = EtlPipeline.incrementalAppendObserved(spark, byType("stm"), sink, Some("ym"))
-    assert(m1 == EtlPipeline.LoadMetrics(nRows = 3, nNullKeys = 0, nYmApprox = 1))
-    assert(spark.read.parquet(sink).count() == 3)
-    // idempotent re-run: observe reports the empty anti-joined batch
-    val m2 = EtlPipeline.incrementalAppendObserved(spark, byType("stm"), sink, Some("ym"))
-    assert(m2 == EtlPipeline.LoadMetrics(0, 0, 0))
-    assert(spark.read.parquet(sink).count() == 3)
+    val byType = EtlPipeline.processCsvFiles(spark, dir.toUri.toString, config)
+    assert(byType.keySet == Set("stm", "sec"))
+    assert(byType("stm").count() == 3)
+    assert(byType("stm").select("file_name").distinct().as[String](
+      org.apache.spark.sql.Encoders.STRING).collect().toSeq == Seq("alfabank_current_stm.csv"))
   }
 
   test("md5 surrogate key matches hashlib over the same concat text") {

@@ -1,6 +1,9 @@
 package graft.queries
 
 import graft.TestSpark
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, RepartitionByExpression}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape audits for the ScaleRank conversions: the point of the
@@ -38,12 +41,26 @@ class ScalePlanAuditSpec extends AnyFunSuite {
     (graft.operators.Learn.q235Conformal, "s"),
     (graft.operators.Layout.q237Compaction, "doc_id"))
 
+  /** The optimized plan plus, recursively, the segment behind each of
+    * its checkpoint leaves: the range repartition of the two-level
+    * scheme sits below `rangedWithPid`'s checkpoint. */
+  private def withSegments(q: graft.QueryDef): Seq[LogicalPlan] = {
+    def expand(p: LogicalPlan): Seq[LogicalPlan] =
+      p +: p.collect { case l: LogicalRDD => l }
+        .flatMap(l => graft.Ckpt.segmentFor(l.rdd.id).toSeq.flatMap(expand))
+    expand(graft.Ckpt.withAudit(q.build(spark, dir).queryExecution.optimizedPlan)._1)
+  }
+
   test("converted queries range-chunk their rank/prefix stage") {
     for ((q, _) <- converted) {
-      val p = plan(q)
-      assert(p.contains("rangepartitioning") || p.contains("RangePartitioning"),
-        s"${q.name}: no range repartition in plan — the two-level chunking is gone:\n$p")
-      assert(p.contains("__sr_pid"),
+      val plans = withSegments(q)
+      val ranged = plans.exists(_.exists {
+        case r: RepartitionByExpression => r.partitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      })
+      assert(ranged,
+        s"${q.name}: no range repartition in plan — the two-level chunking is gone:\n${plans.head}")
+      assert(plans.exists(_.toString.contains("__sr_pid")),
         s"${q.name}: no chunk-id column in plan — local stage not keyed by chunk")
     }
   }
