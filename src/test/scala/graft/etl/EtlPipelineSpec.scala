@@ -2,9 +2,15 @@ package graft.etl
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.collection.mutable
+
 import graft.TestSpark
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 /** Golden end-to-end test of the reference pipeline semantics
   * (SURVEY.md §5 item 4, FIXTURES.md §A): stm + sec CSVs through
@@ -73,6 +79,39 @@ class EtlPipelineSpec extends AnyFunSuite {
     assert(EtlPipeline.incrementalAppend(spark, byType("stm"), sink, Some("ym")) == 0)
     // ym partitioning materialized in the sink layout
     assert(Files.exists(Paths.get(sink, "ym=2025-01")))
+    assert(spark.read.parquet(sink).count() == 3)
+  }
+
+  test("observed load: metrics ride the write in one pass and match the data") {
+    val dir = Files.createTempDirectory("graft-etl-observe")
+    writeFixtures(dir)
+    val sink = dir.resolve("sink-obs").toString
+    // only actions over this test's batch carry the marker key
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    val batch = EtlPipeline.processCsvFiles(spark, dir.toString, config)("stm")
+      .filter(col("surrogate_key") =!= marker)
+    val seen = mutable.ArrayBuffer.empty[String]
+    val listener = new QueryExecutionListener {
+      private def note(funcName: String, qe: QueryExecution): Unit =
+        if (qe.logical.treeString.contains(marker)) seen.synchronized(seen += funcName)
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = note(funcName, qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = note(funcName, qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // the appended-row count is observed on the write itself: one
+      // action, no count job before it
+      assert(EtlPipeline.incrementalAppend(spark, batch, sink, Some("ym")) == 3)
+      eventually(timeout(30.seconds)) {
+        assert(seen.synchronized(seen.toSeq) == Seq("command"))
+      }
+    } finally spark.listenerManager.unregister(listener)
+    val loaded = spark.read.parquet(sink)
+    assert(loaded.count() == 3)
+    assert(loaded.filter(col("surrogate_key").isNull).count() == 0)
+    assert(loaded.select("ym").distinct().count() == 1)
+    // idempotent re-run: the observed count is that of the empty anti-joined batch
+    assert(EtlPipeline.incrementalAppend(spark, batch, sink, Some("ym")) == 0)
     assert(spark.read.parquet(sink).count() == 3)
   }
 

@@ -5,9 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** S5/S6 database path against embedded Derby (on the Spark
   * classpath — no server, no network): DDL bootstrap consuming the
-  * config column types and a load into a table that was never
-  * bootstrapped. The load contract itself (overlap, re-run, dedup,
-  * crash re-run) runs for every sink in [[IncrementalLoadSpec]]. */
+  * config column types, key-scan + anti-join incremental append with
+  * intra-batch dedup, idempotent re-run, and a load into a table that
+  * was never bootstrapped — the db_manager.py:56–91 contract. The same
+  * contract, plus one write per append and crash re-run, runs for every
+  * sink in [[IncrementalLoadSpec]]. */
 class JdbcIoSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -47,6 +49,44 @@ class JdbcIoSpec extends AnyFunSuite {
     assert(incrementalAppend(spark, batch(("k1", "acc1", "1.00", 2024)), t, "stm") == 1)
     initialize(spark, t, Seq(stm))
     assert(existingKeys(spark, t, "stm").count() == 0)
+  }
+
+  test("incremental append: only new surrogate keys cross the wire") {
+    val t = freshTarget()
+    initialize(spark, t, Seq(stm))
+    val first = batch(
+      ("k1", "acc1", "10.50", 2024),
+      ("k2", "acc2", "20.00", 2024))
+    assert(incrementalAppend(spark, first, t, "stm") == 2)
+    // overlap: k2 already loaded -> only k3 appends
+    val second = batch(
+      ("k2", "acc2", "20.00", 2024),
+      ("k3", "acc3", "30.25", 2025))
+    assert(incrementalAppend(spark, second, t, "stm") == 1)
+    // full re-run is a no-op (the reference's idempotence contract)
+    assert(incrementalAppend(spark, first.unionByName(second), t, "stm") == 0)
+    val rows = existingKeys(spark, t, "stm").as[String].collect().sorted
+    assert(rows.toSeq == Seq("k1", "k2", "k3"))
+  }
+
+  test("intra-batch duplicate keys collapse to one appended row") {
+    val t = freshTarget()
+    initialize(spark, t, Seq(stm))
+    val withDup = batch(
+      ("k1", "acc1", "10.50", 2024),
+      ("k1", "acc1-dup", "11.00", 2024), // same key INSIDE the batch
+      ("k2", "acc2", "20.00", 2024))
+    assert(incrementalAppend(spark, withDup, t, "stm") == 2)
+    val keys = existingKeys(spark, t, "stm").as[String].collect().sorted
+    assert(keys.toSeq == Seq("k1", "k2"))
+    // deterministic survivor: max over non-key columns -> 'acc1-dup'
+    // (not whichever row a task happened to see first)
+    val acc = spark.read.format("jdbc")
+      .option("url", t.url).option("driver", t.driver)
+      .option("dbtable", "stm").load()
+      .filter($"surrogate_key" === "k1")
+      .select("acc_number").as[String].head()
+    assert(acc == "acc1-dup")
   }
 
   test("append without bootstrap treats the whole batch as fresh") {
