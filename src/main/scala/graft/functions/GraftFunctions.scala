@@ -1,17 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registration for the graft native expressions.
-  *
-  * Two paths to the same registry entries:
-  *  - [[GraftFunctions.register]]: imperative, idempotent — called by
-  *    query builders so any session (driver's Verify/Bench, tests)
-  *    gets the functions without config;
-  *  - [[GraftExtensions]]: the `spark.sql.extensions`-config path for
-  *    deployments that want the functions present at session build.
+/** The graft native expressions, by SQL name. [[GraftExtensions]] is
+  * the one registration path: it injects every entry when
+  * [[graft.Harness.session]] builds a session, so every session (and
+  * every `newSession()` of it) resolves them with no further call.
   */
 object GraftFunctions {
 
@@ -35,20 +31,11 @@ object GraftFunctions {
     ("might_contain_bf", (es: Seq[Expression]) =>
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1)),
       classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName))
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    all.foreach { case (name, builder, _) =>
-      if (!registry.functionExists(FunctionIdentifier(name)))
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
 }
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` entry point:
-  * native functions + the top-k planner strategy and optimizer rule. */
+  * native functions, the top-k and as-of planner strategies, their
+  * optimizer rules and the `asof_join` TVF. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, builder, className) =>

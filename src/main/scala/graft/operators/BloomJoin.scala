@@ -41,7 +41,6 @@ object BloomJoin {
       key: String,
       expectedItems: Long,
       fpp: Double = 0.01): DataFrame = {
-    graft.functions.GraftFunctions.register(fact.sparkSession)
     // An EMPTY dim side (every row filtered out — seen on the
     // degenerate-corpus probe) makes the bloom aggregate's merged
     // state a null bit buffer, and building/serializing the filter
@@ -85,7 +84,6 @@ object BloomJoin {
       |WHERE o.o_totalprice > 450000
       |GROUP BY o.o_orderpriority
       |ORDER BY o.o_orderpriority""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val dec2 = (c: Column) => c.cast("decimal(18,2)")
     val dim = Tables.orders(s, dir)
       .filter(col("o_totalprice") > 450000)

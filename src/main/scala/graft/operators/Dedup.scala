@@ -534,7 +534,6 @@ object Dedup {
        |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
        |SELECT a, b, cos_sim FROM c WHERE cos_sim >= 0.35
        |ORDER BY a, b""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
       .repartition(col("vec_id")) // single-file scan -> use every core
     embeddingCandidates(e)
@@ -602,7 +601,6 @@ object Dedup {
          |  CASE WHEN n_truth > 0 THEN (1000000 * n_hit) // n_truth END AS recall_ppm,
          |  CASE WHEN n_candidates > 0 THEN (1000000 * n_hit) // n_candidates END AS precision_ppm
          |FROM ag, pl ORDER BY planes""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Tables.embeddings(s, dir)
       val pAd = adaptivePlanes(e.count())
       val sample = e
@@ -961,7 +959,6 @@ object Dedup {
          |  CAST(m.n_members - coalesce(d.n_dropped, 0) AS BIGINT) AS n_kept
          |FROM m LEFT JOIN drp d USING (cid)
          |ORDER BY m.cid""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       val pts = Learn.points(emb).ckpt()
       val cent = pts.filter(col("vec_id") < K)
@@ -1291,7 +1288,6 @@ object Dedup {
       |  coalesce(n_docs_shared, 0) AS n_docs_shared
       |FROM base JOIN dfp USING (source) LEFT JOIN shd USING (source)
       |ORDER BY base.source""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val fps = Tables.documents(s, dir)
       .filter(length(col("text")) >= WIN_K + WIN_W - 1)
       .withColumn("hs",

@@ -385,7 +385,6 @@ object Retrieval {
          |FROM act a JOIN est e ON a.pat = e.pat
          |ORDER BY a.pat""".stripMargin) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val patsDf = pats.toDF("pat")
       val pgd = broadcast(patsDf
         .filter(length(col("pat")) >= 3)

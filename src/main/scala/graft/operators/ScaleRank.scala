@@ -248,7 +248,15 @@ object ScaleRank {
     * (reproduced twice, ~2× off), invisible to the driver's gate
     * because correctness is only checked at the small SFs where one
     * chunk exists. The checkpoint materializes one chunking per call
-    * — exactness by construction, not by optimizer luck. */
+    * — exactness by construction, not by optimizer luck.
+    *
+    * Cost: the checkpoint exists ONLY to freeze the chunk assignment,
+    * and it pays for that twice. It persists the whole range-
+    * partitioned input (every column, every row) in executor storage
+    * on every two-level call. And as a local checkpoint it cuts the
+    * lineage: a lost executor's blocks cannot be recomputed, so
+    * losing an executor mid-query at 100 TB fails the query instead
+    * of retrying the lost tasks. */
   private[graft] def rangedWithPid(
       df: DataFrame,
       groupCols: Seq[String],

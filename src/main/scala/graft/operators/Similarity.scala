@@ -49,7 +49,6 @@ object Similarity {
        |FROM e, q
        |ORDER BY cos_sim DESC, e.vec_id
        |LIMIT 20""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val q = broadcast(e.filter(col("vec_id") === 0).select(col("embedding").as("vq")))
     e.filter(col("vec_id") =!= 0)
@@ -76,7 +75,6 @@ object Similarity {
        |  FROM c)
        |SELECT qid, CAST(rn AS INT) AS rn, vec_id, cos_sim FROM r WHERE rn <= 3
        |ORDER BY qid, rn""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val q = broadcast(e.filter(col("vec_id") < NQUERY)
       .select(col("vec_id").as("qid"), col("embedding").as("vq")))
@@ -111,7 +109,6 @@ object Similarity {
        |  FROM c)
        |SELECT qid, CAST(rn AS INT) AS rn, vec_id, cos_sim FROM r WHERE rn <= 3
        |ORDER BY qid, rn""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
       .repartition(col("vec_id")) // single-file scan -> all cores
       .select(col("vec_id"), col("embedding").as("v"),
@@ -150,7 +147,6 @@ object Similarity {
        |SELECT cid, count(*) AS n_vecs, count(DISTINCT label) AS n_labels,
        |  min(vec_id) AS min_vec, max(vec_id) AS max_vec
        |FROM best GROUP BY cid ORDER BY cid""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val cent = broadcast(e.filter(col("vec_id") < NCENT)
       .select(col("vec_id").as("cid"), col("embedding").as("vc")))
@@ -188,7 +184,6 @@ object Similarity {
        |  FROM c)
        |SELECT qid, CAST(rn AS INT) AS rn, vec_id, cos_sim FROM r WHERE rn <= 5
        |ORDER BY qid, rn""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val q = broadcast(e.filter(col("vec_id") >= NQUERY && col("vec_id") < 2 * NQUERY)
       .select(col("vec_id").as("qid"), col("embedding").as("vq")))
@@ -462,7 +457,6 @@ object Similarity {
          |    row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rank
          |  FROM cand) WHERE rank <= $TOPK
          |ORDER BY qid, rank""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Tables.embeddings(s, dir)
       val cent = IvfIndex.centroids(e)
       val assign = IvfIndex.assign(e, cent)
@@ -554,7 +548,6 @@ object Similarity {
          |LEFT JOIN ncand nc ON nc.qid = b.qid AND nc.np = b.np
          |LEFT JOIN hits h ON h.qid = b.qid AND h.np = b.np
          |ORDER BY b.qid, nprobe""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val npDf = broadcast(Seq(1, 2, 4).toDF("np"))
       val e = Tables.embeddings(s, dir)
@@ -658,7 +651,6 @@ object Similarity {
          |  (1000000 * CAST(count(t.vec_id) AS BIGINT)) // $TOPK AS recall_ppm
          |FROM atop a LEFT JOIN truth t ON t.qid = a.qid AND t.vec_id = a.vec_id
          |GROUP BY a.qid ORDER BY a.qid""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
       val cents = broadcast(emb.filter(col("vec_id") < KPQ)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec")))
@@ -809,8 +801,8 @@ object Similarity {
   /** The SQL dialect surface (q84): the whole query is a `spark.sql`
     * string over a temp view, exercising the native expressions
     * (`cosine_sim`, `lsh_bucket`) through the FunctionRegistry the
-    * same way an external SQL user would — the GraftExtensions /
-    * register() path, not the Column DSL. Aggregates are chosen
+    * same way an external SQL user would — the GraftExtensions path,
+    * not the Column DSL. Aggregates are chosen
     * order-independent (count / max of bit-exact doubles / min id) so
     * the oracle hash-matches under any parallelism. */
   val q84SqlSurface: QueryDef = QueryDef(
@@ -822,7 +814,6 @@ object Similarity {
        |  min(e.vec_id) AS min_vec
        |FROM e, q
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, dir).createOrReplaceTempView("graft_embeddings")
     s.sql(s"""
       WITH q AS (SELECT embedding AS qv FROM graft_embeddings WHERE vec_id = 0)
@@ -912,7 +903,6 @@ object Similarity {
          |FROM (SELECT qid, np FROM q, (VALUES (1), (2), (4)) np(np)) b
          |LEFT JOIN dcg d ON d.qid = b.qid AND d.np = b.np
          |ORDER BY b.qid, nprobe""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       import s.implicits._
       val npDf = broadcast(Seq(1, 2, 4).toDF("np"))
       val wtDf = broadcast(w.zipWithIndex
@@ -1003,7 +993,6 @@ object Similarity {
          |  pen AS pen_ppm
          |FROM sel$K ORDER BY pick""".stripMargin
     QueryDef("q176_mmr_rerank", oracle) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Tables.embeddings(s, dir)
       val qv = broadcast(e.filter(col("vec_id") === 0)
         .select(col("embedding").as("vq")))
@@ -1153,7 +1142,6 @@ object Similarity {
        |  p.cos_pos - n.cos_neg AS margin
        |FROM p JOIN n ON p.aid = n.aid AND p.rn = 1 AND n.rn = 1
        |ORDER BY margin, p.aid LIMIT 20""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val q = broadcast(e.filter(col("vec_id") < NANCHOR)
       .select(col("vec_id").as("aid"), col("label").as("alab"),
@@ -1241,7 +1229,6 @@ object Similarity {
        |JOIN e ea ON m.ida = ea.vec_id JOIN e eb ON m.idb = eb.vec_id
        |WHERE ea.label <> eb.label
        |ORDER BY m.cs DESC, m.ida""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
       .ckpt() // feeds the index build and both label lookups
@@ -1356,7 +1343,6 @@ object Similarity {
          |    AS BIGINT) AS id_milli
          |FROM t GROUP BY label HAVING CAST(sum(ln_nano) AS BIGINT) > 0
          |ORDER BY label""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Tables.embeddings(s, dir)
       // norms hoisted BELOW the join (r13, guide step 4): ‖v‖² is one
       // per-row double computed N times instead of N·NSAMP times (and

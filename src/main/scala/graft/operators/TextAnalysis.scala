@@ -92,7 +92,6 @@ object TextAnalysis {
     * PlanSweepSpec still records the full lineage. */
   private def langIdConfusion(s: SparkSession, dir: String): DataFrame =
     graft.FrameCache.getOrBuild(s, s"langid-cm:$dir") {
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, dir)
       val grams = docs
         .repartition(col("doc_id")) // single-file scan -> use every core
@@ -193,7 +192,6 @@ object TextAnalysis {
       |SELECT source, count(*) AS n_docs, count(DISTINCT fp) AS n_fp,
       |  min(fp) AS min_fp, max(fp) AS max_fp
       |FROM f GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .groupBy(col("source"))
       .agg(
@@ -2238,7 +2236,9 @@ object TextAnalysis {
       s: org.apache.spark.sql.SparkSession,
       sg0: DataFrame,
       forceAntiJoin: Boolean = false): DataFrame = {
-    val sg = sg0
+    // ONE dictionary pass: the source collect, the mask histogram and
+    // every anti-join round of the fallback arm read this checkpoint
+    val sg = sg0.ckpt()
     val srcs = sg.select(col("source")).distinct()
       .orderBy("source")
       .collect() // bounded: source domain (q330/q345 class), ≤ ~20 values
@@ -2295,9 +2295,9 @@ object TextAnalysis {
   /** The pre-r13 DataFrame greedy — kept verbatim as the >62-source
     * fallback arm of [[maxCoverageGreedy]]: per round one anti-join
     * against the covered-key set + a ≤|sources| gain aggregate; no
-    * driver collect in the loop, so it handles ANY source domain. */
-  private def maxCoverageAntiJoin(sg0: DataFrame): DataFrame = {
-    val sg = sg0.ckpt() // one shingle dictionary feeds every round
+    * driver collect in the loop, so it handles ANY source domain.
+    * `sg` is the caller's checkpointed dictionary. */
+  private def maxCoverageAntiJoin(sg: DataFrame): DataFrame = {
     var picked: DataFrame = null
     var covered: DataFrame = null
     var rows: DataFrame = null
@@ -2946,7 +2946,6 @@ object TextAnalysis {
       |  CAST(sum(CAST(cxy AS HUGEINT) * nn) // CAST(sum(cxy) AS HUGEINT)
       |    AS BIGINT) AS h_cond_nn
       |FROM t GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val c2 = Tables.documents(s, dir)
       .repartition(col("doc_id")) // single-file scan -> use every core

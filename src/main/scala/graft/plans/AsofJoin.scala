@@ -156,8 +156,9 @@ object Asof {
     * `right.rightTimeCol <= left.leftTimeCol`, latest right row wins
     * (ties on the time column resolve by `rightTiebreak` ascending —
     * last one wins). Column names must be disjoint apart from the
-    * keys; rename before joining as with any join. Registers the
-    * planner strategy on first use per session. */
+    * keys; rename before joining as with any join. Needs a session
+    * from [[graft.Harness.session]], whose extensions carry the
+    * planner strategy. */
   def join(leftDf: DataFrame, rightDf: DataFrame, keys: Seq[String],
       leftTimeCol: String, rightTimeCol: String,
       rightTiebreak: Seq[String] = Nil): DataFrame =
@@ -173,7 +174,6 @@ object Asof {
     require(leftKeys.length == rightKeys.length && leftKeys.nonEmpty,
       "asof: need one or more key columns, matched positionally")
     val spark: SparkSession = leftDf.sparkSession
-    AsofInstall.installStrategy(spark)
     val lp = Bridge.analyzedPlan(leftDf)
     val rp0 = Bridge.analyzedPlan(rightDf)
     // self-join hygiene: when both sides descend from the same frame
@@ -194,13 +194,5 @@ object Asof {
       attr(lp, leftTimeCol, "left"), attr(rp, rightTimeCol, "right"),
       rightTiebreak.map(attr(rp, _, "right")))
     Bridge.ofRows(spark, node)
-  }
-}
-
-object AsofInstall {
-  def installStrategy(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.exists(_.isInstanceOf[AsofJoinStrategy]))
-      exp.extraStrategies = exp.extraStrategies :+ new AsofJoinStrategy
   }
 }

@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression, ExpressionInfo, FunctionTableSubqueryArgumentExpression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -27,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * plans resolve, so it plants a BY-NAME placeholder
   * ([[AsofJoinByName]]) whose output derives from the children once
   * the analyzer resolves them; the [[ResolveAsofJoinByName]] rule
-  * (user-provided optimizer batch — same injection path as
+  * (an optimizer rule injected by GraftExtensions, like
   * [[RowNumberTopKRewrite]]) then binds the column names to
   * attributes and rewrites to the [[AsofJoin]] node the strategy
   * plans. The placeholder's `references` covers BOTH children's full
@@ -121,18 +119,4 @@ object AsofSql {
   }
 
   val info = new ExpressionInfo(classOf[AsofJoinByName].getName, "asof_join")
-
-  /** Idempotent imperative install: TVF + strategy + rewrite rule
-    * (the no-extensions-config path, mirroring
-    * [[graft.functions.GraftFunctions.register]]). */
-  def install(spark: SparkSession): Unit = {
-    AsofInstall.installStrategy(spark)
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val reg = classic.sessionState.tableFunctionRegistry
-    if (!reg.functionExists(FunctionIdentifier("asof_join")))
-      reg.createOrReplaceTempFunction("asof_join", builder, "built-in")
-    val exp = classic.experimental
-    if (!exp.extraOptimizations.contains(ResolveAsofJoinByName))
-      exp.extraOptimizations = exp.extraOptimizations :+ ResolveAsofJoinByName
-  }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, GreaterThan, GreaterThanOrEqual, IntegerLiteral, LessThan, LessThanOrEqual, Literal, RowNumber, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -39,23 +38,5 @@ object RowNumberTopKRewrite extends Rule[LogicalPlan] {
           f.copy(child = w.copy(child = TopKPerKey(ps, os, k.toInt, child)))
         case _ => f
       }
-  }
-}
-
-/** One-call install of the whole top-k stack on a session: planner
-  * strategy (physical operator) + optimizer rule (idiom rewrite). */
-object TopKInstall {
-  /** Strategy only — enough to plan explicit [[TopKPerKey]] nodes. */
-  def installStrategy(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.exists(_.isInstanceOf[TopKStrategy]))
-      exp.extraStrategies = exp.extraStrategies :+ new TopKStrategy
-  }
-
-  def install(spark: SparkSession): Unit = {
-    installStrategy(spark)
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraOptimizations.contains(RowNumberTopKRewrite))
-      exp.extraOptimizations = exp.extraOptimizations :+ RowNumberTopKRewrite
   }
 }

@@ -117,11 +117,11 @@ case class TopKPerKeyExec(
 /** User-facing API. */
 object TopK {
   /** Top-k rows per key, ordered by `orderCol` (desc by default).
-    * Registers the planner strategy on first use per session. */
+    * Needs a session from [[graft.Harness.session]], whose extensions
+    * carry the planner strategy. */
   def perKey(df: DataFrame, keyCols: Seq[String], orderCol: String, k: Int,
       descending: Boolean = true): DataFrame = {
     val spark: SparkSession = df.sparkSession
-    TopKInstall.installStrategy(spark)
     val direction = if (descending) Descending else Ascending
     val node = TopKPerKey(
       keyCols.map(UnresolvedAttribute(_)),

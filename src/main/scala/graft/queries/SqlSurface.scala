@@ -41,10 +41,6 @@ object SqlSurface {
       |  FROM lineitem) t
       |WHERE rn <= 3
       |ORDER BY l_returnflag, rn""".stripMargin) { (s, dir) =>
-    // idempotence guard checks experimental.extraOptimizations only:
-    // on a GraftExtensions session the injected copy registers once
-    // more — benign, the rewrite rules are idempotent
-    graft.plans.TopKInstall.install(s)
     Tables.lineitem(s, dir).createOrReplaceTempView("sql429_lineitem")
     s.sql("""
       SELECT l_returnflag, CAST(rn AS BIGINT) AS rn, l_orderkey,
@@ -93,10 +89,6 @@ object SqlSurface {
       |  CAST(floor(cval * 100 + 0.5) AS BIGINT) AS cval_cents
       |FROM m WHERE rk = 1
       |ORDER BY purchase_id""".stripMargin) { (s, dir) =>
-    // idempotence guard checks experimental.extraOptimizations only:
-    // on a GraftExtensions session the injected copy registers once
-    // more — benign, the rewrite rules are idempotent
-    graft.plans.AsofSql.install(s)
     val ev = Tables.events(s, dir)
     ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("pts"),

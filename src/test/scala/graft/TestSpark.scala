@@ -3,22 +3,21 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for every suite (JVM startup dominates test
-  * wall-clock; suites must not stop() it). */
+  * wall-clock; suites must not stop() it). It is the production session
+  * from [[Harness.session]] — same extensions, so the same plans — with
+  * test-sized parallelism. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-test-wh").toString)
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = Harness.session(
+    "spark.master" -> "local[4]",
+    "spark.app.name" -> "graft-tests",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-test-wh").toString,
     // the plan sweeps audit 100 TB-safety from plan shapes; ScaleRank's
     // small-input window fast path (r13) would otherwise hide the
     // two-level scheme they exist to audit at test scale — force the
     // scale path here. Value-equality of the two paths is gated by
     // ScaleRankDispatchSpec; the 447-query oracle gate (Verify at
     // sf0.01 through Harness.session) exercises the fast path.
-    .config("spark.graft.scalerank.windowBytes", "0")
-    .getOrCreate()
+    "spark.graft.scalerank.windowBytes" -> "0")
 }

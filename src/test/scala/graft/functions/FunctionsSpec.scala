@@ -31,7 +31,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("cosine_sim is bit-identical to the explicit left-associated sum") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(50)((
       Array.fill(64)(rnd.nextFloat() * 2 - 1),
@@ -47,7 +46,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("cosine_sim: self similarity 1.0, opposite -1.0, null -> null") {
-    GraftFunctions.register(spark)
     val v = Array.fill(8)(0.5f)
     val df = Seq((v, v, v.map(-_))).toDF("a", "b", "neg")
     val r = df.select(
@@ -59,7 +57,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("lsh_bucket is bit-identical to the generated when/sum column") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(13)
     val rows = Seq.fill(60)(Array.fill(64)(rnd.nextFloat() * 2 - 1))
     val df = rows.toDF("v")
@@ -72,7 +69,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("lsh_bucket: null vector -> null; short vector -> null; exact-dim matches") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT lsh_bucket(cast(null as array<float>), 4, 64), " +
         "lsh_bucket(array(1.0f, 2.0f), 4, 64)").head()
@@ -88,7 +84,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("lsh_bucket rejects planes outside [1, 30] and dim < 1 at analysis time") {
-    GraftFunctions.register(spark)
     // planes=31 sets the Int sign bit, planes>=32 wraps `1 << p` onto
     // low bits (silent bucket collisions) — both must fail loudly
     for (bad <- Seq("lsh_bucket(array(1.0f), 31, 1)",
@@ -103,7 +98,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("char_ngrams matches the substr lambda on ascii and multi-byte text") {
-    GraftFunctions.register(spark)
     val strs = Seq("", "a", "ab", "abc", "hello world",
       "päivää 你好 mixed ascii ünd ütf", "日本語のテキスト", "aa")
     val df = strs.toDF("s")
@@ -129,7 +123,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("rolling_hash known vectors and null behavior") {
-    GraftFunctions.register(spark)
     // "abc": ((97*31+98)*31+99) % 1e9+7 = 96354; "" -> 0
     val r = spark.sql(
       "SELECT rolling_hash('abc'), rolling_hash(''), rolling_hash(cast(null as string))").head()
@@ -139,7 +132,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("rolling_hash matches a reference implementation on arbitrary strings") {
-    GraftFunctions.register(spark)
     def ref(s: String): Long =
       s.getBytes("UTF-8").foldLeft(0L)((h, b) => (h * 31 + (b & 0xff)) % 1000000007L)
     val rnd = new scala.util.Random(11)
@@ -149,9 +141,21 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("registered functions resolve through SQL; extensions wiring applies") {
-    GraftFunctions.register(spark)
-    assert(spark.sql("SELECT cosine_sim(array(1.0f,0.0f), array(1.0f,0.0f))")
-      .head().getDouble(0) == 1.0)
+    // the test session is built by Harness.session, whose
+    // GraftExtensions inject the functions and the asof_join TVF into
+    // it and into every newSession() of it, with no call per session
+    for (s <- Seq(spark, spark.newSession())) {
+      assert(s.sql("SELECT cosine_sim(array(1.0f,0.0f), array(1.0f,0.0f))")
+        .head().getDouble(0) == 1.0)
+      assert(s.sql("SELECT lsh_bucket(array(1.0f, 0.0f), 2, 2)")
+        .head().getInt(0) >= 0)
+      s.sql("SELECT 1L AS k, 10L AS t").createOrReplaceTempView("fn_asof_l")
+      s.sql("SELECT 1L AS k, 5L AS rt, 'c' AS tag").createOrReplaceTempView("fn_asof_r")
+      val asof = s.sql(
+        "SELECT tag FROM asof_join(TABLE(fn_asof_l), TABLE(fn_asof_r), 'k', 't', 'rt')")
+      assert(asof.queryExecution.executedPlan.toString.contains("AsofJoin "))
+      assert(asof.head().getString(0) == "c")
+    }
     // the spark.sql.extensions path shares the same builders — applying
     // it to a fresh extensions container must inject without error
     new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)

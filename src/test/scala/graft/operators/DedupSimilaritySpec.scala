@@ -172,7 +172,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // (triangle-inequality bound + conservative float slack), the
     // agreement is total equality of the flagged-pair set, not a
     // recall level. Brute force recomputed independently in-test.
-    graft.functions.GraftFunctions.register(spark)
     val sfDir = "/root/testdata/sf0.001"
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("label"), col("embedding").as("v"))

@@ -217,7 +217,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     // keep all true matches and drop the bulk of the non-matching fact
     val bf = dim.stat.bloomFilter("key", 1000, 0.01)
     val bytes = { val b = new java.io.ByteArrayOutputStream(); bf.writeTo(b); b.toByteArray }
-    graft.functions.GraftFunctions.register(spark)
     val kept = fact.filter(BloomJoin.mightContain(lit(bytes), col("key"))).count()
     // every true-match fact row must survive the probe (no false negatives)
     assert(kept >= plain.count(), "probe dropped true matches")
@@ -263,7 +262,6 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("embedding near-dup candidates stay bounded under total label skew") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(23)
     val n = 400
     // adversarial corpus: EVERY vector shares one label — label-blocking
@@ -294,7 +292,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert((1L to 20).forall(k => adaptivePlanes(1L << k) <= adaptivePlanes(1L << (k + 1))))
     // the r10 verdict's bound: under a 10x corpus the per-block
     // candidate load must stay near the target, not scale with n²/16
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(31)
     val n = 4000 // 10x the r10 test corpus
     val e = (0 until n).map(i => (i.toLong, "hot", Array.fill(64)(rnd.nextFloat() * 2 - 1)))

@@ -86,7 +86,6 @@ class AsofJoinSpec extends AnyFunSuite {
   }
 
   test("asof_join TVF: a raw SQL string reaches AsofJoinExec (q430 path)") {
-    AsofSql.install(spark)
     Seq((1L, 10L, "p1"), (1L, 20L, "p2"), (2L, 5L, "p3"))
       .toDF("k", "t", "tag").createOrReplaceTempView("asof_tvf_l")
     Seq((1L, 5L, 100L, "c5"), (1L, 10L, 101L, "c10"),
@@ -113,7 +112,6 @@ class AsofJoinSpec extends AnyFunSuite {
     // and throws if they still overlap. This pins the self-join path:
     // both TABLE() args name the SAME view and the join must resolve,
     // plan AsofJoinExec, and match each row to itself (latest rt <= t).
-    AsofSql.install(spark)
     Seq((1L, 10L, 100L), (1L, 20L, 101L), (2L, 5L, 102L))
       .toDF("k", "t", "id").createOrReplaceTempView("asof_tvf_self")
     // output carries BOTH sides' columns (duplicate names — select *)
@@ -134,7 +132,6 @@ class AsofJoinSpec extends AnyFunSuite {
   }
 
   test("asof_join TVF: string view-name arguments work and ties use the tiebreak") {
-    AsofSql.install(spark)
     Seq((7L, 100L, "p")).toDF("k", "t", "tag")
       .createOrReplaceTempView("asof_tvf_l2")
     Seq((7L, 100L, 1L, "first"), (7L, 100L, 3L, "third"),

@@ -56,43 +56,65 @@ class TopKPerKeySpec extends AnyFunSuite {
     assert(plan.substring(partialIdx).contains("2, true"), plan)
   }
 
-  test("raw SQL row_number idiom reaches TopKPerKeyExec (q429 path)") {
-    TopKInstall.install(spark)
-    randomDf(33).createOrReplaceTempView("topk_sql_spec")
-    val df = spark.sql("""
+  private def sqlIdiom(s: org.apache.spark.sql.SparkSession) = {
+    val in = randomDf(33)
+    s.createDataFrame(in.rdd, in.schema).createOrReplaceTempView("topk_sql_spec")
+    s.sql("""
       SELECT key, score, payload FROM (
         SELECT key, score, payload,
           row_number() OVER (PARTITION BY key ORDER BY score DESC) AS rn
         FROM topk_sql_spec) t
       WHERE rn <= 3""")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerKey"), s"SQL plan missed the operator:\n$plan")
-    // equivalence with the un-rewritten window on a plain session path
-    val w = Window.partitionBy(col("key")).orderBy(col("score").desc)
-    val viaWindow = randomDf(33).withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3).select("key", "score", "payload")
-    assert(df.exceptAll(viaWindow).isEmpty && viaWindow.exceptAll(df).isEmpty)
+  }
+
+  private def topKNodes(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case t: TopKPerKey => t }.size
+
+  test("raw SQL row_number idiom reaches TopKPerKeyExec (q429 path)") {
+    // the session's GraftExtensions carry the rewrite, on the shared
+    // session and on a fresh newSession() of it alike
+    val fresh = spark.newSession()
+    for (s <- Seq(spark, fresh)) {
+      val df = sqlIdiom(s)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("TopKPerKey"), s"SQL plan missed the operator:\n$plan")
+      // equivalence with the un-rewritten window on a plain session path
+      val w = Window.partitionBy(col("key")).orderBy(col("score").desc)
+      val viaWindow = randomDf(33).withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 3).select("key", "score", "payload")
+      assert(df.exceptAll(viaWindow).isEmpty && viaWindow.exceptAll(df).isEmpty)
+    }
+    // building q429 registers nothing: its own plan and every idiom
+    // planned after it carry ONE TopKPerKey (a second copy of the rule
+    // running after InferWindowGroupLimit would stack a second one)
+    val dir = java.nio.file.Files.createTempDirectory("graft-topk-q429").toString
+    Seq(("A", 1.5, 1L, 1), ("A", 2.5, 1L, 2), ("A", 3.5, 2L, 1), ("A", 4.5, 3L, 1),
+        ("N", 9.0, 4L, 1), ("R", 7.0, 5L, 1))
+      .toDF("l_returnflag", "l_extendedprice", "l_orderkey", "l_linenumber")
+      .write.parquet(s"$dir/lineitem.parquet")
+    val q429 = graft.queries.SqlSurface.q429SqlTopk.build(fresh, dir)
+    assert(topKNodes(q429) == 1, q429.queryExecution.optimizedPlan.toString)
+    assert(q429.count() == 5)
+    val after = sqlIdiom(fresh)
+    assert(topKNodes(after) == 1, after.queryExecution.optimizedPlan.toString)
   }
 
   test("optimizer rule rewrites row_number+filter into the native operator") {
     val df = randomDf(21)
     val w = Window.partitionBy(col("key")).orderBy(col("score").desc)
-    def query() = df.withColumn("rn", row_number().over(w))
+    val q = df.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 4).select("key", "score", "payload", "rn")
-    // baseline collected BEFORE the rule is active (order values unique)
-    val expected = query().collect().map(_.toSeq).toSet
-    TopKInstall.install(spark)
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    try {
-      val q = query()
-      assert(q.queryExecution.optimizedPlan.toString.contains("TopKPerKey"),
-        q.queryExecution.optimizedPlan.toString)
-      assert(q.collect().map(_.toSeq).toSet == expected)
-      // rank() must NOT be rewritten (different tie semantics)
-      val r = df.withColumn("rk", rank().over(w)).filter(col("rk") <= 4)
-      assert(!r.queryExecution.optimizedPlan.toString.contains("TopKPerKey"))
-    } finally exp.extraOptimizations =
-      exp.extraOptimizations.filterNot(_ == RowNumberTopKRewrite)
+    assert(q.queryExecution.optimizedPlan.toString.contains("TopKPerKey"),
+      q.queryExecution.optimizedPlan.toString)
+    // expected top-4 per key computed from the input (scores unique)
+    val expected = df.collect().groupBy(_.getInt(0)).values.flatMap { rows =>
+      rows.sortBy(-_.getLong(1)).take(4).zipWithIndex
+        .map { case (r, i) => Seq(r.getInt(0), r.getLong(1), r.getString(2), i + 1) }
+    }.toSet
+    assert(q.collect().map(_.toSeq).toSet == expected)
+    // rank() must NOT be rewritten (different tie semantics)
+    val r = df.withColumn("rk", rank().over(w)).filter(col("rk") <= 4)
+    assert(!r.queryExecution.optimizedPlan.toString.contains("TopKPerKey"))
   }
 
   test("handles k larger than group size and single-row groups") {

@@ -354,7 +354,6 @@ class DivisorSweepSpec extends AnyFunSuite {
   }
 
   test("every division's divisor is provably nonzero or ratchet-baselined") {
-    graft.plans.TopKInstall.install(spark)
     val offenders = collection.mutable.ArrayBuffer[String]()
     for (q <- graft.SparkEntry.defs) {
       val (finalPlan, segments) = graft.Ckpt.withAudit {

@@ -233,7 +233,6 @@ class OrderSweepSpec extends AnyFunSuite {
       child.output.forall(a => refs.contains(a.exprId.id))
 
   test("limits and order-sensitive windows ride a tie-free axis or are ratchet-baselined") {
-    graft.plans.TopKInstall.install(spark)
     val offenders = collection.mutable.ArrayBuffer[String]()
     def adjudicate(q: String, site: String, offence: => String): Unit =
       offenders += offence

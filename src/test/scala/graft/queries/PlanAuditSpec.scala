@@ -53,7 +53,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // the 100 TB ANN story (Similarity scaladoc): the bucket id is
     // data-independent, so the corpus can be written PARTITIONED BY
     // bucket and a query's search touches one directory, not the corpus
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val out = java.nio.file.Files.createTempDirectory("graft-bucketed-ann").toString
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -75,7 +74,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // disabled the rewrite (single-row_number guard) and forced a full
     // per-flag sort; with the count split into an aggregate + broadcast
     // join, the heap prune must be in the plan
-    graft.plans.TopKInstall.install(spark)
     val q = graft.operators.Sketches.q85SampleQuantiles.build(spark, dir)
     assert(q.queryExecution.optimizedPlan.toString.contains("TopKPerKey"),
       q.queryExecution.optimizedPlan.toString)

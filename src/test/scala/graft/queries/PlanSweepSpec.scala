@@ -206,7 +206,6 @@ class PlanSweepSpec extends AnyFunSuite {
     h.exists(_.strategy.contains(BROADCAST))
 
   test("no query plans an unbounded single-partition, broadcast-raw, or non-equi shape") {
-    graft.plans.TopKInstall.install(spark)
     val unusedAllow = collection.mutable.Set(
       PlanSweepAllowlist.entries.map(e => (e._1, e._2)): _*)
     val offenders = collection.mutable.ArrayBuffer[String]()

@@ -70,7 +70,6 @@ class ScalePlanAuditSpec extends AnyFunSuite {
     // filter a single row_number over a 5-value lang key: safe ONLY
     // because the rewrite turns them into map-side heaps — pin that
     // it fires
-    graft.plans.TopKInstall.install(spark)
     for (q <- Seq(graft.operators.TextAnalysis.q22LangId,
                   graft.operators.TextAnalysis.q89WeightedSample)) {
       // audit mode: bypass FrameCache (a memoized confusion frame

@@ -27,8 +27,21 @@ def canon(rows):
     return sorted(out, key=repr)
 
 
+def assert_zero_division_null(con):
+    """The oracles lean on DuckDB's x/0 being NULL for every numeric
+    type (Spark's twin is an explicit nullif guard). DuckDB 1.0 returns
+    NULL; a release that returns inf or raises must fail here, loudly,
+    not as scattered row mismatches."""
+    got = con.execute(
+        "SELECT CAST(1 AS DOUBLE) / CAST(0 AS DOUBLE), 1.0 / 0.0, 1 // 0"
+    ).fetchone()
+    assert got == (None, None, None), (
+        f"duckdb {duckdb.__version__}: x/0 is {got}, the oracles expect NULL")
+
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
+    assert_zero_division_null(con)
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

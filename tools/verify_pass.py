@@ -31,6 +31,8 @@ import shutil
 import subprocess
 import sys
 
+import duckdb
+
 REPO = "/root/repo"
 
 
@@ -194,6 +196,9 @@ def _round_number():
 
 def finish(log, rc):
     log["green"] = rc == 0
+    # the oracle's semantics (x/0 -> NULL, see check_oracle.py) are
+    # pinned to the DuckDB release that checked them
+    log["duckdb_version"] = duckdb.__version__
     # Ledger block is DERIVED from FUZZLEDGER.json at write time
     # (VERDICT r12 item 4: the r12 close snapshot shipped
     # fuzzed_ever: 298 while the ledger — updated by a later seed-6
