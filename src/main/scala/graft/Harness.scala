@@ -13,20 +13,18 @@ object Harness {
     * parallelism, UTC (timestamp-rendering queries must agree with the
     * DuckDB oracle on any host), AQE advisory sized so mid-size
     * shuffles keep every core busy, and a codegen cache big enough
-    * that a 70+-query run doesn't recompile early stages. `overrides`
-    * are applied after these defaults (the test session's smaller
-    * master and shuffle width, for one). */
-  def session(overrides: (String, String)*): SparkSession = {
+    * that a 70+-query run doesn't recompile early stages. */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val defaults = Seq(
-      "spark.master" -> s"local[$cpus]",
-      "spark.sql.extensions" -> "graft.functions.GraftExtensions",
-      "spark.sql.shuffle.partitions" -> cpus,
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8m",
-      "spark.sql.codegen.cache.maxEntries" -> "2000",
-      "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false")
-    SparkSession.builder().config((defaults ++ overrides).toMap).getOrCreate()
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
   }
 
   /** Dev-main arg validation: exit 2 with the known-query list on an

@@ -2234,11 +2234,11 @@ object TextAnalysis {
     * boundary. */
   private[graft] def maxCoverageGreedy(
       s: org.apache.spark.sql.SparkSession,
-      sg0: DataFrame,
+      sg: DataFrame,
       forceAntiJoin: Boolean = false): DataFrame = {
-    // ONE dictionary pass: the source collect, the mask histogram and
-    // every anti-join round of the fallback arm read this checkpoint
-    val sg = sg0.ckpt()
+    // the mask arm reads `sg` twice (source collect, histogram) without
+    // a checkpoint: q254 at sf0.1 (local[4]) timed the same either way,
+    // and the checkpoint cost more executor time
     val srcs = sg.select(col("source")).distinct()
       .orderBy("source")
       .collect() // bounded: source domain (q330/q345 class), ≤ ~20 values
@@ -2295,9 +2295,9 @@ object TextAnalysis {
   /** The pre-r13 DataFrame greedy — kept verbatim as the >62-source
     * fallback arm of [[maxCoverageGreedy]]: per round one anti-join
     * against the covered-key set + a ≤|sources| gain aggregate; no
-    * driver collect in the loop, so it handles ANY source domain.
-    * `sg` is the caller's checkpointed dictionary. */
-  private def maxCoverageAntiJoin(sg: DataFrame): DataFrame = {
+    * driver collect in the loop, so it handles ANY source domain. */
+  private def maxCoverageAntiJoin(sg0: DataFrame): DataFrame = {
+    val sg = sg0.ckpt() // one shingle dictionary feeds every round
     var picked: DataFrame = null
     var covered: DataFrame = null
     var rows: DataFrame = null

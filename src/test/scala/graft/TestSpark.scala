@@ -4,20 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for every suite (JVM startup dominates test
   * wall-clock; suites must not stop() it). It is the production session
-  * from [[Harness.session]] — same extensions, so the same plans — with
-  * test-sized parallelism. */
+  * from [[Harness.session]] — same extensions, so the same plans. The
+  * test JVM's settings (4 cores, app name, temporary warehouse, ScaleRank
+  * forced onto its scale path) come from `Test / envVars` and
+  * `Test / javaOptions` in build.sbt. */
 object TestSpark {
-  lazy val spark: SparkSession = Harness.session(
-    "spark.master" -> "local[4]",
-    "spark.app.name" -> "graft-tests",
-    "spark.sql.shuffle.partitions" -> "4",
-    "spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("graft-test-wh").toString,
-    // the plan sweeps audit 100 TB-safety from plan shapes; ScaleRank's
-    // small-input window fast path (r13) would otherwise hide the
-    // two-level scheme they exist to audit at test scale — force the
-    // scale path here. Value-equality of the two paths is gated by
-    // ScaleRankDispatchSpec; the 447-query oracle gate (Verify at
-    // sf0.01 through Harness.session) exercises the fast path.
-    "spark.graft.scalerank.windowBytes" -> "0")
+  lazy val spark: SparkSession = Harness.session()
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.TestSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,15 +22,23 @@ class TopKPerKeySpec extends AnyFunSuite {
       .repartition(8)
   }
 
+  /** Top-k rows per key by descending score, with their row numbers,
+    * computed in Scala from the collected input (scores are unique):
+    * a reference that never passes through the rewrite under test. */
+  private def expectedTopK(df: DataFrame, k: Int): Seq[(Int, Long, String, Int)] =
+    df.collect().groupBy(_.getInt(0)).values.flatMap { rows =>
+      rows.sortBy(-_.getLong(1)).take(k).zipWithIndex
+        .map { case (r, i) => (r.getInt(0), r.getLong(1), r.getString(2), i + 1) }
+    }.toSeq.sorted
+
+  private def rows3(df: DataFrame): Seq[(Int, Long, String)] =
+    df.as[(Int, Long, String)].collect().toSeq.sorted
+
   test("matches the window row_number formulation on random data") {
     val df = randomDf(5)
     val viaOp = TopK.perKey(df, Seq("key"), "score", k = 3)
       .select("key", "score", "payload")
-    val w = Window.partitionBy(col("key")).orderBy(col("score").desc)
-    val viaWindow = df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3).select("key", "score", "payload")
-    assert(viaOp.count() == viaWindow.count())
-    assert(viaOp.exceptAll(viaWindow).isEmpty && viaWindow.exceptAll(viaOp).isEmpty)
+    assert(rows3(viaOp) == expectedTopK(df, 3).map(t => (t._1, t._2, t._3)))
   }
 
   test("ascending variant takes the k smallest") {
@@ -78,11 +87,7 @@ class TopKPerKeySpec extends AnyFunSuite {
       val df = sqlIdiom(s)
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("TopKPerKey"), s"SQL plan missed the operator:\n$plan")
-      // equivalence with the un-rewritten window on a plain session path
-      val w = Window.partitionBy(col("key")).orderBy(col("score").desc)
-      val viaWindow = randomDf(33).withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3).select("key", "score", "payload")
-      assert(df.exceptAll(viaWindow).isEmpty && viaWindow.exceptAll(df).isEmpty)
+      assert(rows3(df) == expectedTopK(randomDf(33), 3).map(t => (t._1, t._2, t._3)))
     }
     // building q429 registers nothing: its own plan and every idiom
     // planned after it carry ONE TopKPerKey (a second copy of the rule
@@ -106,12 +111,7 @@ class TopKPerKeySpec extends AnyFunSuite {
       .filter(col("rn") <= 4).select("key", "score", "payload", "rn")
     assert(q.queryExecution.optimizedPlan.toString.contains("TopKPerKey"),
       q.queryExecution.optimizedPlan.toString)
-    // expected top-4 per key computed from the input (scores unique)
-    val expected = df.collect().groupBy(_.getInt(0)).values.flatMap { rows =>
-      rows.sortBy(-_.getLong(1)).take(4).zipWithIndex
-        .map { case (r, i) => Seq(r.getInt(0), r.getLong(1), r.getString(2), i + 1) }
-    }.toSet
-    assert(q.collect().map(_.toSeq).toSet == expected)
+    assert(q.as[(Int, Long, String, Int)].collect().toSeq.sorted == expectedTopK(df, 4))
     // rank() must NOT be rewritten (different tie semantics)
     val r = df.withColumn("rk", rank().over(w)).filter(col("rk") <= 4)
     assert(!r.queryExecution.optimizedPlan.toString.contains("TopKPerKey"))
