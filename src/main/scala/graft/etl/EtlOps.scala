@@ -35,15 +35,28 @@ object EtlOps {
   def withSurrogateKey(keyCols: Seq[String])(df: DataFrame): DataFrame =
     df.withColumn(KeyColumn, md5(concatKey(keyCols)))
 
-  /** P4 — per-file literal metadata + UTC load timestamp
-    * (data_manager.py:66). */
-  def withFileMetadata(bank: String, accType: String, fileName: String)(
-      df: DataFrame): DataFrame =
+  /** P4 — per-file metadata + UTC load timestamp (data_manager.py:66)
+    * over a scan of one bank's files: `file_name` is the file each row
+    * was read from and `acc_type` that file's entry in `accTypeByFile`.
+    * Spark's `_metadata.file_name` is the name's raw URI form (a space
+    * reads `%20`), so it is percent-decoded; `+` is escaped first, which
+    * `url_decode` would otherwise read as a space. `acc_type` tests one
+    * IN list of file names per account type rather than looking the
+    * name up in a map: Spark scans a map's keys for every row, while an
+    * IN list of more than 10 literals becomes a hash set. */
+  def withFileMetadata(bank: String, accTypeByFile: Map[String, String])(
+      df: DataFrame): DataFrame = {
+    val fileName = url_decode(replace(col("_metadata.file_name"), lit("+"), lit("%2B")))
+    val accType = accTypeByFile.groupMap(_._2)(_._1).toSeq.sortBy(_._1)
+      .foldLeft(lit(null).cast("string")) { case (other, (t, names)) =>
+        when(fileName.isin(names.toSeq.sorted: _*), t).otherwise(other)
+      }
     df.withColumns(Map(
       "bank_name" -> lit(bank),
-      "acc_type" -> lit(accType),
-      "file_name" -> lit(fileName),
+      "acc_type" -> accType,
+      "file_name" -> fileName,
       "processed_at" -> current_timestamp()))
+  }
 
   /** F3 — bounded dictionary decode (data_manager.py:71). The config map
     * becomes a literal map expression: no shuffle, no broadcast var,

@@ -1,9 +1,14 @@
 package graft.etl
 
+import java.io.{BufferedReader, InputStreamReader}
+
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.Path
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVOptions}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -12,20 +17,27 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * Spark plan per logical dataset:
   *
   *   list files (S1) → route by filename regex + config (S3/S4)
-  *   → per-file: csv scan (S2) → select/rename (P1/P2) → transform
-  *     (F1–F8, P3, P4)
+  *   → read each routed file's header on the driver
+  *   → per (mapping type, bank, header) group: ONE multi-file csv scan
+  *     (S2) → select/rename (P1/P2) → transform (F1–F8, P3, P4)
   *   → unionByName accumulate (U1)
   *   → anti-join vs loaded keys (J1) → append sink (S6)
   *
   * Error semantics: the reference skips a file on any per-file failure
   * and keeps going (data_manager.py:121–139). Plan *construction*
-  * failures (bad name, missing config, missing columns) are caught here
-  * per file; data-level parse failures become nulls (EtlOps try_*
-  * variants) rather than killing a distributed job.
+  * failures (bad name, missing config, unreadable header, missing
+  * columns) are caught here per file, before files are grouped;
+  * data-level parse failures become nulls (EtlOps try_* variants)
+  * rather than killing a distributed job.
   */
 object EtlPipeline {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** A routed file that passed its header checks: what grouping and the
+    * group's plan need. */
+  private final case class RoutedFile(path: Path, bank: String, accType: String,
+      mappingType: String, cfg: FileMappingConfig, header: Seq[String])
 
   /** S3 — filename metadata: the config regex must yield exactly
     * (bank, accType, mappingType), else the file is skipped
@@ -44,49 +56,85 @@ object EtlPipeline {
   def routeConfig(config: EtlConfig, mappingType: String, bank: String): Option[FileMappingConfig] =
     config.mapping.get(mappingType).flatMap(_.get(bank))
 
+  /** The CSV settings of every scan and header read. */
+  private def csvSettings(sep: String): Map[String, String] =
+    Map("sep" -> sep, "encoding" -> "UTF-8", "header" -> "true")
+
   /** S2 — csv scan with an explicit all-string schema, pushing all
-    * typing decisions into the config-driven casts. Surrogate-key parity
-    * note (SURVEY.md §7.3 risk 2): the reference hashes `astype(str)` of
+    * typing decisions into the config-driven casts. Columns bind by
+    * position (Spark drops each file's header line without enforcing
+    * it), so every path must carry the header `columns` was read from.
+    * Surrogate-key parity note (SURVEY.md §7.3 risk 2): the reference
+    * hashes `astype(str)` of
     * pandas-*inferred* dtypes (data_manager.py:62), so raw-text reads
     * give byte-identical keys only when pandas would infer the key
     * columns as object/string; numeric key columns render differently
     * there ("123.40" → "123.4", int-with-NaN → "123.0") and would need
     * explicit normalization to match reference-era hashes. */
-  def readCsv(spark: SparkSession, path: String, sep: String, columns: Seq[String]): DataFrame = {
-    val schema = StructType(columns.map(StructField(_, StringType, nullable = true)))
+  def readCsv(spark: SparkSession, paths: Seq[String], sep: String, columns: Seq[String]): DataFrame =
     spark.read
-      .option("sep", sep)
-      .option("encoding", "UTF-8")
-      .option("header", "true")
-      .schema(schema)
-      .csv(path)
+      .options(csvSettings(sep))
+      .schema(StructType(columns.map(StructField(_, StringType, nullable = true))))
+      .csv(paths: _*)
+
+  /** [[readCsv]] of one file. */
+  def readCsv(spark: SparkSession, path: String, sep: String, columns: Seq[String]): DataFrame =
+    readCsv(spark, Seq(path), sep, columns)
+
+  /** Header sniff for the all-string schema, on the driver and without
+    * a Spark job: the first non-empty line of the file, read through the
+    * Hadoop FileSystem (HDFS/S3/local all work) and tokenized with the
+    * settings `readCsv` scans with, so a quoted header field may hold
+    * the separator. The names are those Spark's own header inference
+    * gives (`makeSafeHeader`: a blank name becomes `_c<i>`, duplicates
+    * get their index appended), and a leading UTF-8 BOM is dropped as
+    * Hadoop's line reader drops it. Reading stops at the first data line.
+    * `Left(reason)` for a file with no header line or no data row. */
+  private[etl] def csvHeader(spark: SparkSession, fs: FileSystem, path: Path,
+      sep: String): Either[String, Seq[String]] = {
+    val conf = spark.sessionState.conf
+    val opts = new CSVOptions(csvSettings(sep), conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val in = new BufferedReader(new InputStreamReader(fs.open(path), opts.charset))
+    try {
+      val first = Option(in.readLine()).map(_.stripPrefix("\uFEFF"))
+      val lines = CSVExprUtils.filterCommentAndEmpty(
+        first.iterator ++ Iterator.continually(in.readLine()).takeWhile(_ != null), opts)
+      if (!lines.hasNext) Left("no header line")
+      else {
+        val names = CSVUtils.makeSafeHeader(
+          new CsvParser(opts.asParserSettings).parseLine(lines.next()),
+          conf.caseSensitiveAnalysis, opts)
+        if (lines.hasNext) Right(names.toSeq) else Left("header only, no data rows")
+      }
+    } finally in.close()
   }
 
-  /** Header sniff for the all-string schema (driver-side, one file).
-    * Uses Spark's own CSV reader on a header-only sample so that (a) the
-    * path resolves through the Hadoop FileSystem API — HDFS/S3/local all
-    * work, matching the 100 TB design notes — and (b) quoted header
-    * fields containing the separator parse correctly (a naive
-    * split-on-separator would mis-parse them). Limit(0) + columns reads
-    * only the header line, not the data. */
-  private def csvHeader(spark: SparkSession, path: String, sep: String): Seq[String] =
-    spark.read
-      .option("sep", sep)
-      .option("encoding", "UTF-8")
-      .option("header", "true")
-      .csv(path)
-      .columns
-      .toSeq
+  /** S2 + S4 checks of one routed file: its header must be readable and
+    * hold every column the config maps (resolved as the projection will
+    * resolve it), else `Left(reason)`. */
+  private def checkHeader(spark: SparkSession, fs: FileSystem, path: Path,
+      cfg: FileMappingConfig): Either[String, Seq[String]] = {
+    val resolve = spark.sessionState.conf.resolver
+    val header =
+      try csvHeader(spark, fs, path, cfg.csvSeparator)
+      catch { case NonFatal(e) => Left(s"unreadable header: ${e.getMessage}") }
+    header.flatMap { names =>
+      val missing = cfg.originalFields.keys.filterNot(c => names.exists(resolve(_, c)))
+      Either.cond(missing.isEmpty, names,
+        s"missing mapped column(s) ${missing.toSeq.sorted.mkString(", ")}")
+    }
+  }
 
-  /** EP3 — the per-file transform (data_manager.py:20–32, 59–95):
+  /** EP3 — the transform of one group of files that share a mapping
+    * type, bank and header (data_manager.py:20–32, 59–95): one csv scan
+    * over all of them, then the chain the reference applies per file.
     * stm and sec branches share key/metadata ops and differ in the
     * scalar battery applied (data_manager.py:69–87). */
-  def buildFilePlan(spark: SparkSession, path: String, bank: String,
-      accType: String, mappingType: String, cfg: FileMappingConfig): DataFrame = {
-    val fileName = new Path(path).getName
-    val base = readCsv(spark, path, cfg.csvSeparator, csvHeader(spark, path, cfg.csvSeparator))
+  private def buildGroupPlan(spark: SparkSession, files: Seq[RoutedFile]): DataFrame = {
+    val RoutedFile(_, bank, _, mappingType, cfg, header) = files.head
+    val base = readCsv(spark, files.map(_.path.toString), cfg.csvSeparator, header)
     val shaped = EtlOps.selectAndRename(cfg.originalFields)(base)
-    val keyed = EtlOps.withFileMetadata(bank, accType, fileName)(
+    val keyed = EtlOps.withFileMetadata(bank, files.map(f => f.path.getName -> f.accType).toMap)(
       EtlOps.withSurrogateKey(cfg.surrogateKeyColumns)(shaped))
     val transformed = mappingType match {
       case "stm" =>
@@ -113,40 +161,62 @@ object EtlPipeline {
     EtlOps.finalProjection(cfg.desiredFields)(transformed)
   }
 
-  /** EP1 steps 1–3 (S1 + routing + per-file plans + U1): returns one
+  /** EP1 steps 1–3 (S1 + routing + group plans + U1): returns one
     * unioned DataFrame per mapping type, skipping unroutable files with
-    * a log line exactly like the reference (data_manager.py:121–139).
+    * a log line exactly like the reference (data_manager.py:121–139),
+    * and files whose header is missing, empty of data or lacks a mapped
+    * column with a log line that names the reason. A mapping type none
+    * of whose files load is absent from the result.
     *
-    * The per-file loop is driver-side plan *construction* only — the
-    * resulting union is a single lazy plan whose file scans run fully
-    * parallel across the cluster.
+    * This is driver-side plan *construction* only: the listing and the
+    * header reads go through the Hadoop FileSystem, and no Spark job
+    * runs (up to `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * files per group, 32 by default; past it Spark's file index checks
+    * the group's paths in one parallel listing job). Files are grouped
+    * by (mapping type, bank, header), and each group is one multi-file
+    * scan with one transform chain, so the plan grows with the number of
+    * groups, not of files; the union of the groups is a single lazy plan
+    * whose file scans run fully parallel across the cluster. A group
+    * plan that fails to build skips its files, as each of them would
+    * have failed alone.
     */
   def processCsvFiles(spark: SparkSession, dir: String, config: EtlConfig): Map[String, DataFrame] = {
     val root = new Path(dir)
-    val files = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(root)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(root)
       .filter(f => f.isFile && f.getPath.getName.toLowerCase.endsWith(".csv"))
       .map(_.getPath).sortBy(_.getName).toSeq
     if (files.isEmpty)
       throw new IllegalArgumentException(s"no csv files found in $dir") // settings.py:41–44
-    val plans = files.flatMap { file =>
+    val routed = files.flatMap { file =>
       val name = file.getName
-      val routed = for {
+      val meta = for {
         (bank, accType, mappingType) <- extractFileMeta(config, name)
         cfg <- routeConfig(config, mappingType, bank)
       } yield (bank, accType, mappingType, cfg)
-      routed match {
+      meta match {
         case None =>
           log.warn(s"skipping $name: unroutable (pattern/config miss)")
           None
         case Some((bank, accType, mappingType, cfg)) =>
-          try Some(mappingType -> buildFilePlan(spark, file.toString, bank, accType, mappingType, cfg))
-          catch {
-            case NonFatal(e) =>
-              log.warn(s"skipping $name: ${e.getMessage}")
+          checkHeader(spark, fs, file, cfg) match {
+            case Left(reason) =>
+              log.warn(s"skipping $name: $reason")
               None
+            case Right(header) => Some(RoutedFile(file, bank, accType, mappingType, cfg, header))
           }
       }
     }
+    val plans = routed.groupBy(f => (f.mappingType, f.bank, f.header)).values.toSeq
+      .sortBy(_.head.path.getName)
+      .flatMap { group =>
+        try Some(group.head.mappingType -> buildGroupPlan(spark, group))
+        catch {
+          case NonFatal(e) =>
+            group.foreach(f => log.warn(s"skipping ${f.path.getName}: ${e.getMessage}"))
+            None
+        }
+      }
     plans.groupMap(_._1)(_._2).map { case (t, dfs) =>
       t -> dfs.reduce(_.unionByName(_))
     }

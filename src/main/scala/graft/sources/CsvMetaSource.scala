@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.util
-import scala.jdk.CollectionConverters._
+import scala.io.{BufferedSource, Source}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -21,7 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * first-class PARTITION-STYLE columns.
   *
   * Where [[graft.etl.EtlPipeline.processCsvFiles]] is the faithful
-  * per-file plan-construction port of the reference's driver loop,
+  * port of the reference's driver loop (per-file routing and header
+  * checks on the driver, then one csv scan per group of like files),
   * this connector is the Spark-NATIVE restatement of the same source:
   * the file listing/routing moves inside the scan, so Catalyst can
   *
@@ -63,8 +64,8 @@ class CsvMetaSource extends TableProvider with DataSourceRegister {
     require(files.nonEmpty, s"no files under ${conf.dir} match pattern '${conf.pattern}'")
     // header of the first routed file defines the data columns (the
     // fixture contract: one drop dir = one shape per mapping type)
-    val header = CsvMetaSource.readLines(conf.dir, files.head.name)
-      .headOption.getOrElse("")
+    val src = CsvMetaSource.openLines(conf.dir, files.head.name)
+    val header = try src.getLines().nextOption().getOrElse("") finally src.close()
     val dataCols = CsvMetaSource.splitLine(header, conf.sep)
     StructType(
       dataCols.map(StructField(_, StringType, nullable = true)) ++
@@ -115,13 +116,11 @@ private[sources] object CsvMetaSource {
       }
   }
 
-  def readLines(dir: String, name: String): Seq[String] = {
+  /** The file's lines, read lazily through the Hadoop FileSystem; the
+    * caller closes the source. */
+  def openLines(dir: String, name: String): BufferedSource = {
     val p = new Path(dir, name)
-    val fs = p.getFileSystem(new Configuration())
-    val in = fs.open(p)
-    try
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
+    Source.fromInputStream(p.getFileSystem(new Configuration()).open(p), "UTF-8")
   }
 
   /** Quote-aware CSV field split: separators inside `"..."` are
@@ -227,11 +226,12 @@ private[sources] class CsvMetaReaderFactory(fullSchema: StructType,
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val file = partition.asInstanceOf[CsvMetaPartition].file
     new PartitionReader[InternalRow] {
-      private val lines = CsvMetaSource.readLines(conf.dir, file.name)
+      private val source = CsvMetaSource.openLines(conf.dir, file.name)
+      private val it = source.getLines()
       // header positions resolve by NAME so a reordered header in one
       // file still lands values in the right columns
       private val header = CsvMetaSource
-        .splitLine(lines.headOption.getOrElse(""), conf.sep)
+        .splitLine(it.nextOption().getOrElse(""), conf.sep)
       private val meta: Map[String, UTF8String] = Map(
         "bank" -> UTF8String.fromString(file.bank),
         "acc_type" -> UTF8String.fromString(file.accType),
@@ -242,7 +242,6 @@ private[sources] class CsvMetaReaderFactory(fullSchema: StructType,
         required.fieldNames.map { f =>
           meta.get(f).map(Right(_)).getOrElse(Left(header.indexOf(f)))
         }.toArray
-      private val it = lines.iterator.drop(1)
       private var row: InternalRow = _
 
       override def next(): Boolean =
@@ -258,7 +257,7 @@ private[sources] class CsvMetaReaderFactory(fullSchema: StructType,
           true
         }
       override def get(): InternalRow = row
-      override def close(): Unit = ()
+      override def close(): Unit = source.close()
     }
   }
 }

@@ -5,7 +5,12 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 
 import graft.TestSpark
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
@@ -137,5 +142,140 @@ class EtlPipelineSpec extends AnyFunSuite {
       .digest("40817001#15.01.2025#1234,56".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     assert(k == expect)
+  }
+
+  /** Root paths of each CSV file-scan leaf in `df`'s optimized plan. */
+  private def csvScans(df: DataFrame): Seq[Seq[String]] =
+    df.queryExecution.optimizedPlan.collect { case l: LogicalRelation => l.relation }.collect {
+      case h: HadoopFsRelation if h.fileFormat.isInstanceOf[CSVFileFormat] =>
+        h.location.rootPaths.map(_.getName).sorted
+    }
+
+  private val stmHeader = "acc;date;amount;flag;descr"
+
+  private def writeStm(dir: Path, name: String, header: String, rows: String*): Unit =
+    Files.writeString(dir.resolve(name), (header +: rows).mkString("", "\n", "\n"))
+
+  /** (acc_number, file_name, acc_type) of every statement row. */
+  private def stmOrigins(df: DataFrame): Seq[(String, String, String)] =
+    df.select("acc_number", "file_name", "acc_type").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq.sorted
+
+  test("routing fires no Spark job and plans one csv scan per (type, bank, header) group") {
+    val dir = Files.createTempDirectory("graft-etl-groups")
+    writeFixtures(dir) // alfabank_current_stm, alfabank_broker_sec and two skipped files
+    writeStm(dir, "alfabank_savings_stm.csv", stmHeader, "40817002;17.01.2025;5,00;K;interest")
+    writeStm(dir, "alfabank_card_stm.csv", stmHeader, "40817003;18.01.2025;7,50;D;cafe")
+    val sc = spark.sparkContext
+    val group = s"etl-route-${java.util.UUID.randomUUID()}"
+    val sentinel = "sentinel"
+    // descriptions of the jobs started in this test's job group
+    val jobs = mutable.ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.synchronized(jobs += e.properties.getProperty("spark.job.description"))
+    }
+    sc.addSparkListener(listener)
+    val byType =
+      try {
+        sc.setJobGroup(group, "processCsvFiles")
+        val out = EtlPipeline.processCsvFiles(spark, dir.toString, config)
+        // listener events arrive in order: once the sentinel job is
+        // seen, any job routing fired has been seen too
+        sc.setJobDescription(sentinel)
+        sc.parallelize(Seq(1), 1).count()
+        eventually(timeout(30.seconds))(assert(jobs.synchronized(jobs.contains(sentinel))))
+        out
+      } finally {
+        sc.clearJobGroup()
+        sc.setJobDescription(null)
+        sc.removeSparkListener(listener)
+      }
+    assert(jobs.synchronized(jobs.toSeq) == Seq(sentinel), "processCsvFiles must not fire a Spark job")
+    assert(csvScans(byType("stm")) ==
+      Seq(Seq("alfabank_card_stm.csv", "alfabank_current_stm.csv", "alfabank_savings_stm.csv")))
+    assert(csvScans(byType("sec")) == Seq(Seq("alfabank_broker_sec.csv")))
+    assert(stmOrigins(byType("stm")) == Seq(
+      ("40817001", "alfabank_current_stm.csv", "current"),
+      ("40817001", "alfabank_current_stm.csv", "current"),
+      ("40817002", "alfabank_current_stm.csv", "current"),
+      ("40817002", "alfabank_savings_stm.csv", "savings"),
+      ("40817003", "alfabank_card_stm.csv", "card")))
+    assert(byType("sec").count() == 2)
+  }
+
+  test("reordered headers plan as two groups and still bind every value by name") {
+    val dir = Files.createTempDirectory("graft-etl-reorder")
+    writeStm(dir, "alfabank_current_stm.csv", stmHeader, "40817001;15.01.2025;1234,56;D;groceries")
+    writeStm(dir, "alfabank_savings_stm.csv", "descr;flag;amount;date;acc",
+      "interest;K;5,00;17.01.2025;40817002")
+    val stm = EtlPipeline.processCsvFiles(spark, dir.toString, config)("stm")
+    assert(csvScans(stm).size == 2)
+    val rows = stm.orderBy("dt").select("acc_number", "dc", "sum", "year", "acc_type").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3), r.getString(4))).toSeq
+    assert(rows == Seq(
+      ("40817001", "D", -1234.56, 2025, "current"),
+      ("40817002", "K", 5.0, 2025, "savings")))
+  }
+
+  test("a file lacking a mapped column is skipped while its same-bank siblings load") {
+    val dir = Files.createTempDirectory("graft-etl-missing")
+    writeStm(dir, "alfabank_current_stm.csv", stmHeader, "40817001;15.01.2025;1,00;D;a")
+    writeStm(dir, "alfabank_savings_stm.csv", "acc;date;amount;descr", "40817002;16.01.2025;2,00;b")
+    writeStm(dir, "alfabank_card_stm.csv", stmHeader, "40817003;17.01.2025;3,00;K;c")
+    val stm = EtlPipeline.processCsvFiles(spark, dir.toString, config)("stm")
+    assert(stmOrigins(stm) == Seq(
+      ("40817001", "alfabank_current_stm.csv", "current"),
+      ("40817003", "alfabank_card_stm.csv", "card")))
+  }
+
+  test("file_name and acc_type come from each row's own file, escaped names included") {
+    val dir = Files.createTempDirectory("graft-etl-names")
+    // a space reads %20 in Spark's raw file name; '+' must not decode to a space
+    val spaced = config.copy(filePattern = "([a-z]+)_([a-z +]+)_(stm|sec)\\.csv".r)
+    writeStm(dir, "alfabank_credit card_stm.csv", stmHeader,
+      "40817001;15.01.2025;1,00;D;a", "40817001;16.01.2025;2,00;D;b")
+    writeStm(dir, "alfabank_gold+plus_stm.csv", stmHeader, "40817002;15.01.2025;3,00;D;c")
+    writeStm(dir, "alfabank_current_stm.csv", stmHeader, "40817003;15.01.2025;4,00;D;d")
+    val stm = EtlPipeline.processCsvFiles(spark, dir.toString, spaced)("stm")
+    assert(csvScans(stm).size == 1)
+    assert(stmOrigins(stm) == Seq(
+      ("40817001", "alfabank_credit card_stm.csv", "credit card"),
+      ("40817001", "alfabank_credit card_stm.csv", "credit card"),
+      ("40817002", "alfabank_gold+plus_stm.csv", "gold+plus"),
+      ("40817003", "alfabank_current_stm.csv", "current")))
+  }
+
+  test("the driver-side header read names columns as Spark's header inference does") {
+    val dir = Files.createTempDirectory("graft-etl-header")
+    val fs = new HPath(dir.toString).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cases = Seq(
+      ("quoted.csv", ";", "\"acc;no\";date\n1;2\n"),
+      ("bom.csv", ";", "\uFEFFacc;date\n1;2\n"),
+      ("blank.csv", ",", "\n  \nacc,date\n1,2\n"),
+      ("bom-blank.csv", ",", "\uFEFF\r\nacc,date\r\n1,2\r\n"),
+      ("names.csv", ",", "x,x,,X, y \n1,2,3,4,5\n"))
+    for ((name, sep, body) <- cases) {
+      val p = dir.resolve(name)
+      Files.writeString(p, body)
+      val spark_ = spark.read.option("sep", sep).option("header", "true").csv(p.toString).columns.toSeq
+      assert(EtlPipeline.csvHeader(spark, fs, new HPath(p.toString), sep) == Right(spark_), name)
+    }
+    assert(EtlPipeline.csvHeader(spark, fs, new HPath(dir.resolve("quoted.csv").toString), ";") ==
+      Right(Seq("acc;no", "date")))
+  }
+
+  test("an empty or header-only file is skipped with a reason, not failing the run") {
+    val dir = Files.createTempDirectory("graft-etl-empty")
+    val fs = new HPath(dir.toString).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Files.writeString(dir.resolve("alfabank_card_stm.csv"), "")
+    writeStm(dir, "alfabank_savings_stm.csv", stmHeader)
+    writeStm(dir, "alfabank_current_stm.csv", stmHeader, "40817001;15.01.2025;1,00;D;a")
+    def header(name: String) = EtlPipeline.csvHeader(spark, fs, new HPath(dir.resolve(name).toString), ";")
+    assert(header("alfabank_card_stm.csv") == Left("no header line"))
+    assert(header("alfabank_savings_stm.csv") == Left("header only, no data rows"))
+    val stm = EtlPipeline.processCsvFiles(spark, dir.toString, config)("stm")
+    assert(stmOrigins(stm) == Seq(("40817001", "alfabank_current_stm.csv", "current")))
   }
 }
