@@ -6,9 +6,8 @@ import org.apache.spark.sql.types.StructType
 
 /** JSON-lines ingest — the canonical LLM-corpus interchange format
   * (one JSON document per line; WebDataset/Dolma/RedPajama all ship
-  * it). Complements the reference-scoped CSV path (EtlPipeline /
-  * CsvMetaSource) with the format a training-data pipeline actually
-  * receives.
+  * it). Complements the reference-scoped CSV path (EtlPipeline)
+  * with the format a training-data pipeline actually receives.
   *
   * Design decisions (100 TB):
   *  - an EXPLICIT schema is required — schema inference reads the

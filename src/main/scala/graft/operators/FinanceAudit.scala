@@ -829,7 +829,10 @@ object FinanceAudit {
     * proportionally to line value, in EXACT cents — floor every
     * share, then hand the leftover cents (strictly fewer than the
     * line count) to the lines with the largest dropped fractional
-    * part, ties to the lowest line number. This is the allocation
+    * part, ties to the lowest line number, then to the smallest line
+    * value (a repeated line number can carry two values with the same
+    * fractional part; any tie left after that is between lines equal
+    * in every output column but `bumped`). This is the allocation
     * step every finance ETL needs where q253's bridge only AUDITS:
     * naive rounding leaks cents (Σ lines ≠ header) and the GL never
     * reconciles; Hamilton closure is the fix, and the closure
@@ -866,7 +869,7 @@ object FinanceAudit {
       |  WHERE h.etot > 0),
       |rk AS (
       |  SELECT *, row_number() OVER (PARTITION BY ok
-      |    ORDER BY frac DESC, ln2) AS r,
+      |    ORDER BY frac DESC, ln2, e) AS r,
       |    rebate - CAST(sum(a0) OVER (PARTITION BY ok) AS BIGINT) AS short
       |  FROM base)
       |SELECT ok AS orderkey, CAST(ln2 AS BIGINT) AS linenumber,
@@ -888,7 +891,7 @@ object FinanceAudit {
         expr("(rebate * e) % etot").as("frac"))
     val w = Window.partitionBy(col("ok"))
     val rk = base
-      .withColumn("r", row_number().over(w.orderBy(col("frac").desc, col("ln2"))))
+      .withColumn("r", row_number().over(w.orderBy(col("frac").desc, col("ln2"), col("e"))))
       .withColumn("short", col("rebate") - sum(col("a0")).over(w))
     rk.filter(col("ok") % 10 === 1)
       .select(col("ok").as("orderkey"), col("ln2").as("linenumber"),

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -22,10 +24,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * drive them with MemoryStream and production wires `readStream` file
   * sources; none of the logic is source-specific.
   *
-  * Scale design: all stateful ops key their state by the shuffle key
-  * (surrogate_key / window / user_id), so state is distributed with the
-  * partitioning; watermarks bound state size — nothing grows with
-  * stream length.
+  * Scale design: stateful ops key their state by the shuffle key
+  * (surrogate_key / window / user_id / event_type), so state is
+  * distributed with the partitioning; watermarks bound state size —
+  * nothing grows with stream length. The global dashboard monitors are
+  * the exception by design: one key, calendar-bounded state (see
+  * [[orderedFold]]).
   */
 object StreamOps {
 
@@ -385,6 +389,86 @@ object StreamOps {
   private def micros(t: java.sql.Timestamp): Long =
     t.getTime / 1000 * 1000000L + t.getNanos / 1000L
 
+  private val HourUs = 3600000000L
+  private val DayUs = 86400000000L
+
+  /** The event-ordered fold the in-order monitors below run on: a
+    * 1-hour watermark on `ts`, one group per `key`, and per trigger the
+    * group's new events sorted by (ts, event_id) and folded through
+    * `step` from the stored state (`init` for a new key). `step` emits
+    * output rows through its last argument; the folded state is stored
+    * once per trigger and never times out.
+    *
+    * Arrival contract: a monitor equals its batch twin when no event
+    * arrives behind, in (ts, event_id) order, an event of an EARLIER
+    * trigger. The sort orders one trigger's events only, and the
+    * watermark admits events up to an hour late, so a late event lands
+    * in a later trigger and is folded after events that follow it in
+    * time. Monitors whose state such an event would corrupt reject it
+    * ([[dayFold]], [[hedgeMonitor]], [[obfMonitor]]).
+    *
+    * The monitors keyed `_ => 0L` compute one global series (a
+    * portfolio, a day-revenue series), so they are one key by
+    * construction: each trigger folds every new event in ONE task, and
+    * their state is bounded by the calendar (a few scalars, or one entry
+    * per closed day) rather than by event volume. Sharding them would
+    * change the statistic; the per-trigger work is one sort of that
+    * trigger's events. */
+  private def orderedFold[K: Encoder, S: Encoder, O: Encoder](
+      events: Dataset[AsofEvent], key: AsofEvent => K, init: S)(
+      step: (K, S, AsofEvent, O => Unit) => S): Dataset[O] = {
+    def fn(k: K, rows: Iterator[AsofEvent], state: GroupState[S]): Iterator[O] = {
+      val out = List.newBuilder[O]
+      val emit: O => Unit = out += _
+      val folded = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+        .foldLeft(state.getOption.getOrElse(init))(step(k, _, _, emit))
+      state.update(folded)
+      out.result().iterator
+    }
+    events
+      .withWatermark("ts", "1 hour")
+      .groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
+  }
+
+  /** Fail the query when event `e` belongs to a `unit` (day, hour)
+    * before the `open` one: folding it would reopen a closed period. */
+  private def requireInOrder(unit: String, e: AsofEvent, p: Long, open: Long): Unit =
+    if (p < open)
+      throw new IllegalStateException(
+        s"$unit-close contract violated: event ${e.event_id} is for " +
+          s"$unit $p but $unit $open already opened")
+
+  /** A [[dayFold]] state: the open day, its quantized value sum so far,
+    * and the monitor's own state over the days already closed. */
+  final case class DayState[S](day: Long, sum: Long, closed: S)
+
+  /** [[orderedFold]] for the day-close monitors: each event adds
+    * floor(value · `scale` + 0.5) (cents for 100, milli for 1000) to its
+    * UTC day's sum, and the first event of a LATER day closes the open
+    * day through `close(key, day, sum, state, emit)`. The newest day
+    * stays open until a later day's event arrives.
+    *
+    * The in-order day-close contract is enforced: an event for a day
+    * before the open one (one the watermark admits into a later
+    * trigger) would reopen a closed day and fold it twice, so it fails
+    * the query with "day-close contract violated". */
+  private def dayFold[K: Encoder, S <: Product: TypeTag, O: Encoder](
+      events: Dataset[AsofEvent], key: AsofEvent => K, init: S, scale: Double = 100)(
+      close: (K, Long, Long, S, O => Unit) => S): Dataset[O] = {
+    implicit val stateEnc: Encoder[DayState[S]] = Encoders.product[DayState[S]]
+    orderedFold[K, DayState[S], O](events, key, DayState(Long.MinValue, 0L, init)) {
+      (k, st, e, emit) =>
+        val d = micros(e.ts) / DayUs
+        requireInOrder("day", e, d, st.day)
+        val open =
+          if (d == st.day) st
+          else if (st.day == Long.MinValue) st.copy(day = d)
+          else DayState(d, 0L, close(k, st.day, st.sum, st.closed, emit))
+        open.copy(sum = open.sum + math.floor(e.value * scale + 0.5).toLong)
+    }
+  }
+
   final case class AsofEvent(
       user_id: Long, ts: java.sql.Timestamp, event_type: String,
       value: Double, event_id: Long)
@@ -533,19 +617,6 @@ object StreamOps {
   final case class ZState(window: Seq[Long])
   final case class ZOut(user_id: Long, event_id: Long, value_milli: Long, n_win: Long)
 
-  /** Streaming rolling z-score anomaly detection — the twin of q113,
-    * as it would actually run in production (the batch query IS a
-    * stream shape: per-key trailing window, O(window) state). State
-    * per user is the last `windowSize` milli-quantized values; each
-    * arriving event is tested against the trailing baseline with the
-    * same int64 cross-multiplied |v−μ| > 3σ check as the batch query,
-    * then pushed into the window. Agreement with batch holds for
-    * in-order arrival (the batch frame is "previous 10 rows in
-    * (ts, event_id) order").
-    *
-    * At 100 TB-per-day scale the state is windowSize longs per active
-    * key — add an event-time TTL (asofEnrich's pattern) to expire
-    * dormant keys. */
   final case class TouchState(ft_packed: Long, lt_packed: Long)
   final case class AttributionOut(
       user_id: Long, purchase_id: Long, v_milli: Long,
@@ -635,7 +706,6 @@ object StreamOps {
       sessions: Dataset[SessionInterval],
       graceMs: Long = 3600000L): Dataset[DayPeak] = {
     import spark.implicits._
-    val DayUs = 86400000000L
 
     def fn(day: Long, rows: Iterator[DayDelta],
         state: GroupState[DayPeakState]): Iterator[DayPeak] = {
@@ -1015,29 +1085,16 @@ object StreamOps {
   def cusum(spark: SparkSession, events: Dataset[AsofEvent],
       mu: Long, k: Long, h: Long): Dataset[CusumOut] = {
     import spark.implicits._
-
-    def fn(userId: Long, rows: Iterator[AsofEvent],
-        state: GroupState[CusumState]): Iterator[CusumOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var st = state.getOption.getOrElse(CusumState(0L, 0L))
-      val out = List.newBuilder[CusumOut]
-      sorted.foreach { e =>
+    orderedFold[Long, CusumState, CusumOut](events, _.user_id, CusumState(0L, 0L)) {
+      (userId, st, e, emit) =>
         val v = math.floor(e.value * 1000).toLong
         val pf = st.pf + (v - mu - k)
         // inclusive running min, seeded at 0 = the empty prefix P_0 —
         // so minpf <= 0 always and S_t = P_t - minpf directly
         val minpf = math.min(st.minpf, pf)
-        st = CusumState(pf, minpf)
-        out += CusumOut(userId, e.event_id, v, pf - minpf, pf - minpf > h)
-      }
-      state.update(st)
-      out.result().iterator
+        emit(CusumOut(userId, e.event_id, v, pf - minpf, pf - minpf > h))
+        CusumState(pf, minpf)
     }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
   final case class SprtState(n: Long, c: Long)
@@ -1060,30 +1117,18 @@ object StreamOps {
     val k1 = math.floor(1e9 * math.log(1.25)).toLong
     val k2 = math.floor(1e9 * math.log(0.75 / 0.8)).toLong
     val bound = math.floor(1e9 * math.log(19.0)).toLong
-
-    def fn(etype: String, rows: Iterator[AsofEvent],
-        state: GroupState[SprtState]): Iterator[SprtOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var st = state.getOption.getOrElse(SprtState(0L, 0L))
-      val out = List.newBuilder[SprtOut]
-      sorted.foreach { e =>
+    orderedFold[String, SprtState, SprtOut](events, _.event_type, SprtState(0L, 0L)) {
+      (etype, prev, e, emit) =>
         val conv = if (e.value >= threshold) 1L else 0L
-        st = SprtState(st.n + 1, st.c + conv)
+        val st = SprtState(prev.n + 1, prev.c + conv)
         val llr = st.c * k1 + (st.n - st.c) * k2
         val decision =
           if (llr >= bound) "reject_h0"
           else if (llr <= -bound) "accept_h0"
           else "continue"
-        out += SprtOut(etype, e.event_id, st.n, st.c, llr, decision)
-      }
-      state.update(st)
-      out.result().iterator
+        emit(SprtOut(etype, e.event_id, st.n, st.c, llr, decision))
+        st
     }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
   final case class EwmaState(window: Seq[Long])
@@ -1103,15 +1148,10 @@ object StreamOps {
   def ewma(spark: SparkSession, events: Dataset[AsofEvent],
       depth: Int = 8): Dataset[EwmaOut] = {
     import spark.implicits._
-
-    def fn(userId: Long, rows: Iterator[AsofEvent],
-        state: GroupState[EwmaState]): Iterator[EwmaOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var buf = state.getOption.map(_.window.toVector).getOrElse(Vector.empty[Long])
-      val out = List.newBuilder[EwmaOut]
-      sorted.foreach { e =>
+    orderedFold[Long, EwmaState, EwmaOut](events, _.user_id, EwmaState(Vector.empty)) {
+      (userId, st, e, emit) =>
         val v = math.floor(e.value * 1000).toLong
-        buf = (buf :+ v).takeRight(depth)
+        val buf = (st.window.toVector :+ v).takeRight(depth)
         var num = 0L
         var den = 0L
         var i = 0
@@ -1119,16 +1159,9 @@ object StreamOps {
           val w = 1L << (depth - 1 - (buf.size - 1 - i)) // newest heaviest
           num += w * buf(i); den += w; i += 1
         }
-        out += EwmaOut(userId, e.event_id, v, num / den)
-      }
-      state.update(EwmaState(buf))
-      out.result().iterator
+        emit(EwmaOut(userId, e.event_id, v, num / den))
+        EwmaState(buf)
     }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
   final case class QSketchState(counts: Seq[Long], n: Long)
@@ -1197,34 +1230,35 @@ object StreamOps {
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(fn)
   }
 
+  /** Streaming rolling z-score anomaly detection — the twin of q113,
+    * as it would actually run in production (the batch query IS a
+    * stream shape: per-key trailing window, O(window) state). State
+    * per user is the last `windowSize` milli-quantized values; each
+    * arriving event is tested against the trailing baseline with the
+    * same int64 cross-multiplied |v−μ| > 3σ check as the batch query,
+    * then pushed into the window. Agreement with batch holds for
+    * in-order arrival (the batch frame is "previous 10 rows in
+    * (ts, event_id) order").
+    *
+    * At 100 TB-per-day scale the state is windowSize longs per active
+    * key — add an event-time TTL (asofEnrich's pattern) to expire
+    * dormant keys. */
   def rollingZscore(spark: SparkSession, events: Dataset[AsofEvent],
       windowSize: Int = 10, minN: Int = 5): Dataset[ZOut] = {
     import spark.implicits._
-
-    def fn(userId: Long, rows: Iterator[AsofEvent],
-        state: GroupState[ZState]): Iterator[ZOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var buf = state.getOption.map(_.window.toVector).getOrElse(Vector.empty[Long])
-      val out = List.newBuilder[ZOut]
-      sorted.foreach { e =>
+    orderedFold[Long, ZState, ZOut](events, _.user_id, ZState(Vector.empty)) {
+      (userId, st, e, emit) =>
         val v = math.floor(e.value * 1000).toLong
+        val buf = st.window.toVector
         val n = buf.size.toLong
         if (n >= minN) {
           val s = buf.sum
           val q = buf.map(x => x * x).sum
           val dev = n * v - s
-          if (dev * dev > 9L * (n * q - s * s)) out += ZOut(userId, e.event_id, v, n)
+          if (dev * dev > 9L * (n * q - s * s)) emit(ZOut(userId, e.event_id, v, n))
         }
-        buf = (buf :+ v).takeRight(windowSize)
-      }
-      state.update(ZState(buf))
-      out.result().iterator
+        ZState((buf :+ v).takeRight(windowSize))
     }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
   final case class HedgeState(
@@ -1237,8 +1271,10 @@ object StreamOps {
     * ([[graft.operators.EventOps.q365HedgeRegret]]): the
     * exponential-weights portfolio over the five event-type arms,
     * advanced ONLINE as hourly reward rounds complete. An hour
-    * finalizes when the first event of a LATER hour arrives (the
-    * in-order-arrival contract shared with [[cusum]]); the reward
+    * finalizes when the first event of a LATER hour arrives, and an
+    * event for an hour already finalized fails the query with
+    * "hour-close contract violated" (the [[dayFold]] rule per hour,
+    * on [[orderedFold]]); the reward
     * normalizer `vmax` is a batch-computed baseline, exactly like
     * [[driftTv]]'s reference frame. Identical integer/nano-quantized
     * arithmetic to the batch fold — the same (Σ wₐ·rₐ) div 10⁶ gain,
@@ -1252,48 +1288,34 @@ object StreamOps {
     import spark.implicits._
     val arms = Seq("click", "error", "purchase", "signup", "view")
     val k = arms.length
-
-    def fn(key: Long, rows: Iterator[AsofEvent],
-        state: GroupState[HedgeState]): Iterator[HedgeOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var st = state.getOption.getOrElse(HedgeState(
-        Long.MinValue, Seq.fill(k)(0L), Seq.fill(k)(1000000000L / k),
-        Seq.fill(k)(0L), 0L, 0L))
-      val out = List.newBuilder[HedgeOut]
-      def finalizeHour(): Unit = if (st.curHour != Long.MinValue) {
-        val r = st.sums.map(v => 1000L * v / vmax)
-        val alg = st.alg +
-          (0 until k).map(i => st.w(i) * r(i)).sum / 1000000L
-        val u = (0 until k).map(i =>
-          math.floor(st.w(i).toDouble * math.exp(eta * r(i).toDouble / 1000.0)))
-        val usum = u.sum
-        val w = u.map(x => math.floor(1000000000.0 * x / usum).toLong)
-        val g = (0 until k).map(i => st.g(i) + r(i))
-        val t = st.t + 1
-        val best = g.max * 1000L
-        out += HedgeOut(t, st.curHour, alg, best, best - alg)
-        st = HedgeState(st.curHour, Seq.fill(k)(0L), w, g, alg, t)
-      }
-      sorted.foreach { e =>
-        val h = micros(e.ts) / 3600000000L
-        if (h != st.curHour) {
-          finalizeHour()
-          st = st.copy(curHour = h, sums = Seq.fill(k)(0L))
-        }
+    val zeros = Seq.fill(k)(0L)
+    orderedFold[Long, HedgeState, HedgeOut](events, _ => 0L,
+        HedgeState(Long.MinValue, zeros, Seq.fill(k)(1000000000L / k), zeros, 0L, 0L)) {
+      (_, st, e, emit) =>
+        val h = micros(e.ts) / HourUs
+        requireInOrder("hour", e, h, st.curHour)
+        val open =
+          if (h == st.curHour) st
+          else if (st.curHour == Long.MinValue) st.copy(curHour = h)
+          else { // close the open hour: one Hedge round
+            val r = st.sums.map(v => 1000L * v / vmax)
+            val alg = st.alg +
+              (0 until k).map(i => st.w(i) * r(i)).sum / 1000000L
+            val u = (0 until k).map(i =>
+              math.floor(st.w(i).toDouble * math.exp(eta * r(i).toDouble / 1000.0)))
+            val usum = u.sum
+            val w = u.map(x => math.floor(1000000000.0 * x / usum).toLong)
+            val g = (0 until k).map(i => st.g(i) + r(i))
+            val t = st.t + 1
+            val best = g.max * 1000L
+            emit(HedgeOut(t, st.curHour, alg, best, best - alg))
+            HedgeState(h, zeros, w, g, alg, t)
+          }
         val ai = arms.indexOf(e.event_type)
-        if (ai >= 0) {
-          val v = math.floor(e.value * 1000).toLong
-          st = st.copy(sums = st.sums.updated(ai, st.sums(ai) + v))
-        }
-      }
-      state.update(st)
-      out.result().iterator
+        if (ai < 0) open
+        else open.copy(sums = open.sums.updated(ai,
+          open.sums(ai) + math.floor(e.value * 1000).toLong))
     }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
   /** Per-type baseline moments for [[controlChartMonitor]]: D = #days,
@@ -1303,9 +1325,8 @@ object StreamOps {
     * batch DECIMAL(38,0) arithmetic headroom. */
   final case class SpcBaseline(dd: BigInt, ss: BigInt, qq: BigInt)
   final case class SpcState(
-      curDay: Long, x: Long, sides: Seq[Int], b2us: Seq[Int],
-      b2ds: Seq[Int], nDays: Long, nAbove: Long, r1: Long, r2: Long,
-      r4: Long)
+      sides: Seq[Int], b2us: Seq[Int], b2ds: Seq[Int], nDays: Long,
+      nAbove: Long, r1: Long, r2: Long, r4: Long)
   final case class SpcOut(
       event_type: String, day: Long, side: Int, rule1: Int, rule2: Int,
       rule4: Int, n_days: Long, n_above: Long, n_rule1: Long,
@@ -1319,10 +1340,10 @@ object StreamOps {
     * side) using the identical cross-multiplied integer identity
     * (x·D − S)² > k²·(D·Q − S²) — σ is never materialized as a double.
     * A day finalizes when that type's first event of a LATER day
-    * arrives (the in-order-arrival contract shared with [[cusum]] /
-    * [[hedgeMonitor]]). With the baseline trained on the full corpus
-    * the emitted flag trail is bit-exact against the batch chart
-    * through each type's last closed day; in production the baseline
+    * arrives (the [[dayFold]] contract, on milli sums). With the
+    * baseline trained on the full corpus the emitted flag trail is
+    * bit-exact against the batch chart through each type's last closed
+    * day; in production the baseline
     * is a frozen reference period, exactly like [[driftTv]].
     *
     * State per type is O(1): the open day's sum, a 7-deep side ring, a
@@ -1331,105 +1352,57 @@ object StreamOps {
   def controlChartMonitor(spark: SparkSession, events: Dataset[AsofEvent],
       baseline: Map[String, SpcBaseline]): Dataset[SpcOut] = {
     import spark.implicits._
-
-    def fn(etype: String, rows: Iterator[AsofEvent],
-        state: GroupState[SpcState]): Iterator[SpcOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var st = state.getOption.getOrElse(SpcState(
-        Long.MinValue, 0L, Nil, Nil, Nil, 0L, 0L, 0L, 0L, 0L))
-      val out = List.newBuilder[SpcOut]
-      val b = baseline.get(etype)
-      def closeDay(): Unit = if (st.curDay != Long.MinValue && b.isDefined) {
-        val SpcBaseline(dd, ss, qq) = b.get
-        val dev = BigInt(st.x) * dd - ss
-        val var2 = dd * qq - ss * ss
-        val side = dev.signum
-        val d2 = dev * dev
-        val b3 = if (d2 > var2 * 9) 1 else 0
-        val b2u = if (d2 > var2 * 4 && side > 0) 1 else 0
-        val b2d = if (d2 > var2 * 4 && side < 0) 1 else 0
-        val c2u = b2u + st.b2us.sum
-        val c2d = b2d + st.b2ds.sum
-        val r2 = if ((b2u == 1 && c2u >= 2) || (b2d == 1 && c2d >= 2)) 1 else 0
-        val ring8 = (st.sides :+ side).takeRight(8)
-        val r4 = if (ring8.size == 8 &&
-          (ring8.forall(_ == 1) || ring8.forall(_ == -1))) 1 else 0
-        st = SpcState(st.curDay, st.x,
-          (st.sides :+ side).takeRight(7),
-          (st.b2us :+ b2u).takeRight(2), (st.b2ds :+ b2d).takeRight(2),
-          st.nDays + 1, st.nAbove + (if (side > 0) 1 else 0),
-          st.r1 + b3, st.r2 + r2, st.r4 + r4)
-        out += SpcOut(etype, st.curDay, side, b3, r2, r4,
-          st.nDays, st.nAbove, st.r1, st.r2, st.r4)
-      }
-      sorted.foreach { e =>
-        val d = micros(e.ts) / 86400000000L
-        if (d != st.curDay) {
-          closeDay()
-          st = st.copy(curDay = d, x = 0L)
+    dayFold[String, SpcState, SpcOut](events, _.event_type,
+        SpcState(Nil, Nil, Nil, 0L, 0L, 0L, 0L, 0L), scale = 1000) {
+      (etype, day, x, st, emit) =>
+        baseline.get(etype).fold(st) { case SpcBaseline(dd, ss, qq) =>
+          val dev = BigInt(x) * dd - ss
+          val var2 = dd * qq - ss * ss
+          val side = dev.signum
+          val d2 = dev * dev
+          val b3 = if (d2 > var2 * 9) 1 else 0
+          val b2u = if (d2 > var2 * 4 && side > 0) 1 else 0
+          val b2d = if (d2 > var2 * 4 && side < 0) 1 else 0
+          val c2u = b2u + st.b2us.sum
+          val c2d = b2d + st.b2ds.sum
+          val r2 = if ((b2u == 1 && c2u >= 2) || (b2d == 1 && c2d >= 2)) 1 else 0
+          val ring8 = (st.sides :+ side).takeRight(8)
+          val r4 = if (ring8.size == 8 &&
+            (ring8.forall(_ == 1) || ring8.forall(_ == -1))) 1 else 0
+          val next = SpcState(
+            (st.sides :+ side).takeRight(7),
+            (st.b2us :+ b2u).takeRight(2), (st.b2ds :+ b2d).takeRight(2),
+            st.nDays + 1, st.nAbove + (if (side > 0) 1 else 0),
+            st.r1 + b3, st.r2 + r2, st.r4 + r4)
+          emit(SpcOut(etype, day, side, b3, r2, r4,
+            next.nDays, next.nAbove, next.r1, next.r2, next.r4))
+          next
         }
-        st = st.copy(x = st.x + math.floor(e.value * 1000 + 0.5).toLong)
-      }
-      state.update(st)
-      out.result().iterator
     }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
-  final case class LossState(
-      curDay: Long, cents: Long, prevRev: Long, hasPrev: Boolean,
-      losses: Seq[Long])
+  final case class LossState(prevRev: Long, hasPrev: Boolean, losses: Seq[Long])
 
-  /** Shared day-close fold for the risk monitors ([[varEsMonitor]],
-    * [[gpdTailMonitor]]): accumulate each day's cent-sum of event
-    * values, convert day-over-day deltas into the loss series
-    * l_d = −(rev_d − rev_{d−1}) as days complete, and hand the updated
-    * series to `emit`. State is the single global risk key holding the
-    * day-loss vector — CALENDAR-bounded (~37k rows/century), the same
-    * adjudicated bound as the batch queries' day-axis windows, not
-    * data-volume-bounded. In-order arrival finalizes a day on the
-    * first event of a later day (the [[hedgeMonitor]] contract). */
-  private def lossMonitor[O: org.apache.spark.sql.Encoder](
+  /** Shared [[dayFold]] for the risk monitors ([[varEsMonitor]],
+    * [[gpdTailMonitor]]): convert day-over-day deltas of the daily
+    * cent sums into the loss series l_d = −(rev_d − rev_{d−1}) as days
+    * close, and hand the updated series to `stat`. State is the single
+    * global risk key holding the day-loss vector — CALENDAR-bounded
+    * (~37k rows/century), the same adjudicated bound as the batch
+    * queries' day-axis windows, not data-volume-bounded. */
+  private def lossMonitor[O: Encoder](
       spark: SparkSession, events: Dataset[AsofEvent],
-      emit: (Long, Long, Vector[Long]) => Option[O]): Dataset[O] = {
+      stat: (Long, Long, Vector[Long]) => Option[O]): Dataset[O] = {
     import spark.implicits._
-
-    def fn(key: Long, rows: Iterator[AsofEvent],
-        state: GroupState[LossState]): Iterator[O] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var st = state.getOption.getOrElse(
-        LossState(Long.MinValue, 0L, 0L, hasPrev = false, Nil))
-      val out = List.newBuilder[O]
-      def closeDay(): Unit = if (st.curDay != Long.MinValue) {
-        val rev = st.cents
-        if (st.hasPrev) {
+    dayFold[Long, LossState, O](events, _ => 0L, LossState(0L, hasPrev = false, Nil)) {
+      (_, day, rev, st, emit) =>
+        if (!st.hasPrev) LossState(rev, hasPrev = true, st.losses)
+        else {
           val losses = st.losses :+ -(rev - st.prevRev)
-          emit(st.curDay, losses.size.toLong, losses.toVector)
-            .foreach(out += _)
-          st = st.copy(losses = losses)
+          stat(day, losses.size.toLong, losses.toVector).foreach(emit)
+          LossState(rev, hasPrev = true, losses)
         }
-        st = st.copy(prevRev = rev, hasPrev = true)
-      }
-      sorted.foreach { e =>
-        val d = micros(e.ts) / 86400000000L
-        if (d != st.curDay) {
-          closeDay()
-          st = st.copy(curDay = d, cents = 0L)
-        }
-        st = st.copy(cents = st.cents + math.floor(e.value * 100 + 0.5).toLong)
-      }
-      state.update(st)
-      out.result().iterator
     }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
   final case class HllState(regs: Seq[Int], nSeen: Long)
@@ -1568,8 +1541,8 @@ object StreamOps {
   }
 
   final case class HwState(
-      curDay: Long, cents: Long, t: Long, l: Long, b: Long,
-      s: Seq[Long], y: Seq[Long], saeHw: Long, saeSn: Long)
+      t: Long, l: Long, b: Long, s: Seq[Long], y: Seq[Long],
+      saeHw: Long, saeSn: Long)
   final case class HwOut(
       t: Long, day: Long, level_cents: Long, trend_cents: Long,
       sae_hw: Long, sae_sn: Long, skill_milli: Option[Long])
@@ -1577,10 +1550,10 @@ object StreamOps {
   /** Streaming additive Holt–Winters — the stateful twin of q380
     * ([[graft.operators.Forecast.q380HoltWinters]]) over the event
     * stream's daily cent sums: as each day closes (first event of a
-    * LATER day arrives — the in-order-arrival contract shared with
-    * [[cusum]] / [[hedgeMonitor]]), the level/trend/season state
-    * advances through the IDENTICAL independently-floored IEEE
-    * smoothing chains as the batch fold (α=0.3, β=0.1, γ=0.2,
+    * LATER day arrives — the [[dayFold]] contract), the
+    * level/trend/season state advances through the IDENTICAL
+    * independently-floored IEEE smoothing chains as the batch fold
+    * (α=0.3, β=0.1, γ=0.2,
     * zero-state cold start, 14-day burn-in before scoring), and the
     * one-step-ahead absolute errors accumulate against the
     * seasonal-naive baseline. Each emitted row equals the batch
@@ -1594,18 +1567,11 @@ object StreamOps {
       alpha: Double = 0.3, beta: Double = 0.1,
       gamma: Double = 0.2, burn: Long = 14L): Dataset[HwOut] = {
     import spark.implicits._
-
-    def fn(key: Long, rows: Iterator[AsofEvent],
-        state: GroupState[HwState]): Iterator[HwOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var st = state.getOption.getOrElse(HwState(
-        Long.MinValue, 0L, 0L, 0L, 0L,
-        Seq.fill(7)(0L), Seq.fill(7)(0L), 0L, 0L))
-      val out = List.newBuilder[HwOut]
-      def closeDay(): Unit = if (st.curDay != Long.MinValue) {
+    dayFold[Long, HwState, HwOut](events, _ => 0L,
+        HwState(0L, 0L, 0L, Seq.fill(7)(0L), Seq.fill(7)(0L), 0L, 0L)) {
+      (_, day, yv, st, emit) =>
         val t = st.t + 1
         val slot = ((t - 1) % 7).toInt
-        val yv = st.cents
         val sold = st.s(slot)
         val yold = st.y(slot)
         val fc = st.l + st.b + sold
@@ -1617,40 +1583,22 @@ object StreamOps {
           (1 - beta) * st.b.toDouble).toLong
         val s2 = math.floor(gamma * (yv - l2).toDouble +
           (1 - gamma) * sold.toDouble).toLong
-        st = st.copy(t = t, l = l2, b = b2,
-          s = st.s.updated(slot, s2), y = st.y.updated(slot, yv),
-          saeHw = saeHw, saeSn = saeSn)
-        out += HwOut(t, st.curDay, l2, b2, saeHw, saeSn,
-          if (saeSn > 0) Some(1000L * saeHw / saeSn) else None)
-      }
-      sorted.foreach { e =>
-        val d = micros(e.ts) / 86400000000L
-        if (d != st.curDay) {
-          closeDay()
-          st = st.copy(curDay = d, cents = 0L)
-        }
-        st = st.copy(cents = st.cents + math.floor(e.value * 100 + 0.5).toLong)
-      }
-      state.update(st)
-      out.result().iterator
+        emit(HwOut(t, day, l2, b2, saeHw, saeSn,
+          if (saeSn > 0) Some(1000L * saeHw / saeSn) else None))
+        HwState(t, l2, b2, st.s.updated(slot, s2), st.y.updated(slot, yv),
+          saeHw, saeSn)
     }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
-  final case class PhState(
-      curDay: Long, cents: Long, t: Long, cum: Long, m: Long, minM: Long)
+  final case class PhState(t: Long, cum: Long, m: Long, minM: Long)
   final case class PhOut(
       t: Long, day: Long, m: Long, ph: Long, lambda_cents: Long,
       alert: Boolean)
 
   /** Streaming Page–Hinkley mean-shift monitor — the stateful twin of
     * q402 ([[graft.operators.Forecast.q402PageHinkley]]) over the
-    * event stream's daily cent sums: as each day closes (the in-order
-    * day-close contract shared with [[hwMonitor]]), the detector
+    * event stream's daily cent sums: as each day closes (the
+    * [[dayFold]] contract), the detector
     * advances the IDENTICAL exact integer prefix chain as the batch
     * fold — x̄_t = cum div t (truncating on non-negative), m_t =
     * Σ(x_i − x̄_i), ph_t = m_t − min_{s≤t} m_s — so every emitted
@@ -1667,45 +1615,22 @@ object StreamOps {
   def phMonitor(spark: SparkSession,
       events: Dataset[AsofEvent]): Dataset[PhOut] = {
     import spark.implicits._
-
-    def fn(key: Long, rows: Iterator[AsofEvent],
-        state: GroupState[PhState]): Iterator[PhOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var st = state.getOption.getOrElse(
-        PhState(Long.MinValue, 0L, 0L, 0L, 0L, Long.MaxValue))
-      val out = List.newBuilder[PhOut]
-      def closeDay(): Unit = if (st.curDay != Long.MinValue) {
+    dayFold[Long, PhState, PhOut](events, _ => 0L, PhState(0L, 0L, 0L, Long.MaxValue)) {
+      (_, day, cents, st, emit) =>
         val t = st.t + 1
-        val cum = st.cum + st.cents
-        val term = st.cents - cum / t // non-negative cum: exact batch div
+        val cum = st.cum + cents
+        val term = cents - cum / t // non-negative cum: exact batch div
         val m = st.m + term
         val minM = math.min(st.minM, m) // inclusive, like the batch
         val ph = m - minM
         val lambda = (cum / t) / 5
-        st = st.copy(t = t, cum = cum, m = m, minM = minM)
-        out += PhOut(t, st.curDay, m, ph, lambda, ph > lambda)
-      }
-      sorted.foreach { e =>
-        val d = micros(e.ts) / 86400000000L
-        if (d != st.curDay) {
-          closeDay()
-          st = st.copy(curDay = d, cents = 0L)
-        }
-        st = st.copy(cents = st.cents + math.floor(e.value * 100 + 0.5).toLong)
-      }
-      state.update(st)
-      out.result().iterator
+        emit(PhOut(t, day, m, ph, lambda, ph > lambda))
+        PhState(t, cum, m, minM)
     }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
   final case class VbtState(
-      curDay: Long, cents: Long, prevRev: Long, hasPrev: Boolean,
-      n: Long, x: Long, prevV: Int,
+      prevRev: Long, hasPrev: Boolean, n: Long, x: Long, prevV: Int,
       n00: Long, n01: Long, n10: Long, n11: Long)
   final case class VbtOut(
       n: Long, day: Long, loss_cents: Long, violation: Boolean,
@@ -1724,8 +1649,8 @@ object StreamOps {
     * coverage decay the day it starts, not at quarter end.
     *
     * Exactness: losses/violations/transition counts are exact
-    * integers advanced per closed day (the in-order day-close
-    * contract shared with [[hwMonitor]]); the LR at each step equals
+    * integers advanced per closed day (the [[dayFold]] contract);
+    * the LR at each step equals
     * the batch chain evaluated on the prefix (n, x) — the spec pins
     * bit-equality against the replayed recursion and the terminal
     * batch formula. State is O(1): eleven scalars. */
@@ -1743,16 +1668,12 @@ object StreamOps {
         Some(math.floor(1000.0 * lr).toLong)
       }
 
-    def fn(key: Long, rows: Iterator[AsofEvent],
-        state: GroupState[VbtState]): Iterator[VbtOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var st = state.getOption.getOrElse(VbtState(
-        Long.MinValue, 0L, 0L, hasPrev = false, 0L, 0L, -1,
-        0L, 0L, 0L, 0L))
-      val out = List.newBuilder[VbtOut]
-      def closeDay(): Unit = if (st.curDay != Long.MinValue) {
-        if (st.hasPrev) {
-          val loss = st.prevRev - st.cents
+    dayFold[Long, VbtState, VbtOut](events, _ => 0L,
+        VbtState(0L, hasPrev = false, 0L, 0L, -1, 0L, 0L, 0L, 0L)) {
+      (_, day, cents, st, emit) =>
+        if (!st.hasPrev) st.copy(prevRev = cents, hasPrev = true)
+        else {
+          val loss = st.prevRev - cents
           val v = loss > varCents
           val n = st.n + 1
           val x = st.x + (if (v) 1L else 0L)
@@ -1761,42 +1682,36 @@ object StreamOps {
             case 1 => (0L, 0L, if (!v) 1L else 0L, if (v) 1L else 0L)
             case _ => (0L, 0L, 0L, 0L) // first backtest day: no transition
           }
-          st = st.copy(n = n, x = x, prevV = if (v) 1 else 0,
-            n00 = st.n00 + b00, n01 = st.n01 + b01,
-            n10 = st.n10 + b10, n11 = st.n11 + b11)
-          out += VbtOut(n, st.curDay, loss, v, x, lrPof(n, x),
-            st.n01, st.n11)
+          val next = VbtState(cents, hasPrev = true, n, x, if (v) 1 else 0,
+            st.n00 + b00, st.n01 + b01, st.n10 + b10, st.n11 + b11)
+          emit(VbtOut(n, day, loss, v, x, lrPof(n, x), next.n01, next.n11))
+          next
         }
-        st = st.copy(prevRev = st.cents, hasPrev = true)
-      }
-      sorted.foreach { e =>
-        val d = micros(e.ts) / 86400000000L
-        if (d != st.curDay) {
-          closeDay()
-          st = st.copy(curDay = d, cents = 0L)
-        }
-        st = st.copy(cents = st.cents + math.floor(e.value * 100 + 0.5).toLong)
-      }
-      state.update(st)
-      out.result().iterator
     }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
-  final case class SeriesState(
-      curDay: Long, cents: Long, days: Seq[Long], revs: Seq[Long])
+  final case class SeriesState(days: Seq[Long], revs: Seq[Long])
+
+  /** [[dayFold]] over the closed (day, cent-sum) series: each day close
+    * appends the day and hands the whole closed series to `stat`. */
+  private def closedSeries[O: Encoder](spark: SparkSession, events: Dataset[AsofEvent])(
+      stat: (IndexedSeq[Long], IndexedSeq[Long]) => Option[O]): Dataset[O] = {
+    import spark.implicits._
+    dayFold[Long, SeriesState, O](events, _ => 0L, SeriesState(Vector.empty, Vector.empty)) {
+      (_, day, rev, st, emit) =>
+        val next = SeriesState(st.days :+ day, st.revs :+ rev)
+        stat(next.days.toIndexedSeq, next.revs.toIndexedSeq).foreach(emit)
+        next
+    }
+  }
   final case class PettittOut(
       n_days: Long, day: Long, k_stat: Long, change_day: Long,
       p_micro: Long)
 
   /** Streaming Pettitt changepoint monitor — the stateful twin of
     * q414 ([[graft.operators.Forecast.q414Pettitt]]) over the event
-    * stream's daily cent sums: as each day closes (the in-order
-    * day-close contract shared with [[hwMonitor]]), the monitor
+    * stream's daily cent sums: as each day closes (the [[dayFold]]
+    * contract, via [[closedSeries]]), the monitor
     * recomputes the EXACT batch rank chain on the closed prefix —
     * doubled midranks off the (value, count) domain, the cumulative
     * U_t = Σd2 − t(n+1) walk, K = max_{t<n}|U_t|, the argmax day,
@@ -1851,41 +1766,7 @@ object StreamOps {
       }
     }
 
-    def fn(key: Long, rows: Iterator[AsofEvent],
-        state: GroupState[SeriesState]): Iterator[PettittOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var st = state.getOption.getOrElse(
-        SeriesState(Long.MinValue, 0L, Vector.empty, Vector.empty))
-      val out = List.newBuilder[PettittOut]
-      def closeDay(): Unit = if (st.curDay != Long.MinValue) {
-        st = st.copy(days = st.days :+ st.curDay, revs = st.revs :+ st.cents)
-        stat(st.days.toIndexedSeq, st.revs.toIndexedSeq).foreach(out += _)
-      }
-      sorted.foreach { e =>
-        val d = micros(e.ts) / 86400000000L
-        // in-order day-close contract, enforced: a late event for an
-        // already-closed day (admitted by the watermark in a LATER
-        // micro-batch) would silently reopen it as a new out-of-order
-        // series entry and skew every subsequent full-prefix recompute
-        // (ADVICE r10) — fail loudly instead
-        if (d < st.curDay)
-          throw new IllegalStateException(
-            s"day-close contract violated: event ${e.event_id} is for " +
-              s"day $d but day ${st.curDay} already opened")
-        if (d != st.curDay) {
-          closeDay()
-          st = st.copy(curDay = d, cents = 0L)
-        }
-        st = st.copy(cents = st.cents + math.floor(e.value * 100 + 0.5).toLong)
-      }
-      state.update(st)
-      out.result().iterator
-    }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
+    closedSeries(spark, events)(stat)
   }
 
   final case class CusumSqOut(
@@ -1951,37 +1832,7 @@ object StreamOps {
       }
     }
 
-    def fn(key: Long, rows: Iterator[AsofEvent],
-        state: GroupState[SeriesState]): Iterator[CusumSqOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var st = state.getOption.getOrElse(
-        SeriesState(Long.MinValue, 0L, Vector.empty, Vector.empty))
-      val out = List.newBuilder[CusumSqOut]
-      def closeDay(): Unit = if (st.curDay != Long.MinValue) {
-        st = st.copy(days = st.days :+ st.curDay, revs = st.revs :+ st.cents)
-        stat(st.days.toIndexedSeq, st.revs.toIndexedSeq).foreach(out += _)
-      }
-      sorted.foreach { e =>
-        val d = micros(e.ts) / 86400000000L
-        // in-order day-close contract, enforced (see pettittMonitor)
-        if (d < st.curDay)
-          throw new IllegalStateException(
-            s"day-close contract violated: event ${e.event_id} is for " +
-              s"day $d but day ${st.curDay} already opened")
-        if (d != st.curDay) {
-          closeDay()
-          st = st.copy(curDay = d, cents = 0L)
-        }
-        st = st.copy(cents = st.cents + math.floor(e.value * 100 + 0.5).toLong)
-      }
-      state.update(st)
-      out.result().iterator
-    }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
+    closedSeries(spark, events)(stat)
   }
 
   final case class ObfState(
@@ -2017,22 +1868,17 @@ object StreamOps {
     import spark.implicits._
     val bounds = Array(4877L, 3357L, 2680L, 2290L, 2031L)
     val nks = Array.tabulate(5)(k => (k + 1) * plannedN / 5)
-
-    def fn(key: Long, rows: Iterator[AsofEvent],
-        state: GroupState[ObfState]): Iterator[ObfOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var st = state.getOption.getOrElse(
-        ObfState(0L, 0L, 0, Long.MinValue, Long.MinValue))
-      val out = List.newBuilder[ObfOut]
-      sorted.foreach { e =>
+    orderedFold[Long, ObfState, ObfOut](events, _ => 0L,
+        ObfState(0L, 0L, 0, Long.MinValue, Long.MinValue)) {
+      (_, prev, e, emit) =>
         val m = micros(e.ts)
-        if (m < st.lastMicros || (m == st.lastMicros && e.event_id <= st.lastId))
+        if (m < prev.lastMicros || (m == prev.lastMicros && e.event_id <= prev.lastId))
           throw new IllegalStateException(
             s"look-rank contract violated: event ${e.event_id} arrives " +
               s"out of (ts, event_id) order — look positions would shift")
-        st = st.copy(
-          seen = st.seen + 1,
-          x = st.x + (if (e.event_type == "purchase") 1L else 0L),
+        var st = prev.copy(
+          seen = prev.seen + 1,
+          x = prev.x + (if (e.event_type == "purchase") 1L else 0L),
           lastMicros = m, lastId = e.event_id)
         while (st.lookIdx < 5 && st.seen == nks(st.lookIdx)) {
           val k = st.lookIdx + 1
@@ -2041,19 +1887,12 @@ object StreamOps {
           // floor — 1000.0 * (x - nk*0.2) binds before the / sqrt
           val z = math.floor(1000.0 * (st.x.toDouble - nk.toDouble * 0.2) /
             math.sqrt(nk.toDouble * 0.2 * 0.8)).toLong
-          out += ObfOut(k.toLong, nk, st.x, z, bounds(st.lookIdx),
-            if (math.abs(z) > bounds(st.lookIdx)) 1L else 0L)
+          emit(ObfOut(k.toLong, nk, st.x, z, bounds(st.lookIdx),
+            if (math.abs(z) > bounds(st.lookIdx)) 1L else 0L))
           st = st.copy(lookIdx = st.lookIdx + 1)
         }
-      }
-      state.update(st)
-      out.result().iterator
+        st
     }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_ => 0L)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
   /** Streaming n-gram novelty — the stateful twin of q386

@@ -161,6 +161,51 @@ class EtlPipelineSpec extends AnyFunSuite {
     df.select("acc_number", "file_name", "acc_type").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq.sorted
 
+  /** `config` with a second statement bank, zorro, mapped as alfabank is. */
+  private val twoBanks = config.copy(mapping = config.mapping.updated("stm",
+    config.mapping("stm").updated("zorro", config.mapping("stm")("alfabank"))))
+
+  /** Three statement files of two banks; one key value holds a quoted separator. */
+  private def writeTwoBankDrop(dir: Path): Unit = {
+    writeStm(dir, "alfabank_current_stm.csv", stmHeader,
+      "40817001;15.01.2025;1234,56;D;groceries", "40817001;16.01.2025;\"99;10\";K;payroll")
+    writeStm(dir, "alfabank_savings_stm.csv", stmHeader, "40817002;17.01.2025;5,00;K;interest")
+    writeStm(dir, "zorro_current_stm.csv", stmHeader, "70000001;18.01.2025;40,00;D;rent")
+  }
+
+  test("rows agree with a per-file readCsv plus literal file metadata") {
+    val dir = Files.createTempDirectory("graft-etl-perfile")
+    writeTwoBankDrop(dir)
+    val stm = EtlPipeline.processCsvFiles(spark, dir.toString, twoBanks)("stm")
+    val expected = Seq(
+      ("alfabank", "current", "alfabank_current_stm.csv"),
+      ("alfabank", "savings", "alfabank_savings_stm.csv"),
+      ("zorro", "current", "zorro_current_stm.csv"))
+      .map { case (bank, accType, f) =>
+        EtlPipeline.readCsv(spark, s"$dir/$f", ";", stmHeader.split(';').toSeq)
+          .select(md5(concat_ws("#", col("acc"), col("date"), col("amount"))).as("surrogate_key"),
+            col("acc").as("acc_number"), col("flag").as("dc"), lit(bank).as("bank_name"),
+            lit(accType).as("acc_type"), lit(f).as("file_name"))
+      }
+      .reduce(_ unionByName _)
+    val got = stm.select(expected.columns.map(col): _*)
+    assert(got.count() == 4)
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
+  }
+
+  test("a bank_name filter over the result plans only that bank's csv scans") {
+    val dir = Files.createTempDirectory("graft-etl-bank-prune")
+    writeTwoBankDrop(dir)
+    val stm = EtlPipeline.processCsvFiles(spark, dir.toString, twoBanks)("stm")
+    assert(csvScans(stm).size == 2)
+    val zorro = stm.filter(col("bank_name") === "zorro")
+    assert(csvScans(zorro) == Seq(Seq("zorro_current_stm.csv")))
+    assert(stmOrigins(zorro) == Seq(("70000001", "zorro_current_stm.csv", "current")))
+    val alfabank = stm.filter(col("bank_name").isin("alfabank"))
+    assert(csvScans(alfabank) == Seq(Seq("alfabank_current_stm.csv", "alfabank_savings_stm.csv")))
+    assert(alfabank.count() == 3)
+  }
+
   test("routing fires no Spark job and plans one csv scan per (type, bank, header) group") {
     val dir = Files.createTempDirectory("graft-etl-groups")
     writeFixtures(dir) // alfabank_current_stm, alfabank_broker_sec and two skipped files

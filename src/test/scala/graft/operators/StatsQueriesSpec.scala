@@ -533,6 +533,23 @@ class StatsQueriesSpec extends AnyFunSuite {
     })
   }
 
+  test("q271: a repeated line number's leftover cent goes to the same line in any row order") {
+    // order 1 repeats line 1 with 28 and 48 cents: etot = 100 is
+    // divisible by 20, so both share frac = 5 * (e mod 20) = 40, the
+    // top of the order, and the one leftover cent (rebate 5 = 1 + 2 + 1
+    // + 1) must land on the same one of the two whatever the row order
+    val lines = Seq((1L, 1, 0.28), (1L, 1, 0.48), (1L, 2, 0.24))
+    def run(rows: Seq[(Long, Int, Double)]): Seq[String] = {
+      val d = java.nio.file.Files.createTempDirectory("graft-q271").toString
+      spark.createDataFrame(rows).toDF("l_orderkey", "l_linenumber", "l_extendedprice")
+        .coalesce(1).write.parquet(s"$d/lineitem.parquet")
+      FinanceAudit.q271Proration.build(spark, d).collect().map(_.toString).toSeq.sorted
+    }
+    val fwd = run(lines)
+    assert(fwd == Seq("[1,1,28,5,2,1]", "[1,1,48,5,2,0]", "[1,2,24,5,1,0]"))
+    assert(run(lines.reverse) == fwd)
+  }
+
   test("q272: lateness quantiles are ordered and bounded by the max") {
     val rows = EventOps.q272LatenessProfile.build(spark, dir).collect()
     assert(rows.nonEmpty)

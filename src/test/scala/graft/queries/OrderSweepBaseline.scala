@@ -30,7 +30,7 @@ object OrderSweepBaseline {
     "q207_bpe_fertility: lag over non-provably-unique axis [pos]",
     "q207_bpe_fertility: lead over non-provably-unique axis [pos]",
     "q207_bpe_fertility: row_number/lag over non-provably-unique axis [pos]",
-    "q271_proration: row_number over non-provably-unique axis [frac,ln2]",
+    "q271_proration: row_number over non-provably-unique axis [frac,ln2,e]",
     "q273_hard_negatives: LIMIT over non-provably-unique sort [margin,anchor_id]",
     "q290_seasonal_anomaly: LIMIT over non-provably-unique sort [abs(z_milli),day]",
     "q329_ood_mahalanobis: LIMIT over non-provably-unique sort [z2_micro,vec_id]",

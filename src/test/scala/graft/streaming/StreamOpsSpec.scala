@@ -4,8 +4,9 @@ import java.sql.Timestamp
 
 import graft.TestSpark
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** MemoryStream-driven tests for the streaming twins (SURVEY.md §5):
@@ -1960,5 +1961,49 @@ class StreamOpsSpec extends AnyFunSuite {
       for ((k, n) <- batch) assert(streamed.get(k).contains(n),
         s"window/n $k: stream=${streamed.get(k)} batch=$n")
     } finally q.stop()
+  }
+
+  test("day-close monitors and hedgeMonitor reject an event for a day or hour already closed") {
+    implicit val sqlCtx = spark.sqlContext
+    val (minMs, hourMs, dayMs) = (60000L, 3600000L, 86400000L)
+    val d = (Base / dayMs + 1) * dayMs // 00:00 UTC of day D
+    def ev(ms: Long, id: Long) =
+      StreamOps.AsofEvent(1L, new Timestamp(ms), "purchase", 10.0, id)
+    // chunk 1 ends at D+1 00:10, closing day D (and hour D 23); chunk 2
+    // holds D 23:40, inside the 1-hour watermark delay, so no watermark
+    // rule can drop it before the monitor sees it
+    val closing = Seq(ev(d - 12 * hourMs, 1L), ev(d + 12 * hourMs, 2L),
+      ev(d + dayMs + 10 * minMs, 3L))
+    val late = Seq(ev(d + 23 * hourMs + 40 * minMs, 4L))
+    val day = "day-close contract violated"
+    val monitors: Seq[(String, Dataset[StreamOps.AsofEvent] => Dataset[_], String)] = Seq(
+      ("hw", StreamOps.hwMonitor(spark, _), day),
+      ("ph", StreamOps.phMonitor(spark, _), day),
+      ("varBacktest", StreamOps.varBacktestMonitor(spark, _, 100L), day),
+      ("varEs", StreamOps.varEsMonitor(spark, _), day),
+      ("gpd", StreamOps.gpdTailMonitor(spark, _), day),
+      ("controlChart", StreamOps.controlChartMonitor(spark, _,
+        Map("purchase" -> StreamOps.SpcBaseline(BigInt(3), BigInt(3000), BigInt(4000000)))), day),
+      ("pettitt", StreamOps.pettittMonitor(spark, _), day),
+      ("cusumSq", StreamOps.cusumSqMonitor(spark, _), day),
+      ("hedge", StreamOps.hedgeMonitor(spark, _, 1000L), "hour-close contract violated"))
+    val accepted = monitors.flatMap { case (name, monitor, expected) =>
+      val in = MemoryStream[StreamOps.AsofEvent]
+      val q = monitor(in.toDS()).writeStream.format("memory")
+        .queryName(s"reopen_$name").outputMode(OutputMode.Append).start()
+      try {
+        in.addData(closing); q.processAllAvailable()
+        in.addData(late)
+        val rejected =
+          try { q.processAllAvailable(); false }
+          catch {
+            case e: StreamingQueryException =>
+              Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+                .exists(t => Option(t.getMessage).exists(_.contains(expected)))
+          }
+        if (rejected) None else Some(name)
+      } finally q.stop()
+    }
+    assert(accepted.isEmpty, s"monitors that folded the late event: $accepted")
   }
 }
