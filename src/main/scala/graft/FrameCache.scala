@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Process-local memoization of shared, eagerly-checkpointed frames.
+/** Process-local memoization of shared, checkpointed frames.
   *
   * Why: the graph-audit family (q65/q150/q155/q238/q241/q242/q270/
   * q275/q284 …) derives the SAME static edge list from the same base
@@ -15,9 +15,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * test sessions never share frames; WeakHashMap on the session lets
   * a stopped session's checkpoint RDDs be collected.
   *
-  * Only frames that are ALREADY eagerly checkpointed belong here —
-  * caching a lazy plan would share nothing but lineage. Callers hand
-  * in a `build` that ends in `.ckpt()`.
+  * Only frames whose build ENDS in `.ckpt()` belong here. The
+  * checkpoint is lazy (materialized inside the first action that
+  * reads it), but the cached DataFrame is then one LogicalRDD over one
+  * RDD, so every query that reads it reads the same materialization.
+  * A cached plan without that final `.ckpt()` would share only
+  * lineage: each consumer would recompute it.
   *
   * Plan-audit interplay: inside `Ckpt.withAudit` the cache is
   * BYPASSED (build fresh, don't store), so the sweep records every

@@ -1,10 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Dev harness: dump a SUBSET of queries (same layout as [[Verify]])
   * for tools/check_oracle.py — fast iteration on one query without
-  * rerunning the whole surface. */
+  * rerunning the whole surface. A failing query does not stop the
+  * run: every named query is attempted, and the run then exits 1
+  * listing every failure (a crash probe over the whole surface needs
+  * the full list, not the first crasher). */
 object VerifySome {
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {
@@ -16,17 +20,13 @@ object VerifySome {
     val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    // GRAFT_KEEP_GOING=1: survey ALL failures instead of dying at the
-    // first (the degenerate-corpus crash probe wants the full list —
-    // q345's r11 crash aborted the run and hid six queries behind it)
-    val keepGoing = sys.env.get("GRAFT_KEEP_GOING").contains("1")
     var failed = List.empty[String]
     for (n <- names) {
       try {
         SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/$n")
         println(s"[verifysome] wrote $n")
       } catch {
-        case e: Throwable if keepGoing =>
+        case NonFatal(e) =>
           failed ::= n
           println(s"[verifysome] FAILED $n: ${e.toString.take(300)}")
       }

@@ -205,7 +205,7 @@ object Bpe {
     }.reduce(_ unionAll _).orderBy("step")
 
   /** The corpus-trained merge table (step, l, r, merged, cnt),
-    * eagerly checkpointed and memoized per (session, dataset): q94
+    * checkpointed and memoized per (session, dataset): q94
     * reports it, q98/q207 replay it. Training is the expensive half
     * of BPE (8 window+aggregate rounds over the corpus word state) —
     * at scale the learned merges are the broadcast model artifact

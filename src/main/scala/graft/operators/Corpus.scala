@@ -14,7 +14,7 @@ import graft._
   * tokenized corpus is the canonical shared intermediate of a
   * training-data pipeline (tokenize once, fan out to dedup /
   * collocation / vocab / tokenizer-training consumers); here it is
-  * one eagerly-checkpointed frame per (session, dataset), memoized
+  * one checkpointed frame per (session, dataset), memoized
   * through [[graft.FrameCache]] (bypassed inside plan audits so
   * sweeps still see full lineage — same contract as the graph edge
   * lists and the lang-id confusion frame).

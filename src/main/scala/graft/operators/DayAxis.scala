@@ -26,7 +26,7 @@ import graft._
 object DayAxis {
 
   /** (d DATE, rev BIGINT): exact daily revenue in integer cents via
-    * the DECIMAL(12,2)*100 path. Eagerly checkpointed, memoized per
+    * the DECIMAL(12,2)*100 path. Checkpointed, memoized per
     * (session, dataset dir). */
   def revCents(s: SparkSession, dir: String): DataFrame =
     FrameCache.getOrBuild(s, s"dayRevCents:$dir") {

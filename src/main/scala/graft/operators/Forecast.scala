@@ -289,10 +289,10 @@ object Forecast {
     * Scale design (100 TB): the series is a day-grain aggregate
     * (calendar-bounded axis — the prefix window and the ≤n candidate
     * frame are bounded by days, not data, the q118/q178 adjudication;
-    * note PlanSweepSpec cannot see these windows because they sit
-    * below the eager localCheckpoint — this scaladoc IS the
-    * adjudication record); everything below the day grain is one
-    * partial-aggregable pass over events. */
+    * these windows sit below a checkpoint, which PlanSweepSpec sweeps
+    * through `Ckpt.withAudit`, and their adjudication record is
+    * q245's `day` entry in `PlanSweepAllowlist`); everything below the
+    * day grain is one partial-aggregable pass over events. */
   val q245Changepoint: QueryDef = QueryDef(
     "q245_changepoint",
     """WITH ev AS (

@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * Why: `localCheckpoint()` replaces the plan below it with a
   * LogicalRDD, which hides that subtree from any mechanized plan sweep
   * (the r6 verdict's q245 blind spot — its calendar-bounded day-axis
-  * windows sat below an eager checkpoint and were adjudicated only in
-  * a comment). Simply DISABLING checkpoints for the audit does not
+  * windows sat below a checkpoint and were adjudicated only in a
+  * comment). Simply DISABLING checkpoints for the audit does not
   * work: iterative queries (PageRank, power iteration, Borůvka, BPE)
   * rely on the lineage cut to keep the logical plan linear — without
   * it the plan doubles per iteration and `optimizedPlan` alone runs
@@ -20,32 +20,22 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * query builds exactly as in production, and the sweep audits the
   * final plan PLUS every recorded segment — full coverage, no blowup.
   *
-  * The buffer is a ThreadLocal because sbt runs suites concurrently in
-  * one forked JVM — a global would leak audit segments across
-  * whichever specs are interleaved with the sweep.
+  * The buffer is a ThreadLocal so that audit mode is scoped to the
+  * thread that entered [[Ckpt.withAudit]]: code running on any other
+  * thread (a streaming query's micro-batch thread, say) keeps
+  * production behaviour — FrameCache hits, nothing recorded — while
+  * an audit is open. It is not there for concurrent suites: build.sbt
+  * forks one test JVM without `testForkedParallel`, so suites run one
+  * after another.
   */
 package object graft {
 
   object Ckpt {
-    private val rec: ThreadLocal[Option[collection.mutable.ArrayBuffer[LogicalPlan]]] =
+    private val rec: ThreadLocal[Option[collection.mutable.ArrayBuffer[(Int, LogicalPlan)]]] =
       ThreadLocal.withInitial(() => None)
-    // checkpoint RDD id -> the segment plan the checkpoint replaced.
-    // Survives withAudit's return (the sweep resolves LogicalRDD
-    // leaves at join sites AFTER the audited build completes); keyed
-    // by RDD id because a self-join dedup re-instances the LogicalRDD
-    // with fresh exprIds but keeps the same underlying RDD.
-    private val segs: ThreadLocal[collection.mutable.Map[Int, LogicalPlan]] =
-      ThreadLocal.withInitial(() => collection.mutable.Map.empty[Int, LogicalPlan])
 
-    private[graft] def record(p: => LogicalPlan): Unit =
-      rec.get().foreach(_ += p)
-
-    private[graft] def recordSeg(rddId: Int, p: LogicalPlan): Unit =
-      if (auditing) segs.get().update(rddId, p)
-
-    /** The optimized segment plan a checkpoint with this RDD id hides
-      * — valid on the auditing thread until the next [[withAudit]]. */
-    def segmentFor(rddId: Int): Option[LogicalPlan] = segs.get().get(rddId)
+    private[graft] def record(rddId: Int, p: LogicalPlan): Unit =
+      rec.get().foreach(_ += (rddId -> p))
 
     /** True while THIS thread is inside [[withAudit]] — memoizers use
       * it to bypass their cache so every query's full build (and its
@@ -53,13 +43,17 @@ package object graft {
       * frame some earlier query recorded. */
     def auditing: Boolean = rec.get().isDefined
 
-    /** Run `f` in plan-audit mode on THIS thread: returns (result,
-      * optimized plan of every checkpointed segment built inside `f`,
-      * in build order). Always restores, including on exceptions. */
-    def withAudit[A](f: => A): (A, Seq[LogicalPlan]) = {
-      val buf = collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    /** Run `f` in plan-audit mode on THIS thread: returns the result
+      * and every checkpointed segment built inside `f`, in build order,
+      * as (checkpoint RDD id, optimized plan the checkpoint replaced).
+      * Keyed by RDD id rather than by LogicalRDD because a self-join
+      * dedup re-instances the LogicalRDD with fresh exprIds but keeps
+      * the same underlying RDD. The pairs are plain values: they stay
+      * valid after later audits. Always restores, including on
+      * exceptions. */
+    def withAudit[A](f: => A): (A, Seq[(Int, LogicalPlan)]) = {
+      val buf = collection.mutable.ArrayBuffer.empty[(Int, LogicalPlan)]
       rec.set(Some(buf))
-      segs.get().clear()
       try { val a = f; (a, buf.toSeq) } finally rec.set(None)
     }
   }
@@ -70,9 +64,9 @@ package object graft {
       * the segment materializes — persisted once computed — inside
       * the first action that consumes it, not as a job of its own. In
       * plan-audit mode, additionally records this segment's optimized
-      * plan so the sweep sees what the checkpoint hides — both as a
-      * flat segment list and keyed by the checkpoint RDD's id so join
-      * sites over LogicalRDD leaves can be classified.
+      * plan under the checkpoint RDD's id, so the sweep sees what the
+      * checkpoint hides and can classify join sites over LogicalRDD
+      * leaves.
       *
       * Lazy since r13: with AQE the segment's shuffle stages still run
       * at build time, but the final result-stage pass (one full job per
@@ -84,13 +78,11 @@ package object graft {
     def ckpt(): Dataset[T] =
       if (Ckpt.auditing) {
         val seg = ds.queryExecution.optimizedPlan
-        Ckpt.record(seg)
         val out = ds.localCheckpoint(eager = false)
-        out.queryExecution.analyzed match {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            Ckpt.recordSeg(l.rdd.id, seg)
-          case _ => ()
-        }
+        // a checkpointed Dataset's plan is one LogicalRDD over its RDD
+        val leaf = out.queryExecution.analyzed
+          .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+        Ckpt.record(leaf.rdd.id, seg)
         out
       } else ds.localCheckpoint(eager = false)
   }

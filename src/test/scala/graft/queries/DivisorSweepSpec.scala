@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.TestSpark
 import org.apache.spark.sql.catalyst.expressions.{Abs, Add, Alias, And, Attribute, CaseWhen, Cast, Coalesce, DenseRank, Divide, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, Greatest, If, IntegralDivide, Least, LessThan, LessThanOrEqual, Literal, Multiply, Not, NTile, Pmod, Rank, Remainder, RowNumber, Size, StringSplit, Subtract}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.expressions.WindowExpression
@@ -21,9 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * denominators).
   *
   * Mechanism: sweep EVERY registered query's optimized plan (final
-  * plan + checkpointed segments via `Ckpt.withAudit`, like
-  * PlanSweepSpec), collect each IntegralDivide / Remainder / Pmod /
-  * decimal Divide, resolve the divisor through the optimizer's alias
+  * plan + checkpointed segments via `Ckpt.withAudit`, in the pass
+  * shared with PlanSweepSpec), collect each IntegralDivide /
+  * Remainder / Pmod / decimal Divide, resolve the divisor through the optimizer's alias
   * projections, and require it PROVABLY ≥ 1:
   *
   *  - a nonzero numeric literal;
@@ -48,10 +47,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[DivisorSweepBaseline]] ratchet; entries that stop firing fail
   * the spec until the baseline is regenerated (the ratchet only
   * tightens).
+  *
+  * The companion object holds the checker; [[SurfaceAudit]] runs it on
+  * each query's audit in the single pass shared with the other sweeps.
   */
-class DivisorSweepSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = "/root/testdata/sf0.001"
+object DivisorSweepSpec {
 
   /** Column domain floors pinned by the generator AND preserved by
     * every fuzz redraw (TESTDATA.md; tools/fuzz_oracle.py gen: keys
@@ -353,70 +353,74 @@ class DivisorSweepSpec extends AnyFunSuite {
     }
   }
 
-  test("every division's divisor is provably nonzero or ratchet-baselined") {
-    val offenders = collection.mutable.ArrayBuffer[String]()
-    for (q <- graft.SparkEntry.defs) {
-      val (finalPlan, segments) = graft.Ckpt.withAudit {
-        q.build(spark, dir).queryExecution.optimizedPlan
-      }
-      val plans: Seq[LogicalPlan] = finalPlan +: segments
-      // one alias map across all of this query's plans, so a divisor
-      // attribute in the final plan resolves to its defining
-      // expression even when that definition lives in an earlier
-      // ckpt'd segment. A dedup'd self-join re-instances LogicalRDD
-      // leaves with FRESH exprIds, so additionally bridge every
-      // LogicalRDD output attr to the recorded segment's output by
-      // POSITION (Ckpt.segmentFor) — resolution then continues inside
-      // the segment through the ordinary alias entries.
-      val bridges: Seq[(Long, Expression)] = plans.flatMap(_.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l
-      }.flatMap { l =>
-        graft.Ckpt.segmentFor(l.rdd.id).toSeq
-          .filter(_.output.size == l.output.size)
-          .flatMap(seg => l.output.map(_.exprId.id)
-            .zip(seg.output.map(a => a: Expression))
-            .filter { case (x, y) =>
-              x != y.asInstanceOf[Attribute].exprId.id })
-      })
-      // bridges first: a real Alias definition under the same exprId
-      // (ids preserved across the checkpoint) must win over the bridge
-      val aliases: Map[Long, Expression] = (bridges ++ plans.flatMap(
-        _.collect { case n => n }.flatMap(_.expressions).flatMap(_.collect {
-          case al: Alias => al.exprId.id -> (al.child: Expression)
-        }))).toMap
-      // Row-level facts established by Filters flow STRICTLY BOTTOM-UP:
-      // a division in node N only evaluates on rows that already passed
-      // every Filter BELOW N, so only descendants' facts guard it. (A
-      // filter ABOVE the division prunes after the fact — the first cut
-      // of this sweep applied facts plan-wide and false-passed the
-      // q18-class `div (n - 1)` under a later `HAVING n > 1`; the
-      // degenerate-corpus probe caught the unsoundness.) Outer-join
-      // null extension void facts only on rows where the referenced
-      // column is null — and a null divisor nulls the division instead
-      // of crashing, so the union over children stays sound for the
-      // crash property. A Filter's own condition does not guard
-      // divisions inside itself (conjunct evaluation order is
-      // undefined).
-      val divisors = collection.mutable.ArrayBuffer[Expression]()
-      def sweepNode(p: LogicalPlan): Seq[Fact] = {
-        val below = p.children.flatMap(sweepNode)
-        p.expressions.foreach(e =>
-          divisors ++= unguardedDivisors(e, below))
-        p match {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            below ++ nonzeroFacts(f.condition)
-          case _ => below
-        }
-      }
-      plans.foreach(sweepNode)
-      for (d <- divisors) {
-        if (!nonzeroLiteral(d) && !nullifGuarded(d) &&
-          !atLeastOne(d, aliases)) {
-          offenders += s"${q.name}: divisor not provably nonzero: ${d.sql}"
-        }
+  /** This sweep's findings on one query's audit: one line per divisor
+    * in the final plan or a checkpointed segment that is not provably
+    * nonzero. */
+  def check(a: QueryAudit): Seq[String] = {
+    val found = collection.mutable.ArrayBuffer[String]()
+    val plans = a.plans
+    // one alias map across all of this query's plans, so a divisor
+    // attribute in the final plan resolves to its defining
+    // expression even when that definition lives in an earlier
+    // ckpt'd segment. A dedup'd self-join re-instances LogicalRDD
+    // leaves with FRESH exprIds, so additionally bridge every
+    // LogicalRDD output attr to the recorded segment's output by
+    // POSITION (the audit's segmentFor map) — resolution then
+    // continues inside the segment through the ordinary alias entries.
+    val bridges: Seq[(Long, Expression)] = plans.flatMap(_.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l
+    }.flatMap { l =>
+      a.segmentFor.get(l.rdd.id).toSeq
+        .filter(_.output.size == l.output.size)
+        .flatMap(seg => l.output.map(_.exprId.id)
+          .zip(seg.output.map(o => o: Expression))
+          .filter { case (x, y) =>
+            x != y.asInstanceOf[Attribute].exprId.id })
+    })
+    // bridges first: a real Alias definition under the same exprId
+    // (ids preserved across the checkpoint) must win over the bridge
+    val aliases: Map[Long, Expression] = (bridges ++ plans.flatMap(
+      _.collect { case n => n }.flatMap(_.expressions).flatMap(_.collect {
+        case al: Alias => al.exprId.id -> (al.child: Expression)
+      }))).toMap
+    // Row-level facts established by Filters flow STRICTLY BOTTOM-UP:
+    // a division in node N only evaluates on rows that already passed
+    // every Filter BELOW N, so only descendants' facts guard it. (A
+    // filter ABOVE the division prunes after the fact — the first cut
+    // of this sweep applied facts plan-wide and false-passed the
+    // q18-class `div (n - 1)` under a later `HAVING n > 1`; the
+    // degenerate-corpus probe caught the unsoundness.) Outer-join
+    // null extension void facts only on rows where the referenced
+    // column is null — and a null divisor nulls the division instead
+    // of crashing, so the union over children stays sound for the
+    // crash property. A Filter's own condition does not guard
+    // divisions inside itself (conjunct evaluation order is
+    // undefined).
+    val divisors = collection.mutable.ArrayBuffer[Expression]()
+    def sweepNode(p: LogicalPlan): Seq[Fact] = {
+      val below = p.children.flatMap(sweepNode)
+      p.expressions.foreach(e =>
+        divisors ++= unguardedDivisors(e, below))
+      p match {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+          below ++ nonzeroFacts(f.condition)
+        case _ => below
       }
     }
-    val cur = offenders.toSet
+    plans.foreach(sweepNode)
+    for (d <- divisors) {
+      if (!nonzeroLiteral(d) && !nullifGuarded(d) &&
+        !atLeastOne(d, aliases)) {
+        found += s"${a.name}: divisor not provably nonzero: ${d.sql}"
+      }
+    }
+    found.toSeq
+  }
+}
+
+class DivisorSweepSpec extends AnyFunSuite {
+  test("every division's divisor is provably nonzero or ratchet-baselined") {
+    val cur = SurfaceAudit.findings.get.divisor.toSet
     // dump the current set so regenerating the baseline is a copy,
     // not a log-scrape (tools/regen_sweep_baselines.py)
     try java.nio.file.Files.write(

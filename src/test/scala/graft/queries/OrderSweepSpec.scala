@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.TestSpark
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, EqualNullSafe, EqualTo, Expression, Lag, Lead, NTile, RowNumber, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, GlobalLimit, Join, LocalLimit, LocalRelation, LogicalPlan, OneRowRelation, Project, Range, Repartition, RepartitionByExpression, Sort, Window => LWindow}
@@ -33,7 +32,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    keys contain that side's unique set matches ≤1 row and keeps
   *    this side's sets;
   *  - projections remap identity columns; checkpoint LogicalRDDs
-  *    resolve through `Ckpt.segmentFor` by output position —
+  *    resolve through the audit's `segmentFor` map by output
+  *    position —
   *
   * and require each flagged site's (partition ∪ order) references to
   * CONTAIN some unique set of its child. A Sort feeding a Limit is
@@ -57,10 +57,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[OrderSweepBaseline]] ratchet; entries that stop firing fail the
   * spec until the baseline is regenerated (the ratchet only
   * tightens).
+  *
+  * The companion object holds the checker; [[SurfaceAudit]] runs it on
+  * each query's audit in the single pass shared with the other sweeps.
   */
-class OrderSweepSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = "/root/testdata/sf0.001"
+object OrderSweepSpec {
 
   /** Base-table keys measured unique in the driver data (and kept
     * unique by every fuzz redraw, which preserves keys). lineitem has
@@ -103,7 +104,9 @@ class OrderSweepSpec extends AnyFunSuite {
 
   /** Attribute-id sets unique in this plan's output (conservative:
     * absence means "could not prove", never "proved duplicate"). */
-  private def uniqueSets(p: LogicalPlan): Seq[Set[Long]] = (p match {
+  private def uniqueSets(
+      p: LogicalPlan,
+      segmentFor: Map[Int, LogicalPlan]): Seq[Set[Long]] = (p match {
     case lr: LogicalRelation =>
       lr.relation match {
         case fs: HadoopFsRelation =>
@@ -129,7 +132,7 @@ class OrderSweepSpec extends AnyFunSuite {
         case at: Attribute => at.exprId.id -> at.exprId.id
         case al @ Alias(at: Attribute, _) => at.exprId.id -> al.exprId.id
       }.toMap
-      uniqueSets(pr.child).flatMap(s =>
+      uniqueSets(pr.child, segmentFor).flatMap(s =>
         if (s.forall(ident.contains)) Some(s.map(ident)) else None)
     case f: Filter =>
       // a filter that pins a unique set by equality to literals
@@ -150,22 +153,22 @@ class OrderSweepSpec extends AnyFunSuite {
             a: Attribute) => a.exprId.id
         }.toSet
       }
-      val below = uniqueSets(f.child)
+      val below = uniqueSets(f.child, segmentFor)
       if (below.exists(u => u.nonEmpty && u.subsetOf(pinned)))
         Seq(Set.empty[Long])
       else below
-    case s: Sort => uniqueSets(s.child)
-    case l: GlobalLimit => uniqueSets(l.child)
-    case l: LocalLimit => uniqueSets(l.child)
-    case r: Repartition => uniqueSets(r.child)
-    case r: RepartitionByExpression => uniqueSets(r.child)
-    case w: LWindow => uniqueSets(w.child)
+    case s: Sort => uniqueSets(s.child, segmentFor)
+    case l: GlobalLimit => uniqueSets(l.child, segmentFor)
+    case l: LocalLimit => uniqueSets(l.child, segmentFor)
+    case r: Repartition => uniqueSets(r.child, segmentFor)
+    case r: RepartitionByExpression => uniqueSets(r.child, segmentFor)
+    case w: LWindow => uniqueSets(w.child, segmentFor)
     case j: Join =>
       j.joinType match {
-        case LeftSemi | LeftAnti => uniqueSets(j.left)
+        case LeftSemi | LeftAnti => uniqueSets(j.left, segmentFor)
         case _ =>
-          val lu = uniqueSets(j.left)
-          val ru = uniqueSets(j.right)
+          val lu = uniqueSets(j.left, segmentFor)
+          val ru = uniqueSets(j.right, segmentFor)
           val (lk, rk) = equiKeys(j)
           // a side whose equi keys contain its own unique set matches
           // at most one row per probe: the OTHER side's sets survive.
@@ -196,7 +199,7 @@ class OrderSweepSpec extends AnyFunSuite {
       g.generator match {
         case _: org.apache.spark.sql.catalyst.expressions.PosExplode =>
           val pos = g.generatorOutput.headOption.map(_.exprId.id)
-          pos.toSeq.flatMap(pp => uniqueSets(g.child).map(_ + pp))
+          pos.toSeq.flatMap(pp => uniqueSets(g.child, segmentFor).map(_ + pp))
         case _ => Nil
       }
     case lr: LocalRelation =>
@@ -212,82 +215,85 @@ class OrderSweepSpec extends AnyFunSuite {
     case _: org.apache.spark.sql.catalyst.plans.logical.Expand => Nil
     case r: Range => Seq(Set(r.output.head.exprId.id))
     case l: LogicalRDD =>
-      graft.Ckpt.segmentFor(l.rdd.id) match {
+      segmentFor.get(l.rdd.id) match {
         case Some(seg) if seg.output.size == l.output.size =>
           val posMap = seg.output.map(_.exprId.id)
             .zip(l.output.map(_.exprId.id)).toMap
-          uniqueSets(seg).flatMap(s =>
+          uniqueSets(seg, segmentFor).flatMap(s =>
             if (s.forall(posMap.contains)) Some(s.map(posMap)) else None)
         case _ => Nil
       }
-    case other if other.children.size == 1 => uniqueSets(other.children.head)
+    case other if other.children.size == 1 =>
+      uniqueSets(other.children.head, segmentFor)
     case _ => Nil
   }).distinct.take(8)
 
-  private def provable(child: LogicalPlan, refs: Set[Long]): Boolean =
-    uniqueSets(child).exists(_.subsetOf(refs)) ||
+  private def provable(
+      child: LogicalPlan,
+      refs: Set[Long],
+      segmentFor: Map[Int, LogicalPlan]): Boolean =
+    uniqueSets(child, segmentFor).exists(_.subsetOf(refs)) ||
       // full-row tiebreak (the r11 q11/q02/q269 fix shape): when the
       // axis references EVERY column of the frame, remaining ties are
       // bit-identical rows — any cut or rank assignment among them is
       // multiset-invariant
       child.output.forall(a => refs.contains(a.exprId.id))
 
-  test("limits and order-sensitive windows ride a tie-free axis or are ratchet-baselined") {
-    val offenders = collection.mutable.ArrayBuffer[String]()
-    def adjudicate(q: String, site: String, offence: => String): Unit =
-      offenders += offence
-    for (q <- graft.SparkEntry.defs) {
-      val (finalPlan, segments) = graft.Ckpt.withAudit {
-        q.build(spark, dir).queryExecution.optimizedPlan
-      }
-      for (lp <- finalPlan +: segments) {
-        // order-sensitive windows
-        for (w <- lp.collectWithSubqueries { case ww: LWindow => ww }) {
-          val sensitive = w.windowExpressions.flatMap(_.collect {
-            case we: WindowExpression => we.windowFunction match {
-              case _: RowNumber => Some("row_number")
-              case _: NTile => Some("ntile")
-              case _: Lead => Some("lead")
-              case _: Lag => Some("lag")
-              case _ => None
-            }
-          }).flatten
-          if (sensitive.nonEmpty) {
-            val refs = (w.partitionSpec ++ w.orderSpec.map(_.child))
-              .flatMap(_.references.map(_.exprId.id)).toSet
-            if (!provable(w.child, refs)) {
-              val axis = w.orderSpec.map(_.child.sql).mkString(",")
-              adjudicate(q.name, axis,
-                s"${q.name}: ${sensitive.distinct.mkString("/")} over " +
-                  s"non-provably-unique axis [$axis]")
-            }
-          }
-        }
-        // limits: selection cut must be deterministic
-        for (gl <- lp.collectWithSubqueries { case g: GlobalLimit => g }) {
-          def findSort(x: LogicalPlan): Option[Sort] = x match {
-            case s: Sort => Some(s)
-            case l: LocalLimit => findSort(l.child)
-            case pr: Project => findSort(pr.child)
+  /** This sweep's findings on one query's audit: one line per LIMIT
+    * or order-sensitive window in the final plan or a checkpointed
+    * segment whose axis is not provably tie-free. */
+  def check(a: QueryAudit): Seq[String] = {
+    val found = collection.mutable.ArrayBuffer[String]()
+    for (lp <- a.plans) {
+      // order-sensitive windows
+      for (w <- lp.collectWithSubqueries { case ww: LWindow => ww }) {
+        val sensitive = w.windowExpressions.flatMap(_.collect {
+          case we: WindowExpression => we.windowFunction match {
+            case _: RowNumber => Some("row_number")
+            case _: NTile => Some("ntile")
+            case _: Lead => Some("lead")
+            case _: Lag => Some("lag")
             case _ => None
           }
-          findSort(gl.child) match {
-            case Some(s) =>
-              val refs = s.order.flatMap(_.child.references.map(_.exprId.id)).toSet
-              if (!provable(s.child, refs)) {
-                val axis = s.order.map(_.child.sql).mkString(",")
-                adjudicate(q.name, axis,
-                  s"${q.name}: LIMIT over non-provably-unique sort [$axis]")
-              }
-            case None =>
-              if (!uniqueSets(gl.child).contains(Set.empty[Long]))
-                adjudicate(q.name, "unordered-limit",
-                  s"${q.name}: LIMIT with no Sort below it")
+        }).flatten
+        if (sensitive.nonEmpty) {
+          val refs = (w.partitionSpec ++ w.orderSpec.map(_.child))
+            .flatMap(_.references.map(_.exprId.id)).toSet
+          if (!provable(w.child, refs, a.segmentFor)) {
+            val axis = w.orderSpec.map(_.child.sql).mkString(",")
+            found += s"${a.name}: ${sensitive.distinct.mkString("/")} over " +
+              s"non-provably-unique axis [$axis]"
           }
+        }
+      }
+      // limits: selection cut must be deterministic
+      for (gl <- lp.collectWithSubqueries { case g: GlobalLimit => g }) {
+        def findSort(x: LogicalPlan): Option[Sort] = x match {
+          case s: Sort => Some(s)
+          case l: LocalLimit => findSort(l.child)
+          case pr: Project => findSort(pr.child)
+          case _ => None
+        }
+        findSort(gl.child) match {
+          case Some(s) =>
+            val refs = s.order.flatMap(_.child.references.map(_.exprId.id)).toSet
+            if (!provable(s.child, refs, a.segmentFor)) {
+              val axis = s.order.map(_.child.sql).mkString(",")
+              found += s"${a.name}: LIMIT over non-provably-unique sort [$axis]"
+            }
+          case None =>
+            if (!uniqueSets(gl.child, a.segmentFor).contains(Set.empty[Long]))
+              found += s"${a.name}: LIMIT with no Sort below it"
         }
       }
     }
-    val cur = offenders.toSet
+    found.toSeq
+  }
+}
+
+class OrderSweepSpec extends AnyFunSuite {
+  test("limits and order-sensitive windows ride a tie-free axis or are ratchet-baselined") {
+    val cur = SurfaceAudit.findings.get.order.toSet
     // dump the current set so regenerating the baseline is a copy,
     // not a log-scrape (tools/regen_sweep_baselines.py)
     try java.nio.file.Files.write(

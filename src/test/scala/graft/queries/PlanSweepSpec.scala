@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The mechanized version of the per-query scale audit: sweep EVERY
   * registered query's optimized plan — including the plan of every
   * checkpointed lineage segment, via `Ckpt.withAudit` (the r6 q245
-  * blind spot: subtrees below an eager localCheckpoint are otherwise
+  * blind spot: subtrees below a localCheckpoint are otherwise
   * invisible) — and flag the shapes that kill a 100 TB run:
   *
   *  - a logical Window with an EMPTY partition spec (plans as "move
@@ -37,10 +37,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * SinglePartition exchanges under 1-row global aggregates, broadcast
   * of aggregated/limited frames (compressed to key-domain or literal-k
   * size), and equi-joins — all distributed or bounded by construction.
+  *
+  * The companion object holds the checker; [[SurfaceAudit]] runs it on
+  * each query's audit in the single pass shared with the other sweeps.
   */
-class PlanSweepSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  private val dir = "/root/testdata/sf0.001"
+object PlanSweepSpec {
 
   /** Order-axis substrings that are bounded by construction wherever
     * they appear (machinery-internal frames). */
@@ -141,18 +142,20 @@ class PlanSweepSpec extends AnyFunSuite {
     * row count is the key's distinct-value DOMAIN, which for keys like
     * raw document length grows with the data, making the θ-join
     * O(|D|²). Walks the same compression-aware path as [[rawData]],
-    * but descends THROUGH checkpoint LogicalRDD leaves via
-    * `Ckpt.segmentFor` (the pre-fix q385 shape θ-joined two ckpt'd
-    * aggregates, invisible to any leaf-level classification). Returns
-    * the offending grouping keys. */
-  private[queries] def dataDomainAggKey(p: LogicalPlan): Option[String] = p match {
+    * but descends THROUGH checkpoint LogicalRDD leaves via the
+    * audit's `segmentFor` map (the pre-fix q385 shape θ-joined two
+    * ckpt'd aggregates, invisible to any leaf-level classification).
+    * Returns the offending grouping keys. */
+  private[queries] def dataDomainAggKey(
+      p: LogicalPlan,
+      segmentFor: Map[Int, LogicalPlan]): Option[String] = p match {
     case _: GlobalLimit | _: LocalLimit => None
     case f: Filter if literalSlice(f) => None
     case _: LocalRelation | _: OneRowRelation => None
     case _: org.apache.spark.sql.catalyst.plans.logical.Range => None
     case lr: LogicalRelation if fixedDim(lr) => None
     case l: LogicalRDD =>
-      graft.Ckpt.segmentFor(l.rdd.id).flatMap(dataDomainAggKey)
+      segmentFor.get(l.rdd.id).flatMap(dataDomainAggKey(_, segmentFor))
     case a: Aggregate =>
       // partition-id keys (ScaleRank's __sr_pid machinery) are bounded
       // by the cluster's parallelism, not the data — same rationale as
@@ -184,7 +187,8 @@ class PlanSweepSpec extends AnyFunSuite {
         !g.foldable && !calendarKey(g) && !pidBounded(g))
       if (bad.nonEmpty) Some(bad.map(_.sql).mkString(",")) else None
     case _: LeafNode => None
-    case other => other.children.flatMap(dataDomainAggKey).headOption
+    case other =>
+      other.children.flatMap(dataDomainAggKey(_, segmentFor)).headOption
   }
 
   /** An equi key usable for hash/sort-merge partitioning: a top-level
@@ -205,11 +209,74 @@ class PlanSweepSpec extends AnyFunSuite {
   private def isBroadcast(h: Option[HintInfo]): Boolean =
     h.exists(_.strategy.contains(BROADCAST))
 
+  /** This sweep's findings on one query's audit: (allowlist pattern,
+    * offence) for every scale-hostile shape in the final plan or a
+    * checkpointed segment, allowlisted or not — the test adjudicates
+    * them against [[PlanSweepAllowlist]] over the whole surface. */
+  def check(a: QueryAudit): Seq[(String, String)] = {
+    val q = a.name
+    val found = collection.mutable.ArrayBuffer[(String, String)]()
+    def flag(pattern: String, offence: String): Unit =
+      found += pattern -> offence
+    for (lp <- a.plans) {
+      val windows = lp.collectWithSubqueries {
+        case w: LWindow if w.partitionSpec.isEmpty => w
+      }
+      for (w <- windows) {
+        val axis = w.orderSpec.collect { case s: SortOrder => s.child.toString }
+          .mkString(",")
+        if (!globallyBounded.exists(axis.contains))
+          flag(axis, s"$q: global window over [$axis]")
+      }
+      val rep1 = lp.collectWithSubqueries {
+        case r: Repartition if r.numPartitions == 1 => r: LogicalPlan
+        case r: RepartitionByExpression if r.optNumPartitions.contains(1) =>
+          r: LogicalPlan
+      }
+      for (_ <- rep1)
+        flag("repartition(1)", s"$q: explicit 1-partition repartition")
+      val joins = lp.collectWithSubqueries { case j: Join => j }
+      for (j <- joins) {
+        if (isBroadcast(j.hint.leftHint) && rawData(j.left))
+          flag("broadcast",
+            s"$q: broadcast hint over raw data (left: ${j.left.nodeName})")
+        if (isBroadcast(j.hint.rightHint) && rawData(j.right))
+          flag("broadcast",
+            s"$q: broadcast hint over raw data (right: ${j.right.nodeName})")
+        if (!hasEquiKey(j) && rawData(j.left) && rawData(j.right))
+          flag("nonequi",
+            s"$q: non-equi ${j.joinType} join, both sides raw")
+        if (!hasEquiKey(j)) {
+          // the q385 shape: θ-join where a side is an Aggregate
+          // keyed on a data-dependent domain AND the other side is
+          // not literal-bounded either — O(|A|·|B|) pairs with both
+          // factors data-dependent. (A keyed frame crossed with a
+          // 1-row global aggregate is |A|·1: fine, not flagged.)
+          val lk = dataDomainAggKey(j.left, a.segmentFor)
+          val rk = dataDomainAggKey(j.right, a.segmentFor)
+          val lUnbounded = lk.nonEmpty || rawData(j.left)
+          val rUnbounded = rk.nonEmpty || rawData(j.right)
+          if ((lk.nonEmpty || rk.nonEmpty) && lUnbounded && rUnbounded &&
+              !(rawData(j.left) && rawData(j.right))) // both-raw: flagged above
+            flag("nonequi-agg",
+              s"$q: non-equi ${j.joinType} join over data-domain " +
+                s"aggregates [${lk.getOrElse("raw")} × ${rk.getOrElse("raw")}]")
+        }
+      }
+    }
+    found.toSeq
+  }
+}
+
+class PlanSweepSpec extends AnyFunSuite {
+  import PlanSweepSpec._
+  private lazy val spark = TestSpark.spark
+
   test("no query plans an unbounded single-partition, broadcast-raw, or non-equi shape") {
     val unusedAllow = collection.mutable.Set(
       PlanSweepAllowlist.entries.map(e => (e._1, e._2)): _*)
     val offenders = collection.mutable.ArrayBuffer[String]()
-    def adjudicate(q: String, pattern: String, offence: => String): Unit =
+    def adjudicate(q: String, pattern: String, offence: String): Unit =
       allow(q, pattern) match {
         case Some(_) =>
           PlanSweepAllowlist.entries
@@ -217,61 +284,8 @@ class PlanSweepSpec extends AnyFunSuite {
             .foreach(e => unusedAllow.remove((e._1, e._2)))
         case None => offenders += offence
       }
-    for (q <- graft.SparkEntry.defs) {
-      // audit mode: the final plan PLUS the optimized plan of every
-      // checkpointed lineage segment (disabling checkpoints instead
-      // would double iterative plans per iteration — unusable)
-      val (finalPlan, segments) = graft.Ckpt.withAudit {
-        q.build(spark, dir).queryExecution.optimizedPlan
-      }
-      for (lp <- finalPlan +: segments) {
-        val windows = lp.collectWithSubqueries {
-          case w: LWindow if w.partitionSpec.isEmpty => w
-        }
-        for (w <- windows) {
-          val axis = w.orderSpec.collect { case s: SortOrder => s.child.toString }
-            .mkString(",")
-          if (!globallyBounded.exists(axis.contains))
-            adjudicate(q.name, axis, s"${q.name}: global window over [$axis]")
-        }
-        val rep1 = lp.collectWithSubqueries {
-          case r: Repartition if r.numPartitions == 1 => r: LogicalPlan
-          case r: RepartitionByExpression if r.optNumPartitions.contains(1) =>
-            r: LogicalPlan
-        }
-        for (_ <- rep1)
-          adjudicate(q.name, "repartition(1)",
-            s"${q.name}: explicit 1-partition repartition")
-        val joins = lp.collectWithSubqueries { case j: Join => j }
-        for (j <- joins) {
-          if (isBroadcast(j.hint.leftHint) && rawData(j.left))
-            adjudicate(q.name, "broadcast",
-              s"${q.name}: broadcast hint over raw data (left: ${j.left.nodeName})")
-          if (isBroadcast(j.hint.rightHint) && rawData(j.right))
-            adjudicate(q.name, "broadcast",
-              s"${q.name}: broadcast hint over raw data (right: ${j.right.nodeName})")
-          if (!hasEquiKey(j) && rawData(j.left) && rawData(j.right))
-            adjudicate(q.name, "nonequi",
-              s"${q.name}: non-equi ${j.joinType} join, both sides raw")
-          if (!hasEquiKey(j)) {
-            // the q385 shape: θ-join where a side is an Aggregate
-            // keyed on a data-dependent domain AND the other side is
-            // not literal-bounded either — O(|A|·|B|) pairs with both
-            // factors data-dependent. (A keyed frame crossed with a
-            // 1-row global aggregate is |A|·1: fine, not flagged.)
-            val lk = dataDomainAggKey(j.left)
-            val rk = dataDomainAggKey(j.right)
-            val lUnbounded = lk.nonEmpty || rawData(j.left)
-            val rUnbounded = rk.nonEmpty || rawData(j.right)
-            if ((lk.nonEmpty || rk.nonEmpty) && lUnbounded && rUnbounded &&
-                !(rawData(j.left) && rawData(j.right))) // both-raw: flagged above
-              adjudicate(q.name, "nonequi-agg",
-                s"${q.name}: non-equi ${j.joinType} join over data-domain " +
-                  s"aggregates [${lk.getOrElse("raw")} × ${rk.getOrElse("raw")}]")
-          }
-        }
-      }
-    }
+    for ((q, pattern, offence) <- SurfaceAudit.findings.get.plan)
+      adjudicate(q, pattern, offence)
     assert(offenders.isEmpty,
       s"unadjudicated scale-hostile shapes:\n${offenders.distinct.mkString("\n")}")
     assert(unusedAllow.isEmpty,
@@ -282,7 +296,7 @@ class PlanSweepSpec extends AnyFunSuite {
   test("detector teeth: the pre-fix q385 shape (θ-join of ckpt'd data-domain aggregates) is flagged") {
     import org.apache.spark.sql.functions._
     val f = spark.range(100).selectExpr("id AS doc_id", "id % 37 AS len")
-    val (join, _) = graft.Ckpt.withAudit {
+    val (join, segments) = graft.Ckpt.withAudit {
       val d = graft.CkptOps(
         f.groupBy(col("len").as("v")).agg(count(lit(1)).as("c"))).ckpt()
       d.select(col("v").as("va"), col("c").as("ca"))
@@ -293,9 +307,35 @@ class PlanSweepSpec extends AnyFunSuite {
     val thetaJoins = join.collectWithSubqueries { case j: Join => j }
       .filterNot(hasEquiKey)
     assert(thetaJoins.nonEmpty, "toy build lost its θ-join")
+    val segmentFor = segments.toMap
     assert(thetaJoins.exists(j =>
-      dataDomainAggKey(j.left).nonEmpty || dataDomainAggKey(j.right).nonEmpty),
+      dataDomainAggKey(j.left, segmentFor).nonEmpty ||
+        dataDomainAggKey(j.right, segmentFor).nonEmpty),
       "the q385 blind-spot shape walked through the detector again")
+  }
+
+  test("one query's segment map survives the next audit") {
+    // the single sweep pass checks each query's audit after the build
+    // returns; its map must not be cleared or overwritten by any
+    // later withAudit
+    import org.apache.spark.sql.functions._
+    def toy(m: Int) = graft.Ckpt.withAudit {
+      val d = graft.CkptOps(spark.range(100).selectExpr(s"id % $m AS k")
+        .groupBy("k").agg(count(lit(1)).as("c"))).ckpt()
+      // a self-join: dedup re-instances one side's LogicalRDD with
+      // fresh exprIds over the same RDD
+      d.join(d.withColumnRenamed("c", "c2"), "k").queryExecution.optimizedPlan
+    }
+    val (planA, segmentsA) = toy(37)
+    val (_, segmentsB) = toy(11)
+    assert(segmentsB.nonEmpty, "the second toy build recorded no segment")
+    val segmentForA = segmentsA.toMap
+    val leaves = planA.collect { case l: LogicalRDD => l }
+    assert(leaves.size == 2, s"toy self-join lost a checkpoint leaf:\n$planA")
+    for (l <- leaves)
+      assert(segmentForA.get(l.rdd.id).exists(_.output.size == l.output.size),
+        s"LogicalRDD over RDD ${l.rdd.id} no longer resolves through A's " +
+          s"segments ${segmentForA.keys.mkString(",")}")
   }
 }
 

@@ -45,10 +45,11 @@ class ScalePlanAuditSpec extends AnyFunSuite {
     * its checkpoint leaves: the range repartition of the two-level
     * scheme sits below `rangedWithPid`'s checkpoint. */
   private def withSegments(q: graft.QueryDef): Seq[LogicalPlan] = {
+    val a = QueryAudit.of(q, dir)
     def expand(p: LogicalPlan): Seq[LogicalPlan] =
       p +: p.collect { case l: LogicalRDD => l }
-        .flatMap(l => graft.Ckpt.segmentFor(l.rdd.id).toSeq.flatMap(expand))
-    expand(graft.Ckpt.withAudit(q.build(spark, dir).queryExecution.optimizedPlan)._1)
+        .flatMap(l => a.segmentFor.get(l.rdd.id).toSeq.flatMap(expand))
+    expand(a.finalPlan)
   }
 
   test("converted queries range-chunk their rank/prefix stage") {
@@ -76,10 +77,7 @@ class ScalePlanAuditSpec extends AnyFunSuite {
       // built by an earlier suite would hide q22's lineage — the
       // rewrite then lives in a checkpointed SEGMENT, not the final
       // plan) and sweep final plan + all segments, like PlanSweepSpec
-      val (finalPlan, segments) = graft.Ckpt.withAudit {
-        q.build(spark, dir).queryExecution.optimizedPlan
-      }
-      val all = (finalPlan +: segments).map(_.toString)
+      val all = QueryAudit.of(q, dir).plans.map(_.toString)
       assert(all.exists(_.contains("TopKPerKey")),
         s"${q.name}: bounded-key rn<=k window not rewritten:\n${all.head}")
     }
