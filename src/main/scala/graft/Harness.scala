@@ -1,6 +1,9 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
+
+import scala.jdk.CollectionConverters._
 
 /** Shared plumbing for the driver-contract mains (Verify/Bench) and
   * the per-query dev harnesses (VerifySome/BenchOne), so session
@@ -36,10 +39,13 @@ object Harness {
       sys.exit(2)
     }
 
+  /** `<outDir>/oracle_sql.json`: query name -> DuckDB SQL, the map the
+    * driver and tools/check_oracle.py `json.load`. */
+  def writeOracleSql(outDir: String, sql: Map[String, String]): Unit =
+    new ObjectMapper().writeValue(new java.io.File(outDir, "oracle_sql.json"), sql.asJava)
+
   /** JSON string escape: backslash, quote, and ALL control chars
-    * (<0x20) — a tab or CR in builder-authored SQL would otherwise
-    * make the driver's json.load fail and silently zero the round's
-    * correctness. */
+    * (<0x20), for perfbench's measurement record (`perfbench.Json`). */
   def jsonEscape(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"

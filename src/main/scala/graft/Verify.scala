@@ -1,32 +1,25 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json for the driver's DuckDB compare (the t2 gate). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query names for a fast local
-    // pre-flight of just the queries under edit
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    if (args.length != 2) {
+      System.err.println("usage: Verify <sfDir> <outDir>  (a subset of queries: VerifySome)")
+      sys.exit(2)
+    }
+    val Array(sfDir, outDir) = args
     val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Harness.jsonEscape(k)}: ${Harness.jsonEscape(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Harness.writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()
   }
 }

@@ -36,10 +36,7 @@ object VerifySome {
       spark.stop()
       sys.exit(1)
     }
-    val json = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
-      .map { case (k, v) => s"${Harness.jsonEscape(k)}: ${Harness.jsonEscape(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Harness.writeOracleSql(outDir, SparkEntry.oracleSql.filter(kv => names.contains(kv._1)))
     spark.stop()
   }
 }

@@ -77,10 +77,6 @@ object EtlPipeline {
       .schema(StructType(columns.map(StructField(_, StringType, nullable = true))))
       .csv(paths: _*)
 
-  /** [[readCsv]] of one file. */
-  def readCsv(spark: SparkSession, path: String, sep: String, columns: Seq[String]): DataFrame =
-    readCsv(spark, Seq(path), sep, columns)
-
   /** Header sniff for the all-string schema, on the driver and without
     * a Spark job: the first non-empty line of the file, read through the
     * Hadoop FileSystem (HDFS/S3/local all work) and tokenized with the

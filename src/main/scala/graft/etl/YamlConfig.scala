@@ -1,15 +1,28 @@
 package graft.etl
 
+import org.yaml.snakeyaml.{LoaderOptions, Yaml}
+import org.yaml.snakeyaml.constructor.SafeConstructor
+import org.yaml.snakeyaml.error.YAMLException
+import org.yaml.snakeyaml.nodes.Tag
+
 import scala.collection.immutable.VectorMap
+import scala.jdk.CollectionConverters._
 
 /** YAML config loading — the reference's primary UX is a YAML file
   * parsed with `yaml.safe_load` (settings.py:23–31) whose shape is the
   * `file_pattern` + `mapping.{stm,sec}.{bank}` tree consumed by
-  * data_manager.py:38–109. This parses that subset of YAML (block
-  * maps, block scalar lists, inline `[..]`/`{..}`, quoted and plain
-  * scalars, comments) with no external dependency — enough to load any
-  * config the reference's settings loader would, while anchors, tags
-  * and multi-line scalars (unused by the reference shape) are errors.
+  * data_manager.py:38–109. This loads it with SnakeYAML's YAML 1.1 safe
+  * loader, the JVM counterpart of PyYAML's: anchors and aliases, merge
+  * keys, block scalars, nested lists and YAML 1.1 scalars (`yes`,
+  * `Null`, `0x1F`, `1_000`, `"\u00e9"`) load as `safe_load` loads them,
+  * while global tags (`!!python/object:…`), tab indentation and
+  * malformed documents are errors. Two differences remain:
+  *   - a float with an exponent but no dot or no exponent sign (`1e3`,
+  *     `1.5e3`) is a Double here and a string in PyYAML;
+  *   - an implicit timestamp (`2024-01-01`) stays the text it was
+  *     written as, which is PyYAML's `str()` of its `date`.
+  * SnakeYAML's `LoaderOptions` defaults (alias-expansion, nesting and
+  * code-point limits) guard the input.
   *
   * Driver-side, bounded data: config never touches an executor.
   */
@@ -17,171 +30,43 @@ object YamlConfig {
 
   /** Parse YAML text into Map[String, Any] / Vector[Any] / String /
     * Long / Double / Boolean / null. Maps preserve key order (the
-    * reference's `original_fields` keys double as a projection). */
+    * reference's `original_fields` keys double as a projection) and
+    * their keys are strings. Malformed YAML is an
+    * IllegalArgumentException carrying SnakeYAML's line/column mark. */
   def parse(text: String): Any = {
-    val lines = text.linesIterator.zipWithIndex.flatMap { case (raw, idx) =>
-      val noComment = stripComment(raw)
-      if (noComment.trim.isEmpty) None
-      else Some(Line(indentOf(noComment), noComment.trim, idx + 1))
-    }.toVector
-    if (lines.isEmpty) return VectorMap.empty[String, Any]
-    val (value, next) = parseBlock(lines, 0, lines.head.indent)
-    if (next < lines.length)
-      fail(lines(next), "content after the end of the root block (bad indentation?)")
-    value
-  }
-
-  private final case class Line(indent: Int, content: String, number: Int)
-
-  private def fail(l: Line, msg: String): Nothing =
-    throw new IllegalArgumentException(s"YAML line ${l.number}: $msg ('${l.content}')")
-
-  private def indentOf(s: String): Int = {
-    val i = s.indexWhere(c => c != ' ' && c != '\t')
-    // tabs are illegal in INDENTATION only — a tab inside a quoted
-    // scalar (e.g. a tab csv_separator) is perfectly valid YAML
-    if (s.take(if (i < 0) s.length else i).contains('\t'))
-      throw new IllegalArgumentException("YAML: tabs are not allowed in indentation")
-    if (i < 0) s.length else i
-  }
-
-  /** Drop a trailing comment: '#' outside quotes, at start or preceded
-    * by whitespace (YAML's rule — 'a#b' is not a comment). */
-  private def stripComment(s: String): String = {
-    var i = 0; var quote = ' '
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != ' ') { if (c == quote) quote = ' ' }
-      else if (c == '\'' || c == '"') quote = c
-      else if (c == '#' && (i == 0 || s.charAt(i - 1) == ' ')) return s.substring(0, i)
-      i += 1
+    val options = new LoaderOptions
+    val constructor = new SafeConstructor(options) {
+      yamlConstructors.put(Tag.TIMESTAMP, new ConstructYamlStr)
     }
-    s
+    val loaded =
+      try new Yaml(constructor).load[AnyRef](text)
+      catch { case e: YAMLException => throw new IllegalArgumentException(s"YAML: ${e.getMessage}", e) }
+    toScala(loaded, new java.util.IdentityHashMap[AnyRef, Any])
   }
 
-  /** Parse the run of lines at `indent` starting at `i`; returns
-    * (value, index of first line past the block). */
-  private def parseBlock(lines: Vector[Line], i: Int, indent: Int): (Any, Int) =
-    if (lines(i).content.startsWith("- ") || lines(i).content == "-")
-      parseList(lines, i, indent)
-    else parseMap(lines, i, indent)
-
-  private def parseList(lines: Vector[Line], start: Int, indent: Int): (Any, Int) = {
-    var i = start
-    val out = Vector.newBuilder[Any]
-    while (i < lines.length && lines(i).indent == indent && lines(i).content.startsWith("-")) {
-      val l = lines(i)
-      val item = l.content.drop(1).trim
-      if (item.isEmpty) fail(l, "nested block list items are not supported by this subset")
-      out += parseScalar(item, l)
-      i += 1
-    }
-    if (i < lines.length && lines(i).indent > indent) fail(lines(i), "unexpected deeper indentation after list item")
-    (out.result(), i)
-  }
-
-  private def parseMap(lines: Vector[Line], start: Int, indent: Int): (Any, Int) = {
-    var i = start
-    var out = VectorMap.empty[String, Any]
-    while (i < lines.length && lines(i).indent == indent && !lines(i).content.startsWith("- ")) {
-      val l = lines(i)
-      val sep = keySeparator(l)
-      val key = unquote(l.content.substring(0, sep).trim)
-      val rest = l.content.substring(sep + 1).trim
-      if (rest.nonEmpty) { // inline value
-        out = out.updated(key, parseScalar(rest, l))
-        i += 1
-      } else if (i + 1 < lines.length && lines(i + 1).indent > indent) { // nested block
-        val (child, next) = parseBlock(lines, i + 1, lines(i + 1).indent)
-        out = out.updated(key, child)
-        i = next
-      } else { // bare key -> null (yaml.safe_load parity)
-        out = out.updated(key, null)
-        i += 1
+  /** SnakeYAML's Java tree -> the documented Scala shape. Each
+    * collection converts once (`seen`), so aliases stay shared instead
+    * of expanding, and a recursive alias (`a: &x [*x]`, which the safe
+    * loader builds as a cyclic list) is an error. */
+  private def toScala(v: Any, seen: java.util.IdentityHashMap[AnyRef, Any]): Any = v match {
+    case null | (_: String) | (_: java.lang.Boolean) | (_: java.lang.Double) => v
+    case i: java.lang.Integer => i.toLong
+    case l: java.lang.Long => l.longValue
+    case b: java.math.BigInteger => b.doubleValue
+    case c: AnyRef if seen.containsKey(c) =>
+      Option(seen.get(c)).getOrElse(throw new IllegalArgumentException("YAML: recursive alias"))
+    case c: AnyRef =>
+      seen.put(c, null) // in progress: meeting it again below is a cycle
+      val out = c match {
+        case m: java.util.Map[_, _] => m.asScala.foldLeft(VectorMap.empty[String, Any]) {
+          case (acc, (k, x)) => acc.updated(String.valueOf(toScala(k, seen)), toScala(x, seen))
+        }
+        case xs: java.util.List[_] => xs.asScala.map(toScala(_, seen)).toVector
+        case other => throw new IllegalArgumentException(s"YAML: unsupported value of type ${other.getClass.getName}")
       }
-    }
-    (out, i)
+      seen.put(c, out)
+      out
   }
-
-  /** Index of the ':' that separates key from value (outside quotes,
-    * followed by space/EOL). */
-  private def keySeparator(l: Line): Int = {
-    val s = l.content
-    var i = 0; var quote = ' '
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != ' ') { if (c == quote) quote = ' ' }
-      else if (c == '\'' || c == '"') quote = c
-      else if (c == ':' && (i + 1 == s.length || s.charAt(i + 1) == ' ')) return i
-      i += 1
-    }
-    fail(l, "expected 'key: value'")
-  }
-
-  private def parseScalar(s: String, l: Line): Any = s match {
-    case _ if s.startsWith("[") && s.endsWith("]") =>
-      splitTop(s.substring(1, s.length - 1), l).map(parseScalar(_, l)).toVector
-    case _ if s.startsWith("{") && s.endsWith("}") =>
-      splitTop(s.substring(1, s.length - 1), l).foldLeft(VectorMap.empty[String, Any]) {
-        (m, kv) =>
-          val sep = keySeparator(l.copy(content = kv))
-          m.updated(unquote(kv.substring(0, sep).trim), parseScalar(kv.substring(sep + 1).trim, l))
-      }
-    case _ if s.startsWith("&") || s.startsWith("*") || s.startsWith("!") || s.startsWith("|") || s.startsWith(">") =>
-      fail(l, "anchors/aliases/tags/block scalars are outside the supported subset")
-    case "null" | "~" => null
-    case "true" => true
-    case "false" => false
-    case _ if s.startsWith("'") || s.startsWith("\"") => unquote(s)
-    case _ =>
-      s.toLongOption.orElse[Any](s.toDoubleOption).getOrElse(s)
-  }
-
-  /** Split an inline collection body on top-level commas. */
-  private def splitTop(s: String, l: Line): Seq[String] = {
-    if (s.trim.isEmpty) return Nil
-    val parts = Seq.newBuilder[String]
-    var depth = 0; var quote = ' '; var last = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != ' ') { if (c == quote) quote = ' ' }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '[' | '{' => depth += 1
-        case ']' | '}' => depth -= 1
-        case ',' if depth == 0 => parts += s.substring(last, i).trim; last = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    parts += s.substring(last).trim
-    parts.result()
-  }
-
-  private def unquote(s: String): String =
-    if (s.length >= 2 && s.startsWith("'") && s.endsWith("'"))
-      s.substring(1, s.length - 1).replace("''", "'")
-    else if (s.length >= 2 && s.startsWith("\"") && s.endsWith("\"")) {
-      // single left-to-right scan: sequential .replace calls would turn
-      // the escaped backslash in "a\\nb" into a newline
-      val body = s.substring(1, s.length - 1)
-      val out = new StringBuilder
-      var i = 0
-      while (i < body.length) {
-        val c = body.charAt(i)
-        if (c == '\\' && i + 1 < body.length) {
-          body.charAt(i + 1) match {
-            case '"' => out += '"'
-            case '\\' => out += '\\'
-            case 'n' => out += '\n'
-            case 't' => out += '\t'
-            case other => out += '\\' += other // unknown escape: keep verbatim
-          }
-          i += 2
-        } else { out += c; i += 1 }
-      }
-      out.result()
-    } else s
 
   // ---- EtlConfig binding (settings.py:23–31 -> the case-class tree) ----
 
@@ -192,17 +77,21 @@ object YamlConfig {
     v.asInstanceOf[VectorMap[String, Any]].map { case (k, x) => k -> x.toString }
   private def intMap(v: Any): Map[String, Int] =
     v.asInstanceOf[VectorMap[String, Any]].map { case (k, x) => k -> x.asInstanceOf[Long].toInt }
+  private def mapAt(v: Any, where: String): VectorMap[String, Any] = v match {
+    case m: VectorMap[String, Any] @unchecked => m
+    case _ => throw new IllegalArgumentException(s"config $where is not a mapping")
+  }
 
   /** Bind parsed YAML to [[EtlConfig]]; missing required keys are
     * errors naming the key (the reference fails fast in its loader
     * too — settings.py:29–31 logs and re-raises). */
   def toEtlConfig(root: Any): EtlConfig = {
-    val m = root.asInstanceOf[VectorMap[String, Any]]
+    val m = mapAt(root, "root")
     def req(key: String): Any =
       m.getOrElse(key, throw new IllegalArgumentException(s"config is missing required key '$key'"))
-    val mapping = req("mapping").asInstanceOf[VectorMap[String, Any]].map { case (mt, banks) =>
-      mt -> banks.asInstanceOf[VectorMap[String, Any]].map { case (bank, cfg) =>
-        val c = cfg.asInstanceOf[VectorMap[String, Any]]
+    val mapping = mapAt(req("mapping"), "mapping").map { case (mt, banks) =>
+      mt -> mapAt(banks, s"mapping.$mt").map { case (bank, cfg) =>
+        val c = mapAt(cfg, s"mapping.$mt.$bank")
         def creq(key: String): Any = c.getOrElse(key,
           throw new IllegalArgumentException(s"mapping.$mt.$bank is missing required key '$key'"))
         bank -> FileMappingConfig(

@@ -2828,7 +2828,6 @@ object DataProfile {
       val cum = ScaleRank.withRunningSum(vc, Seq.empty, Seq(col("cents")),
           col("cnt"), "cum")
         .select(col("cents"), col("cum").cast("bigint").as("cum"))
-        .ckpt() // 9 rank lookups probe it
       val nn = vc.agg(sum(col("cnt")).cast("bigint").as("n"))
       val tgt = broadcast(nn
         .crossJoin(ps.map(_.toLong).toDF("p"))

@@ -4207,7 +4207,6 @@ object EventOps {
               s"CAST(c_${i}_$j AS DOUBLE) / CAST(r_$i AS DOUBLE)" +
               s" AS m0_${i}_$j") ++
           (1 to 4).map(i => s"1.0e0 AS b0_$i")): _*)
-        .ckpt()
       for (exprs <- elim)
         lvl = lvl.selectExpr("*" +: exprs: _*).ckpt()
       for (e <- backs)

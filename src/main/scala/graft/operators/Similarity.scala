@@ -678,7 +678,6 @@ object Similarity {
         .withColumn("rn", row_number().over(aw))
         .filter(col("rn") === 1)
         .select(col("vec_id"), col("s"), col("cid").as("code"))
-        .ckpt()
       val q = emb.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val lut = broadcast(q.crossJoin(cents)

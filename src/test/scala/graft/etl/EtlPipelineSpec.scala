@@ -182,7 +182,7 @@ class EtlPipelineSpec extends AnyFunSuite {
       ("alfabank", "savings", "alfabank_savings_stm.csv"),
       ("zorro", "current", "zorro_current_stm.csv"))
       .map { case (bank, accType, f) =>
-        EtlPipeline.readCsv(spark, s"$dir/$f", ";", stmHeader.split(';').toSeq)
+        EtlPipeline.readCsv(spark, Seq(s"$dir/$f"), ";", stmHeader.split(';').toSeq)
           .select(md5(concat_ws("#", col("acc"), col("date"), col("amount"))).as("surrogate_key"),
             col("acc").as("acc_number"), col("flag").as("dc"), lit(bank).as("bank_name"),
             lit(accType).as("acc_type"), lit(f).as("file_name"))

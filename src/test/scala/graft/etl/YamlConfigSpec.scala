@@ -2,8 +2,8 @@ package graft.etl
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** YAML subset parser + EtlConfig binding contracts (settings.py
-  * loader parity on the reference's config shape). */
+/** YAML loading + EtlConfig binding contracts (settings.py's
+  * `yaml.safe_load` parity on the reference's config shape). */
 class YamlConfigSpec extends AnyFunSuite {
   import YamlConfig._
 
@@ -48,10 +48,46 @@ class YamlConfigSpec extends AnyFunSuite {
   }
 
   test("unsupported constructs and malformed lines are loud errors") {
-    intercept[IllegalArgumentException](parse("a: &anchor x"))
-    intercept[IllegalArgumentException](parse("a: |\n  block"))
-    intercept[IllegalArgumentException](parse("just a line without separator"))
-    intercept[IllegalArgumentException](parse("a:\n\tb: tabs"))
+    // global tags are refused by the safe loader, as by yaml.safe_load
+    intercept[IllegalArgumentException](parse("a: !!python/object:os.system x"))
+    val tab = intercept[IllegalArgumentException](parse("a:\n\tb: tabs"))
+    assert(tab.getMessage.contains("line 2"), tab.getMessage) // SnakeYAML's mark survives
+    intercept[IllegalArgumentException](parse("a: [unclosed"))
+    // a cyclic list under yaml.safe_load; an error here
+    intercept[IllegalArgumentException](parse("a: &x [*x]"))
+    for (doc <- Seq("just a line without separator", "- a\n- b", "")) {
+      val e = intercept[IllegalArgumentException](loadEtlConfig(doc))
+      assert(e.getMessage.contains("root is not a mapping"), e.getMessage)
+    }
+  }
+
+  test("yaml.safe_load parity table (PyYAML 6.0.3)") {
+    // expected values are PyYAML 6.0.3 `yaml.safe_load(doc)["a"]`
+    val table: Seq[(String, Any)] = Seq(
+      "a: True" -> true,
+      "a: yes" -> true,
+      "a: Null" -> null,
+      "a: 0x1F" -> 31L,
+      "a: 1_000" -> 1000L,
+      "a: \"\\u00e9\"" -> "\u00e9",
+      "a: |\n  l1\n  l2\n" -> "l1\nl2\n",
+      "a:\n- - n1\n  - n2\n" -> Vector(Vector("n1", "n2")),
+      // PyYAML gives datetime.date(2024, 1, 1); this is its str()
+      "a: 2024-01-01" -> "2024-01-01")
+    for ((doc, want) <- table)
+      assert(parse(doc).asInstanceOf[Map[String, Any]]("a") == want, doc)
+    assert(parse("a: &x v\nb: *x") == Map("a" -> "v", "b" -> "v"))
+    // the one known difference: PyYAML's float needs a dot and a signed
+    // exponent, so it keeps "1e3" a string
+    assert(parse("a: 1e3") == Map("a" -> 1000.0))
+  }
+
+  test("aliases stay shared instead of expanding") {
+    // 48 aliases (SnakeYAML's default limit is 50) name 3^16 leaves
+    val doc = ("l0: &l0 [x, x, x]" +: (1 to 16).map(i => s"l$i: &l$i [*l${i - 1}, *l${i - 1}, *l${i - 1}]"))
+      .mkString("\n")
+    val top = parse(doc).asInstanceOf[Map[String, Any]]("l16").asInstanceOf[Vector[Any]]
+    assert(top.size == 3 && (top(0).asInstanceOf[AnyRef] eq top(1).asInstanceOf[AnyRef]))
   }
 
   test("tabs inside quoted values are legal; escapes scan left to right") {
@@ -80,6 +116,32 @@ class YamlConfigSpec extends AnyFunSuite {
     val sec = cfg.mapping("sec")("alfabank")
     assert(sec.accounts.isEmpty && sec.debitMultiplier.isEmpty)
     assert(sec.dateFormat == "%Y-%m-%d")
+  }
+
+  test("two banks share desired_fields through an anchor and alias") {
+    val cfg = loadEtlConfig(
+      """file_pattern: '(\w+?)_(\w+?)_(stm|sec)\.csv'
+        |mapping:
+        |  stm:
+        |    alfabank:
+        |      csv_separator: ';'
+        |      original_fields: {acc: acc_number, date: dt}
+        |      surrogate_key_columns: [acc_number, dt]
+        |      desired_fields: &stm_out
+        |        - surrogate_key
+        |        - acc_number
+        |        - dt
+        |    zorro:
+        |      csv_separator: ','
+        |      original_fields: {acc: acc_number, date: dt}
+        |      surrogate_key_columns: [acc_number, dt]
+        |      desired_fields: *stm_out
+        |""".stripMargin)
+    val banks = cfg.mapping("stm")
+    assert(banks.keys.toSeq == Seq("alfabank", "zorro"))
+    assert(banks("alfabank").desiredFields == Seq("surrogate_key", "acc_number", "dt"))
+    assert(banks("zorro").desiredFields == banks("alfabank").desiredFields)
+    assert(banks("zorro").csvSeparator == ",")
   }
 
   test("missing required keys name the key in the error") {
