@@ -4,10 +4,7 @@ package graft
   * plus oracle_sql.json for the driver's DuckDB compare (the t2 gate). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    if (args.length != 2) {
-      System.err.println("usage: Verify <sfDir> <outDir>  (a subset of queries: VerifySome)")
-      sys.exit(2)
-    }
+    require(args.length == 2, "usage: Verify <sfDir> <outDir> (a subset of queries: VerifySome)")
     val Array(sfDir, outDir) = args
     val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")

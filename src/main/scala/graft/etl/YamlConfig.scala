@@ -11,18 +11,14 @@ import scala.jdk.CollectionConverters._
 /** YAML config loading — the reference's primary UX is a YAML file
   * parsed with `yaml.safe_load` (settings.py:23–31) whose shape is the
   * `file_pattern` + `mapping.{stm,sec}.{bank}` tree consumed by
-  * data_manager.py:38–109. This loads it with SnakeYAML's YAML 1.1 safe
-  * loader, the JVM counterpart of PyYAML's: anchors and aliases, merge
-  * keys, block scalars, nested lists and YAML 1.1 scalars (`yes`,
-  * `Null`, `0x1F`, `1_000`, `"\u00e9"`) load as `safe_load` loads them,
-  * while global tags (`!!python/object:…`), tab indentation and
-  * malformed documents are errors. Two differences remain:
-  *   - a float with an exponent but no dot or no exponent sign (`1e3`,
-  *     `1.5e3`) is a Double here and a string in PyYAML;
-  *   - an implicit timestamp (`2024-01-01`) stays the text it was
-  *     written as, which is PyYAML's `str()` of its `date`.
-  * SnakeYAML's `LoaderOptions` defaults (alias-expansion, nesting and
-  * code-point limits) guard the input.
+  * data_manager.py:38–109. SnakeYAML's YAML 1.1 safe loader, the JVM
+  * counterpart of PyYAML's, loads it: anchors, block scalars, nested
+  * lists and 1.1 scalars (`yes`, `0x1F`, `1_000`) as `safe_load` does,
+  * global tags and tab indentation as errors. Known differences: `1e3`
+  * (no dot, unsigned exponent) is a Double here and a string there; a
+  * bare date stays its text (PyYAML's `str()` of its `date`); a
+  * recursive alias is an error, not a cyclic list. The `LoaderOptions`
+  * defaults (alias, nesting and code-point limits) guard the input.
   *
   * Driver-side, bounded data: config never touches an executor.
   */
@@ -34,12 +30,11 @@ object YamlConfig {
     * their keys are strings. Malformed YAML is an
     * IllegalArgumentException carrying SnakeYAML's line/column mark. */
   def parse(text: String): Any = {
-    val options = new LoaderOptions
-    val constructor = new SafeConstructor(options) {
-      yamlConstructors.put(Tag.TIMESTAMP, new ConstructYamlStr)
+    val safe = new SafeConstructor(new LoaderOptions) {
+      yamlConstructors.put(Tag.TIMESTAMP, new ConstructYamlStr) // a bare date stays its text
     }
     val loaded =
-      try new Yaml(constructor).load[AnyRef](text)
+      try new Yaml(safe).load[AnyRef](text)
       catch { case e: YAMLException => throw new IllegalArgumentException(s"YAML: ${e.getMessage}", e) }
     toScala(loaded, new java.util.IdentityHashMap[AnyRef, Any])
   }
@@ -52,7 +47,6 @@ object YamlConfig {
     case null | (_: String) | (_: java.lang.Boolean) | (_: java.lang.Double) => v
     case i: java.lang.Integer => i.toLong
     case l: java.lang.Long => l.longValue
-    case b: java.math.BigInteger => b.doubleValue
     case c: AnyRef if seen.containsKey(c) =>
       Option(seen.get(c)).getOrElse(throw new IllegalArgumentException("YAML: recursive alias"))
     case c: AnyRef =>
