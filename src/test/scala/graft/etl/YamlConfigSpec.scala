@@ -77,8 +77,8 @@ class YamlConfigSpec extends AnyFunSuite {
     for ((doc, want) <- table)
       assert(parse(doc).asInstanceOf[Map[String, Any]]("a") == want, doc)
     assert(parse("a: &x v\nb: *x") == Map("a" -> "v", "b" -> "v"))
-    // the one known difference: PyYAML's float needs a dot and a signed
-    // exponent, so it keeps "1e3" a string
+    // the one known scalar difference: PyYAML's float needs a dot and a
+    // signed exponent, so it keeps "1e3" a string
     assert(parse("a: 1e3") == Map("a" -> 1000.0))
   }
 
