@@ -25,8 +25,4 @@ object QueryDef {
   def apply(name: String, oracle: String)(
       build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, build, Some(oracle))
-
-  def noOracle(name: String)(
-      build: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, build, None)
 }

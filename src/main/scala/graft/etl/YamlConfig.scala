@@ -64,41 +64,54 @@ object YamlConfig {
 
   // ---- EtlConfig binding (settings.py:23–31 -> the case-class tree) ----
 
-  private def str(v: Any): String = v.toString
-  private def strSeq(v: Any): Seq[String] =
-    v.asInstanceOf[Vector[Any]].map(_.toString)
-  private def strMap(v: Any): Map[String, String] =
-    v.asInstanceOf[VectorMap[String, Any]].map { case (k, x) => k -> x.toString }
-  private def intMap(v: Any): Map[String, Int] =
-    v.asInstanceOf[VectorMap[String, Any]].map { case (k, x) => k -> x.asInstanceOf[Long].toInt }
-  private def mapAt(v: Any, where: String): VectorMap[String, Any] = v match {
+  /** Every config field binds through here: `pf` accepts the value at
+    * `path`; anything else (null, a wrong type, an out-of-range
+    * number) is an IllegalArgumentException naming the key path. */
+  private def bind[T](path: String, want: String)(pf: PartialFunction[Any, T])(v: Any): T =
+    pf.applyOrElse(v, (got: Any) => throw new IllegalArgumentException(
+      s"config $path is not $want (got ${if (got == null) "null" else s"'$got'"})"))
+
+  private def str(path: String)(v: Any): String = bind(path, "a scalar") {
+    case x @ (_: String | _: Long | _: Double | _: Boolean) => x.toString
+  }(v)
+  private def strSeq(path: String)(v: Any): Seq[String] = bind(path, "a list") {
+    case xs: Vector[Any] @unchecked => xs.zipWithIndex.map { case (x, i) => str(s"$path[$i]")(x) }
+  }(v)
+  private def mapAt(path: String)(v: Any): VectorMap[String, Any] = bind(path, "a mapping") {
     case m: VectorMap[String, Any] @unchecked => m
-    case _ => throw new IllegalArgumentException(s"config $where is not a mapping")
-  }
+  }(v)
+  private def strMap(path: String)(v: Any): Map[String, String] =
+    mapAt(path)(v).map { case (k, x) => k -> str(s"$path.$k")(x) }
+  private def intMap(path: String)(v: Any): Map[String, Int] =
+    mapAt(path)(v).map { case (k, x) =>
+      k -> bind(s"$path.$k", "a 32-bit integer") { case l: Long if l.isValidInt => l.toInt }(x)
+    }
 
   /** Bind parsed YAML to [[EtlConfig]]; missing required keys are
     * errors naming the key (the reference fails fast in its loader
     * too — settings.py:29–31 logs and re-raises). */
   def toEtlConfig(root: Any): EtlConfig = {
-    val m = mapAt(root, "root")
+    val m = mapAt("root")(root)
     def req(key: String): Any =
       m.getOrElse(key, throw new IllegalArgumentException(s"config is missing required key '$key'"))
-    val mapping = mapAt(req("mapping"), "mapping").map { case (mt, banks) =>
-      mt -> mapAt(banks, s"mapping.$mt").map { case (bank, cfg) =>
-        val c = mapAt(cfg, s"mapping.$mt.$bank")
-        def creq(key: String): Any = c.getOrElse(key,
-          throw new IllegalArgumentException(s"mapping.$mt.$bank is missing required key '$key'"))
+    val mapping = mapAt("mapping")(req("mapping")).map { case (mt, banks) =>
+      mt -> mapAt(s"mapping.$mt")(banks).map { case (bank, cfg) =>
+        val at = s"mapping.$mt.$bank"
+        val c = mapAt(at)(cfg)
+        def creq[T](key: String)(as: String => Any => T): T = as(s"$at.$key")(c.getOrElse(key,
+          throw new IllegalArgumentException(s"$at is missing required key '$key'")))
+        def opt[T](key: String)(as: String => Any => T): Option[T] = c.get(key).map(as(s"$at.$key"))
         bank -> FileMappingConfig(
-          csvSeparator = str(creq("csv_separator")),
-          originalFields = strMap(creq("original_fields")),
-          surrogateKeyColumns = strSeq(creq("surrogate_key_columns")),
-          accounts = c.get("accounts").map(strMap).getOrElse(Map.empty),
-          debitMultiplier = c.get("debit_multiplier").map(intMap).getOrElse(Map.empty),
-          dateFormat = c.get("date_format").map(str).getOrElse("%Y-%m-%d"),
-          desiredFields = strSeq(creq("desired_fields")))
+          csvSeparator = creq("csv_separator")(str),
+          originalFields = creq("original_fields")(strMap),
+          surrogateKeyColumns = creq("surrogate_key_columns")(strSeq),
+          accounts = opt("accounts")(strMap).getOrElse(Map.empty),
+          debitMultiplier = opt("debit_multiplier")(intMap).getOrElse(Map.empty),
+          dateFormat = opt("date_format")(str).getOrElse("%Y-%m-%d"),
+          desiredFields = creq("desired_fields")(strSeq))
       }
     }
-    EtlConfig(str(req("file_pattern")).r, mapping)
+    EtlConfig(str("file_pattern")(req("file_pattern")).r, mapping)
   }
 
   def loadEtlConfig(text: String): EtlConfig = toEtlConfig(parse(text))

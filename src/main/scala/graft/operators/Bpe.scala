@@ -109,19 +109,25 @@ object Bpe {
 
   /** q98 oracle: learn the merges on the full corpus (identical CTEs
     * to q94), then replay them over the held-out shard's words. */
-  private def encodeOracleSql: String = {
+  private def encodeOracleSql: String =
+    s"""WITH $heldOutEncodeCtes
+       |SELECT sym, CAST(sum(freq) AS BIGINT) AS freq
+       |FROM e$MERGES GROUP BY sym
+       |ORDER BY freq DESC, sym LIMIT 30""".stripMargin
+
+  /** The q98/q207 encode pipeline's CTEs: the q94 training CTEs, the
+    * held-out shard's word frequencies `ewf`, and the merge replay
+    * e0..e<MERGES> over them. */
+  private def heldOutEncodeCtes: String = {
     val encSteps = (1 to MERGES).map(encStepSql).mkString(",\n")
-    s"""WITH $trainCtes,
+    s"""$trainCtes,
        |ewf AS (
        |  SELECT word, count(*) AS freq FROM
        |    (SELECT unnest(string_split(text, ' ')) AS word FROM documents
        |     WHERE doc_id % 10 = 3)
        |  GROUP BY word),
        |${charStateSql("ewf", "e0")},
-       |$encSteps
-       |SELECT sym, CAST(sum(freq) AS BIGINT) AS freq
-       |FROM e$MERGES GROUP BY sym
-       |ORDER BY freq DESC, sym LIMIT 30""".stripMargin
+       |$encSteps""".stripMargin
   }
 
   /** Greedy left-to-right fuse of `best` (1-row l/r frame, broadcast)
@@ -260,16 +266,8 @@ object Bpe {
   /** q207 oracle: the q98 encode pipeline, rolled up to tokens-per-
     * word and chars-per-token by language instead of the subword
     * histogram. */
-  private def fertilityOracleSql: String = {
-    val encSteps = (1 to MERGES).map(encStepSql).mkString(",\n")
-    s"""WITH $trainCtes,
-       |ewf AS (
-       |  SELECT word, count(*) AS freq FROM
-       |    (SELECT unnest(string_split(text, ' ')) AS word FROM documents
-       |     WHERE doc_id % 10 = 3)
-       |  GROUP BY word),
-       |${charStateSql("ewf", "e0")},
-       |$encSteps,
+  private def fertilityOracleSql: String =
+    s"""WITH $heldOutEncodeCtes,
        |spw AS (
        |  SELECT word, CAST(count(*) AS BIGINT) AS n_sym
        |  FROM e$MERGES GROUP BY word),
@@ -287,7 +285,6 @@ object Bpe {
        |       // CAST(sum(cnt * n_sym) AS BIGINT) AS BIGINT) AS chars_per_tok_ppm
        |FROM lw JOIN spw USING (word)
        |GROUP BY lang ORDER BY lang""".stripMargin
-  }
 
   /** q207 — tokenizer fertility by language: encode the held-out
     * shard with the corpus-trained BPE (exactly q98's model), then

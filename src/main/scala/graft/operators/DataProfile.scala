@@ -3,7 +3,7 @@ package graft.operators
 import graft.CkptOps
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -3524,6 +3524,52 @@ object DataProfile {
     }
   }
 
+  /** Doubled midrank sums of order value by priority (the q379/q418
+    * rank table): the projection `f` (g, cents) with cents half-up
+    * rounded, the cents domain `vt` (cents, ctot, cum) with its
+    * running count, and per group `rg` (g, ng, r2 = Σ doubled
+    * midranks a2 = 2·cumBefore + c + 1). */
+  private def priorityRanks(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val f = Tables.orders(s, dir)
+      .select(col("o_orderpriority").as("g"),
+        expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("cents"))
+    val vc = f.groupBy(col("cents"), col("g"))
+      .agg(count(lit(1)).as("c"))
+      .ckpt() // bounded cents-domain collapse: feeds vt AND rg
+    val vt0 = vc.groupBy(col("cents")).agg(sum(col("c")).as("ctot"))
+    val vt = ScaleRank.withRunningSum(vt0, Seq.empty,
+      Seq(col("cents")), col("ctot"), "cum")
+    val a2 = vt.select(col("cents"),
+      (lit(2) * (col("cum") - col("ctot")) + col("ctot") + 1).as("a2"))
+    val rg = vc.join(a2, Seq("cents"))
+      .groupBy(col("g"))
+      .agg(sum(col("c")).as("ng"), sum(col("c") * col("a2")).as("r2"))
+    (f, vt, rg)
+  }
+
+  /** The oracle side of [[priorityRanks]]: the CTEs `f`, `vc`, `vt`,
+    * `a2` and `rg`. */
+  private def priorityRanksSql: String =
+    """f AS (
+      |  SELECT o_orderpriority AS g,
+      |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+      |  FROM orders),
+      |vc AS (
+      |  SELECT cents, g, CAST(count(*) AS BIGINT) AS c
+      |  FROM f GROUP BY 1, 2),
+      |vt AS (
+      |  SELECT cents, CAST(sum(c) AS BIGINT) AS ctot,
+      |    CAST(sum(sum(c)) OVER (ORDER BY cents
+      |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+      |  FROM vc GROUP BY cents),
+      |a2 AS (
+      |  SELECT cents, 2 * (cum - ctot) + ctot + 1 AS a2, ctot FROM vt),
+      |rg AS (
+      |  SELECT vc.g, CAST(sum(vc.c) AS BIGINT) AS ng,
+      |    CAST(sum(vc.c * a2.a2) AS BIGINT) AS r2
+      |  FROM vc JOIN a2 USING (cents) GROUP BY vc.g)""".stripMargin
+
   /** q379 — Kruskal–Wallis H test (KW '52): does order value differ
     * across the five order priorities, by RANKS? The k-group
     * generalization of q177's Mann–Whitney (and the rank-robust
@@ -3554,24 +3600,7 @@ object DataProfile {
       "CAST(n AS DOUBLE) - CAST(n AS DOUBLE)), 0)) AS BIGINT)"
     QueryDef(
       "q379_kruskal_wallis",
-      s"""WITH f AS (
-         |  SELECT o_orderpriority AS g,
-         |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-         |  FROM orders),
-         |vc AS (
-         |  SELECT cents, g, CAST(count(*) AS BIGINT) AS c
-         |  FROM f GROUP BY 1, 2),
-         |vt AS (
-         |  SELECT cents, CAST(sum(c) AS BIGINT) AS ctot,
-         |    CAST(sum(sum(c)) OVER (ORDER BY cents
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-         |  FROM vc GROUP BY cents),
-         |a2 AS (
-         |  SELECT cents, 2 * (cum - ctot) + ctot + 1 AS a2, ctot FROM vt),
-         |rg AS (
-         |  SELECT vc.g, CAST(sum(vc.c) AS BIGINT) AS ng,
-         |    CAST(sum(vc.c * a2.a2) AS BIGINT) AS r2
-         |  FROM vc JOIN a2 USING (cents) GROUP BY vc.g),
+      s"""WITH $priorityRanksSql,
          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n,
          |  CAST(count(DISTINCT g) AS BIGINT) AS k FROM f),
          |tiec AS (
@@ -3590,22 +3619,8 @@ object DataProfile {
          |  CASE WHEN $corr > 9488 THEN 1 ELSE 0 END AS reject_5pct
          |FROM rg, nn, h, tiec
          |ORDER BY priority""".stripMargin) { (s, dir) =>
-      val f = Tables.orders(s, dir)
-        .select(col("o_orderpriority").as("g"),
-          expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("cents"))
-      val vc = f.groupBy(col("cents"), col("g"))
-        .agg(count(lit(1)).as("c"))
-        .ckpt() // bounded cents-domain collapse: feeds vt AND rg
-      val vt0 = vc.groupBy(col("cents")).agg(sum(col("c")).as("ctot"))
-      val vt = ScaleRank.withRunningSum(vt0, Seq.empty,
-        Seq(col("cents")), col("ctot"), "cum")
-      val a2 = vt.select(col("cents"),
-        (lit(2) * (col("cum") - col("ctot")) + col("ctot") + 1).as("a2"),
-        col("ctot"))
-      val rg = vc.join(a2.select(col("cents"), col("a2")), Seq("cents"))
-        .groupBy(col("g"))
-        .agg(sum(col("c")).as("ng"), sum(col("c") * col("a2")).as("r2"))
-        .ckpt() // 5 rows: feeds H AND the output
+      val (f, vt, groupRanks) = priorityRanks(s, dir)
+      val rg = groupRanks.ckpt() // 5 rows: feeds H AND the output
       val nn = f.agg(count(lit(1)).as("n"), countDistinct(col("g")).as("k"))
       val tiec = vt.agg(
         sum(col("ctot") * col("ctot") * col("ctot") - col("ctot")).as("tie"))
@@ -3835,15 +3850,7 @@ object DataProfile {
          |  FROM ${v}d)""".stripMargin
     QueryDef(
       "q385_kendall_w",
-      s"""WITH f AS (
-         |  SELECT doc_id, CAST(length(text) AS BIGINT) AS len,
-         |    (1000 * CAST(len(list_distinct(string_split(text, ' ')))
-         |      AS BIGINT)) // CAST(len(string_split(text, ' ')) AS BIGINT)
-         |      AS ttr,
-         |    (1000 * (CAST(length(text) AS BIGINT) -
-         |      CAST(len(string_split(text, ' ')) AS BIGINT) + 1)) //
-         |      CAST(len(string_split(text, ' ')) AS BIGINT) AS mwl
-         |  FROM documents),
+      s"""WITH ${TextAnalysis.raterFeaturesSql},
          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM f),
          |${domCte("len")},
          |${domCte("ttr")},
@@ -3862,27 +3869,13 @@ object DataProfile {
          |SELECT nn.n AS n_docs, mom.s1 AS rank2_total, tt.tt AS tie_moment,
          |  $wChain AS w_milli
          |FROM nn, mom, tt""".stripMargin) { (s, dir) =>
-      val f = Tables.documents(s, dir)
-        .select(col("doc_id"), length(col("text")).cast("bigint").as("len"),
-          split(col("text"), " ").as("toks"))
-        .select(col("doc_id"), col("len"),
-          expr("(1000 * CAST(size(array_distinct(toks)) AS BIGINT)) div " +
-            "CAST(size(toks) AS BIGINT)").as("ttr"),
-          expr("(1000 * (len - CAST(size(toks) AS BIGINT) + 1)) div " +
-            "CAST(size(toks) AS BIGINT)").as("mwl"))
+      val f = TextAnalysis.raterFeatures(s, dir)
         .ckpt() // one feature pass feeds three domains + the assembly
       val nn = f.agg(count(lit(1)).as("n"))
-      // ONE domain collapse for all three rating axes (map-side ×3
-      // expand into a partial-aggregable groupBy), then ONE grouped
-      // two-level prefix sum for the cumulative ranks (q379
-      // discipline) — never a (value,count)² θ-join, whose pair
-      // count is O(|domain|²) and data-dependent for `len`
-      val dAll = f.select(explode(array(
-          struct(lit("len").as("axis"), col("len").as("v")),
-          struct(lit("ttr").as("axis"), col("ttr").as("v")),
-          struct(lit("mwl").as("axis"), col("mwl").as("v")))).as("e"))
-        .select(col("e.axis").as("axis"), col("e.v").as("v"))
-        .groupBy(col("axis"), col("v")).agg(count(lit(1)).as("c"))
+      // ONE domain collapse for all three rating axes, then ONE
+      // grouped two-level prefix sum for the cumulative ranks (q379
+      // discipline)
+      val dAll = TextAnalysis.raterDomains(f, "c")
         .ckpt() // bounded (axis, value) domain: feeds ranks AND ties
       val aAll = ScaleRank.withRunningSum(dAll, Seq("axis"),
           Seq(col("v")), col("c"), "cum")
@@ -3940,11 +3933,7 @@ object DataProfile {
       "(CAST(n AS DOUBLE) - 1.0e0)))) AS BIGINT) END"
     QueryDef(
       "q388_runs_test",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsSql()},
          |dl AS (
          |  SELECT a.d, b.rev - a.rev AS p
          |  FROM daily a JOIN daily b ON b.d = a.d + 1),
@@ -3991,6 +3980,49 @@ object DataProfile {
     }
   }
 
+  /** The epoch-day revenue axis cut into full 7-day weeks: the full
+    * weeks `fullWk` (wk) and the block frame (wk, wd, rev) of their
+    * days — the blocked layout Friedman (q391) and Quade (q411) rank
+    * within. */
+  private def weekBlocks(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val daily = DayAxis.revCentsEpoch(s, dir)
+      .select(col("d").as("ed"), col("rev").as("rev"))
+    val dd = daily.select(expr("ed div 7").as("wk"),
+      (col("ed") % 7).as("wd"), col("rev"))
+    val fullWk = dd.groupBy("wk").agg(count(lit(1)).as("c"))
+      .filter(col("c") === 7).select("wk")
+    (fullWk, dd.join(fullWk, Seq("wk")))
+  }
+
+  /** Doubled within-week midranks (wk, wd, `name`) of each day's
+    * revenue over the [[weekBlocks]] frame `b`:
+    * 2·#{lower} + #{equal} + 1, by one week-keyed block self-join. */
+  private def weekRanks(b: DataFrame, name: String): DataFrame =
+    b.select(col("wk"), col("wd"), col("rev"))
+      .join(b.select(col("wk"), col("rev").as("rev2")), Seq("wk"))
+      .groupBy(col("wk"), col("wd"))
+      .agg((lit(2) * sum(when(col("rev2") < col("rev"), 1L).otherwise(0L)) +
+        sum(when(col("rev2") === col("rev"), 1L).otherwise(0L)) + 1)
+        .as(name))
+
+  /** The oracle side of [[weekBlocks]] and [[weekRanks]]: the CTEs
+    * `daily`, `dd`, `full_wk`, `b` and `rk` (wk, wd, `rank`). */
+  private def weekRanksSql(rank: String): String =
+    s"""${DayAxis.revCentsEpochSql(day = "ed")},
+       |dd AS (
+       |  SELECT ed // 7 AS wk, ed % 7 AS wd, rev FROM daily),
+       |full_wk AS (
+       |  SELECT wk FROM dd GROUP BY wk HAVING count(*) = 7),
+       |b AS (SELECT dd.* FROM dd JOIN full_wk USING (wk)),
+       |rk AS (
+       |  SELECT a.wk, a.wd,
+       |    2 * CAST(sum(CASE WHEN x.rev < a.rev THEN 1 ELSE 0 END)
+       |      AS BIGINT) +
+       |    CAST(sum(CASE WHEN x.rev = a.rev THEN 1 ELSE 0 END)
+       |      AS BIGINT) + 1 AS $rank
+       |  FROM b a JOIN b x ON x.wk = a.wk
+       |  GROUP BY a.wk, a.wd)""".stripMargin
+
   /** q391 — Friedman test (Friedman '37): is there a WEEKDAY effect
     * on daily revenue, treating each complete epoch-week as a block
     * and ranking its seven days within the block? The
@@ -4014,25 +4046,7 @@ object DataProfile {
     val K = 7
     QueryDef(
       "q391_friedman",
-      s"""WITH daily AS (
-         |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-         |      CAST(o_orderdate AS DATE)) AS BIGINT) AS ed,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
-         |dd AS (
-         |  SELECT ed // 7 AS wk, ed % 7 AS wd, rev FROM daily),
-         |full_wk AS (
-         |  SELECT wk FROM dd GROUP BY wk HAVING count(*) = $K),
-         |b AS (SELECT dd.* FROM dd JOIN full_wk USING (wk)),
-         |rk AS (
-         |  SELECT a.wk, a.wd,
-         |    2 * CAST(sum(CASE WHEN x.rev < a.rev THEN 1 ELSE 0 END)
-         |      AS BIGINT) +
-         |    CAST(sum(CASE WHEN x.rev = a.rev THEN 1 ELSE 0 END)
-         |      AS BIGINT) + 1 AS a2
-         |  FROM b a JOIN b x ON x.wk = a.wk
-         |  GROUP BY a.wk, a.wd),
+      s"""WITH ${weekRanksSql("a2")},
          |rj AS (
          |  SELECT wd, CAST(sum(a2) AS BIGINT) AS r2,
          |    CAST(count(*) AS BIGINT) AS nb
@@ -4047,19 +4061,9 @@ object DataProfile {
          |  chi.chi2_milli,
          |  CASE WHEN chi.chi2_milli > 12592 THEN 1 ELSE 0 END AS reject_5pct
          |FROM rj, chi ORDER BY weekday""".stripMargin) { (s, dir) =>
-      val daily = DayAxis.revCentsEpoch(s, dir)
-        .select(col("d").as("ed"), col("rev").as("rev"))
-      val dd = daily.select(expr("ed div 7").as("wk"),
-        (col("ed") % 7).as("wd"), col("rev"))
-      val fullWk = dd.groupBy("wk").agg(count(lit(1)).as("c"))
-        .filter(col("c") === K).select("wk")
-      val b = dd.join(fullWk, Seq("wk")).ckpt() // both block-join sides
-      val rk = b.select(col("wk"), col("wd"), col("rev"))
-        .join(b.select(col("wk"), col("rev").as("rev2")), Seq("wk"))
-        .groupBy(col("wk"), col("wd"))
-        .agg((lit(2) * sum(when(col("rev2") < col("rev"), 1L).otherwise(0L)) +
-          sum(when(col("rev2") === col("rev"), 1L).otherwise(0L)) + 1)
-          .as("a2"))
+      val (fullWk, blocks) = weekBlocks(s, dir)
+      val b = blocks.ckpt() // both block-join sides
+      val rk = weekRanks(b, "a2")
       val rj = rk.groupBy(col("wd"))
         .agg(sum(col("a2")).as("r2"), count(lit(1)).as("nb"))
         .ckpt() // 7 rows: feeds chi AND the output
@@ -4075,6 +4079,18 @@ object DataProfile {
         .orderBy("weekday")
     }
   }
+
+  /** The Mann–Kendall z in milli units from S (`s_stat`) and 18·Var(S)
+    * (`var18`): ONE guarded IEEE chain with the ±1 continuity
+    * correction, parsed by both engines (q392, q423). */
+  private[operators] def mkZMilli: String =
+    "CASE WHEN var18 > 0 AND s_stat > 0 THEN " +
+      "CAST(floor(1000.0e0 * (CAST(s_stat AS DOUBLE) - 1.0e0) / " +
+      "sqrt(CAST(var18 AS DOUBLE) / 18.0e0)) AS BIGINT) " +
+      "WHEN var18 > 0 AND s_stat < 0 THEN " +
+      "CAST(floor(1000.0e0 * (CAST(s_stat AS DOUBLE) + 1.0e0) / " +
+      "sqrt(CAST(var18 AS DOUBLE) / 18.0e0)) AS BIGINT) " +
+      "WHEN var18 > 0 THEN 0 END"
 
   /** q392 — Mann–Kendall trend test (Mann '45; Kendall '75) on daily
     * revenue: S = Σ_{i<j} sign(x_j − x_i) over all ordered day pairs,
@@ -4094,20 +4110,10 @@ object DataProfile {
     * to the sweep as calendar-keyed); ties collapse to the (rev,
     * count) frame. Output 1 row. */
   val q392MannKendall: QueryDef = {
-    val z = "CASE WHEN var18 > 0 AND s_stat > 0 THEN " +
-      "CAST(floor(1000.0e0 * (CAST(s_stat AS DOUBLE) - 1.0e0) / " +
-      "sqrt(CAST(var18 AS DOUBLE) / 18.0e0)) AS BIGINT) " +
-      "WHEN var18 > 0 AND s_stat < 0 THEN " +
-      "CAST(floor(1000.0e0 * (CAST(s_stat AS DOUBLE) + 1.0e0) / " +
-      "sqrt(CAST(var18 AS DOUBLE) / 18.0e0)) AS BIGINT) " +
-      "WHEN var18 > 0 THEN 0 END"
+    val z = mkZMilli
     QueryDef(
       "q392_mann_kendall",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsSql()},
          |s AS (
          |  SELECT CAST(sum(CASE WHEN b.rev > a.rev THEN 1
          |    WHEN b.rev < a.rev THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
@@ -4356,11 +4362,7 @@ object DataProfile {
       s"($skew * $skew + ($kurt - 3.0e0) * ($kurt - 3.0e0) / 4.0e0)) AS BIGINT)"
     QueryDef(
       "q395_jarque_bera",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsSql()},
          |r AS (
          |  SELECT least(greatest(CASE WHEN b.rev >= a.rev
          |      THEN (1000000 * (b.rev - a.rev)) // greatest(a.rev, 1)
@@ -4423,11 +4425,7 @@ object DataProfile {
       "(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0e0)))) AS BIGINT)"
     QueryDef(
       "q403_grubbs",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsSql()},
          |mo AS (
          |  SELECT CAST(count(*) AS HUGEINT) AS n,
          |    sum(CAST(rev AS HUGEINT)) AS s1,
@@ -4466,6 +4464,32 @@ object DataProfile {
     }
   }
 
+  /** The click-vs-view value domain the two-sample rank tests (q399,
+    * q407) run on: (v, t, t1) per 2dp-cents event value, with its
+    * count t and click count t1 — one conditional-count collapse. */
+  private def clickViewDomain(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .filter(col("event_type").isin("click", "view"))
+      .select(expr("cast(floor(value * 100 + 0.5) as bigint)").as("v"),
+        when(col("event_type") === "click", 1L).otherwise(0L).as("g1"))
+      .groupBy(col("v"))
+      .agg(count(lit(1)).as("t"), sum(col("g1")).as("t1"))
+
+  /** The oracle side of [[clickViewDomain]]: the CTEs `x`, `dom` and
+    * its totals `nn` (n, n1). */
+  private def clickViewDomainSql: String =
+    """x AS (
+      |  SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS v,
+      |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS g1
+      |  FROM events WHERE event_type IN ('click', 'view')),
+      |dom AS (
+      |  SELECT v, CAST(count(*) AS BIGINT) AS t,
+      |    CAST(sum(g1) AS BIGINT) AS t1
+      |  FROM x GROUP BY v),
+      |nn AS (
+      |  SELECT CAST(sum(t) AS BIGINT) AS n, CAST(sum(t1) AS BIGINT) AS n1
+      |  FROM dom)""".stripMargin
+
   /** q399 — Ansari–Bradley rank dispersion test (Ansari & Bradley
     * '60) between the click and view event-value populations: rank
     * all N values jointly, score each rank r as min(r, N+1−r) (ranks
@@ -4493,54 +4517,39 @@ object DataProfile {
     * 1 row. */
   val q399AnsariBradley: QueryDef = QueryDef(
     "q399_ansari_bradley",
-    """WITH x AS (
-      |  SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS v,
-      |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS g1
-      |  FROM events WHERE event_type IN ('click', 'view')),
-      |dom AS (
-      |  SELECT v, CAST(count(*) AS BIGINT) AS t,
-      |    CAST(sum(g1) AS BIGINT) AS t1
-      |  FROM x GROUP BY v),
-      |nn AS (
-      |  SELECT CAST(sum(t) AS BIGINT) AS n, CAST(sum(t1) AS BIGINT) AS n1
-      |  FROM dom),
-      |pre AS (
-      |  SELECT v, t, t1,
-      |    CAST(sum(t) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-      |      AS BIGINT) - t AS cb
-      |  FROM dom),
-      |sc AS (
-      |  SELECT p.t, p.t1,
-      |    -- rising ramp lo..min(hi,m), falling ramp max(lo,m+1)..hi
-      |    greatest(0, least(p.cb + p.t, (nn.n + 1) // 2) - (p.cb + 1) + 1)
-      |      AS c1,
-      |    greatest(0, (p.cb + p.t)
-      |      - greatest(p.cb + 1, (nn.n + 1) // 2 + 1) + 1) AS c2,
-      |    p.cb + 1 AS lo, p.cb + p.t AS hi,
-      |    (nn.n + 1) // 2 AS m, nn.n AS n
-      |  FROM pre p, nn),
-      |terms AS (
-      |  SELECT t1, t,
-      |    (c1 * (lo + least(hi, m))) // 2
-      |    + (n + 1) * c2 - (c2 * (greatest(lo, m + 1) + hi)) // 2 AS s
-      |  FROM sc),
-      |ab AS (
-      |  SELECT CAST(sum((1000 * CAST(t1 AS HUGEINT) * s) // t) AS BIGINT)
-      |    AS ab_milli
-      |  FROM terms)
-      |SELECT nn.n1, nn.n - nn.n1 AS n2, ab.ab_milli,
-      |  CAST(CASE WHEN nn.n % 2 = 0
-      |    THEN (1000 * CAST(nn.n1 AS HUGEINT) * (nn.n + 2)) // 4
-      |    ELSE (1000 * CAST(nn.n1 AS HUGEINT) * (nn.n + 1) * (nn.n + 1))
-      |      // (4 * nn.n) END AS BIGINT) AS mean0_milli
-      |FROM nn, ab WHERE nn.n1 > 0 AND nn.n1 < nn.n""".stripMargin) {
+    s"""WITH $clickViewDomainSql,
+       |pre AS (
+       |  SELECT v, t, t1,
+       |    CAST(sum(t) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
+       |      AS BIGINT) - t AS cb
+       |  FROM dom),
+       |sc AS (
+       |  SELECT p.t, p.t1,
+       |    -- rising ramp lo..min(hi,m), falling ramp max(lo,m+1)..hi
+       |    greatest(0, least(p.cb + p.t, (nn.n + 1) // 2) - (p.cb + 1) + 1)
+       |      AS c1,
+       |    greatest(0, (p.cb + p.t)
+       |      - greatest(p.cb + 1, (nn.n + 1) // 2 + 1) + 1) AS c2,
+       |    p.cb + 1 AS lo, p.cb + p.t AS hi,
+       |    (nn.n + 1) // 2 AS m, nn.n AS n
+       |  FROM pre p, nn),
+       |terms AS (
+       |  SELECT t1, t,
+       |    (c1 * (lo + least(hi, m))) // 2
+       |    + (n + 1) * c2 - (c2 * (greatest(lo, m + 1) + hi)) // 2 AS s
+       |  FROM sc),
+       |ab AS (
+       |  SELECT CAST(sum((1000 * CAST(t1 AS HUGEINT) * s) // t) AS BIGINT)
+       |    AS ab_milli
+       |  FROM terms)
+       |SELECT nn.n1, nn.n - nn.n1 AS n2, ab.ab_milli,
+       |  CAST(CASE WHEN nn.n % 2 = 0
+       |    THEN (1000 * CAST(nn.n1 AS HUGEINT) * (nn.n + 2)) // 4
+       |    ELSE (1000 * CAST(nn.n1 AS HUGEINT) * (nn.n + 1) * (nn.n + 1))
+       |      // (4 * nn.n) END AS BIGINT) AS mean0_milli
+       |FROM nn, ab WHERE nn.n1 > 0 AND nn.n1 < nn.n""".stripMargin) {
     (s, dir) =>
-    val x = Tables.events(s, dir)
-      .filter(col("event_type").isin("click", "view"))
-      .select(expr("cast(floor(value * 100 + 0.5) as bigint)").as("v"),
-        when(col("event_type") === "click", 1L).otherwise(0L).as("g1"))
-    val dom = x.groupBy(col("v"))
-      .agg(count(lit(1)).as("t"), sum(col("g1")).as("t1"))
+    val dom = clickViewDomain(s, dir)
       .ckpt() // bounded 2dp-cents value domain: prefix + totals
     val nn = dom.agg(sum(col("t")).cast("bigint").as("n"),
       sum(col("t1")).cast("bigint").as("n1"))
@@ -4686,24 +4695,7 @@ object DataProfile {
       s"- CAST(rj AS DOUBLE) / (2.0e0 * nj)) / nullif($se, 0))"
     QueryDef(
       "q418_dunn",
-      s"""WITH f AS (
-         |  SELECT o_orderpriority AS g,
-         |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-         |  FROM orders),
-         |vc AS (
-         |  SELECT cents, g, CAST(count(*) AS BIGINT) AS c
-         |  FROM f GROUP BY 1, 2),
-         |vt AS (
-         |  SELECT cents, CAST(sum(c) AS BIGINT) AS ctot,
-         |    CAST(sum(sum(c)) OVER (ORDER BY cents
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-         |  FROM vc GROUP BY cents),
-         |a2 AS (
-         |  SELECT cents, 2 * (cum - ctot) + ctot + 1 AS a2, ctot FROM vt),
-         |rg AS (
-         |  SELECT vc.g, CAST(sum(vc.c) AS BIGINT) AS ng,
-         |    CAST(sum(vc.c * a2.a2) AS BIGINT) AS r2
-         |  FROM vc JOIN a2 USING (cents) GROUP BY vc.g),
+      s"""WITH $priorityRanksSql,
          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM f),
          |tiec AS (
          |  SELECT CAST(sum(ctot * ctot * ctot - ctot) AS BIGINT) AS tie
@@ -4716,21 +4708,8 @@ object DataProfile {
          |  CAST($z AS BIGINT) AS z_milli,
          |  CASE WHEN $z > 2807 THEN 1 ELSE 0 END AS reject_bonf_5pct
          |FROM p, nn, tiec ORDER BY g1, g2""".stripMargin) { (s, dir) =>
-      val f = Tables.orders(s, dir)
-        .select(col("o_orderpriority").as("g"),
-          expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("cents"))
-      val vc = f.groupBy(col("cents"), col("g"))
-        .agg(count(lit(1)).as("c"))
-        .ckpt() // bounded cents-domain collapse: feeds vt AND rg
-      val vt0 = vc.groupBy(col("cents")).agg(sum(col("c")).as("ctot"))
-      val vt = ScaleRank.withRunningSum(vt0, Seq.empty,
-        Seq(col("cents")), col("ctot"), "cum")
-      val a2 = vt.select(col("cents"),
-        (lit(2) * (col("cum") - col("ctot")) + col("ctot") + 1).as("a2"))
-      val rg = vc.join(a2, Seq("cents"))
-        .groupBy(col("g"))
-        .agg(sum(col("c")).as("ng"), sum(col("c") * col("a2")).as("r2"))
-        .ckpt() // 5 rows: both pair-join sides
+      val (f, vt, groupRanks) = priorityRanks(s, dir)
+      val rg = groupRanks.ckpt() // 5 rows: both pair-join sides
       val nn = f.agg(count(lit(1)).as("n"))
       val tiec = vt.agg(
         sum(col("ctot") * col("ctot") * col("ctot") - col("ctot")).as("tie"))
@@ -4846,42 +4825,28 @@ object DataProfile {
     * join. Output 1 row. */
   val q421BartelsRvn: QueryDef = QueryDef(
     "q421_bartels_rvn",
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d,
-      |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-      |      AS BIGINT)) AS BIGINT) AS rev
-      |  FROM orders GROUP BY 1),
-      |dom AS (
-      |  SELECT rev, CAST(count(*) AS BIGINT) AS c FROM daily GROUP BY rev),
-      |da AS (
-      |  SELECT rev,
-      |    2 * (CAST(sum(c) OVER (ORDER BY rev ROWS UNBOUNDED PRECEDING)
-      |      AS BIGINT) - c) + c + 1 AS d2
-      |  FROM dom),
-      |ax AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY daily.d) AS BIGINT) AS t,
-      |    da.d2
-      |  FROM daily JOIN da ON da.rev = daily.rev),
-      |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ax),
-      |num AS (
-      |  SELECT CAST(sum((a.d2 - b.d2) * (a.d2 - b.d2)) AS BIGINT) AS num4
-      |  FROM ax a JOIN ax b ON b.t = a.t + 1),
-      |den AS (
-      |  SELECT CAST(sum((ax.d2 - (nn.n + 1)) * (ax.d2 - (nn.n + 1)))
-      |    AS BIGINT) AS den4
-      |  FROM ax, nn)
-      |SELECT nn.n AS n_days,
-      |  (1000 * num.num4) // den.den4 AS rvn_milli,
-      |  CAST(floor(1000.0e0 * (CAST((1000 * num.num4) // den.den4
-      |      AS DOUBLE) / 1000.0e0 - 2.0e0)
-      |    / (2.0e0 / sqrt(CAST(nn.n AS DOUBLE)))) AS BIGINT) AS z_milli
-      |FROM nn, num, den WHERE den.den4 > 0""".stripMargin) { (s, dir) =>
+    s"""WITH ${DayAxis.revCentsSql()},
+       |${Forecast.revMidranksSql},
+       |ax AS (
+       |  SELECT CAST(row_number() OVER (ORDER BY daily.d) AS BIGINT) AS t,
+       |    da.d2
+       |  FROM daily JOIN da ON da.rev = daily.rev),
+       |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ax),
+       |num AS (
+       |  SELECT CAST(sum((a.d2 - b.d2) * (a.d2 - b.d2)) AS BIGINT) AS num4
+       |  FROM ax a JOIN ax b ON b.t = a.t + 1),
+       |den AS (
+       |  SELECT CAST(sum((ax.d2 - (nn.n + 1)) * (ax.d2 - (nn.n + 1)))
+       |    AS BIGINT) AS den4
+       |  FROM ax, nn)
+       |SELECT nn.n AS n_days,
+       |  (1000 * num.num4) // den.den4 AS rvn_milli,
+       |  CAST(floor(1000.0e0 * (CAST((1000 * num.num4) // den.den4
+       |      AS DOUBLE) / 1000.0e0 - 2.0e0)
+       |    / (2.0e0 / sqrt(CAST(nn.n AS DOUBLE)))) AS BIGINT) AS z_milli
+       |FROM nn, num, den WHERE den.den4 > 0""".stripMargin) { (s, dir) =>
     val daily = DayAxis.revCents(s, dir)
-    val dom = daily.groupBy(col("rev")).agg(count(lit(1)).as("c"))
-    val da = ScaleRank.withRunningSum(dom, Seq.empty, Seq(col("rev")),
-        col("c"), "cum")
-      .select(col("rev"), (lit(2) * (col("cum") - col("c")) + col("c") + 1)
-        .as("d2"))
+    val da = Forecast.revMidranks(daily)
     val ax = ScaleRank.withRowNumber(
         daily.join(da, Seq("rev")).select(col("d"), col("d2")),
         Seq.empty, Seq(col("d")), "t", "n_ax")
@@ -4926,38 +4891,30 @@ object DataProfile {
     * calendar-pair class. Output 1 row. */
   val q425HodgesLehmann: QueryDef = QueryDef(
     "q425_hodges_lehmann",
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d,
-      |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-      |      AS BIGINT)) AS BIGINT) AS rev
-      |  FROM orders GROUP BY 1),
-      |ax AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-      |  FROM daily),
-      |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ax),
-      |h1 AS (
-      |  SELECT rev, CAST(count(*) AS BIGINT) AS c FROM ax, nn
-      |  WHERE t <= n // 2 GROUP BY rev),
-      |h2 AS (
-      |  SELECT rev, CAST(count(*) AS BIGINT) AS c FROM ax, nn
-      |  WHERE t > n // 2 GROUP BY rev),
-      |dd AS (
-      |  SELECT h2.rev - h1.rev AS diff,
-      |    CAST(sum(h1.c * h2.c) AS BIGINT) AS c
-      |  FROM h1 CROSS JOIN h2 GROUP BY 1),
-      |tot AS (SELECT CAST(sum(c) AS BIGINT) AS m FROM dd),
-      |pre AS (
-      |  SELECT diff,
-      |    CAST(sum(c) OVER (ORDER BY diff ROWS UNBOUNDED PRECEDING)
-      |      AS BIGINT) AS cum
-      |  FROM dd)
-      |SELECT tot.m AS n_pairs,
-      |  (SELECT min(pre.diff) FROM pre, tot
-      |   WHERE pre.cum >= (tot.m + 1) // 2) AS hl_shift_cents
-      |FROM tot""".stripMargin) { (s, dir) =>
-    val ax = ScaleRank.withRowNumber(
-        DayAxis.revCents(s, dir),
-        Seq.empty, Seq(col("d")), "t", "n_ax")
+    s"""WITH ${DayAxis.revCentsSql()},
+       |${DayAxis.axSql()},
+       |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ax),
+       |h1 AS (
+       |  SELECT rev, CAST(count(*) AS BIGINT) AS c FROM ax, nn
+       |  WHERE t <= n // 2 GROUP BY rev),
+       |h2 AS (
+       |  SELECT rev, CAST(count(*) AS BIGINT) AS c FROM ax, nn
+       |  WHERE t > n // 2 GROUP BY rev),
+       |dd AS (
+       |  SELECT h2.rev - h1.rev AS diff,
+       |    CAST(sum(h1.c * h2.c) AS BIGINT) AS c
+       |  FROM h1 CROSS JOIN h2 GROUP BY 1),
+       |tot AS (SELECT CAST(sum(c) AS BIGINT) AS m FROM dd),
+       |pre AS (
+       |  SELECT diff,
+       |    CAST(sum(c) OVER (ORDER BY diff ROWS UNBOUNDED PRECEDING)
+       |      AS BIGINT) AS cum
+       |  FROM dd)
+       |SELECT tot.m AS n_pairs,
+       |  (SELECT min(pre.diff) FROM pre, tot
+       |   WHERE pre.cum >= (tot.m + 1) // 2) AS hl_shift_cents
+       |FROM tot""".stripMargin) { (s, dir) =>
+    val ax = DayAxis.numbered(DayAxis.revCents(s, dir))
       .select(col("t"), col("rev"), col("n_ax"))
       .ckpt() // calendar-bounded indexed day frame: both halves
     val nn = ax.agg(max(col("n_ax")).cast("bigint").as("n"))
@@ -5194,12 +5151,7 @@ object DataProfile {
     val icc = s"(($msb - $msw) / ($msb + ${K - 1}.0e0 * $msw))"
     QueryDef(
       "q415_icc",
-      s"""WITH daily AS (
-         |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-         |      CAST(o_orderdate AS DATE)) AS BIGINT) AS ed,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsEpochSql(day = "ed")},
          |dd AS (SELECT ed // 7 AS wk, rev FROM daily),
          |full_wk AS (
          |  SELECT wk, CAST(sum(CAST(rev AS HUGEINT)) AS HUGEINT) AS s,
@@ -5259,65 +5211,50 @@ object DataProfile {
     * form — no windows, no pair joins. Output 1 row. */
   val q407CramerVonMises: QueryDef = QueryDef(
     "q407_cramer_von_mises",
-    """WITH x AS (
-      |  SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS v,
-      |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS g1
-      |  FROM events WHERE event_type IN ('click', 'view')),
-      |dom AS (
-      |  SELECT v, CAST(count(*) AS BIGINT) AS t,
-      |    CAST(sum(g1) AS BIGINT) AS t1
-      |  FROM x GROUP BY v),
-      |nn AS (
-      |  SELECT CAST(sum(t) AS BIGINT) AS n, CAST(sum(t1) AS BIGINT) AS n1
-      |  FROM dom),
-      |pre AS (
-      |  SELECT v, t, t1, t - t1 AS t2,
-      |    CAST(sum(t) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-      |      AS BIGINT) - t AS cb,
-      |    CAST(sum(t1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-      |      AS BIGINT) - t1 AS cb1,
-      |    CAST(sum(t - t1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-      |      AS BIGINT) - (t - t1) AS cb2
-      |  FROM dom),
-      |terms AS (
-      |  SELECT
-      |    CAST(t1 AS HUGEINT) * ((2 * cb + t + 1) * (2 * cb + t + 1))
-      |      - 4 * (2 * cb + t + 1)
-      |        * (((cb1 + t1) * (cb1 + t1 + 1)) // 2
-      |           - ((cb1) * (cb1 + 1)) // 2)
-      |      + 4 * (((cb1 + t1) * (cb1 + t1 + 1)
-      |              * CAST(2 * (cb1 + t1) + 1 AS HUGEINT)) // 6
-      |             - ((cb1) * (cb1 + 1) * CAST(2 * cb1 + 1 AS HUGEINT))
-      |               // 6) AS q1,
-      |    CAST(t2 AS HUGEINT) * ((2 * cb + t + 1) * (2 * cb + t + 1))
-      |      - 4 * (2 * cb + t + 1)
-      |        * (((cb2 + t2) * (cb2 + t2 + 1)) // 2
-      |           - ((cb2) * (cb2 + 1)) // 2)
-      |      + 4 * (((cb2 + t2) * (cb2 + t2 + 1)
-      |              * CAST(2 * (cb2 + t2) + 1 AS HUGEINT)) // 6
-      |             - ((cb2) * (cb2 + 1) * CAST(2 * cb2 + 1 AS HUGEINT))
-      |               // 6) AS q2
-      |  FROM pre),
-      |u AS (
-      |  SELECT nn.n1 * sum(q1) + (nn.n - nn.n1) * sum(q2) AS u4
-      |  FROM terms, nn GROUP BY nn.n1, nn.n)
-      |SELECT nn.n1, nn.n - nn.n1 AS n2,
-      |  CAST(floor(1000000.0e0 * (CAST(u.u4 AS DOUBLE)
-      |    / (4.0e0 * nn.n1 * (nn.n - nn.n1) * nn.n)
-      |    - (4.0e0 * nn.n1 * (nn.n - nn.n1) - 1.0e0) / (6.0e0 * nn.n)))
-      |    AS BIGINT) AS t_micro,
-      |  CASE WHEN floor(1000000.0e0 * (CAST(u.u4 AS DOUBLE)
-      |    / (4.0e0 * nn.n1 * (nn.n - nn.n1) * nn.n)
-      |    - (4.0e0 * nn.n1 * (nn.n - nn.n1) - 1.0e0) / (6.0e0 * nn.n)))
-      |    > 461000 THEN 1 ELSE 0 END AS reject_5pct
-      |FROM nn, u WHERE nn.n1 > 0 AND nn.n1 < nn.n""".stripMargin) {
+    s"""WITH $clickViewDomainSql,
+       |pre AS (
+       |  SELECT v, t, t1, t - t1 AS t2,
+       |    CAST(sum(t) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
+       |      AS BIGINT) - t AS cb,
+       |    CAST(sum(t1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
+       |      AS BIGINT) - t1 AS cb1,
+       |    CAST(sum(t - t1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
+       |      AS BIGINT) - (t - t1) AS cb2
+       |  FROM dom),
+       |terms AS (
+       |  SELECT
+       |    CAST(t1 AS HUGEINT) * ((2 * cb + t + 1) * (2 * cb + t + 1))
+       |      - 4 * (2 * cb + t + 1)
+       |        * (((cb1 + t1) * (cb1 + t1 + 1)) // 2
+       |           - ((cb1) * (cb1 + 1)) // 2)
+       |      + 4 * (((cb1 + t1) * (cb1 + t1 + 1)
+       |              * CAST(2 * (cb1 + t1) + 1 AS HUGEINT)) // 6
+       |             - ((cb1) * (cb1 + 1) * CAST(2 * cb1 + 1 AS HUGEINT))
+       |               // 6) AS q1,
+       |    CAST(t2 AS HUGEINT) * ((2 * cb + t + 1) * (2 * cb + t + 1))
+       |      - 4 * (2 * cb + t + 1)
+       |        * (((cb2 + t2) * (cb2 + t2 + 1)) // 2
+       |           - ((cb2) * (cb2 + 1)) // 2)
+       |      + 4 * (((cb2 + t2) * (cb2 + t2 + 1)
+       |              * CAST(2 * (cb2 + t2) + 1 AS HUGEINT)) // 6
+       |             - ((cb2) * (cb2 + 1) * CAST(2 * cb2 + 1 AS HUGEINT))
+       |               // 6) AS q2
+       |  FROM pre),
+       |u AS (
+       |  SELECT nn.n1 * sum(q1) + (nn.n - nn.n1) * sum(q2) AS u4
+       |  FROM terms, nn GROUP BY nn.n1, nn.n)
+       |SELECT nn.n1, nn.n - nn.n1 AS n2,
+       |  CAST(floor(1000000.0e0 * (CAST(u.u4 AS DOUBLE)
+       |    / (4.0e0 * nn.n1 * (nn.n - nn.n1) * nn.n)
+       |    - (4.0e0 * nn.n1 * (nn.n - nn.n1) - 1.0e0) / (6.0e0 * nn.n)))
+       |    AS BIGINT) AS t_micro,
+       |  CASE WHEN floor(1000000.0e0 * (CAST(u.u4 AS DOUBLE)
+       |    / (4.0e0 * nn.n1 * (nn.n - nn.n1) * nn.n)
+       |    - (4.0e0 * nn.n1 * (nn.n - nn.n1) - 1.0e0) / (6.0e0 * nn.n)))
+       |    > 461000 THEN 1 ELSE 0 END AS reject_5pct
+       |FROM nn, u WHERE nn.n1 > 0 AND nn.n1 < nn.n""".stripMargin) {
     (s, dir) =>
-    val x = Tables.events(s, dir)
-      .filter(col("event_type").isin("click", "view"))
-      .select(expr("cast(floor(value * 100 + 0.5) as bigint)").as("v"),
-        when(col("event_type") === "click", 1L).otherwise(0L).as("g1"))
-    val dom = x.groupBy(col("v"))
-      .agg(count(lit(1)).as("t"), sum(col("g1")).as("t1"))
+    val dom = clickViewDomain(s, dir)
       .ckpt() // bounded 2dp-cents value domain: 3 prefixes + totals
     val nn = dom.agg(sum(col("t")).cast("bigint").as("n"),
       sum(col("t1")).cast("bigint").as("n1"))
@@ -5466,25 +5403,7 @@ object DataProfile {
     val K = 7
     QueryDef(
       "q411_quade",
-      s"""WITH daily AS (
-         |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-         |      CAST(o_orderdate AS DATE)) AS BIGINT) AS ed,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
-         |dd AS (
-         |  SELECT ed // 7 AS wk, ed % 7 AS wd, rev FROM daily),
-         |full_wk AS (
-         |  SELECT wk FROM dd GROUP BY wk HAVING count(*) = $K),
-         |b AS (SELECT dd.* FROM dd JOIN full_wk USING (wk)),
-         |rk AS (
-         |  SELECT a.wk, a.wd,
-         |    2 * CAST(sum(CASE WHEN x.rev < a.rev THEN 1 ELSE 0 END)
-         |      AS BIGINT) +
-         |    CAST(sum(CASE WHEN x.rev = a.rev THEN 1 ELSE 0 END)
-         |      AS BIGINT) + 1 AS r2
-         |  FROM b a JOIN b x ON x.wk = a.wk
-         |  GROUP BY a.wk, a.wd),
+      s"""WITH ${weekRanksSql("r2")},
          |rng AS (
          |  SELECT wk, max(rev) - min(rev) AS rg FROM b GROUP BY wk),
          |rdom AS (
@@ -5518,19 +5437,9 @@ object DataProfile {
          |  f.f_milli,
          |  CASE WHEN f.f_milli > 2099 THEN 1 ELSE 0 END AS reject_5pct
          |FROM colsum, f ORDER BY weekday""".stripMargin) { (s, dir) =>
-      val daily = DayAxis.revCentsEpoch(s, dir)
-        .select(col("d").as("ed"), col("rev").as("rev"))
-      val dd = daily.select(expr("ed div 7").as("wk"),
-        (col("ed") % 7).as("wd"), col("rev"))
-      val fullWk = dd.groupBy("wk").agg(count(lit(1)).as("c"))
-        .filter(col("c") === K).select("wk")
-      val b = dd.join(fullWk, Seq("wk")).ckpt() // block-join + range sides
-      val rk = b.select(col("wk"), col("wd"), col("rev"))
-        .join(b.select(col("wk"), col("rev").as("rev2")), Seq("wk"))
-        .groupBy(col("wk"), col("wd"))
-        .agg((lit(2) * sum(when(col("rev2") < col("rev"), 1L).otherwise(0L))
-          + sum(when(col("rev2") === col("rev"), 1L).otherwise(0L)) + 1)
-          .as("r2"))
+      val (fullWk, blocks) = weekBlocks(s, dir)
+      val b = blocks.ckpt() // block-join + range sides
+      val rk = weekRanks(b, "r2")
       val rng = b.groupBy(col("wk"))
         .agg((max(col("rev")) - min(col("rev"))).as("rg"))
         .ckpt() // week-range frame: domain ranks + the sframe join

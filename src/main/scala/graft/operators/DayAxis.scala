@@ -46,6 +46,38 @@ object DayAxis {
       datediff(col("d"), lit("1970-01-01")).cast("bigint").as("d"),
       col("rev"))
 
+  /** The DuckDB twin of [[revCents]]: the `daily` CTE
+    * (d DATE, `rev` BIGINT), named `rev` unless a query reads it
+    * under another name. */
+  def revCentsSql(rev: String = "rev"): String =
+    s"""daily AS (
+       |  SELECT CAST(o_orderdate AS DATE) AS d,
+       |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+       |      AS BIGINT)) AS BIGINT) AS $rev
+       |  FROM orders GROUP BY 1)""".stripMargin
+
+  /** The DuckDB twin of [[revCentsEpoch]]: the `daily` CTE keyed by
+    * epoch day (`day` BIGINT, `rev` BIGINT). */
+  def revCentsEpochSql(day: String = "d", rev: String = "rev"): String =
+    s"""daily AS (
+       |  SELECT CAST(date_diff('day', DATE '1970-01-01',
+       |                        CAST(o_orderdate AS DATE)) AS BIGINT) AS $day,
+       |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+       |        AS BIGINT)) AS BIGINT) AS $rev
+       |  FROM orders GROUP BY 1)""".stripMargin
+
+  /** Numbers a day frame t = 1..n in day order (plus its row count
+    * `n_ax`) — the Spark side of [[axSql]]. */
+  def numbered(daily: DataFrame): DataFrame =
+    ScaleRank.withRowNumber(daily, Seq.empty, Seq(col("d")), "t", "n_ax")
+
+  /** The `ax` CTE over `daily`: (t BIGINT, `cols`), t = 1..n in day
+    * order — the DuckDB twin of [[numbered]]. */
+  def axSql(cols: String = "rev"): String =
+    s"""ax AS (
+       |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, $cols
+       |  FROM daily)""".stripMargin
+
   /** (day DATE, cents BIGINT): daily revenue in cents via
     * floor(x*100 + 0.5) on the raw double — the half-up rounding
     * path. Kept distinct from [[revCents]] (different rounding,

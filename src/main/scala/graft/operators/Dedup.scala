@@ -89,6 +89,45 @@ object Dedup {
             (xy, z) => concat(xy, lit(" "), z))).as("shingle"))
   }
 
+  /** Doc pairs (b, a, inter, na, nb) sharing a shingle among `srows`
+    * (doc_id, shingle; distinct): a < b, `inter` shared shingles, and
+    * both shingle-set sizes broadcast in. A set-similarity equi-join on
+    * the shingle key — complete for J > 0, never an all-pairs scan. */
+  private def shinglePairs(srows: DataFrame): DataFrame = {
+    val sz = srows.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    srows.select(col("doc_id").as("a"), col("shingle"))
+      .join(srows.select(col("doc_id").as("b"), col("shingle").as("sgb")),
+        col("shingle") === col("sgb") && col("a") < col("b"))
+      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
+      .join(broadcast(sz.select(col("doc_id").as("a"), col("n").as("na"))), Seq("a"))
+      .join(broadcast(sz.select(col("doc_id").as("b"), col("n").as("nb"))), Seq("b"))
+  }
+
+  /** The oracle side of [[shinglePairs]] over the CTE `srows`: the
+    * CTEs `sz` (doc_id, n) and `pi` (a, b, inter). */
+  private def shinglePairsSql: String =
+    """sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM srows GROUP BY doc_id),
+      |pi AS (
+      |  SELECT a.doc_id AS a, b.doc_id AS b, CAST(count(*) AS BIGINT) AS inter
+      |  FROM srows a JOIN srows b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Exact truth pairs (a, b) of the near-dup evaluations: shingle-set
+    * Jaccard ≥ ½ over [[shinglePairs]] — the measure MinHash sketches. */
+  private def jaccardTruth(srows: DataFrame): DataFrame =
+    shinglePairs(srows)
+      .filter(col("inter") * 2 >= col("na") + col("nb") - col("inter"))
+      .select(col("a"), col("b"))
+
+  /** The oracle side of [[jaccardTruth]]: [[shinglePairsSql]] plus the
+    * CTE `truth` (a, b), MATERIALIZED where asked. */
+  private def jaccardTruthSql(materialized: Boolean): String =
+    s"""$shinglePairsSql,
+       |truth AS ${if (materialized) "MATERIALIZED " else ""}(
+       |  SELECT pi.a, pi.b
+       |  FROM pi JOIN sz za ON pi.a = za.doc_id JOIN sz zb ON pi.b = zb.doc_id
+       |  WHERE inter * 2 >= za.n + zb.n - inter)""".stripMargin
+
   /** MinHash signature matrix, pivoted: one row per doc with h0..h7 =
     * min over shingles of the k-th disjoint 8-hex-char slice of a
     * 64-char digest (two md5s per shingle — the hash-split trick:
@@ -292,6 +331,12 @@ object Dedup {
     * and 3M rows keeps every winning case on the kernel. */
   private[graft] val KERNEL_MAX_ROWS = 3_000_000L
 
+  /** Session override of q34's [[KERNEL_MAX_ROWS]] dispatch (0 forces
+    * the shuffle arm) — the seam tools/scale_probe.py uses to give both
+    * arms scaling points, read like ScaleRank's
+    * `spark.graft.scalerank.windowBytes`. */
+  private val KERNEL_MAX_ROWS_KEY = "spark.graft.q34.kernelMaxRows"
+
   /** Shared-bigram counts per candidate pair (a < b, same lang), with
     * the DF cap applied and the j>=0.3 size-ratio prefilter. Dual
     * path, size-dispatched like [[ConnectedComponents]]:
@@ -470,10 +515,7 @@ object Dedup {
       |ORDER BY j DESC, a, b LIMIT 50""".stripMargin) { (s, dir) =>
     val bg = bigramSets(Corpus.tokenized(s, dir)) // shared corpus tokenize
     val sizes = bg.select(col("doc_id"), size(col("bs")).as("n"))
-    // probe seam: tools/scale_probe.py forces the shuffle path with
-    // GRAFT_Q34_KERNEL_MAX=0 so BOTH dispatch arms get scaling points
-    val kmax = sys.env.get("GRAFT_Q34_KERNEL_MAX").map(_.toLong)
-      .getOrElse(KERNEL_MAX_ROWS)
+    val kmax = s.conf.get(KERNEL_MAX_ROWS_KEY, KERNEL_MAX_ROWS.toString).toLong
     val j = bigramPairInter(bg, kernelMaxRows = kmax)
       .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), Seq("a"))
       .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), Seq("b"))
@@ -1091,15 +1133,7 @@ object Dedup {
          |  FROM toks, unnest(range(1, len(t)-1)) AS u(i) WHERE len(t) >= 3),
          |mh AS (SELECT doc_id, $mhOracleMins FROM sh GROUP BY doc_id),
          |srows AS (SELECT DISTINCT doc_id, shingle FROM sh),
-         |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM srows GROUP BY doc_id),
-         |pi AS (
-         |  SELECT a.doc_id AS a, b.doc_id AS b, CAST(count(*) AS BIGINT) AS inter
-         |  FROM srows a JOIN srows b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |truth AS MATERIALIZED (
-         |  SELECT pi.a, pi.b
-         |  FROM pi JOIN sz za ON pi.a = za.doc_id JOIN sz zb ON pi.b = zb.doc_id
-         |  WHERE inter * 2 >= za.n + zb.n - inter),
+         |${jaccardTruthSql(materialized = true)},
          |bks AS (${shapes.map(bucketSelects).mkString(" UNION ALL ")}),
          |cand AS MATERIALIZED (
          |  SELECT DISTINCT a.bands, a.doc_id AS a, b.doc_id AS b
@@ -1145,16 +1179,7 @@ object Dedup {
       val srows = shingles(sample)
         .select(col("doc_id"), col("shingle")).distinct()
         .ckpt()
-      val sz = srows.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val pi = srows.select(col("doc_id").as("a"), col("shingle"))
-        .join(srows.select(col("doc_id").as("b"), col("shingle").as("sgb")),
-          col("shingle") === col("sgb") && col("a") < col("b"))
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
-      val truth = pi
-        .join(broadcast(sz.select(col("doc_id").as("a"), col("n").as("na"))), Seq("a"))
-        .join(broadcast(sz.select(col("doc_id").as("b"), col("n").as("nb"))), Seq("b"))
-        .filter(col("inter") * 2 >= col("na") + col("nb") - col("inter"))
-        .select(col("a"), col("b"))
+      val truth = jaccardTruth(srows)
         .ckpt()
       val np = cand.groupBy(col("bands")).agg(count(lit(1)).as("n_candidates"))
       val nh = cand.join(truth, Seq("a", "b"), "left_semi")
@@ -1409,15 +1434,7 @@ object Dedup {
        |ds AS (
        |  SELECT doc_id, lang, text, n_chars FROM documents WHERE doc_id % 2 = 0),
        |srows AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE doc_id % 2 = 0),
-       |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM srows GROUP BY doc_id),
-       |pi AS (
-       |  SELECT a.doc_id AS a, b.doc_id AS b, CAST(count(*) AS BIGINT) AS inter
-       |  FROM srows a JOIN srows b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |truth AS (
-       |  SELECT pi.a, pi.b
-       |  FROM pi JOIN sz za ON pi.a = za.doc_id JOIN sz zb ON pi.b = zb.doc_id
-       |  WHERE inter * 2 >= za.n + zb.n - inter),
+       |${jaccardTruthSql(materialized = false)},
        |keys AS (
        |  SELECT doc_id, 'len100' AS strategy, CAST(n_chars // 100 AS VARCHAR) AS k FROM ds
        |  UNION ALL
@@ -1457,16 +1474,7 @@ object Dedup {
     val srows = shingles(ds)
       .select(col("doc_id"), col("shingle")).distinct()
       .ckpt() // sizes + both sides of the shingle join
-    val sz = srows.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val pi = srows.select(col("doc_id").as("a"), col("shingle"))
-      .join(srows.select(col("doc_id").as("b"), col("shingle").as("sgb")),
-        col("shingle") === col("sgb") && col("a") < col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
-    val truth = pi
-      .join(broadcast(sz.select(col("doc_id").as("a"), col("n").as("na"))), Seq("a"))
-      .join(broadcast(sz.select(col("doc_id").as("b"), col("n").as("nb"))), Seq("b"))
-      .filter(col("inter") * 2 >= col("na") + col("nb") - col("inter"))
-      .select(col("a"), col("b"))
+    val truth = jaccardTruth(srows)
       .ckpt() // counted AND joined per strategy
     val keys = ds.select(col("doc_id"), expr(
       "stack(3, " +
@@ -1573,11 +1581,7 @@ object Dedup {
     "q303_minhash_calibration",
     s"""WITH $mhOracleCte,
        |srows AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE doc_id % 2 = 0),
-       |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM srows GROUP BY doc_id),
-       |pi AS (
-       |  SELECT a.doc_id AS a, b.doc_id AS b, CAST(count(*) AS BIGINT) AS inter
-       |  FROM srows a JOIN srows b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
+       |$shinglePairsSql,
        |ja AS (
        |  SELECT pi.a, pi.b, pi.inter, za.n + zb.n - pi.inter AS un
        |  FROM pi JOIN sz za ON pi.a = za.doc_id JOIN sz zb ON pi.b = zb.doc_id),
@@ -1602,14 +1606,7 @@ object Dedup {
     val srows = shingles(sample)
       .select(col("doc_id"), col("shingle")).distinct()
       .ckpt() // sizes + both sides of the postings join
-    val sz = srows.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val pi = srows.select(col("doc_id").as("a"), col("shingle"))
-      .join(srows.select(col("doc_id").as("b"), col("shingle").as("sgb")),
-        col("shingle") === col("sgb") && col("a") < col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
-    val ja = pi
-      .join(broadcast(sz.select(col("doc_id").as("a"), col("n").as("na"))), Seq("a"))
-      .join(broadcast(sz.select(col("doc_id").as("b"), col("n").as("nb"))), Seq("b"))
+    val ja = shinglePairs(srows)
       .select(col("a"), col("b"), col("inter"),
         (col("na") + col("nb") - col("inter")).as("un"))
     val mh = minhash(sample).ckpt() // joined on both pair sides
@@ -2175,15 +2172,7 @@ object Dedup {
     s"""WITH $mhOracleCte,
        |$lshCandOracleCte,
        |srows AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE doc_id % 2 = 0),
-       |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM srows GROUP BY doc_id),
-       |pi AS (
-       |  SELECT a.doc_id AS a, b.doc_id AS b, CAST(count(*) AS BIGINT) AS inter
-       |  FROM srows a JOIN srows b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |truth AS (
-       |  SELECT pi.a, pi.b
-       |  FROM pi JOIN sz za ON pi.a = za.doc_id JOIN sz zb ON pi.b = zb.doc_id
-       |  WHERE inter * 2 >= za.n + zb.n - inter),
+       |${jaccardTruthSql(materialized = false)},
        |sc AS (SELECT a, b FROM cand WHERE a % 2 = 0 AND b % 2 = 0),
        |hit AS (SELECT t.a, t.b FROM truth t JOIN sc ON t.a = sc.a AND t.b = sc.b),
        |m AS (
@@ -2198,16 +2187,7 @@ object Dedup {
     val srows = shingles(docs.filter(col("doc_id") % 2 === 0))
       .select(col("doc_id"), col("shingle")).distinct()
       .ckpt() // sizes + both sides of the shingle join
-    val sz = srows.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val pi = srows.select(col("doc_id").as("a"), col("shingle"))
-      .join(srows.select(col("doc_id").as("b"), col("shingle").as("sgb")),
-        col("shingle") === col("sgb") && col("a") < col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
-    val truth = pi
-      .join(broadcast(sz.select(col("doc_id").as("a"), col("n").as("na"))), Seq("a"))
-      .join(broadcast(sz.select(col("doc_id").as("b"), col("n").as("nb"))), Seq("b"))
-      .filter(col("inter") * 2 >= col("na") + col("nb") - col("inter"))
-      .select(col("a"), col("b"))
+    val truth = jaccardTruth(srows)
       .ckpt() // counted AND semi-joined below
     val sc = candidatePairs(docs)
       .filter(col("a") % 2 === 0 && col("b") % 2 === 0)

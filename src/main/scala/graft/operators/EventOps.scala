@@ -3,7 +3,7 @@ package graft.operators
 import graft.CkptOps
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -99,19 +99,47 @@ object EventOps {
       .orderBy("event_type")
   }
 
-  /** Gap-based sessionization — a new session starts when the gap to
-    * the previous event of the same user exceeds 30 minutes; session id
-    * is the running sum of session-start flags. */
-  val q51Sessionize: QueryDef = QueryDef(
-    "q51_sessionize",
-    s"""WITH o AS (
+  /** The oracle's gap sessionization (q51, q125, q138): the CTEs `o`
+    * (is_new flags) and `s` (user_id, ts, sess). */
+  private def sessionsSql: String =
+    s"""o AS (
        |  SELECT user_id, ts, event_id,
        |    CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > $SESSION_GAP_US OR lag(ts) OVER w IS NULL
        |         THEN 1 ELSE 0 END AS is_new
        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
        |s AS (
        |  SELECT user_id, ts, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess
-       |  FROM o),
+       |  FROM o)""".stripMargin
+
+  /** Gap sessions of `ev` as epoch-µs intervals (user_id, sess, s_us,
+    * e_us): a new session starts when the gap to the user's previous
+    * event exceeds [[SESSION_GAP_US]]. */
+  private def sessionIntervals(ev: DataFrame): DataFrame = {
+    val perUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    ev.withColumn("us", unix_micros(col("ts")))
+      .withColumn("prev", lag(col("us"), 1).over(perUser))
+      .withColumn("is_new",
+        when(col("prev").isNull || col("us") - col("prev") > SESSION_GAP_US, 1)
+          .otherwise(0))
+      .withColumn("sess", sum(col("is_new")).over(perUser))
+      .groupBy(col("user_id"), col("sess"))
+      .agg(min(col("us")).as("s_us"), max(col("us")).as("e_us"))
+  }
+
+  /** The oracle side of [[sessionIntervals]]: [[sessionsSql]] plus the
+    * CTE `iv`. */
+  private def sessionIntervalsSql: String =
+    s"""$sessionsSql,
+       |iv AS (
+       |  SELECT user_id, sess, epoch_us(min(ts)) AS s_us, epoch_us(max(ts)) AS e_us
+       |  FROM s GROUP BY user_id, sess)""".stripMargin
+
+  /** Gap-based sessionization — a new session starts when the gap to
+    * the previous event of the same user exceeds 30 minutes; session id
+    * is the running sum of session-start flags. */
+  val q51Sessionize: QueryDef = QueryDef(
+    "q51_sessionize",
+    s"""WITH $sessionsSql,
        |per AS (
        |  SELECT user_id, sess, count(*) AS n_ev, epoch_us(max(ts)) - epoch_us(min(ts)) AS dur_us
        |  FROM s GROUP BY user_id, sess)
@@ -155,6 +183,34 @@ object EventOps {
       .orderBy("hour", "event_type")
   }
 
+  /** The per-user report both as-of implementations (q53's window,
+    * q105's native AsofJoin) end in, over purchases (user_id, ts)
+    * matched to their latest click (cts, cval; null when none). */
+  private def asofClickReport(matched: DataFrame): DataFrame =
+    matched
+      .groupBy(col("user_id"))
+      .agg(
+        count(lit(1)).as("n_purchases"),
+        count(col("cts")).as("n_matched"),
+        sum(unix_micros(col("ts")) - unix_micros(col("cts"))).as("total_gap_us"),
+        round(sum(coalesce(col("cval"), lit(0)).cast("decimal(18,2)")), 2)
+          .cast("double").as("click_val"))
+      .orderBy("user_id")
+
+  /** The oracle of q53 and q105: DuckDB's ASOF LEFT JOIN of purchases
+    * to clicks, ties pre-collapsed to the max-event_id click. */
+  private def asofClickSql: String =
+    """WITH p AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
+      |c AS (SELECT user_id, ts, arg_max(value, event_id) AS value
+      |      FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
+      |m AS (
+      |  SELECT p.user_id, p.ts AS pts, c.ts AS cts, c.value AS cval
+      |  FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts)
+      |SELECT user_id, count(*) AS n_purchases, count(cts) AS n_matched,
+      |  CAST(sum(epoch_us(pts) - epoch_us(cts)) AS BIGINT) AS total_gap_us,
+      |  CAST(round(sum(CAST(coalesce(cval,0) AS DECIMAL(18,2))),2) AS DOUBLE) AS click_val
+      |FROM m GROUP BY user_id ORDER BY user_id""".stripMargin
+
   /** As-of join — each purchase matched to the latest click of the
     * same user at or before it. Spark formulation: union both sides,
     * one window partitioned by user ordered by (ts, side), carry the
@@ -167,16 +223,7 @@ object EventOps {
     * free to pick an arbitrary tied row. */
   val q53AsofJoin: QueryDef = QueryDef(
     "q53_asof_join",
-    """WITH p AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
-      |c AS (SELECT user_id, ts, arg_max(value, event_id) AS value
-      |      FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
-      |m AS (
-      |  SELECT p.user_id, p.ts AS pts, c.ts AS cts, c.value AS cval
-      |  FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts)
-      |SELECT user_id, count(*) AS n_purchases, count(cts) AS n_matched,
-      |  CAST(sum(epoch_us(pts) - epoch_us(cts)) AS BIGINT) AS total_gap_us,
-      |  CAST(round(sum(CAST(coalesce(cval,0) AS DECIMAL(18,2))),2) AS DOUBLE) AS click_val
-      |FROM m GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
+    asofClickSql) { (s, dir) =>
     val ev = Tables.events(s, dir)
     val union = ev.filter(col("event_type").isin("click", "purchase"))
       .select(
@@ -189,18 +236,10 @@ object EventOps {
     // make last() pick shuffle-order-dependently (determinism contract)
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("side"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    union
+    asofClickReport(union
       .withColumn("cts", last(col("click_ts"), ignoreNulls = true).over(w))
       .withColumn("cval", last(col("click_val"), ignoreNulls = true).over(w))
-      .filter(col("side") === 1)
-      .groupBy(col("user_id"))
-      .agg(
-        count(lit(1)).as("n_purchases"),
-        count(col("cts")).as("n_matched"),
-        sum(unix_micros(col("ts")) - unix_micros(col("cts"))).as("total_gap_us"),
-        round(sum(coalesce(col("cval"), lit(0)).cast("decimal(18,2)")), 2)
-          .cast("double").as("click_val"))
-      .orderBy("user_id")
+      .filter(col("side") === 1))
   }
 
   /** Rollup — (event_type, day) hierarchy with grand total; grouping
@@ -551,16 +590,7 @@ object EventOps {
     * rather than sort-dependent. */
   val q105AsofNative: QueryDef = QueryDef(
     "q105_asof_native",
-    """WITH p AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
-      |c AS (SELECT user_id, ts, arg_max(value, event_id) AS value
-      |      FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
-      |m AS (
-      |  SELECT p.user_id, p.ts AS pts, c.ts AS cts, c.value AS cval
-      |  FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts)
-      |SELECT user_id, count(*) AS n_purchases, count(cts) AS n_matched,
-      |  CAST(sum(epoch_us(pts) - epoch_us(cts)) AS BIGINT) AS total_gap_us,
-      |  CAST(round(sum(CAST(coalesce(cval,0) AS DECIMAL(18,2))),2) AS DOUBLE) AS click_val
-      |FROM m GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
+    asofClickSql) { (s, dir) =>
     val ev = Tables.events(s, dir)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("event_id"))
@@ -570,16 +600,8 @@ object EventOps {
     val clicks = ev.filter(col("event_type") === "click")
       .groupBy(col("user_id").as("c_user_id"), col("ts").as("cts"))
       .agg(max_by(col("value"), col("event_id")).as("cval"))
-    graft.plans.Asof.joinKeys(
-        purchases, clicks, Seq("user_id"), Seq("c_user_id"), "ts", "cts")
-      .groupBy(col("user_id"))
-      .agg(
-        count(lit(1)).as("n_purchases"),
-        count(col("cts")).as("n_matched"),
-        sum(unix_micros(col("ts")) - unix_micros(col("cts"))).as("total_gap_us"),
-        round(sum(coalesce(col("cval"), lit(0)).cast("decimal(18,2)")), 2)
-          .cast("double").as("click_val"))
-      .orderBy("user_id")
+    asofClickReport(graft.plans.Asof.joinKeys(
+      purchases, clicks, Seq("user_id"), Seq("c_user_id"), "ts", "cts"))
   }
 
   /** q109 — first-order Markov transition matrix over each user's
@@ -780,17 +802,7 @@ object EventOps {
     * Overlap arithmetic stays in integer epoch-µs end to end. */
   val q125IntervalJoin: QueryDef = QueryDef(
     "q125_interval_join",
-    s"""WITH o AS (
-       |  SELECT user_id, ts, event_id,
-       |    CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > $SESSION_GAP_US OR lag(ts) OVER w IS NULL
-       |         THEN 1 ELSE 0 END AS is_new
-       |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-       |s AS (
-       |  SELECT user_id, ts, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess
-       |  FROM o),
-       |iv AS (
-       |  SELECT user_id, sess, epoch_us(min(ts)) AS s_us, epoch_us(max(ts)) AS e_us
-       |  FROM s GROUP BY user_id, sess),
+    s"""WITH $sessionIntervalsSql,
        |camp AS (
        |  SELECT d, epoch_us(CAST(d AS TIMESTAMP)) + 21600000000 AS cs_us,
        |    epoch_us(CAST(d AS TIMESTAMP)) + 64800000000 AS ce_us
@@ -800,16 +812,7 @@ object EventOps {
        |FROM iv JOIN camp ON iv.s_us <= camp.ce_us AND camp.cs_us <= iv.e_us
        |GROUP BY camp.d ORDER BY camp.d""".stripMargin) { (s, dir) =>
     val ev = Tables.events(s, dir)
-    val wo = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val iv = ev
-      .withColumn("us", unix_micros(col("ts")))
-      .withColumn("prev", lag(col("us"), 1).over(wo))
-      .withColumn("is_new",
-        when(col("prev").isNull || col("us") - col("prev") > SESSION_GAP_US, 1)
-          .otherwise(0))
-      .withColumn("sess", sum(col("is_new")).over(wo))
-      .groupBy(col("user_id"), col("sess"))
-      .agg(min(col("us")).as("s_us"), max(col("us")).as("e_us"))
+    val iv = sessionIntervals(ev)
     val camp = ev.select(to_date(col("ts")).as("d")).distinct()
       .withColumn("cs_us", unix_micros(col("d").cast("timestamp")) + lit(21600000000L))
       .withColumn("ce_us", col("cs_us") + lit(43200000000L))
@@ -997,17 +1000,7 @@ object EventOps {
     * day it spans. */
   val q138PeakConcurrency: QueryDef = QueryDef(
     "q138_peak_concurrency",
-    s"""WITH o AS (
-       |  SELECT user_id, ts, event_id,
-       |    CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > $SESSION_GAP_US OR lag(ts) OVER w IS NULL
-       |         THEN 1 ELSE 0 END AS is_new
-       |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-       |s AS (
-       |  SELECT user_id, ts, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sess
-       |  FROM o),
-       |iv AS (
-       |  SELECT user_id, sess, epoch_us(min(ts)) AS s_us, epoch_us(max(ts)) AS e_us
-       |  FROM s GROUP BY user_id, sess),
+    s"""WITH $sessionIntervalsSql,
        |sd AS (
        |  SELECT s_us, e_us, CAST(day AS BIGINT) AS day
        |  FROM iv, unnest(range(s_us // 86400000000, e_us // 86400000000 + 1)) AS r(day)),
@@ -1022,16 +1015,7 @@ object EventOps {
        |SELECT DATE '1970-01-01' + CAST(day AS INT) AS d,
        |  CAST(max(cur) AS BIGINT) AS peak
        |FROM run GROUP BY day ORDER BY d""".stripMargin) { (s, dir) =>
-    val perUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val iv = Tables.events(s, dir)
-      .withColumn("us", unix_micros(col("ts")))
-      .withColumn("prev", lag(col("us"), 1).over(perUser))
-      .withColumn("is_new",
-        when(col("prev").isNull || col("us") - col("prev") > SESSION_GAP_US, 1)
-          .otherwise(0))
-      .withColumn("sess", sum(col("is_new")).over(perUser))
-      .groupBy(col("user_id"), col("sess"))
-      .agg(min(col("us")).as("s_us"), max(col("us")).as("e_us"))
+    val iv = sessionIntervals(Tables.events(s, dir))
     val sd = iv.select(col("s_us"), col("e_us"),
       explode(sequence(expr("s_us div 86400000000"),
         expr("e_us div 86400000000"))).as("day"))
@@ -1270,31 +1254,28 @@ object EventOps {
     * at any corpus scale. */
   val q163Acf: QueryDef = QueryDef(
     "q163_acf",
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d,
-      |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)) AS BIGINT) AS x
-      |  FROM orders GROUP BY 1),
-      |p AS (
-      |  SELECT l.lag, a.x AS xa, b.x AS xb
-      |  FROM daily a
-      |  CROSS JOIN unnest([1,2,3,4,5,6,7]) AS l(lag)
-      |  JOIN daily b ON b.d = a.d + CAST(l.lag AS INTEGER)),
-      |m AS (
-      |  SELECT lag, CAST(count(*) AS BIGINT) AS n,
-      |    CAST(sum(xa) AS BIGINT) AS sx, CAST(sum(xb) AS BIGINT) AS sy,
-      |    sum(CAST(xa AS HUGEINT) * xb) AS sxy,
-      |    sum(CAST(xa AS HUGEINT) * xa) AS sxx,
-      |    sum(CAST(xb AS HUGEINT) * xb) AS syy
-      |  FROM p GROUP BY lag)
-      |SELECT CAST(lag AS BIGINT) AS lag, n AS n_pairs,
-      |  CASE WHEN n * sxx - CAST(sx AS HUGEINT) * sx > 0
-      |        AND n * syy - CAST(sy AS HUGEINT) * sy > 0
-      |   THEN CAST(floor(1000000.0 *
-      |     CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE) /
-      |     (sqrt(CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE)) *
-      |      sqrt(CAST(n * syy - CAST(sy AS HUGEINT) * sy AS DOUBLE)))) AS BIGINT)
-      |   END AS acf_ppm
-      |FROM m ORDER BY lag""".stripMargin) { (s, dir) =>
+    s"""WITH ${DayAxis.revCentsSql("x")},
+       |p AS (
+       |  SELECT l.lag, a.x AS xa, b.x AS xb
+       |  FROM daily a
+       |  CROSS JOIN unnest([1,2,3,4,5,6,7]) AS l(lag)
+       |  JOIN daily b ON b.d = a.d + CAST(l.lag AS INTEGER)),
+       |m AS (
+       |  SELECT lag, CAST(count(*) AS BIGINT) AS n,
+       |    CAST(sum(xa) AS BIGINT) AS sx, CAST(sum(xb) AS BIGINT) AS sy,
+       |    sum(CAST(xa AS HUGEINT) * xb) AS sxy,
+       |    sum(CAST(xa AS HUGEINT) * xa) AS sxx,
+       |    sum(CAST(xb AS HUGEINT) * xb) AS syy
+       |  FROM p GROUP BY lag)
+       |SELECT CAST(lag AS BIGINT) AS lag, n AS n_pairs,
+       |  CASE WHEN n * sxx - CAST(sx AS HUGEINT) * sx > 0
+       |        AND n * syy - CAST(sy AS HUGEINT) * sy > 0
+       |   THEN CAST(floor(1000000.0 *
+       |     CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE) /
+       |     (sqrt(CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE)) *
+       |      sqrt(CAST(n * syy - CAST(sy AS HUGEINT) * sy AS DOUBLE)))) AS BIGINT)
+       |   END AS acf_ppm
+       |FROM m ORDER BY lag""".stripMargin) { (s, dir) =>
     val daily = DayAxis.revCents(s, dir)
       .select(col("d"), col("rev").as("x"))
     val lagged = daily
@@ -1513,29 +1494,26 @@ object EventOps {
     * argument as q163/q164, documented there). */
   val q178Cusum: QueryDef = QueryDef(
     "q178_cusum",
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d,
-      |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)) AS BIGINT) AS x
-      |  FROM orders GROUP BY 1),
-      |mu AS (
-      |  SELECT CAST(sum(x) AS BIGINT) // count(*) AS mu,
-      |    (CAST(sum(x) AS BIGINT) // count(*)) // 20 AS k,
-      |    (CAST(sum(x) AS BIGINT) // count(*)) // 2 AS h
-      |  FROM daily),
-      |p AS (
-      |  SELECT d, x,
-      |    CAST(sum(x - mu.mu - mu.k) OVER (ORDER BY d
-      |         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS pf,
-      |    mu.h AS h
-      |  FROM daily, mu),
-      |s AS (
-      |  SELECT d, x, h,
-      |    pf - least(0, min(pf) OVER (ORDER BY d
-      |                ROWS UNBOUNDED PRECEDING)) AS cusum
-      |  FROM p)
-      |SELECT d, x AS revenue_cents, cusum AS cusum_cents,
-      |  CAST(CASE WHEN cusum > h THEN 1 ELSE 0 END AS BIGINT) AS alarm
-      |FROM s ORDER BY d""".stripMargin) { (s, dir) =>
+    s"""WITH ${DayAxis.revCentsSql("x")},
+       |mu AS (
+       |  SELECT CAST(sum(x) AS BIGINT) // count(*) AS mu,
+       |    (CAST(sum(x) AS BIGINT) // count(*)) // 20 AS k,
+       |    (CAST(sum(x) AS BIGINT) // count(*)) // 2 AS h
+       |  FROM daily),
+       |p AS (
+       |  SELECT d, x,
+       |    CAST(sum(x - mu.mu - mu.k) OVER (ORDER BY d
+       |         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS pf,
+       |    mu.h AS h
+       |  FROM daily, mu),
+       |s AS (
+       |  SELECT d, x, h,
+       |    pf - least(0, min(pf) OVER (ORDER BY d
+       |                ROWS UNBOUNDED PRECEDING)) AS cusum
+       |  FROM p)
+       |SELECT d, x AS revenue_cents, cusum AS cusum_cents,
+       |  CAST(CASE WHEN cusum > h THEN 1 ELSE 0 END AS BIGINT) AS alarm
+       |FROM s ORDER BY d""".stripMargin) { (s, dir) =>
     val daily = DayAxis.revCents(s, dir)
       .select(col("d"), col("rev").as("x"))
     val mu = daily.agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
@@ -1662,25 +1640,22 @@ object EventOps {
     * 1-row aggregate run on ≤|days| rows. */
   val q184Mase: QueryDef = QueryDef(
     "q184_mase",
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d,
-      |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)) AS BIGINT) AS x
-      |  FROM orders GROUP BY 1),
-      |e1 AS (
-      |  SELECT abs(a.x - b.x) AS e FROM daily a
-      |  JOIN daily b ON b.d = a.d - 1),
-      |e7 AS (
-      |  SELECT abs(a.x - b.x) AS e FROM daily a
-      |  JOIN daily b ON b.d = a.d - 7),
-      |m AS (
-      |  SELECT (SELECT CAST(count(*) AS BIGINT) FROM e1) AS n1,
-      |    (SELECT CAST(sum(e) AS BIGINT) FROM e1) AS s1,
-      |    (SELECT CAST(count(*) AS BIGINT) FROM e7) AS n7,
-      |    (SELECT CAST(sum(e) AS BIGINT) FROM e7) AS s7)
-      |SELECT n1, n7, s1 // n1 AS mae1_cents, s7 // n7 AS mae7_cents,
-      |  CAST((1000000 * CAST(s7 AS HUGEINT) * n1) //
-      |       (CAST(s1 AS HUGEINT) * n7) AS BIGINT) AS mase_ppm
-      |FROM m""".stripMargin) { (s, dir) =>
+    s"""WITH ${DayAxis.revCentsSql("x")},
+       |e1 AS (
+       |  SELECT abs(a.x - b.x) AS e FROM daily a
+       |  JOIN daily b ON b.d = a.d - 1),
+       |e7 AS (
+       |  SELECT abs(a.x - b.x) AS e FROM daily a
+       |  JOIN daily b ON b.d = a.d - 7),
+       |m AS (
+       |  SELECT (SELECT CAST(count(*) AS BIGINT) FROM e1) AS n1,
+       |    (SELECT CAST(sum(e) AS BIGINT) FROM e1) AS s1,
+       |    (SELECT CAST(count(*) AS BIGINT) FROM e7) AS n7,
+       |    (SELECT CAST(sum(e) AS BIGINT) FROM e7) AS s7)
+       |SELECT n1, n7, s1 // n1 AS mae1_cents, s7 // n7 AS mae7_cents,
+       |  CAST((1000000 * CAST(s7 AS HUGEINT) * n1) //
+       |       (CAST(s1 AS HUGEINT) * n7) AS BIGINT) AS mase_ppm
+       |FROM m""".stripMargin) { (s, dir) =>
     val daily = DayAxis.revCents(s, dir)
       .select(col("d"), col("rev").as("x"))
     def lagErr(days: Int): DataFrame = daily.as("a")
@@ -2735,14 +2710,7 @@ object EventOps {
       s" AS BIGINT) END"
     QueryDef(
       "q338_nb_fit",
-      s"""WITH uc AS (
-         |  SELECT event_type AS t, user_id, CAST(count(*) AS BIGINT) AS x
-         |  FROM events GROUP BY 1, 2),
-         |m AS (
-         |  SELECT t, CAST(count(*) AS HUGEINT) AS n,
-         |    CAST(sum(CAST(x AS HUGEINT)) AS HUGEINT) AS s,
-         |    CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS q
-         |  FROM uc GROUP BY t)
+      s"""WITH $userCountMomentsSql
          |SELECT t AS event_type, CAST(n AS BIGINT) AS n_users,
          |  CAST(floor(1e3 * $mD) AS BIGINT) AS mean_milli,
          |  CAST(floor(1e3 * $vD) AS BIGINT) AS var_milli,
@@ -3015,6 +2983,56 @@ object EventOps {
     }
   }
 
+  /** The arms of the bandit queries (q365, q375): the event types. */
+  private def banditArms: Seq[String] =
+    Seq("click", "error", "purchase", "signup", "view")
+
+  /** The bandits' hourly reward grid (h, r1..rk): per hour, each arm's
+    * milli-valued total scaled to the corpus-wide maximum
+    * (1000·v div vmax), 0 for an arm with no events that hour. */
+  private def banditRewards(s: SparkSession, dir: String): DataFrame = {
+    val hr = Tables.events(s, dir)
+      .groupBy(expr("unix_micros(ts) div 3600000000").as("h"),
+        col("event_type").as("s"))
+      .agg(sum(floor(col("value") * 1000).cast("bigint")).as("v"))
+      .ckpt() // one fact collapse feeds vmax AND the grid
+    val vm = broadcast(hr.agg(max(col("v")).as("vmax")))
+    val rewards = banditArms.zipWithIndex.map { case (a, i) =>
+      coalesce(max(when(col("s") === a, col("rm"))), lit(0L))
+        .as(s"r${i + 1}")
+    }
+    hr.crossJoin(vm)
+      // if(vmax = 0, …): an all-zero-value corpus zeroes the reward
+      // ceiling; ANSI div would throw where the oracle's // natively
+      // NULLs — both engines then coalesce the arm rewards to 0
+      // (degenerate-corpus probe)
+      .select(col("h"), col("s"),
+        expr("if(vmax = 0, null, (1000 * v) div vmax)").as("rm"))
+      .groupBy(col("h"))
+      .agg(rewards.head, rewards.tail: _*)
+  }
+
+  /** The oracle side of [[banditRewards]]: the CTEs `hr`, `vm`,
+    * `grid0`, `grid` (t, r1..rk; t numbers the hours) and `nt`
+    * (tmax, the round count). */
+  private def banditRewardsSql: String = {
+    val gridSql = banditArms.zipWithIndex.map { case (a, i) =>
+      s"coalesce(max(CASE WHEN s = '$a' THEN rm END), 0) AS r${i + 1}"
+    }.mkString(",\n       |    ")
+    s"""hr AS (
+       |  SELECT epoch_us(ts) // 3600000000 AS h, event_type AS s,
+       |    CAST(sum(CAST(floor(value * 1000) AS BIGINT)) AS BIGINT) AS v
+       |  FROM events GROUP BY 1, 2),
+       |vm AS (SELECT max(v) AS vmax FROM hr),
+       |grid0 AS (
+       |  SELECT h, s, (1000 * v) // vm.vmax AS rm FROM hr, vm),
+       |grid AS MATERIALIZED (
+       |  SELECT CAST(row_number() OVER (ORDER BY h) AS BIGINT) AS t,
+       |    $gridSql
+       |  FROM grid0 GROUP BY h),
+       |nt AS (SELECT CAST(count(*) AS BIGINT) AS tmax FROM grid)""".stripMargin
+  }
+
   /** q365 — Hedge / exponential-weights regret audit (Littlestone &
     * Warmuth '94; Freund & Schapire '97): an online portfolio over
     * the five event-type "arms" re-weights multiplicatively
@@ -3043,16 +3061,13 @@ object EventOps {
     * (the q355/q164 adjudicated shape). Output ≤ ~7 checkpoint
     * rows. */
   val q365HedgeRegret: QueryDef = {
-    val ARMS = Seq("click", "error", "purchase", "signup", "view")
+    val ARMS = banditArms
     val ETA = 0.1
     val CK = 120L // checkpoint every 120 rounds (plus the final round)
     val k = ARMS.length
     val boundMicro = s"CAST(floor(1000000.0 * (ln(${k}.0) / $ETA + " +
       s"$ETA * CAST(t AS DOUBLE) / 8.0)) AS BIGINT)"
     val armCols = ARMS.indices.map(i => s"r${i + 1}")
-    val gridSql = ARMS.zipWithIndex.map { case (a, i) =>
-      s"coalesce(max(CASE WHEN s = '$a' THEN rm END), 0) AS r${i + 1}"
-    }.mkString(",\n         |    ")
     // one recursion step: integer gain add, exp reweight, normalize
     def stepSql: String = {
       val gains = ARMS.indices.map(i =>
@@ -3073,18 +3088,7 @@ object EventOps {
     }
     QueryDef(
       "q365_hedge_regret",
-      s"""WITH RECURSIVE hr AS (
-         |  SELECT epoch_us(ts) // 3600000000 AS h, event_type AS s,
-         |    CAST(sum(CAST(floor(value * 1000) AS BIGINT)) AS BIGINT) AS v
-         |  FROM events GROUP BY 1, 2),
-         |vm AS (SELECT max(v) AS vmax FROM hr),
-         |grid0 AS (
-         |  SELECT h, s, (1000 * v) // vm.vmax AS rm FROM hr, vm),
-         |grid AS MATERIALIZED (
-         |  SELECT CAST(row_number() OVER (ORDER BY h) AS BIGINT) AS t,
-         |    $gridSql
-         |  FROM grid0 GROUP BY h),
-         |nt AS (SELECT CAST(count(*) AS BIGINT) AS tmax FROM grid),
+      s"""WITH RECURSIVE $banditRewardsSql,
          |st AS (
          |  SELECT CAST(0 AS BIGINT) AS t,
          |    ${ARMS.indices.map(i => s"CAST(200000000 AS BIGINT) AS w${i + 1}")
@@ -3103,27 +3107,7 @@ object EventOps {
          |FROM st, nt
          |WHERE st.t > 0 AND (st.t % $CK = 0 OR st.t = nt.tmax)
          |ORDER BY st.t""".stripMargin) { (s, dir) =>
-      val hr = Tables.events(s, dir)
-        .groupBy(expr("unix_micros(ts) div 3600000000").as("h"),
-          col("event_type").as("s"))
-        .agg(sum(floor(col("value") * 1000).cast("bigint")).as("v"))
-        .ckpt() // one fact collapse feeds vmax AND the grid
-      val vm = broadcast(hr.agg(max(col("v")).as("vmax")))
-      val grid = hr.crossJoin(vm)
-        // if(vmax = 0, …): an all-zero-value corpus zeroes the reward
-        // ceiling; ANSI div would throw where the oracle's // natively
-        // NULLs — both engines then coalesce the arm rewards to 0
-        // (degenerate-corpus probe)
-        .select(col("h"), col("s"),
-          expr("if(vmax = 0, null, (1000 * v) div vmax)").as("rm"))
-        .groupBy(col("h"))
-        .agg(ARMS.zipWithIndex.map { case (a, i) =>
-          coalesce(max(when(col("s") === a, col("rm"))), lit(0L))
-            .as(s"r${i + 1}")
-        }.head, ARMS.zipWithIndex.tail.map { case (a, i) =>
-          coalesce(max(when(col("s") === a, col("rm"))), lit(0L))
-            .as(s"r${i + 1}")
-        }: _*)
+      val grid = banditRewards(s, dir)
       import s.implicits._
       // multiplicative-weights scan: sequential over the bounded
       // hour axis (q355/q164 shape)
@@ -3354,13 +3338,10 @@ object EventOps {
     * walks the same recurrence as a recursive CTE. Output ≤ ~7
     * checkpoint rows. */
   val q375UcbRegret: QueryDef = {
-    val ARMS = Seq("click", "error", "purchase", "signup", "view")
+    val ARMS = banditArms
     val k = ARMS.length
     val CK = 120L
     val armCols = ARMS.indices.map(i => s"r${i + 1}")
-    val gridSql = ARMS.zipWithIndex.map { case (a, i) =>
-      s"coalesce(max(CASE WHEN s = '$a' THEN rm END), 0) AS r${i + 1}"
-    }.mkString(",\n         |    ")
     // null-guarded UCB index (unplayed arms only occur in the forced
     // init rounds, where the pick CASE never reads these)
     def idxSql(i: Int): String =
@@ -3386,18 +3367,7 @@ object EventOps {
     }
     QueryDef(
       "q375_ucb_regret",
-      s"""WITH RECURSIVE hr AS (
-         |  SELECT epoch_us(ts) // 3600000000 AS h, event_type AS s,
-         |    CAST(sum(CAST(floor(value * 1000) AS BIGINT)) AS BIGINT) AS v
-         |  FROM events GROUP BY 1, 2),
-         |vm AS (SELECT max(v) AS vmax FROM hr),
-         |grid0 AS (
-         |  SELECT h, s, (1000 * v) // vm.vmax AS rm FROM hr, vm),
-         |grid AS MATERIALIZED (
-         |  SELECT CAST(row_number() OVER (ORDER BY h) AS BIGINT) AS t,
-         |    $gridSql
-         |  FROM grid0 GROUP BY h),
-         |nt AS (SELECT CAST(count(*) AS BIGINT) AS tmax FROM grid),
+      s"""WITH RECURSIVE $banditRewardsSql,
          |st AS (
          |  SELECT CAST(0 AS BIGINT) AS t,
          |    ${(1 to k).map(i => s"CAST(0 AS BIGINT) AS n$i").mkString(", ")},
@@ -3413,24 +3383,7 @@ object EventOps {
          |FROM st, nt
          |WHERE st.t > 0 AND (st.t % $CK = 0 OR st.t = nt.tmax)
          |ORDER BY st.t""".stripMargin) { (s, dir) =>
-      val hr = Tables.events(s, dir)
-        .groupBy(expr("unix_micros(ts) div 3600000000").as("h"),
-          col("event_type").as("s"))
-        .agg(sum(floor(col("value") * 1000).cast("bigint")).as("v"))
-        .ckpt()
-      val vm = broadcast(hr.agg(max(col("v")).as("vmax")))
-      val grid = hr.crossJoin(vm)
-        // if(vmax = 0, …): same degenerate-ceiling guard as q365
-        .select(col("h"), col("s"),
-          expr("if(vmax = 0, null, (1000 * v) div vmax)").as("rm"))
-        .groupBy(col("h"))
-        .agg(ARMS.zipWithIndex.map { case (a, i) =>
-          coalesce(max(when(col("s") === a, col("rm"))), lit(0L))
-            .as(s"r${i + 1}")
-        }.head, ARMS.zipWithIndex.tail.map { case (a, i) =>
-          coalesce(max(when(col("s") === a, col("rm"))), lit(0L))
-            .as(s"r${i + 1}")
-        }: _*)
+      val grid = banditRewards(s, dir)
       import s.implicits._
       val rows = grid.repartition(1).sortWithinPartitions("h")
         .select((col("h") +: armCols.map(col)): _*)
@@ -3753,11 +3706,7 @@ object EventOps {
       "nullif(CAST(c0 AS DOUBLE), 0)) AS BIGINT)"
     QueryDef(
       "q387_ljung_box",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS x
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsSql("x")},
          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n,
          |  CAST(sum(x) AS BIGINT) AS sx FROM daily),
          |dev AS (
@@ -4237,6 +4186,19 @@ object EventOps {
     q178Cusum, q183FunnelCi, q184Mase, q272LatenessProfile,
     q285WatermarkLoss, q293ControlChart, q299CcfLeadlag, q304Overdispersion)
 
+  /** The oracle's per-(event type, user) count moments shared by q304
+    * and q338: the CTEs `uc` (t, user_id, x) and `m` (t, n, s = Σx,
+    * q = Σx²). */
+  private def userCountMomentsSql: String =
+    """uc AS (
+      |  SELECT event_type AS t, user_id, CAST(count(*) AS BIGINT) AS x
+      |  FROM events GROUP BY 1, 2),
+      |m AS (
+      |  SELECT t, CAST(count(*) AS HUGEINT) AS n,
+      |    CAST(sum(CAST(x AS HUGEINT)) AS HUGEINT) AS s,
+      |    CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS q
+      |  FROM uc GROUP BY t)""".stripMargin
+
   /** q304 — overdispersion screen per event type: the variance-to-mean
     * ratio (dispersion index) of per-user event counts, exact. A
     * Poisson arrival process has D = 1; D ≫ 1 means burst-driven
@@ -4256,21 +4218,14 @@ object EventOps {
     * pass collapses to |types| rows. No windows, no broadcast. */
   lazy val q304Overdispersion: QueryDef = QueryDef(
     "q304_overdispersion",
-    """WITH uc AS (
-      |  SELECT event_type AS t, user_id, CAST(count(*) AS BIGINT) AS x
-      |  FROM events GROUP BY 1, 2),
-      |m AS (
-      |  SELECT t, CAST(count(*) AS HUGEINT) AS n,
-      |    CAST(sum(CAST(x AS HUGEINT)) AS HUGEINT) AS s,
-      |    CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS q
-      |  FROM uc GROUP BY t)
-      |SELECT t AS event_type, CAST(n AS BIGINT) AS n_users,
-      |  CAST(s AS BIGINT) AS n_events,
-      |  CAST((1000 * s) // n AS BIGINT) AS mean_milli,
-      |  CAST((1000 * (n * q - s * s)) // (s * (n - 1)) AS BIGINT)
-      |    AS dispersion_milli,
-      |  CAST((n * q - s * s) // s AS BIGINT) AS chi2_stat
-      |FROM m WHERE n > 1 AND s > 0 ORDER BY t""".stripMargin) { (s, dir) =>
+    s"""WITH $userCountMomentsSql
+       |SELECT t AS event_type, CAST(n AS BIGINT) AS n_users,
+       |  CAST(s AS BIGINT) AS n_events,
+       |  CAST((1000 * s) // n AS BIGINT) AS mean_milli,
+       |  CAST((1000 * (n * q - s * s)) // (s * (n - 1)) AS BIGINT)
+       |    AS dispersion_milli,
+       |  CAST((n * q - s * s) // s AS BIGINT) AS chi2_stat
+       |FROM m WHERE n > 1 AND s > 0 ORDER BY t""".stripMargin) { (s, dir) =>
     val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val uc = Tables.events(s, dir)
       .groupBy(col("event_type").as("t"), col("user_id"))

@@ -1189,12 +1189,7 @@ object FinanceAudit {
       "CAST(n_tail AS DOUBLE)) AS BIGINT)"
     QueryDef(
       "q352_var_es",
-      s"""WITH daily AS (
-         |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-         |                        CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |        AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsEpochSql()},
          |pnl AS (
          |  SELECT d, rev - lag(rev) OVER (ORDER BY d) AS p
          |  FROM daily),
@@ -1283,12 +1278,7 @@ object FinanceAudit {
       s"(exp(($xiD) * ln($ratioD)) - 1.0) END"
     QueryDef(
       "q357_pot_gpd",
-      s"""WITH daily AS (
-         |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-         |                        CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |        AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsEpochSql()},
          |pnl AS (SELECT d, rev - lag(rev) OVER (ORDER BY d) AS p FROM daily),
          |loss AS (SELECT d, -p AS l FROM pnl WHERE p IS NOT NULL),
          |ranked AS (
@@ -1479,32 +1469,25 @@ object FinanceAudit {
   }
 
   private def varBacktestSql: String =
-    """daily AS (
-      |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-      |                        CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
-      |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-      |        AS BIGINT)) AS BIGINT) AS rev
-      |  FROM orders GROUP BY 1),
-      |ax AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-      |  FROM daily),
-      |loss AS (
-      |  SELECT a.t AS i, a.rev - b.rev AS l
-      |  FROM ax a JOIN ax b ON b.t = a.t + 1),
-      |nl AS (SELECT CAST(count(*) AS BIGINT) AS n FROM loss),
-      |ranked AS (
-      |  SELECT hl, CAST(row_number() OVER (ORDER BY hl, hi) AS BIGINT)
-      |    AS rn, CAST(count(*) OVER () AS BIGINT) AS nh
-      |  FROM (SELECT loss.i AS hi, loss.l AS hl FROM loss, nl
-      |        WHERE loss.i <= nl.n // 2)),
-      |varq AS (
-      |  SELECT hl AS var95_cents FROM ranked
-      |  WHERE rn = (950 * nh + 999) // 1000),
-      |bt AS (
-      |  SELECT loss.i, nl.n,
-      |    CASE WHEN loss.l > varq.var95_cents THEN 1 ELSE 0 END AS v,
-      |    varq.var95_cents
-      |  FROM loss, nl, varq WHERE loss.i > nl.n // 2)""".stripMargin
+    s"""${DayAxis.revCentsEpochSql()},
+       |${DayAxis.axSql()},
+       |loss AS (
+       |  SELECT a.t AS i, a.rev - b.rev AS l
+       |  FROM ax a JOIN ax b ON b.t = a.t + 1),
+       |nl AS (SELECT CAST(count(*) AS BIGINT) AS n FROM loss),
+       |ranked AS (
+       |  SELECT hl, CAST(row_number() OVER (ORDER BY hl, hi) AS BIGINT)
+       |    AS rn, CAST(count(*) OVER () AS BIGINT) AS nh
+       |  FROM (SELECT loss.i AS hi, loss.l AS hl FROM loss, nl
+       |        WHERE loss.i <= nl.n // 2)),
+       |varq AS (
+       |  SELECT hl AS var95_cents FROM ranked
+       |  WHERE rn = (950 * nh + 999) // 1000),
+       |bt AS (
+       |  SELECT loss.i, nl.n,
+       |    CASE WHEN loss.l > varq.var95_cents THEN 1 ELSE 0 END AS v,
+       |    varq.var95_cents
+       |  FROM loss, nl, varq WHERE loss.i > nl.n // 2)""".stripMargin
 
   /** q412 — Kupiec proportion-of-failures VaR backtest (Kupiec '95):
     * estimate VaR₉₅ on the first half of the loss history, count

@@ -165,24 +165,19 @@ object Forecast {
     * single task ever sorts the whole pair frame. */
   val q187TheilSen: QueryDef = QueryDef(
     "q187_theil_sen",
-    """WITH daily AS (
-      |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-      |                        CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
-      |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT))
-      |         AS BIGINT) AS x
-      |  FROM orders GROUP BY 1),
-      |p AS (
-      |  SELECT a.d AS ad, b.d AS bd,
-      |    CAST(floor((1000.0 * (b.x - a.x)) / (b.d - a.d)) AS BIGINT) AS slope
-      |  FROM daily a JOIN daily b ON b.d > a.d),
-      |r AS (
-      |  SELECT slope,
-      |    CAST(row_number() OVER (ORDER BY slope, ad, bd) AS BIGINT) AS rk,
-      |    CAST(count(*) OVER () AS BIGINT) AS np
-      |  FROM p)
-      |SELECT (SELECT CAST(count(*) AS BIGINT) FROM daily) AS n_days,
-      |  np AS n_pairs, slope AS ts_slope_milli
-      |FROM r WHERE rk = (np + 1) // 2""".stripMargin) { (s, dir) =>
+    s"""WITH ${DayAxis.revCentsEpochSql(rev = "x")},
+       |p AS (
+       |  SELECT a.d AS ad, b.d AS bd,
+       |    CAST(floor((1000.0 * (b.x - a.x)) / (b.d - a.d)) AS BIGINT) AS slope
+       |  FROM daily a JOIN daily b ON b.d > a.d),
+       |r AS (
+       |  SELECT slope,
+       |    CAST(row_number() OVER (ORDER BY slope, ad, bd) AS BIGINT) AS rk,
+       |    CAST(count(*) OVER () AS BIGINT) AS np
+       |  FROM p)
+       |SELECT (SELECT CAST(count(*) AS BIGINT) FROM daily) AS n_days,
+       |  np AS n_pairs, slope AS ts_slope_milli
+       |FROM r WHERE rk = (np + 1) // 2""".stripMargin) { (s, dir) =>
     val daily = DayAxis.revCentsEpoch(s, dir)
       .select(col("d").as("d"), col("rev").as("x"))
     // pair generation: broadcast the tiny axis against an 8-way
@@ -374,26 +369,16 @@ object Forecast {
     * final index is a ≤7-row aggregate. */
   val q261SeasonalDecomp: QueryDef = QueryDef(
     "q261_seasonal_decomp",
-    """WITH d AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day,
-      |    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-      |      AS BIGINT) AS cents
-      |  FROM orders GROUP BY 1),
-      |w AS (
-      |  SELECT a.day, a.cents,
-      |    CAST(sum(b.cents) AS BIGINT) AS s7, count(*) AS c7
-      |  FROM d a
-      |  JOIN d b ON b.day BETWEEN a.day - 3 AND a.day + 3
-      |  GROUP BY a.day, a.cents),
-      |det AS (
-      |  SELECT day, cents - s7 // 7 AS det_cents
-      |  FROM w WHERE c7 = 7)
-      |SELECT dayofweek(day) + 1 AS dow,
-      |  CAST(count(*) AS BIGINT) AS n_days,
-      |  CAST(sum(det_cents) AS BIGINT) AS sum_det_cents,
-      |  CAST(floor(1000.0 * CAST(sum(det_cents) AS DOUBLE) /
-      |    CAST(count(*) AS DOUBLE)) AS BIGINT) AS seasonal_millicents
-      |FROM det GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
+    s"""WITH $centeredWeekSql,
+       |det AS (
+       |  SELECT day, cents - s7 // 7 AS det_cents
+       |  FROM w WHERE c7 = 7)
+       |SELECT dayofweek(day) + 1 AS dow,
+       |  CAST(count(*) AS BIGINT) AS n_days,
+       |  CAST(sum(det_cents) AS BIGINT) AS sum_det_cents,
+       |  CAST(floor(1000.0 * CAST(sum(det_cents) AS DOUBLE) /
+       |    CAST(count(*) AS DOUBLE)) AS BIGINT) AS seasonal_millicents
+       |FROM det GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
     val d = DayAxis.centsFloor(s, dir)
     val probes = d.select(col("day"), col("cents"),
       explode(expr("sequence(-3, 3)")).as("off"))
@@ -436,9 +421,10 @@ object Forecast {
       .ckpt()
   }
 
-  /** The matching oracle CTE chain (d, w, det — `det` carries day,
-    * cents, trend_cents, det_cents). */
-  private def detrendedCtes: String =
+  /** The oracle's centered 7-day window over the half-up day axis:
+    * the CTEs `d` (day, cents) and `w` (day, cents, s7, c7 — the
+    * window's sum and its day count). */
+  private def centeredWeekSql: String =
     """d AS (
       |  SELECT CAST(o_orderdate AS DATE) AS day,
       |    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
@@ -449,11 +435,16 @@ object Forecast {
       |    CAST(sum(b.cents) AS BIGINT) AS s7, count(*) AS c7
       |  FROM d a
       |  JOIN d b ON b.day BETWEEN a.day - 3 AND a.day + 3
-      |  GROUP BY a.day, a.cents),
-      |det AS (
-      |  SELECT day, cents, s7 // 7 AS trend_cents,
-      |    cents - s7 // 7 AS det_cents
-      |  FROM w WHERE c7 = 7)""".stripMargin
+      |  GROUP BY a.day, a.cents)""".stripMargin
+
+  /** The matching oracle CTE chain ([[centeredWeekSql]], then `det`
+    * carrying day, cents, trend_cents, det_cents). */
+  private def detrendedCtes: String =
+    s"""$centeredWeekSql,
+       |det AS (
+       |  SELECT day, cents, s7 // 7 AS trend_cents,
+       |    cents - s7 // 7 AS det_cents
+       |  FROM w WHERE c7 = 7)""".stripMargin
 
   /** q290 — seasonally-adjusted revenue anomalies: remove the trend
     * (q261's centered MA) AND the weekday effect from every complete
@@ -802,12 +793,7 @@ object Forecast {
       s"AS BIGINT) END"
     QueryDef(
       "q360_diebold_mariano",
-      s"""WITH daily AS (
-         |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-         |                        CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |        AS BIGINT)) AS BIGINT) AS y
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsEpochSql(rev = "y")},
          |lagd AS (
          |  SELECT d, y, lag(y, 7) OVER (ORDER BY d) AS y7,
          |    lag(y, 1) OVER (ORDER BY d) AS y1
@@ -1041,11 +1027,7 @@ object Forecast {
     }
     QueryDef(
       "q380_holt_winters",
-      s"""WITH RECURSIVE daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS y
-         |  FROM orders GROUP BY 1),
+      s"""WITH RECURSIVE ${DayAxis.revCentsSql("y")},
          |grid AS MATERIALIZED (
          |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, y
          |  FROM daily),
@@ -1130,40 +1112,35 @@ object Forecast {
     * 1 row. */
   val q402PageHinkley: QueryDef = QueryDef(
     "q402_page_hinkley",
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d,
-      |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-      |      AS BIGINT)) AS BIGINT) AS rev
-      |  FROM orders GROUP BY 1),
-      |ax AS (
-      |  SELECT d, rev,
-      |    CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t,
-      |    CAST(sum(rev) OVER (ORDER BY d ROWS UNBOUNDED PRECEDING)
-      |      AS BIGINT) AS cum
-      |  FROM daily),
-      |term AS (SELECT d, t, rev - cum // t AS term FROM ax),
-      |mm AS (
-      |  SELECT d, t,
-      |    CAST(sum(term) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)
-      |      AS BIGINT) AS m
-      |  FROM term),
-      |ph AS (
-      |  SELECT d, t, m - CAST(min(m) OVER (ORDER BY t
-      |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS ph
-      |  FROM mm),
-      |lam AS (
-      |  SELECT ((max(cum) // max(t)) // 5) AS lambda FROM ax),
-      |mx AS (SELECT max(ph) AS max_ph FROM ph),
-      |pk AS (
-      |  SELECT min(ph.d) AS peak_day FROM ph, mx WHERE ph.ph = mx.max_ph)
-      |SELECT (SELECT CAST(max(t) AS BIGINT) FROM ax) AS n_days,
-      |  lam.lambda AS lambda_cents, mx.max_ph, pk.peak_day,
-      |  (SELECT CAST(count(*) AS BIGINT) FROM ph, lam
-      |   WHERE ph.ph > lam.lambda) AS n_alert_days
-      |FROM lam, mx, pk""".stripMargin) { (s, dir) =>
+    s"""WITH ${DayAxis.revCentsSql()},
+       |ax AS (
+       |  SELECT d, rev,
+       |    CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t,
+       |    CAST(sum(rev) OVER (ORDER BY d ROWS UNBOUNDED PRECEDING)
+       |      AS BIGINT) AS cum
+       |  FROM daily),
+       |term AS (SELECT d, t, rev - cum // t AS term FROM ax),
+       |mm AS (
+       |  SELECT d, t,
+       |    CAST(sum(term) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)
+       |      AS BIGINT) AS m
+       |  FROM term),
+       |ph AS (
+       |  SELECT d, t, m - CAST(min(m) OVER (ORDER BY t
+       |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS ph
+       |  FROM mm),
+       |lam AS (
+       |  SELECT ((max(cum) // max(t)) // 5) AS lambda FROM ax),
+       |mx AS (SELECT max(ph) AS max_ph FROM ph),
+       |pk AS (
+       |  SELECT min(ph.d) AS peak_day FROM ph, mx WHERE ph.ph = mx.max_ph)
+       |SELECT (SELECT CAST(max(t) AS BIGINT) FROM ax) AS n_days,
+       |  lam.lambda AS lambda_cents, mx.max_ph, pk.peak_day,
+       |  (SELECT CAST(count(*) AS BIGINT) FROM ph, lam
+       |   WHERE ph.ph > lam.lambda) AS n_alert_days
+       |FROM lam, mx, pk""".stripMargin) { (s, dir) =>
     val daily = DayAxis.revCents(s, dir)
-    val rn = ScaleRank.withRowNumber(daily, Seq.empty, Seq(col("d")),
-      "t", "n_ax")
+    val rn = DayAxis.numbered(daily)
     val cum = ScaleRank.withRunningSum(rn, Seq.empty, Seq(col("t")),
       col("rev"), "cum")
     val term = cum.select(col("d"), col("t"), col("n_ax"), col("cum"),
@@ -1189,7 +1166,8 @@ object Forecast {
         col("max_ph"), col("peak_day"), col("n_alert_days"))
   }
 
-  /** Shared OLS-on-the-day-index machinery (q404 + q405): exact
+  /** Shared OLS-on-the-day-index machinery (q404's family and q405,
+    * through [[olsFit]] / [[olsFitSql]]): exact
     * (n, Σt, Σt², Σy, Σty) moments in DECIMAL(38), milli-floored
     * slope/intercept via ONE shared IEEE chain each (the q286
     * cross-engine discipline), and exact integer milli residuals
@@ -1205,6 +1183,53 @@ object Forecast {
     "CAST(floor((1000.0e0 * CAST(sy AS DOUBLE) - " +
       "CAST(b_milli AS DOUBLE) * CAST(st AS DOUBLE)) / " +
       "CAST(n AS DOUBLE)) AS BIGINT)"
+
+  /** The oracle side of [[olsFit]]: the CTEs `mo` (exact moments of
+    * `rev` on `t` over the CTE `from`), `co` and `co2` (b_milli,
+    * a_milli). */
+  private def olsFitSql(from: String = "ax"): String =
+    s"""mo AS (
+       |  SELECT CAST(count(*) AS HUGEINT) AS n,
+       |    sum(CAST(t AS HUGEINT)) AS st,
+       |    sum(CAST(t AS HUGEINT) * t) AS stt,
+       |    sum(CAST(rev AS HUGEINT)) AS sy,
+       |    sum(CAST(t AS HUGEINT) * rev) AS sty
+       |  FROM $from),
+       |co AS (
+       |  SELECT n, st, sy, $olsBMilli AS b_milli FROM mo),
+       |co2 AS (SELECT b_milli, $olsAMilli AS a_milli FROM co)""".stripMargin
+
+  /** OLS of `rev` on `t` over `frame`: the exact DECIMAL(38) moments
+    * (n, st, stt, sy, sty) and the 1-row milli-floored fit
+    * (b_milli, a_milli). */
+  private def olsFit(frame: DataFrame): (DataFrame, DataFrame) = {
+    val dec = (c: Column) => c.cast("decimal(38,0)")
+    val mo = frame.agg(dec(count(lit(1))).as("n"),
+      sum(dec(col("t"))).as("st"), sum(dec(col("t")) * col("t")).as("stt"),
+      sum(dec(col("rev"))).as("sy"), sum(dec(col("t")) * col("rev")).as("sty"))
+    val co = mo.select(col("n"), col("st"), col("sy"),
+        expr(olsBMilli).as("b_milli"))
+      .select(col("b_milli"), expr(olsAMilli).as("a_milli"))
+    (mo, co)
+  }
+
+  /** The squared milli residual off the [[olsFit]] line, floored to
+    * cents² units: u = ⌊(1000·rev − a − b·t)² / 10⁹⌋. Evaluated over
+    * (t, rev) crossed with the fit. */
+  private def sqResid: Column =
+    expr("CAST(((1000 * rev - a_milli - b_milli * t) * " +
+      "CAST((1000 * rev - a_milli - b_milli * t) AS DECIMAL(38,0))) " +
+      "div 1000000000 AS DECIMAL(38,0))").as("u")
+
+  /** The oracle side of [[sqResid]]: the CTE `name` (`cols`, u) over
+    * `ax` crossed with [[olsFitSql]]'s `co2`. */
+  private def sqResidSql(name: String, cols: String = "ax.t"): String =
+    s"""$name AS (
+       |  SELECT $cols,
+       |    ((1000 * ax.rev - co2.a_milli - co2.b_milli * ax.t)
+       |      * CAST((1000 * ax.rev - co2.a_milli - co2.b_milli * ax.t)
+       |        AS HUGEINT)) // 1000000000 AS u
+       |  FROM ax, co2)""".stripMargin
 
   /** q404 — Durbin–Watson statistic (Durbin & Watson '50) on the
     * residuals of daily revenue regressed on the day index:
@@ -1225,24 +1250,9 @@ object Forecast {
     * Output 1 row. */
   val q404DurbinWatson: QueryDef = QueryDef(
     "q404_durbin_watson",
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS d,
-       |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-       |      AS BIGINT)) AS BIGINT) AS rev
-       |  FROM orders GROUP BY 1),
-       |ax AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-       |  FROM daily),
-       |mo AS (
-       |  SELECT CAST(count(*) AS HUGEINT) AS n,
-       |    sum(CAST(t AS HUGEINT)) AS st,
-       |    sum(CAST(t AS HUGEINT) * t) AS stt,
-       |    sum(CAST(rev AS HUGEINT)) AS sy,
-       |    sum(CAST(t AS HUGEINT) * rev) AS sty
-       |  FROM ax),
-       |co AS (
-       |  SELECT n, st, sy, $olsBMilli AS b_milli FROM mo),
-       |co2 AS (SELECT b_milli, $olsAMilli AS a_milli FROM co),
+    s"""WITH ${DayAxis.revCentsSql()},
+       |${DayAxis.axSql()},
+       |${olsFitSql()},
        |e AS (
        |  SELECT ax.t,
        |    1000 * ax.rev - co2.a_milli - co2.b_milli * ax.t AS e
@@ -1257,17 +1267,10 @@ object Forecast {
        |    CAST(esum.ee AS DOUBLE)) AS BIGINT) AS dw_milli
        |FROM co2, dsum, esum WHERE esum.ee > 0""".stripMargin) { (s, dir) =>
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val ax = ScaleRank.withRowNumber(
-        DayAxis.revCents(s, dir),
-        Seq.empty, Seq(col("d")), "t", "n_ax")
+    val ax = DayAxis.numbered(DayAxis.revCents(s, dir))
       .select(col("t"), col("rev"))
       .ckpt() // calendar-bounded indexed day frame
-    val mo = ax.agg(dec(count(lit(1))).as("n"),
-      sum(dec(col("t"))).as("st"), sum(dec(col("t")) * col("t")).as("stt"),
-      sum(dec(col("rev"))).as("sy"), sum(dec(col("t")) * col("rev")).as("sty"))
-    val co = mo.select(col("n"), col("st"), col("sy"),
-        expr(olsBMilli).as("b_milli"))
-      .select(col("b_milli"), expr(olsAMilli).as("a_milli"))
+    val (_, co) = olsFit(ax)
     val e = ax.crossJoin(broadcast(co))
       .select(col("t"),
         (lit(1000) * col("rev") - col("a_milli") - col("b_milli") * col("t"))
@@ -1295,8 +1298,9 @@ object Forecast {
     * statistically real for the model you actually fit).
     *
     * Exactness: per-segment moments exact in DECIMAL(38); each fit's
-    * (a, b) milli-floored via the SHARED q404 chains; residual SSRs
-    * are exact integer sums off those floored coefficients, emitted
+    * (a, b) milli-floored via the shared [[olsBMilli]]/[[olsAMilli]]
+    * chains; residual SSRs are exact integer sums off those floored
+    * coefficients, emitted
     * in 10¹² units (milli²-cents² SSRs overflow int64 even at
     * sf0.01 — the truncating div is exact and engine-identical; F
     * reads the full DECIMAL values); F is one guarded IEEE chain.
@@ -1309,15 +1313,9 @@ object Forecast {
     * are two columns of the same scan). Output 1 row. */
   val q405ChowTest: QueryDef = QueryDef(
     "q405_chow_test",
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS d,
-       |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-       |      AS BIGINT)) AS BIGINT) AS rev
-       |  FROM orders GROUP BY 1),
+    s"""WITH ${DayAxis.revCentsSql()},
        |nn AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM daily),
-       |ax AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-       |  FROM daily),
+       |${DayAxis.axSql()},
        |seg AS (
        |  SELECT ax.t, ax.rev,
        |    CASE WHEN ax.t <= nn.nd // 2 THEN 1 ELSE 2 END AS g
@@ -1432,14 +1430,8 @@ object Forecast {
       s"($Q - 1.0e0) / (3.0e0 * $Q * CAST(nd AS DOUBLE)))) AS BIGINT)"
     QueryDef(
       "q401_variance_ratio",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
-         |ax AS (
-         |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-         |  FROM daily),
+      s"""WITH ${DayAxis.revCentsSql()},
+         |${DayAxis.axSql()},
          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ax),
          |sd AS (
          |  SELECT CAST(sum(CASE WHEN t = nn.n THEN rev END)
@@ -1465,9 +1457,7 @@ object Forecast {
          |SELECT nd AS n_days, vr_milli, $zChain AS z_milli
          |FROM vr""".stripMargin) { (s, dir) =>
       val dec = (c: Column) => c.cast("decimal(38,0)")
-      val ax = ScaleRank.withRowNumber(
-          DayAxis.revCents(s, dir),
-          Seq.empty, Seq(col("d")), "t", "n_ax")
+      val ax = DayAxis.numbered(DayAxis.revCents(s, dir))
         .select(col("t"), col("rev"), col("n_ax"))
         .ckpt() // calendar-bounded indexed day frame: both lag joins
       val nn = ax.agg(max(col("n_ax")).as("n"))
@@ -1517,38 +1507,30 @@ object Forecast {
     * pattern aggregate. Output ≤6 rows + constants. */
   val q406PermutationEntropy: QueryDef = QueryDef(
     "q406_permutation_entropy",
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d,
-      |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-      |      AS BIGINT)) AS BIGINT) AS rev
-      |  FROM orders GROUP BY 1),
-      |ax AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-      |  FROM daily),
-      |tri AS (
-      |  SELECT 4 * (CASE WHEN a.rev <= b.rev THEN 1 ELSE 0 END)
-      |    + 2 * (CASE WHEN b.rev <= c.rev THEN 1 ELSE 0 END)
-      |    + (CASE WHEN a.rev <= c.rev THEN 1 ELSE 0 END) AS pat
-      |  FROM ax a JOIN ax b ON b.t = a.t + 1 JOIN ax c ON c.t = a.t + 2),
-      |pc AS (
-      |  SELECT pat, CAST(count(*) AS BIGINT) AS cnt FROM tri GROUP BY pat),
-      |nn AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM pc),
-      |terms AS (
-      |  SELECT pc.pat, pc.cnt,
-      |    CAST(floor(1000000000.0e0 * (-(CAST(pc.cnt AS DOUBLE)
-      |      / CAST(nn.n AS DOUBLE))
-      |      * ln(CAST(pc.cnt AS DOUBLE) / CAST(nn.n AS DOUBLE))))
-      |      AS BIGINT) AS h_nn
-      |  FROM pc, nn),
-      |h AS (SELECT CAST(sum(h_nn) AS BIGINT) AS h_nano FROM terms)
-      |SELECT terms.pat AS pattern, terms.cnt AS n_triples, h.h_nano,
-      |  CAST((1000 * h.h_nano) //
-      |    CAST(floor(1000000000.0e0 * ln(6.0e0)) AS BIGINT) AS BIGINT)
-      |    AS h_norm_milli
-      |FROM terms, h ORDER BY pattern""".stripMargin) { (s, dir) =>
-    val ax = ScaleRank.withRowNumber(
-        DayAxis.revCents(s, dir),
-        Seq.empty, Seq(col("d")), "t", "n_ax")
+    s"""WITH ${DayAxis.revCentsSql()},
+       |${DayAxis.axSql()},
+       |tri AS (
+       |  SELECT 4 * (CASE WHEN a.rev <= b.rev THEN 1 ELSE 0 END)
+       |    + 2 * (CASE WHEN b.rev <= c.rev THEN 1 ELSE 0 END)
+       |    + (CASE WHEN a.rev <= c.rev THEN 1 ELSE 0 END) AS pat
+       |  FROM ax a JOIN ax b ON b.t = a.t + 1 JOIN ax c ON c.t = a.t + 2),
+       |pc AS (
+       |  SELECT pat, CAST(count(*) AS BIGINT) AS cnt FROM tri GROUP BY pat),
+       |nn AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM pc),
+       |terms AS (
+       |  SELECT pc.pat, pc.cnt,
+       |    CAST(floor(1000000000.0e0 * (-(CAST(pc.cnt AS DOUBLE)
+       |      / CAST(nn.n AS DOUBLE))
+       |      * ln(CAST(pc.cnt AS DOUBLE) / CAST(nn.n AS DOUBLE))))
+       |      AS BIGINT) AS h_nn
+       |  FROM pc, nn),
+       |h AS (SELECT CAST(sum(h_nn) AS BIGINT) AS h_nano FROM terms)
+       |SELECT terms.pat AS pattern, terms.cnt AS n_triples, h.h_nano,
+       |  CAST((1000 * h.h_nano) //
+       |    CAST(floor(1000000000.0e0 * ln(6.0e0)) AS BIGINT) AS BIGINT)
+       |    AS h_norm_milli
+       |FROM terms, h ORDER BY pattern""".stripMargin) { (s, dir) =>
+    val ax = DayAxis.numbered(DayAxis.revCents(s, dir))
       .select(col("t"), col("rev"))
       .ckpt() // calendar-bounded indexed day frame: both lag joins
     val tri = ax.select(col("t").as("ta"), col("rev").as("ra"))
@@ -1587,40 +1569,20 @@ object Forecast {
     * forecast" (χ²₁, 5% critical 3.841).
     *
     * Exactness: residuals are the exact integer milli residuals off
-    * the SHARED q404 floored coefficients; the auxiliary variable is
+    * the shared [[olsFit]] floored coefficients; the auxiliary variable is
     * u = e² div 10⁹ (exact truncating — raw e⁴ sums would pass 10³⁸;
     * the div keeps Σu² inside DECIMAL(38) headroom); the five
     * auxiliary moments are exact DECIMAL(38) integers; BP is ONE
     * guarded IEEE chain.
     *
-    * Scale design (100 TB): the q404 plan plus one more fold of the
+    * Scale design (100 TB): the [[olsFit]] plan plus one more fold of the
     * same calendar-bounded residual frame. Output 1 row. */
   val q410BreuschPagan: QueryDef = QueryDef(
     "q410_breusch_pagan",
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS d,
-       |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-       |      AS BIGINT)) AS BIGINT) AS rev
-       |  FROM orders GROUP BY 1),
-       |ax AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-       |  FROM daily),
-       |mo AS (
-       |  SELECT CAST(count(*) AS HUGEINT) AS n,
-       |    sum(CAST(t AS HUGEINT)) AS st,
-       |    sum(CAST(t AS HUGEINT) * t) AS stt,
-       |    sum(CAST(rev AS HUGEINT)) AS sy,
-       |    sum(CAST(t AS HUGEINT) * rev) AS sty
-       |  FROM ax),
-       |co AS (
-       |  SELECT n, st, sy, $olsBMilli AS b_milli FROM mo),
-       |co2 AS (SELECT b_milli, $olsAMilli AS a_milli FROM co),
-       |e AS (
-       |  SELECT ax.t,
-       |    ((1000 * ax.rev - co2.a_milli - co2.b_milli * ax.t)
-       |      * CAST((1000 * ax.rev - co2.a_milli - co2.b_milli * ax.t)
-       |        AS HUGEINT)) // 1000000000 AS u
-       |  FROM ax, co2),
+    s"""WITH ${DayAxis.revCentsSql()},
+       |${DayAxis.axSql()},
+       |${olsFitSql()},
+       |${sqResidSql("e")},
        |am AS (
        |  SELECT CAST(count(*) AS HUGEINT) AS n,
        |    sum(CAST(t AS HUGEINT)) AS st,
@@ -1653,22 +1615,12 @@ object Forecast {
        |WHERE (n * suu - su * su) > 0 AND (n * stt - st * st) > 0
        |""".stripMargin) { (s, dir) =>
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val ax = ScaleRank.withRowNumber(
-        DayAxis.revCents(s, dir),
-        Seq.empty, Seq(col("d")), "t", "n_ax")
+    val ax = DayAxis.numbered(DayAxis.revCents(s, dir))
       .select(col("t"), col("rev"))
       .ckpt() // calendar-bounded indexed day frame
-    val mo = ax.agg(dec(count(lit(1))).as("n"),
-      sum(dec(col("t"))).as("st"), sum(dec(col("t")) * col("t")).as("stt"),
-      sum(dec(col("rev"))).as("sy"), sum(dec(col("t")) * col("rev")).as("sty"))
-    val co = mo.select(col("n"), col("st"), col("sy"),
-        expr(olsBMilli).as("b_milli"))
-      .select(col("b_milli"), expr(olsAMilli).as("a_milli"))
+    val (_, co) = olsFit(ax)
     val e = ax.crossJoin(broadcast(co))
-      .select(col("t"),
-        expr("CAST(((1000 * rev - a_milli - b_milli * t) * " +
-          "CAST((1000 * rev - a_milli - b_milli * t) AS DECIMAL(38,0))) " +
-          "div 1000000000 AS DECIMAL(38,0))").as("u"))
+      .select(col("t"), sqResid)
     val am = e.agg(dec(count(lit(1))).as("n"),
       sum(dec(col("t"))).as("st"), sum(dec(col("t")) * col("t")).as("stt"),
       sum(col("u")).as("su"), sum(dec(col("t")) * col("u")).as("stu"),
@@ -1687,6 +1639,29 @@ object Forecast {
         expr(s"CAST($bp AS BIGINT)").as("bp_milli"),
         expr(s"CASE WHEN $bp > 3841 THEN 1 ELSE 0 END").as("reject_5pct"))
   }
+
+  /** Doubled midranks (rev, d2) of the daily-revenue values over a
+    * day frame `daily` (d, rev): d2 = 2·cumBefore + c + 1 off the
+    * (rev, count) domain's one prefix pass — the rank scores q414
+    * (Pettitt) and q421 (Bartels) walk in day order. */
+  private[operators] def revMidranks(daily: DataFrame): DataFrame = {
+    val dom = daily.groupBy(col("rev")).agg(count(lit(1)).as("c"))
+    ScaleRank.withRunningSum(dom, Seq.empty, Seq(col("rev")),
+        col("c"), "cum")
+      .select(col("rev"), (lit(2) * (col("cum") - col("c")) + col("c") + 1)
+        .as("d2"))
+  }
+
+  /** The oracle side of [[revMidranks]] over the CTE `daily`: the CTEs
+    * `dom` and `da` (rev, d2). */
+  private[operators] def revMidranksSql: String =
+    """dom AS (
+      |  SELECT rev, CAST(count(*) AS BIGINT) AS c FROM daily GROUP BY rev),
+      |da AS (
+      |  SELECT rev,
+      |    2 * (CAST(sum(c) OVER (ORDER BY rev ROWS UNBOUNDED PRECEDING)
+      |      AS BIGINT) - c) + c + 1 AS d2
+      |  FROM dom)""".stripMargin
 
   /** q414 — Pettitt changepoint test (Pettitt '79) on daily revenue:
     * K = max_t |U_t| with U_t = 2Σ_{i≤t}R_i − t(N+1) over global
@@ -1709,46 +1684,32 @@ object Forecast {
     * passes, two 1-row folds. Output 1 row. */
   val q414Pettitt: QueryDef = QueryDef(
     "q414_pettitt",
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS d,
-      |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-      |      AS BIGINT)) AS BIGINT) AS rev
-      |  FROM orders GROUP BY 1),
-      |dom AS (
-      |  SELECT rev, CAST(count(*) AS BIGINT) AS c FROM daily GROUP BY rev),
-      |da AS (
-      |  SELECT rev,
-      |    2 * (CAST(sum(c) OVER (ORDER BY rev ROWS UNBOUNDED PRECEDING)
-      |      AS BIGINT) - c) + c + 1 AS d2
-      |  FROM dom),
-      |ax AS (
-      |  SELECT CAST(row_number() OVER (ORDER BY daily.d) AS BIGINT) AS t,
-      |    daily.d, da.d2
-      |  FROM daily JOIN da ON da.rev = daily.rev),
-      |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ax),
-      |uu AS (
-      |  SELECT ax.t, ax.d,
-      |    CAST(sum(ax.d2) OVER (ORDER BY ax.t ROWS UNBOUNDED PRECEDING)
-      |      AS BIGINT) - ax.t * (nn.n + 1) AS u
-      |  FROM ax, nn),
-      |k AS (
-      |  SELECT max(abs(u)) AS k_stat FROM uu, nn WHERE uu.t < nn.n),
-      |pk AS (
-      |  SELECT min(uu.d) AS change_day FROM uu, k WHERE abs(uu.u) = k.k_stat)
-      |SELECT nn.n AS n_days, k.k_stat, pk.change_day,
-      |  CAST(floor(1000000.0e0 * 2.0e0 * exp(-6.0e0
-      |    * CAST(k.k_stat AS DOUBLE) * CAST(k.k_stat AS DOUBLE)
-      |    / (CAST(nn.n AS DOUBLE) * CAST(nn.n AS DOUBLE)
-      |       * CAST(nn.n AS DOUBLE)
-      |       + CAST(nn.n AS DOUBLE) * CAST(nn.n AS DOUBLE))))
-      |    AS BIGINT) AS p_micro
-      |FROM nn, k, pk""".stripMargin) { (s, dir) =>
+    s"""WITH ${DayAxis.revCentsSql()},
+       |$revMidranksSql,
+       |ax AS (
+       |  SELECT CAST(row_number() OVER (ORDER BY daily.d) AS BIGINT) AS t,
+       |    daily.d, da.d2
+       |  FROM daily JOIN da ON da.rev = daily.rev),
+       |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ax),
+       |uu AS (
+       |  SELECT ax.t, ax.d,
+       |    CAST(sum(ax.d2) OVER (ORDER BY ax.t ROWS UNBOUNDED PRECEDING)
+       |      AS BIGINT) - ax.t * (nn.n + 1) AS u
+       |  FROM ax, nn),
+       |k AS (
+       |  SELECT max(abs(u)) AS k_stat FROM uu, nn WHERE uu.t < nn.n),
+       |pk AS (
+       |  SELECT min(uu.d) AS change_day FROM uu, k WHERE abs(uu.u) = k.k_stat)
+       |SELECT nn.n AS n_days, k.k_stat, pk.change_day,
+       |  CAST(floor(1000000.0e0 * 2.0e0 * exp(-6.0e0
+       |    * CAST(k.k_stat AS DOUBLE) * CAST(k.k_stat AS DOUBLE)
+       |    / (CAST(nn.n AS DOUBLE) * CAST(nn.n AS DOUBLE)
+       |       * CAST(nn.n AS DOUBLE)
+       |       + CAST(nn.n AS DOUBLE) * CAST(nn.n AS DOUBLE))))
+       |    AS BIGINT) AS p_micro
+       |FROM nn, k, pk""".stripMargin) { (s, dir) =>
     val daily = DayAxis.revCents(s, dir)
-    val dom = daily.groupBy(col("rev")).agg(count(lit(1)).as("c"))
-    val da = ScaleRank.withRunningSum(dom, Seq.empty, Seq(col("rev")),
-        col("c"), "cum")
-      .select(col("rev"), (lit(2) * (col("cum") - col("c")) + col("c") + 1)
-        .as("d2"))
+    val da = revMidranks(daily)
     val ax = ScaleRank.withRowNumber(
       daily.join(da, Seq("rev")).select(col("d"), col("d2")),
       Seq.empty, Seq(col("d")), "t", "n")
@@ -1782,43 +1743,22 @@ object Forecast {
     * ANYWHERE", locating it at the argmax day (asymptotic 5% band
     * 0.948/√n).
     *
-    * Exactness: residuals are exact milli ints off the SHARED q404
+    * Exactness: residuals are exact milli ints off the shared [[olsFit]]
     * floored coefficients; u = e² div 10⁹ (the q410 unit); the
     * cumulative walk rides one [[ScaleRank.withRunningSum]] prefix;
     * every gap |n·cumᵤ − t·totᵤ| is an exact DECIMAL(38) integer;
     * D and its argmax are exact folds; the reported ratio and band
     * are each ONE IEEE chain.
     *
-    * Scale design (100 TB): the q404 plan plus one prefix pass and
+    * Scale design (100 TB): the [[olsFit]] plan plus one prefix pass and
     * two 1-row folds on the calendar-bounded residual frame.
     * Output 1 row. */
   val q417CusumSquares: QueryDef = QueryDef(
     "q417_cusum_squares",
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS d,
-       |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-       |      AS BIGINT)) AS BIGINT) AS rev
-       |  FROM orders GROUP BY 1),
-       |ax AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t,
-       |    d, rev
-       |  FROM daily),
-       |mo AS (
-       |  SELECT CAST(count(*) AS HUGEINT) AS n,
-       |    sum(CAST(t AS HUGEINT)) AS st,
-       |    sum(CAST(t AS HUGEINT) * t) AS stt,
-       |    sum(CAST(rev AS HUGEINT)) AS sy,
-       |    sum(CAST(t AS HUGEINT) * rev) AS sty
-       |  FROM ax),
-       |co AS (
-       |  SELECT n, st, sy, $olsBMilli AS b_milli FROM mo),
-       |co2 AS (SELECT b_milli, $olsAMilli AS a_milli FROM co),
-       |e AS (
-       |  SELECT ax.t, ax.d,
-       |    ((1000 * ax.rev - co2.a_milli - co2.b_milli * ax.t)
-       |      * CAST((1000 * ax.rev - co2.a_milli - co2.b_milli * ax.t)
-       |        AS HUGEINT)) // 1000000000 AS u
-       |  FROM ax, co2),
+    s"""WITH ${DayAxis.revCentsSql()},
+       |${DayAxis.axSql("d, rev")},
+       |${olsFitSql()},
+       |${sqResidSql("e", "ax.t, ax.d")},
        |cum AS (
        |  SELECT t, d,
        |    CAST(sum(u) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)
@@ -1844,22 +1784,12 @@ object Forecast {
        |    THEN 1 ELSE 0 END AS reject_5pct
        |FROM tot, mx, pk WHERE tot.tu > 0""".stripMargin) { (s, dir) =>
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val ax = ScaleRank.withRowNumber(
-        DayAxis.revCents(s, dir),
-        Seq.empty, Seq(col("d")), "t", "n_ax")
+    val ax = DayAxis.numbered(DayAxis.revCents(s, dir))
       .select(col("t"), col("d"), col("rev"))
       .ckpt() // calendar-bounded indexed day frame
-    val mo = ax.agg(dec(count(lit(1))).as("n"),
-      sum(dec(col("t"))).as("st"), sum(dec(col("t")) * col("t")).as("stt"),
-      sum(dec(col("rev"))).as("sy"), sum(dec(col("t")) * col("rev")).as("sty"))
-    val co = mo.select(col("n"), col("st"), col("sy"),
-        expr(olsBMilli).as("b_milli"))
-      .select(col("b_milli"), expr(olsAMilli).as("a_milli"))
+    val (_, co) = olsFit(ax)
     val e = ax.crossJoin(broadcast(co))
-      .select(col("t"), col("d"),
-        expr("CAST(((1000 * rev - a_milli - b_milli * t) * " +
-          "CAST((1000 * rev - a_milli - b_milli * t) AS DECIMAL(38,0))) " +
-          "div 1000000000 AS DECIMAL(38,0))").as("u"))
+      .select(col("t"), col("d"), sqResid)
     val cum = ScaleRank.withRunningSum(e, Seq.empty, Seq(col("t")),
         col("u"), "cu")
       .select(col("t"), col("d"), col("cu"))
@@ -1904,14 +1834,8 @@ object Forecast {
       "/ sqrt((16.0e0 * CAST(n AS DOUBLE) - 29.0e0) / 90.0e0))"
     QueryDef(
       "q420_turning_points",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
-         |ax AS (
-         |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-         |  FROM daily),
+      s"""WITH ${DayAxis.revCentsSql()},
+         |${DayAxis.axSql()},
          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ax),
          |tp AS (
          |  SELECT CAST(sum(CASE WHEN (b.rev > a.rev AND b.rev > c.rev)
@@ -1923,9 +1847,7 @@ object Forecast {
          |  CASE WHEN abs(floor($z)) > 1960 THEN 1 ELSE 0 END
          |    AS reject_5pct
          |FROM nn, tp WHERE nn.n > 2""".stripMargin) { (s, dir) =>
-      val ax = ScaleRank.withRowNumber(
-          DayAxis.revCents(s, dir),
-          Seq.empty, Seq(col("d")), "t", "n_ax")
+      val ax = DayAxis.numbered(DayAxis.revCents(s, dir))
         .select(col("t"), col("rev"))
         .ckpt() // calendar-bounded indexed day frame: both lag joins
       val nn = ax.agg(count(lit(1)).cast("bigint").as("n"))
@@ -1955,14 +1877,14 @@ object Forecast {
     * residuals. Var(b) = S/D², S = Γ₀ + 2Σₗ(1−l/6)Γₗ with
     * Γₗ = Σ eₜeₜ₋ₗ cₜcₜ₋ₗ on the centered index.
     *
-    * Exactness: residuals are the exact q404 milli ints; the
+    * Exactness: residuals are the exact [[olsFit]] milli ints; the
     * centered index DOUBLES to cₜ = 2t−(n+1) (exact — the q421
     * trick); each lag's Γ rides an equi self-join into an exact
     * DECIMAL(38) sum; the Bartlett weights clear to SIXTHS, so
     * 6·S₄ = 6Γ₀₄ + 2Σ(6−l)Γₗ₄ is an exact integer; t is ONE guarded
     * IEEE chain from (b_milli, 6S₄, D₄).
     *
-    * Scale design (100 TB): the q404 plan plus SIX equi lag joins of
+    * Scale design (100 TB): the [[olsFit]] plan plus SIX equi lag joins of
     * the calendar-bounded residual frame (one per lag ≤ L), each a
     * bounded sort-merge. Output 1 row. */
   val q422NeweyWest: QueryDef = {
@@ -1973,24 +1895,9 @@ object Forecast {
       "/ 1000000.0e0))"
     QueryDef(
       "q422_newey_west",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
-         |ax AS (
-         |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-         |  FROM daily),
-         |mo AS (
-         |  SELECT CAST(count(*) AS HUGEINT) AS n,
-         |    sum(CAST(t AS HUGEINT)) AS st,
-         |    sum(CAST(t AS HUGEINT) * t) AS stt,
-         |    sum(CAST(rev AS HUGEINT)) AS sy,
-         |    sum(CAST(t AS HUGEINT) * rev) AS sty
-         |  FROM ax),
-         |co AS (
-         |  SELECT n, st, sy, $olsBMilli AS b_milli FROM mo),
-         |co2 AS (SELECT b_milli, $olsAMilli AS a_milli FROM co),
+      s"""WITH ${DayAxis.revCentsSql()},
+         |${DayAxis.axSql()},
+         |${olsFitSql()},
          |e AS (
          |  SELECT ax.t,
          |    1000 * ax.rev - co2.a_milli - co2.b_milli * ax.t AS e,
@@ -2012,18 +1919,10 @@ object Forecast {
          |  CASE WHEN abs($t) > 1960 THEN 1 ELSE 0 END AS reject_5pct
          |FROM mo, co2, s6, d4 WHERE s6.s6 > 0""".stripMargin) { (s, dir) =>
       val dec = (c: Column) => c.cast("decimal(38,0)")
-      val ax = ScaleRank.withRowNumber(
-          DayAxis.revCents(s, dir),
-          Seq.empty, Seq(col("d")), "t", "n_ax")
+      val ax = DayAxis.numbered(DayAxis.revCents(s, dir))
         .select(col("t"), col("rev"))
         .ckpt() // calendar-bounded indexed day frame
-      val mo = ax.agg(dec(count(lit(1))).as("n"),
-        sum(dec(col("t"))).as("st"), sum(dec(col("t")) * col("t")).as("stt"),
-        sum(dec(col("rev"))).as("sy"),
-        sum(dec(col("t")) * col("rev")).as("sty"))
-      val co = mo.select(col("n"), col("st"), col("sy"),
-          expr(olsBMilli).as("b_milli"))
-        .select(col("b_milli"), expr(olsAMilli).as("a_milli"))
+      val (mo, co) = olsFit(ax)
       val e = ax.crossJoin(broadcast(co))
         .crossJoin(broadcast(mo.select(col("n"))))
         .select(col("t"),
@@ -2073,21 +1972,10 @@ object Forecast {
     * the calendar-bounded day axis (¹⁄₇ of q392's); everything else
     * is a 7-row frame. Output 7 rows + pooled constants. */
   val q423SeasonalMk: QueryDef = {
-    val z = "CASE WHEN var18 > 0 AND s_stat > 0 THEN " +
-      "CAST(floor(1000.0e0 * (CAST(s_stat AS DOUBLE) - 1.0e0) / " +
-      "sqrt(CAST(var18 AS DOUBLE) / 18.0e0)) AS BIGINT) " +
-      "WHEN var18 > 0 AND s_stat < 0 THEN " +
-      "CAST(floor(1000.0e0 * (CAST(s_stat AS DOUBLE) + 1.0e0) / " +
-      "sqrt(CAST(var18 AS DOUBLE) / 18.0e0)) AS BIGINT) " +
-      "WHEN var18 > 0 THEN 0 END"
+    val z = DataProfile.mkZMilli
     QueryDef(
       "q423_seasonal_mk",
-      s"""WITH daily AS (
-         |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-         |      CAST(o_orderdate AS DATE)) AS BIGINT) AS ed,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsEpochSql(day = "ed")},
          |dd AS (SELECT ed, ed % 7 AS wd, rev FROM daily),
          |sw AS (
          |  SELECT a.wd,
@@ -2167,14 +2055,8 @@ object Forecast {
       "sqrt(CAST(pos + neg AS DOUBLE))) AS BIGINT) END"
     QueryDef(
       "q424_cox_stuart",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
-         |ax AS (
-         |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-         |  FROM daily),
+      s"""WITH ${DayAxis.revCentsSql()},
+         |${DayAxis.axSql()},
          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ax),
          |pr AS (
          |  SELECT
@@ -2188,9 +2070,7 @@ object Forecast {
          |  $z AS z_milli,
          |  CASE WHEN abs($z) > 1960 THEN 1 ELSE 0 END AS reject_5pct
          |FROM nn, pr""".stripMargin) { (s, dir) =>
-      val ax = ScaleRank.withRowNumber(
-          DayAxis.revCents(s, dir),
-          Seq.empty, Seq(col("d")), "t", "n_ax")
+      val ax = DayAxis.numbered(DayAxis.revCents(s, dir))
         .select(col("t"), col("rev"), col("n_ax"))
         .ckpt() // calendar-bounded indexed day frame: the fold join
       val nn = ax.agg(max(col("n_ax")).cast("bigint").as("n"))
@@ -2234,14 +2114,8 @@ object Forecast {
       "AS BIGINT)"
     QueryDef(
       "q426_runs_updown",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
-         |ax AS (
-         |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-         |  FROM daily),
+      s"""WITH ${DayAxis.revCentsSql()},
+         |${DayAxis.axSql()},
          |sg AS (
          |  SELECT a.t,
          |    CASE WHEN b.rev > a.rev THEN 1 ELSE -1 END AS s
@@ -2259,9 +2133,7 @@ object Forecast {
          |  $z AS z_milli,
          |  CASE WHEN abs($z) > 1960 THEN 1 ELSE 0 END AS reject_5pct
          |FROM nn, ch WHERE nn.m > 1""".stripMargin) { (s, dir) =>
-      val ax = ScaleRank.withRowNumber(
-          DayAxis.revCents(s, dir),
-          Seq.empty, Seq(col("d")), "t", "n_ax")
+      val ax = DayAxis.numbered(DayAxis.revCents(s, dir))
         .select(col("t"), col("rev"))
         .ckpt() // calendar-bounded indexed day frame: the sign join
       val sg = ax.select(col("t").as("ta"), col("rev").as("ra"))
@@ -2294,16 +2166,6 @@ object Forecast {
     }
   }
 
-  /** Shared DuckDB CTE text: epoch-day daily revenue (the
-    * [[DayAxis.revCentsEpoch]] twin). */
-  private def dailyEpochCte: String =
-    """daily AS (
-      |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-      |                        CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
-      |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-      |        AS BIGINT)) AS BIGINT) AS rev
-      |  FROM orders GROUP BY 1)""".stripMargin
-
   /** q431 — seasonal-strength scan over candidate periods: for each
     * P ∈ {7, 14, 28, 91} days, the share of daily-revenue variance
     * explained by the phase d mod P (the one-way-ANOVA SSB/SST) —
@@ -2324,7 +2186,7 @@ object Forecast {
     * θ-join shape). Output 4 rows. */
   val q431PeriodStrength: QueryDef = QueryDef(
     "q431_period_strength",
-    s"""WITH $dailyEpochCte,
+    s"""WITH ${DayAxis.revCentsEpochSql()},
        |ps AS (SELECT CAST(unnest([7, 14, 28, 91]) AS BIGINT) AS p),
        |tot AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(rev) AS BIGINT) AS s,
@@ -2407,7 +2269,7 @@ object Forecast {
     * one fold. Output 1 row. */
   val q432Kpss: QueryDef = QueryDef(
     "q432_kpss",
-    s"""WITH $dailyEpochCte,
+    s"""WITH ${DayAxis.revCentsEpochSql()},
        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n,
        |  CAST(sum(rev) AS BIGINT) AS s FROM daily),
        |e AS (
@@ -2477,10 +2339,8 @@ object Forecast {
       "sqrt(CAST(w AS DOUBLE))) / sqrt(CAST(syy2 AS DOUBLE))) AS BIGINT)"
     QueryDef(
       "q433_hurst_rs",
-      s"""WITH $dailyEpochCte,
-         |ax AS (
-         |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-         |  FROM daily),
+      s"""WITH ${DayAxis.revCentsEpochSql()},
+         |${DayAxis.axSql()},
          |e AS (
          |  SELECT ws.w, (ax.t - 1) // ws.w AS b, ax.t, ax.rev
          |  FROM ax, (SELECT CAST(unnest([8, 16, 32, 64]) AS BIGINT) AS w) ws),
@@ -2531,8 +2391,7 @@ object Forecast {
          |FROM xy, h ORDER BY xy.w""".stripMargin) { (s, dir) =>
       val dec = (c: Column) => c.cast("decimal(38,0)")
       val daily = DayAxis.revCentsEpoch(s, dir)
-      val ax = ScaleRank.withRowNumber(daily, Seq.empty, Seq(col("d")),
-          "t", "n_ax")
+      val ax = DayAxis.numbered(daily)
         .select(col("t"), col("rev"))
       val e = ax.select(col("t"), col("rev"),
           explode(array(lit(8L), lit(16L), lit(32L), lit(64L))).as("w"))
@@ -2589,36 +2448,20 @@ object Forecast {
     * "did it BREAK" — this asks "does volatility CLUSTER", the
     * precondition for any GARCH-style risk model over q352's VaR.
     *
-    * Exactness: residuals are exact milli ints off the shared q404
+    * Exactness: residuals are exact milli ints off the shared [[olsFit]]
     * floored-coefficient chain; u = e² div 10⁹ (the q410 unit); the
     * lag pairing is an equi join on the day index; all regression
     * moments ride DECIMAL(38)/HUGEINT; R² is ONE IEEE chain.
     *
-    * Scale design (100 TB): the q404 plan plus one equi lag join of
+    * Scale design (100 TB): the [[olsFit]] plan plus one equi lag join of
     * the calendar-bounded residual frame and a 1-row fold. Output
     * 1 row. */
   val q434ArchLm: QueryDef = QueryDef(
     "q434_arch_lm",
-    s"""WITH $dailyEpochCte,
-       |ax AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-       |  FROM daily),
-       |mo AS (
-       |  SELECT CAST(count(*) AS HUGEINT) AS n,
-       |    sum(CAST(t AS HUGEINT)) AS st,
-       |    sum(CAST(t AS HUGEINT) * t) AS stt,
-       |    sum(CAST(rev AS HUGEINT)) AS sy,
-       |    sum(CAST(t AS HUGEINT) * rev) AS sty
-       |  FROM ax),
-       |co AS (
-       |  SELECT n, st, sy, $olsBMilli AS b_milli FROM mo),
-       |co2 AS (SELECT b_milli, $olsAMilli AS a_milli FROM co),
-       |u AS (
-       |  SELECT ax.t,
-       |    ((1000 * ax.rev - co2.a_milli - co2.b_milli * ax.t)
-       |      * CAST((1000 * ax.rev - co2.a_milli - co2.b_milli * ax.t)
-       |        AS HUGEINT)) // 1000000000 AS u
-       |  FROM ax, co2),
+    s"""WITH ${DayAxis.revCentsEpochSql()},
+       |${DayAxis.axSql()},
+       |${olsFitSql()},
+       |${sqResidSql("u")},
        |pair AS (
        |  SELECT a.u AS ul, b.u AS uc
        |  FROM u a JOIN u b ON b.t = a.t + 1),
@@ -2650,21 +2493,12 @@ object Forecast {
     (s, dir) =>
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val daily = DayAxis.revCentsEpoch(s, dir)
-    val ax = ScaleRank.withRowNumber(daily, Seq.empty, Seq(col("d")),
-        "t", "n_ax")
+    val ax = DayAxis.numbered(daily)
       .select(col("t"), col("rev"))
       .ckpt() // calendar-bounded indexed day frame: moments + residuals
-    val mo = ax.agg(dec(count(lit(1))).as("n"),
-      sum(dec(col("t"))).as("st"), sum(dec(col("t")) * col("t")).as("stt"),
-      sum(dec(col("rev"))).as("sy"), sum(dec(col("t")) * col("rev")).as("sty"))
-    val co = mo.select(col("n"), col("st"), col("sy"),
-        expr(olsBMilli).as("b_milli"))
-      .select(col("b_milli"), expr(olsAMilli).as("a_milli"))
+    val (_, co) = olsFit(ax)
     val u = ax.crossJoin(broadcast(co))
-      .select(col("t"),
-        expr("CAST(((1000 * rev - a_milli - b_milli * t) * " +
-          "CAST((1000 * rev - a_milli - b_milli * t) AS DECIMAL(38,0))) " +
-          "div 1000000000 AS DECIMAL(38,0))").as("u"))
+      .select(col("t"), sqResid)
       .ckpt() // residual-square frame feeds both lag-join sides
     val pair = u.select(col("t").as("ta"), col("u").as("ul"))
       .join(u.select(col("t").as("tb"), col("u").as("uc")),
@@ -2706,10 +2540,8 @@ object Forecast {
     * 1-row folds. Output 1 row. */
   val q435RealizedBipower: QueryDef = QueryDef(
     "q435_realized_bipower",
-    s"""WITH $dailyEpochCte,
-       |ax AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, rev
-       |  FROM daily),
+    s"""WITH ${DayAxis.revCentsEpochSql()},
+       |${DayAxis.axSql()},
        |df AS (
        |  SELECT b.t, abs(CAST(b.rev AS HUGEINT) - a.rev) AS ad
        |  FROM ax a JOIN ax b ON b.t = a.t + 1),
@@ -2728,8 +2560,7 @@ object Forecast {
        |FROM rv, bv WHERE rv.rv > 0""".stripMargin) { (s, dir) =>
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val daily = DayAxis.revCentsEpoch(s, dir)
-    val ax = ScaleRank.withRowNumber(daily, Seq.empty, Seq(col("d")),
-        "t", "n_ax")
+    val ax = DayAxis.numbered(daily)
       .select(col("t"), col("rev"))
       .ckpt() // indexed day frame: both sides of the diff lag join
     val df = ax.select(col("t").as("ta"), col("rev").as("ra"))
@@ -2806,11 +2637,7 @@ object Forecast {
       .mkString(", ")
     QueryDef(
       "q440_pacf",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS x
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsSql("x")},
          |p AS (
          |  SELECT l.lag, a.x AS xa, b.x AS xb
          |  FROM daily a
@@ -2892,23 +2719,12 @@ object Forecast {
     * an 11-row window frame. Output ≤11 rows. */
   val q442EventStudy: QueryDef = QueryDef(
     "q442_event_study",
-    s"""WITH $dailyEpochCte,
-       |ax AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, d, rev
-       |  FROM daily),
+    s"""WITH ${DayAxis.revCentsEpochSql()},
+       |${DayAxis.axSql("d, rev")},
        |pk AS (SELECT t AS pt, d AS pd FROM ax ORDER BY rev DESC, d LIMIT 1),
        |base AS (
        |  SELECT ax.t, ax.rev FROM ax, pk WHERE abs(ax.t - pk.pt) > 5),
-       |mo AS (
-       |  SELECT CAST(count(*) AS HUGEINT) AS n,
-       |    sum(CAST(t AS HUGEINT)) AS st,
-       |    sum(CAST(t AS HUGEINT) * t) AS stt,
-       |    sum(CAST(rev AS HUGEINT)) AS sy,
-       |    sum(CAST(t AS HUGEINT) * rev) AS sty
-       |  FROM base),
-       |co AS (
-       |  SELECT n, st, sy, $olsBMilli AS b_milli FROM mo),
-       |co2 AS (SELECT b_milli, $olsAMilli AS a_milli FROM co),
+       |${olsFitSql("base")},
        |win AS (
        |  SELECT ax.t - pk.pt AS off, ax.d, ax.rev,
        |    1000 * ax.rev - co2.a_milli - co2.b_milli * ax.t AS ab_milli
@@ -2918,21 +2734,14 @@ object Forecast {
        |  CAST(sum(ab_milli) OVER (ORDER BY off ROWS UNBOUNDED PRECEDING)
        |    AS BIGINT) AS car_milli
        |FROM win ORDER BY day_offset""".stripMargin) { (s, dir) =>
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val ax = ScaleRank.withRowNumber(DayAxis.revCentsEpoch(s, dir),
-        Seq.empty, Seq(col("d")), "t", "n_ax")
+    val ax = DayAxis.numbered(DayAxis.revCentsEpoch(s, dir))
       .select(col("t"), col("d"), col("rev"))
       .ckpt() // day frame: argmax + baseline + window
     val pk = ax.orderBy(col("rev").desc, col("d")).limit(1)
       .select(col("t").as("pt"))
       .ckpt() // 1-row peak
     val base = ax.crossJoin(broadcast(pk)).filter(abs(col("t") - col("pt")) > 5)
-    val mo = base.agg(dec(count(lit(1))).as("n"),
-      sum(dec(col("t"))).as("st"), sum(dec(col("t")) * col("t")).as("stt"),
-      sum(dec(col("rev"))).as("sy"), sum(dec(col("t")) * col("rev")).as("sty"))
-    val co = mo.select(col("n"), col("st"), col("sy"),
-        expr(olsBMilli).as("b_milli"))
-      .select(col("b_milli"), expr(olsAMilli).as("a_milli"))
+    val (_, co) = olsFit(base)
     val win = ax.crossJoin(broadcast(pk)).crossJoin(broadcast(co))
       .filter(abs(col("t") - col("pt")) <= 5)
       .select((col("t") - col("pt")).as("off"), col("d"), col("rev"),
@@ -2988,11 +2797,7 @@ object Forecast {
       .mkString("\nUNION ALL ")
     QueryDef(
       "q443_gesd",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsSql()},
          |$oracleRounds
          |SELECT * FROM ($oracleOut) ORDER BY round""".stripMargin) { (s, dir) =>
       val dec = (c: Column) => c.cast("decimal(38,0)")
@@ -3070,7 +2875,7 @@ object Forecast {
         s"AS gain_e6 FROM pick$lvl").mkString("\nUNION ALL ")
     QueryDef(
       "q445_binary_segmentation",
-      s"""WITH $dailyEpochCte,
+      s"""WITH ${DayAxis.revCentsEpochSql()},
          |ax AS (
          |  SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS rn,
          |    d, rev
@@ -3191,11 +2996,7 @@ object Forecast {
     }.mkString(",\n")
     QueryDef(
       "q447_em_mixture",
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS d,
-         |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-         |      AS BIGINT)) AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${DayAxis.revCentsSql()},
          |mo AS (
          |  SELECT CAST(count(*) AS BIGINT) AS nd,
          |    CAST(sum(rev) AS BIGINT) AS sv,

@@ -3,7 +3,7 @@ package graft.operators
 import graft.CkptOps
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -55,6 +55,51 @@ object Learn {
        |  SELECT vec_id, i AS pos,
        |    CAST(floor(CAST(embedding[CAST(i AS INT)] AS DOUBLE) * $SCALE) AS BIGINT) AS q
        |  FROM embeddings, unnest(range(1, ${DIM + 1})) AS t(i))""".stripMargin
+
+  /** The nearest-centroid (Rocchio) model of q96 and its audits:
+    * the quantized points `pts` (checkpointed), the labels `lab`
+    * (vec_id, label) and the per-label integer centroids `ctrain`
+    * (cid, pos, c) fitted on the even-vec_id half. */
+  private def labelCentroids(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val emb = Tables.embeddings(s, dir)
+    val pts = points(emb).ckpt()
+    val lab = emb.select(col("vec_id"), col("label"))
+    val ctrain = pts.filter(col("vec_id") % 2 === 0)
+      .join(lab, Seq("vec_id"))
+      .groupBy(col("label").as("cid"), col("pos"))
+      .agg(expr("sum(q) div count(1)").as("c"))
+    (pts, lab, ctrain)
+  }
+
+  /** The oracle side of [[labelCentroids]]: the CTEs `pts`, `lab` and
+    * `ctrain`. */
+  private def labelCentroidsSql: String =
+    s"""$ptsCte,
+       |lab AS (SELECT vec_id, label FROM embeddings),
+       |ctrain AS (
+       |  SELECT l.label AS cid, p.pos, CAST(sum(p.q) // count(*) AS BIGINT) AS c
+       |  FROM pts p JOIN lab l USING (vec_id)
+       |  WHERE p.vec_id % 2 = 0
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** One (label, threshold) cell's child-entropy contribution in
+    * nano-nats over (cl, cp, nl, n): each child's (c/n)·ln(n_child/c)
+    * term floored on its own (the q83 discipline) — the split score
+    * q173 and q356 sum per candidate. */
+  private def childEntropyNano: Column = {
+    val dl = col("cl").cast("double") / col("n").cast("double")
+    val dr = (col("cp") - col("cl")).cast("double") / col("n").cast("double")
+    when(col("cl") > 0,
+      floor(lit(1000000000.0) * (dl *
+        log(col("nl").cast("double") / col("cl").cast("double"))))
+        .cast("bigint")).otherwise(0L) +
+      when(col("cp") - col("cl") > 0,
+        floor(lit(1000000000.0) * (dr *
+          log((col("n") - col("nl")).cast("double") /
+            (col("cp") - col("cl")).cast("double"))))
+          .cast("bigint")).otherwise(0L)
+  }
 
   /** Quantized coordinate PAIRS (i, qi, j, qj) per vector — the Gram
     * fan-out of `points ⋈ points USING (vec_id)` WITHOUT the self-join
@@ -169,13 +214,7 @@ object Learn {
     * be at 100 TB. */
   val q96CentroidClassify: QueryDef = {
     val oracle =
-      s"""WITH $ptsCte,
-         |lab AS (SELECT vec_id, label FROM embeddings),
-         |ctrain AS (
-         |  SELECT l.label AS cid, p.pos, CAST(sum(p.q) // count(*) AS BIGINT) AS c
-         |  FROM pts p JOIN lab l USING (vec_id)
-         |  WHERE p.vec_id % 2 = 0
-         |  GROUP BY 1, 2),
+      s"""WITH $labelCentroidsSql,
          |test AS (SELECT * FROM pts WHERE vec_id % 2 = 1),
          |${assignSql(1, "test", "ctrain")}
          |SELECT l.label, a.cid AS pred, CAST(count(*) AS BIGINT) AS n
@@ -183,13 +222,7 @@ object Learn {
          |GROUP BY 1, 2
          |ORDER BY l.label, pred""".stripMargin
     QueryDef("q96_centroid_classify", oracle) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val pts = points(emb).ckpt()
-      val lab = emb.select(col("vec_id"), col("label"))
-      val ctrain = pts.filter(col("vec_id") % 2 === 0)
-        .join(lab, Seq("vec_id"))
-        .groupBy(col("label").as("cid"), col("pos"))
-        .agg(expr("sum(q) div count(1)").as("c"))
+      val (pts, lab, ctrain) = labelCentroids(s, dir)
       assign(pts.filter(col("vec_id") % 2 === 1), ctrain)
         .join(lab, Seq("vec_id"))
         .groupBy(col("label"), col("cid").as("pred"))
@@ -317,18 +350,8 @@ object Learn {
         .agg(coalesce(sum(col("cu.c")), lit(0L)).as("cl"))
       val nlF = lcx.groupBy(col("pos"), col("t")).agg(sum(col("cl")).as("nl"))
       val base = lcx.join(nlF, Seq("pos", "t")).crossJoin(broadcast(nTot))
-      val dl = col("cl").cast("double") / col("n").cast("double")
-      val dr = (col("cp") - col("cl")).cast("double") / col("n").cast("double")
       val terms = base.select(col("pos"), col("t"),
-          (when(col("cl") > 0,
-            floor(lit(1000000000.0) * (dl *
-              log(col("nl").cast("double") / col("cl").cast("double"))))
-              .cast("bigint")).otherwise(0L) +
-           when(col("cp") - col("cl") > 0,
-            floor(lit(1000000000.0) * (dr *
-              log((col("n") - col("nl")).cast("double") /
-                (col("cp") - col("cl")).cast("double"))))
-              .cast("bigint")).otherwise(0L)).as("t_nn"))
+          childEntropyNano.as("t_nn"))
         .groupBy(col("pos"), col("t"))
         .agg(sum(col("t_nn")).as("child_nn"))
       terms.join(nlF, Seq("pos", "t"))
@@ -364,13 +387,7 @@ object Learn {
     * aggregate. */
   val q174Calibration: QueryDef = {
     val oracle =
-      s"""WITH $ptsCte,
-         |lab AS (SELECT vec_id, label FROM embeddings),
-         |ctrain AS (
-         |  SELECT l.label AS cid, p.pos, CAST(sum(p.q) // count(*) AS BIGINT) AS c
-         |  FROM pts p JOIN lab l USING (vec_id)
-         |  WHERE p.vec_id % 2 = 0
-         |  GROUP BY 1, 2),
+      s"""WITH $labelCentroidsSql,
          |test AS (SELECT * FROM pts WHERE vec_id % 2 = 1),
          |d AS (
          |  SELECT p.vec_id, c.cid,
@@ -399,13 +416,7 @@ object Learn {
          |    AS BIGINT)) // count(*) AS acc_ppm
          |FROM conf GROUP BY 1 ORDER BY bin""".stripMargin
     QueryDef("q174_calibration", oracle) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val pts = points(emb).ckpt()
-      val lab = emb.select(col("vec_id"), col("label"))
-      val ctrain = pts.filter(col("vec_id") % 2 === 0)
-        .join(lab, Seq("vec_id"))
-        .groupBy(col("label").as("cid"), col("pos"))
-        .agg(expr("sum(q) div count(1)").as("c"))
+      val (pts, lab, ctrain) = labelCentroids(s, dir)
       val d = pts.filter(col("vec_id") % 2 === 1)
         .join(broadcast(ctrain), Seq("pos"))
         .groupBy(col("vec_id"), col("cid"))
@@ -1594,12 +1605,7 @@ object Learn {
     * the queue is a TakeOrdered heap. Output 20 rows. */
   val q331AlMargin: QueryDef = QueryDef(
     "q331_al_margin",
-    s"""WITH $ptsCte,
-       |lab AS (SELECT vec_id, label FROM embeddings),
-       |ctrain AS (
-       |  SELECT l.label AS cid, p.pos, CAST(sum(p.q) // count(*) AS BIGINT) AS c
-       |  FROM pts p JOIN lab l USING (vec_id)
-       |  WHERE p.vec_id % 2 = 0 GROUP BY 1, 2),
+    s"""WITH $labelCentroidsSql,
        |d AS (
        |  SELECT p.vec_id, c.cid,
        |    CAST(sum((p.q - c.c) * (p.q - c.c)) AS BIGINT) AS dist
@@ -1897,19 +1903,8 @@ object Learn {
         val nlF = lcx.groupBy(col("sd"), col("pos"), col("t"))
           .agg(sum(col("cl")).as("nl"))
         val base = lcx.join(nlF, Seq("sd", "pos", "t")).join(nG, Seq("sd"))
-        val dl = col("cl").cast("double") / col("n").cast("double")
-        val dr = (col("cp") - col("cl")).cast("double") /
-          col("n").cast("double")
         val terms = base.select(col("sd"), col("pos"), col("t"),
-            (when(col("cl") > 0,
-              floor(lit(1000000000.0) * (dl *
-                log(col("nl").cast("double") / col("cl").cast("double"))))
-                .cast("bigint")).otherwise(0L) +
-             when(col("cp") - col("cl") > 0,
-              floor(lit(1000000000.0) * (dr *
-                log((col("n") - col("nl")).cast("double") /
-                  (col("cp") - col("cl")).cast("double"))))
-                .cast("bigint")).otherwise(0L)).as("t_nn"))
+            childEntropyNano.as("t_nn"))
           .groupBy(col("sd"), col("pos"), col("t"))
           .agg(sum(col("t_nn")).as("child_nn"))
         val cand = terms.join(nlF, Seq("sd", "pos", "t"))
@@ -2004,13 +1999,7 @@ object Learn {
       "CAST(n AS DOUBLE)) * (1.0 - CAST(kt AS DOUBLE) / " +
       "CAST(n AS DOUBLE))) AS BIGINT)"
     val oracle =
-      s"""WITH $ptsCte,
-         |lab AS (SELECT vec_id, label FROM embeddings),
-         |ctrain AS (
-         |  SELECT l.label AS cid, p.pos, CAST(sum(p.q) // count(*) AS BIGINT)
-         |    AS c
-         |  FROM pts p JOIN lab l USING (vec_id)
-         |  WHERE p.vec_id % 2 = 0 GROUP BY 1, 2),
+      s"""WITH $labelCentroidsSql,
          |d AS (
          |  SELECT p.vec_id, ct.cid,
          |    CAST(sum((p.q - ct.c) * (p.q - ct.c)) AS HUGEINT) AS dist
@@ -2049,13 +2038,7 @@ object Learn {
          |  $uncMicro AS unc_micro
          |FROM tot, terms""".stripMargin
     QueryDef("q366_brier_decomposition", oracle) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val pts = points(emb).ckpt()
-      val lab = emb.select(col("vec_id"), col("label"))
-      val ctrain = pts.filter(col("vec_id") % 2 === 0)
-        .join(lab, Seq("vec_id"))
-        .groupBy(col("label").as("cid"), col("pos"))
-        .agg(expr("sum(q) div count(1)").as("c"))
+      val (pts, lab, ctrain) = labelCentroids(s, dir)
       val d = pts.filter(col("vec_id") % 2 === 1)
         .join(broadcast(ctrain), Seq("pos"))
         .groupBy(col("vec_id"), col("cid"))

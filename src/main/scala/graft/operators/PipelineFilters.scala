@@ -28,12 +28,77 @@ object PipelineFilters {
   private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is")
 
   // Gopher-rule thresholds — shared by q306 (per-rule kill report) and
-  // q330 (budget allocator quality signal) so the two can never
-  // disagree on what "admitted" means.
+  // [[admitted]] (the q330/q345 mix planners' quality signal) so they
+  // can never disagree on what "admitted" means.
   private val MIN_TOK = 25L; private val MAX_TOK = 90L
   private val MIN_MWL = 4000L; private val MAX_MWL = 5100L
   private val MIN_STOP = 2L
   private val MAX_TOPW_PPM = 125000L
+
+  /** Per-doc Gopher metrics (doc_id, `key`, n_tok, n_chr, n_stop,
+    * topw): one scan of codegen'd string built-ins, plus the
+    * (doc, word) collapse the repetition rule needs, joined back on
+    * doc_id. */
+  private def gopherMetrics(s: SparkSession, dir: String,
+      key: String): DataFrame = {
+    val toks = split(col("text"), " ")
+    val docs = Tables.documents(s, dir)
+      .repartition(col("doc_id")) // single-file scan -> use every core
+    val m = docs.select(
+      col("doc_id"), col(key),
+      size(toks).cast("bigint").as("n_tok"),
+      length(regexp_replace(col("text"), " ", "")).cast("bigint")
+        .as("n_chr"),
+      size(filter(toks, t => t.isInCollection(stopwords))).cast("bigint")
+        .as("n_stop"))
+    val tw = docs
+      .select(col("doc_id"), explode(toks).as("x"))
+      .groupBy(col("doc_id"), col("x")).agg(count(lit(1)).as("c"))
+      .groupBy(col("doc_id")).agg(max(col("c")).as("topw"))
+    m.join(tw, Seq("doc_id"))
+  }
+
+  /** The oracle side of [[gopherMetrics]]: the CTEs `m` and `tw`. */
+  private def gopherMetricsSql(key: String): String =
+    s"""m AS (
+       |  SELECT doc_id, $key,
+       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+       |    CAST(len(replace(text, ' ', '')) AS BIGINT) AS n_chr,
+       |    CAST(len(list_filter(string_split(text, ' '),
+       |      t -> t IN ('the','a','of','and','to','in','is'))) AS BIGINT)
+       |      AS n_stop
+       |  FROM documents),
+       |tw AS (
+       |  SELECT doc_id, max(c) AS topw FROM (
+       |    SELECT doc_id, x, CAST(count(*) AS BIGINT) AS c
+       |    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS x
+       |          FROM documents) GROUP BY 1, 2) GROUP BY doc_id)""".stripMargin
+
+  /** (source, n_tok, pass): pass = 1 when the doc clears every Gopher
+    * rule — the admission flag q330 and q345 plan source mixes on. */
+  private def admitted(s: SparkSession, dir: String): DataFrame =
+    gopherMetrics(s, dir, "source")
+      .select(col("source"), col("n_tok"),
+        when(col("n_tok") >= MIN_TOK && col("n_tok") <= MAX_TOK &&
+          expr("(1000 * n_chr) div n_tok") >= MIN_MWL &&
+          expr("(1000 * n_chr) div n_tok") <= MAX_MWL &&
+          col("n_stop") >= MIN_STOP &&
+          expr("(1000000 * topw) div n_tok") <= MAX_TOPW_PPM,
+          1L).otherwise(0L).as("pass"))
+
+  /** The oracle side of [[admitted]]: [[gopherMetricsSql]] plus the
+    * CTE `f`. */
+  private def admittedSql: String =
+    s"""${gopherMetricsSql("source")},
+       |f AS (
+       |  SELECT m.source, m.n_tok,
+       |    CASE WHEN m.n_tok >= $MIN_TOK AND m.n_tok <= $MAX_TOK
+       |      AND (1000 * m.n_chr) // m.n_tok >= $MIN_MWL
+       |      AND (1000 * m.n_chr) // m.n_tok <= $MAX_MWL
+       |      AND m.n_stop >= $MIN_STOP
+       |      AND (1000000 * tw.topw) // m.n_tok <= $MAX_TOPW_PPM
+       |      THEN 1 ELSE 0 END AS pass
+       |  FROM m JOIN tw ON m.doc_id = tw.doc_id)""".stripMargin
 
   /** q306 — Gopher-style document-admission rules (Rae et al. 2021,
     * "Scaling Language Models", Table A1): word-count bounds, mean
@@ -59,19 +124,7 @@ object PipelineFilters {
   val q306GopherRules: QueryDef = {
     QueryDef(
       "q306_gopher_rules",
-      s"""WITH m AS (
-         |  SELECT doc_id, lang,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    CAST(len(replace(text, ' ', '')) AS BIGINT) AS n_chr,
-         |    CAST(len(list_filter(string_split(text, ' '),
-         |      t -> t IN ('the','a','of','and','to','in','is'))) AS BIGINT)
-         |      AS n_stop
-         |  FROM documents),
-         |tw AS (
-         |  SELECT doc_id, max(c) AS topw FROM (
-         |    SELECT doc_id, x, CAST(count(*) AS BIGINT) AS c
-         |    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS x
-         |          FROM documents) GROUP BY 1, 2) GROUP BY doc_id),
+      s"""WITH ${gopherMetricsSql("lang")},
          |f AS (
          |  SELECT m.lang,
          |    CASE WHEN m.n_tok < $MIN_TOK OR m.n_tok > $MAX_TOK
@@ -91,21 +144,7 @@ object PipelineFilters {
          |  CAST(sum(CASE WHEN f_len + f_mwl + f_stop + f_rep = 0
          |    THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
          |FROM f GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
-      val toks = split(col("text"), " ")
-      val docs = Tables.documents(s, dir)
-        .repartition(col("doc_id")) // single-file scan -> use every core
-      val m = docs.select(
-        col("doc_id"), col("lang"),
-        size(toks).cast("bigint").as("n_tok"),
-        length(regexp_replace(col("text"), " ", "")).cast("bigint")
-          .as("n_chr"),
-        size(filter(toks, t => t.isInCollection(stopwords))).cast("bigint")
-          .as("n_stop"))
-      val tw = docs
-        .select(col("doc_id"), explode(toks).as("x"))
-        .groupBy(col("doc_id"), col("x")).agg(count(lit(1)).as("c"))
-        .groupBy(col("doc_id")).agg(max(col("c")).as("topw"))
-      m.join(tw, Seq("doc_id"))
+      gopherMetrics(s, dir, "lang")
         .select(col("lang"),
           when(col("n_tok") < MIN_TOK || col("n_tok") > MAX_TOK, 1L)
             .otherwise(0L).as("f_len"),
@@ -337,7 +376,7 @@ object PipelineFilters {
   }
 
   /** q330 — greedy token-budget allocation across sources: rank
-    * sources by Gopher-rule pass rate (q306's thresholds verbatim),
+    * sources by Gopher-rule pass rate (the shared [[admitted]] flag),
     * then fill a budget of 60% of the corpus's admitted tokens
     * greedily — full allocation while the budget lasts, a partial
     * slice at the boundary source, zero after — the data-mix planning
@@ -352,7 +391,7 @@ object PipelineFilters {
     * fill is an exclusive running sum over the ranked source frame
     * with integer clamp arithmetic.
     *
-    * Scale design (100 TB): the doc-metric pass is q306's shape (one
+    * Scale design (100 TB): the doc-metric pass is [[gopherMetrics]] (one
     * scan + one (doc, word) collapse for the repetition rule); the
     * allocator then runs entirely on the |sources|-row aggregate
     * frame — its ranking window is unpartitioned by design and
@@ -362,28 +401,7 @@ object PipelineFilters {
     val BUDGET_PCT = 60
     QueryDef(
       "q330_token_budget",
-      s"""WITH m AS (
-         |  SELECT doc_id, source,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    CAST(len(replace(text, ' ', '')) AS BIGINT) AS n_chr,
-         |    CAST(len(list_filter(string_split(text, ' '),
-         |      t -> t IN ('the','a','of','and','to','in','is'))) AS BIGINT)
-         |      AS n_stop
-         |  FROM documents),
-         |tw AS (
-         |  SELECT doc_id, max(c) AS topw FROM (
-         |    SELECT doc_id, x, CAST(count(*) AS BIGINT) AS c
-         |    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS x
-         |          FROM documents) GROUP BY 1, 2) GROUP BY doc_id),
-         |f AS (
-         |  SELECT m.source, m.n_tok,
-         |    CASE WHEN m.n_tok >= $MIN_TOK AND m.n_tok <= $MAX_TOK
-         |      AND (1000 * m.n_chr) // m.n_tok >= $MIN_MWL
-         |      AND (1000 * m.n_chr) // m.n_tok <= $MAX_MWL
-         |      AND m.n_stop >= $MIN_STOP
-         |      AND (1000000 * tw.topw) // m.n_tok <= $MAX_TOPW_PPM
-         |      THEN 1 ELSE 0 END AS pass
-         |  FROM m JOIN tw ON m.doc_id = tw.doc_id),
+      s"""WITH $admittedSql,
          |src AS (
          |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
          |    CAST(sum(pass) AS BIGINT) AS n_pass,
@@ -405,28 +423,7 @@ object PipelineFilters {
          |  CAST(least(adm_tokens, greatest(0, budget - before_me))
          |    AS BIGINT) AS alloc_tokens
          |FROM ranked ORDER BY source""".stripMargin) { (s, dir) =>
-      val toks = split(col("text"), " ")
-      val docs = Tables.documents(s, dir)
-        .repartition(col("doc_id")) // single-file scan -> use every core
-      val m = docs.select(
-        col("doc_id"), col("source"),
-        size(toks).cast("bigint").as("n_tok"),
-        length(regexp_replace(col("text"), " ", "")).cast("bigint")
-          .as("n_chr"),
-        size(filter(toks, t => t.isInCollection(stopwords))).cast("bigint")
-          .as("n_stop"))
-      val tw = docs
-        .select(col("doc_id"), explode(toks).as("x"))
-        .groupBy(col("doc_id"), col("x")).agg(count(lit(1)).as("c"))
-        .groupBy(col("doc_id")).agg(max(col("c")).as("topw"))
-      val f = m.join(tw, Seq("doc_id"))
-        .select(col("source"), col("n_tok"),
-          when(col("n_tok") >= MIN_TOK && col("n_tok") <= MAX_TOK &&
-            expr("(1000 * n_chr) div n_tok") >= MIN_MWL &&
-            expr("(1000 * n_chr) div n_tok") <= MAX_MWL &&
-            col("n_stop") >= MIN_STOP &&
-            expr("(1000000 * topw) div n_tok") <= MAX_TOPW_PPM,
-            1L).otherwise(0L).as("pass"))
+      val f = admitted(s, dir)
       val src = f.groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("pass")).as("n_pass"),
           expr("(1000000 * CAST(sum(pass) AS BIGINT)) div count(*)")
@@ -466,8 +463,8 @@ object PipelineFilters {
     * take-while-it-fits PREFIX rule (stated — true greedy-with-skip
     * is sequential and belongs to the DP side of this comparison).
     *
-    * Scale design (100 TB): the per-source stats are q306's one-scan
-    * shape; the |sources|-row item frame is then fetched to the
+    * Scale design (100 TB): the per-source stats are [[admitted]]'s
+    * one-scan shape; the |sources|-row item frame is then fetched to the
     * driver to SEQUENCE the DP loop (the adjudicated bounded-frame
     * collect class — the loop ORDER is inherently sequential; the
     * data volume is the source domain, not the corpus), and the DP
@@ -490,28 +487,7 @@ object PipelineFilters {
              |  JOIN (SELECT wu, v FROM items WHERE rk = $k) i ON true
              |  LEFT JOIN dp${k - 1} p ON p.w = d.w - i.wu)""".stripMargin
         }.mkString(",\n")
-        s"""WITH m AS (
-           |  SELECT doc_id, source,
-           |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-           |    CAST(len(replace(text, ' ', '')) AS BIGINT) AS n_chr,
-           |    CAST(len(list_filter(string_split(text, ' '),
-           |      t -> t IN ('the','a','of','and','to','in','is'))) AS BIGINT)
-           |      AS n_stop
-           |  FROM documents),
-           |tw AS (
-           |  SELECT doc_id, max(c) AS topw FROM (
-           |    SELECT doc_id, x, CAST(count(*) AS BIGINT) AS c
-           |    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS x
-           |          FROM documents) GROUP BY 1, 2) GROUP BY doc_id),
-           |f AS (
-           |  SELECT m.source, m.n_tok,
-           |    CASE WHEN m.n_tok >= $MIN_TOK AND m.n_tok <= $MAX_TOK
-           |      AND (1000 * m.n_chr) // m.n_tok >= $MIN_MWL
-           |      AND (1000 * m.n_chr) // m.n_tok <= $MAX_MWL
-           |      AND m.n_stop >= $MIN_STOP
-           |      AND (1000000 * tw.topw) // m.n_tok <= $MAX_TOPW_PPM
-           |      THEN 1 ELSE 0 END AS pass
-           |  FROM m JOIN tw ON m.doc_id = tw.doc_id),
+        s"""WITH $admittedSql,
            |src AS (
            |  SELECT source, CAST(sum(pass) AS BIGINT) AS v,
            |    CAST(sum(pass * n_tok) AS BIGINT) AS adm
@@ -546,28 +522,7 @@ object PipelineFilters {
            |ORDER BY g.b""".stripMargin
       }) { (s, dir) =>
       import s.implicits._
-      val toks = split(col("text"), " ")
-      val docs = Tables.documents(s, dir)
-        .repartition(col("doc_id")) // single-file scan -> use every core
-      val m = docs.select(
-        col("doc_id"), col("source"),
-        size(toks).cast("bigint").as("n_tok"),
-        length(regexp_replace(col("text"), " ", "")).cast("bigint")
-          .as("n_chr"),
-        size(filter(toks, t => t.isInCollection(stopwords))).cast("bigint")
-          .as("n_stop"))
-      val tw = docs
-        .select(col("doc_id"), explode(toks).as("x"))
-        .groupBy(col("doc_id"), col("x")).agg(count(lit(1)).as("c"))
-        .groupBy(col("doc_id")).agg(max(col("c")).as("topw"))
-      val f = m.join(tw, Seq("doc_id"))
-        .select(col("source"), col("n_tok"),
-          when(col("n_tok") >= MIN_TOK && col("n_tok") <= MAX_TOK &&
-            expr("(1000 * n_chr) div n_tok") >= MIN_MWL &&
-            expr("(1000 * n_chr) div n_tok") <= MAX_MWL &&
-            col("n_stop") >= MIN_STOP &&
-            expr("(1000000 * topw) div n_tok") <= MAX_TOPW_PPM,
-            1L).otherwise(0L).as("pass"))
+      val f = admitted(s, dir)
       val src = f.groupBy(col("source"))
         .agg(sum(col("pass")).as("v"),
           sum(col("pass") * col("n_tok")).as("adm"))

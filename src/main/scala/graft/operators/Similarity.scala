@@ -59,13 +59,11 @@ object Similarity {
       .limit(20)
   }
 
-  /** kNN join — top-3 neighbors for each of the first NQUERY vectors:
-    * broadcast the query set, one pass over the corpus, per-query
-    * window top-k. */
-  val q41KnnJoin: QueryDef = QueryDef(
-    "q41_knn_join",
-    s"""WITH q AS (SELECT vec_id AS qid, embedding AS vq FROM embeddings WHERE vec_id < $NQUERY),
-       |e AS (SELECT vec_id, embedding AS v FROM embeddings),
+  /** The oracle's exact brute-force top-k over the query CTE `q`
+    * (qid, vq): every corpus vector but the query itself, ranked by
+    * (cos_sim DESC, vec_id) — q41's and q44's reference. */
+  private def bruteKnnSql(k: Int): String =
+    s"""e AS (SELECT vec_id, embedding AS v FROM embeddings),
        |c AS (
        |  SELECT q.qid, e.vec_id, ${cosSql("e.v", "q.vq")} AS cos_sim
        |  FROM e JOIN q ON e.vec_id <> q.qid),
@@ -73,8 +71,16 @@ object Similarity {
        |  SELECT qid, vec_id, cos_sim,
        |    row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rn
        |  FROM c)
-       |SELECT qid, CAST(rn AS INT) AS rn, vec_id, cos_sim FROM r WHERE rn <= 3
-       |ORDER BY qid, rn""".stripMargin) { (s, dir) =>
+       |SELECT qid, CAST(rn AS INT) AS rn, vec_id, cos_sim FROM r WHERE rn <= $k
+       |ORDER BY qid, rn""".stripMargin
+
+  /** kNN join — top-3 neighbors for each of the first NQUERY vectors:
+    * broadcast the query set, one pass over the corpus, per-query
+    * window top-k. */
+  val q41KnnJoin: QueryDef = QueryDef(
+    "q41_knn_join",
+    s"""WITH q AS (SELECT vec_id AS qid, embedding AS vq FROM embeddings WHERE vec_id < $NQUERY),
+       |${bruteKnnSql(3)}""".stripMargin) { (s, dir) =>
     val e = Tables.embeddings(s, dir)
     val q = broadcast(e.filter(col("vec_id") < NQUERY)
       .select(col("vec_id").as("qid"), col("embedding").as("vq")))
@@ -174,16 +180,7 @@ object Similarity {
   val q44CosineExpr: QueryDef = QueryDef(
     "q44_cosine_expr",
     s"""WITH q AS (SELECT vec_id AS qid, embedding AS vq FROM embeddings WHERE vec_id >= $NQUERY AND vec_id < ${2 * NQUERY}),
-       |e AS (SELECT vec_id, embedding AS v FROM embeddings),
-       |c AS (
-       |  SELECT q.qid, e.vec_id, ${cosSql("e.v", "q.vq")} AS cos_sim
-       |  FROM e JOIN q ON e.vec_id <> q.qid),
-       |r AS (
-       |  SELECT qid, vec_id, cos_sim,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rn
-       |  FROM c)
-       |SELECT qid, CAST(rn AS INT) AS rn, vec_id, cos_sim FROM r WHERE rn <= 5
-       |ORDER BY qid, rn""".stripMargin) { (s, dir) =>
+       |${bruteKnnSql(5)}""".stripMargin) { (s, dir) =>
     val e = Tables.embeddings(s, dir)
     val q = broadcast(e.filter(col("vec_id") >= NQUERY && col("vec_id") < 2 * NQUERY)
       .select(col("vec_id").as("qid"), col("embedding").as("vq")))
@@ -408,6 +405,40 @@ object Similarity {
         .select(col("qid"), col("crank"), col("vec_id"),
           (expr("dot_product(v, qv)") / nullif(col("vn") * col("qn"), lit(0d))).as("cs"))
 
+    /** The oracle side of [[centroids]], [[assign]] and [[querySet]]:
+      * the CTEs `cent`, `e` (the corpus as (vec_id, v)), `a`,
+      * `assign` (vec_id, cid) and `q` (qid, qv; vec_id < nq). */
+    def assignSql(nq: Int): String =
+      s"""cent AS (SELECT vec_id AS cid, embedding AS vc FROM embeddings WHERE vec_id < $NCENT),
+         |e AS (SELECT vec_id, embedding AS v FROM embeddings),
+         |a AS (
+         |  SELECT e.vec_id, cent.cid, ${cosSql("e.v", "cent.vc")} AS cs
+         |  FROM e, cent),
+         |assign AS (
+         |  SELECT vec_id, cid FROM (
+         |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
+         |    FROM a) WHERE rn = 1),
+         |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < $nq)""".stripMargin
+
+    /** The oracle side of [[probes]] and [[candidates]] over
+      * [[assignSql]]: the CTEs `pcs`, `pc` (qid, cid, crank) and
+      * `cand` (qid, crank, vec_id, cs; crank ≤ maxProbe). */
+    def candidatesSql(maxProbe: Int): String =
+      s"""pcs AS (
+         |  SELECT q.qid, cent.cid, ${cosSql("q.qv", "cent.vc")} AS cs
+         |  FROM q, cent),
+         |pc AS (
+         |  SELECT qid, cid,
+         |    row_number() OVER (PARTITION BY qid ORDER BY cs DESC, cid) AS crank
+         |  FROM pcs),
+         |cand AS (
+         |  SELECT pc.qid, pc.crank, m.vec_id, ${cosSql("e.v", "q.qv")} AS cs
+         |  FROM pc
+         |  JOIN assign m ON m.cid = pc.cid AND m.vec_id <> pc.qid
+         |  JOIN e ON e.vec_id = m.vec_id
+         |  JOIN q ON q.qid = pc.qid
+         |  WHERE pc.crank <= $maxProbe)""".stripMargin
+
     /** Exact truth (qid, vec_id, rn ≤ topk): one corpus pass against
       * the broadcast query set; the rn ≤ topk window plants the
       * TopKPerKey map-side heap prune. */
@@ -436,16 +467,7 @@ object Similarity {
     val TOPK = 3
     QueryDef(
       "q82_ivf_search",
-      s"""WITH cent AS (SELECT vec_id AS cid, embedding AS vc FROM embeddings WHERE vec_id < $NCENT),
-         |e AS (SELECT vec_id, embedding AS v FROM embeddings),
-         |a AS (
-         |  SELECT e.vec_id, cent.cid, ${cosSql("e.v", "cent.vc")} AS cs
-         |  FROM e, cent),
-         |assign AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-         |    FROM a) WHERE rn = 1),
-         |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < $NQ),
+      s"""WITH ${IvfIndex.assignSql(NQ)},
          |cand AS (
          |  SELECT q.qid, c.vec_id, ${cosSql("e.v", "q.qv")} AS cos_sim
          |  FROM q
@@ -497,30 +519,8 @@ object Similarity {
     val TOPK = 10 // truth depth
     QueryDef(
       "q145_ivf_multiprobe",
-      s"""WITH cent AS (SELECT vec_id AS cid, embedding AS vc FROM embeddings WHERE vec_id < $NCENT),
-         |e AS (SELECT vec_id, embedding AS v FROM embeddings),
-         |a AS (
-         |  SELECT e.vec_id, cent.cid, ${cosSql("e.v", "cent.vc")} AS cs
-         |  FROM e, cent),
-         |assign AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-         |    FROM a) WHERE rn = 1),
-         |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < $NQ),
-         |pcs AS (
-         |  SELECT q.qid, cent.cid, ${cosSql("q.qv", "cent.vc")} AS cs
-         |  FROM q, cent),
-         |pc AS (
-         |  SELECT qid, cid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cs DESC, cid) AS crank
-         |  FROM pcs),
-         |cand AS (
-         |  SELECT pc.qid, pc.crank, m.vec_id, ${cosSql("e.v", "q.qv")} AS cs
-         |  FROM pc
-         |  JOIN assign m ON m.cid = pc.cid AND m.vec_id <> pc.qid
-         |  JOIN e ON e.vec_id = m.vec_id
-         |  JOIN q ON q.qid = pc.qid
-         |  WHERE pc.crank <= 4),
+      s"""WITH ${IvfIndex.assignSql(NQ)},
+         |${IvfIndex.candidatesSql(maxProbe = 4)},
          |lvl AS (
          |  SELECT c.qid, np.np, c.vec_id, c.cs,
          |    row_number() OVER (PARTITION BY c.qid, np.np ORDER BY c.cs DESC, c.vec_id) AS rn
@@ -854,30 +854,8 @@ object Similarity {
     val wtValuesSql = (1 to TOPK).map(i => s"(${i}, ${w(i - 1)})").mkString(", ")
     QueryDef(
       "q166_ivf_ndcg",
-      s"""WITH cent AS (SELECT vec_id AS cid, embedding AS vc FROM embeddings WHERE vec_id < $NCENT),
-         |e AS (SELECT vec_id, embedding AS v FROM embeddings),
-         |a AS (
-         |  SELECT e.vec_id, cent.cid, ${cosSql("e.v", "cent.vc")} AS cs
-         |  FROM e, cent),
-         |assign AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-         |    FROM a) WHERE rn = 1),
-         |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < $NQ),
-         |pcs AS (
-         |  SELECT q.qid, cent.cid, ${cosSql("q.qv", "cent.vc")} AS cs
-         |  FROM q, cent),
-         |pc AS (
-         |  SELECT qid, cid,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cs DESC, cid) AS crank
-         |  FROM pcs),
-         |cand AS (
-         |  SELECT pc.qid, pc.crank, m.vec_id, ${cosSql("e.v", "q.qv")} AS cs
-         |  FROM pc
-         |  JOIN assign m ON m.cid = pc.cid AND m.vec_id <> pc.qid
-         |  JOIN e ON e.vec_id = m.vec_id
-         |  JOIN q ON q.qid = pc.qid
-         |  WHERE pc.crank <= 4),
+      s"""WITH ${IvfIndex.assignSql(NQ)},
+         |${IvfIndex.candidatesSql(maxProbe = 4)},
          |lvl AS (
          |  SELECT c.qid, np.np, c.vec_id,
          |    row_number() OVER (PARTITION BY c.qid, np.np ORDER BY c.cs DESC, c.vec_id) AS rn

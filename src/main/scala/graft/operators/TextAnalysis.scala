@@ -127,9 +127,11 @@ object TextAnalysis {
         .ckpt() // bounded (|langs|+1)^2 frame; one derivation per JVM
     }
 
-  val q22LangId: QueryDef = QueryDef(
-    "q22_langid",
-    """WITH grams AS (
+  /** The oracle side of [[langIdConfusion]]'s scoring: the CTEs
+    * `grams`, `prof` (top-200 trigram profile per language on the
+    * doc_id % 5 < 4 split), `test`, `scores` and `best` (doc_id, pred). */
+  private def langIdPredSql: String =
+    """grams AS (
       |  SELECT doc_id, lang, substr(text, CAST(i AS INT), 3) AS g
       |  FROM documents, unnest(range(1, len(text)-1)) AS t(i)
       |  WHERE len(text) >= 3),
@@ -144,11 +146,15 @@ object TextAnalysis {
       |best AS (
       |  SELECT doc_id, cand AS pred FROM (
       |    SELECT doc_id, cand, row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, cand) AS rn
-      |    FROM scores) WHERE rn = 1)
-      |SELECT d.lang AS actual, coalesce(b.pred, 'unknown') AS pred, count(*) AS n
-      |FROM (SELECT doc_id, lang FROM documents WHERE doc_id % 5 = 4) d
-      |LEFT JOIN best b USING (doc_id)
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
+      |    FROM scores) WHERE rn = 1)""".stripMargin
+
+  val q22LangId: QueryDef = QueryDef(
+    "q22_langid",
+    s"""WITH $langIdPredSql
+       |SELECT d.lang AS actual, coalesce(b.pred, 'unknown') AS pred, count(*) AS n
+       |FROM (SELECT doc_id, lang FROM documents WHERE doc_id % 5 = 4) d
+       |LEFT JOIN best b USING (doc_id)
+       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
     langIdConfusion(s, dir).orderBy("actual", "pred")
   }
 
@@ -781,33 +787,14 @@ object TextAnalysis {
     * (the documented bounded-frame window exception). */
   val q180Zipf: QueryDef = QueryDef(
     "q180_zipf",
-    """WITH u AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
-      |tc AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM u GROUP BY tok),
-      |r AS (SELECT c, row_number() OVER (ORDER BY c DESC, tok) AS rnk FROM tc),
-      |xy AS (
-      |  SELECT CAST(floor(1000000000.0 * ln(CAST(rnk AS DOUBLE))) AS BIGINT) AS x,
-      |    CAST(floor(1000000000.0 * ln(CAST(c AS DOUBLE))) AS BIGINT) AS y
-      |  FROM r WHERE rnk <= 200),
-      |m AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS n,
-      |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-      |    sum(CAST(x AS HUGEINT) * y) AS sxy,
-      |    sum(CAST(x AS HUGEINT) * x) AS sxx,
-      |    sum(CAST(y AS HUGEINT) * y) AS syy
-      |  FROM xy)
-      |SELECT n AS n_ranks,
-      |  CAST(floor(1000.0 *
-      |    CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE) /
-      |    CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE)) AS BIGINT)
-      |    AS slope_milli,
-      |  CAST(floor(1000000.0 *
-      |    (CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE) *
-      |     CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)) /
-      |    (CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE) *
-      |     CAST(n * syy - CAST(sy AS HUGEINT) * sy AS DOUBLE))) AS BIGINT)
-      |    AS r2_ppm
-      |FROM m""".stripMargin) { (s, dir) =>
-    val dec = (c: Column) => c.cast("decimal(38,0)")
+    s"""WITH u AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
+       |tc AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM u GROUP BY tok),
+       |r AS (SELECT c, row_number() OVER (ORDER BY c DESC, tok) AS rnk FROM tc),
+       |xy AS (
+       |  SELECT CAST(floor(1000000000.0 * ln(CAST(rnk AS DOUBLE))) AS BIGINT) AS x,
+       |    CAST(floor(1000000000.0 * ln(CAST(c AS DOUBLE))) AS BIGINT) AS y
+       |  FROM r WHERE rnk <= 200),
+       |${logLogFitSql("n_ranks", "slope_milli")}""".stripMargin) { (s, dir) =>
     val docs = Tables.documents(s, dir)
       .repartition(col("doc_id")) // single-file scan -> use every core
     val top = docs.select(explode(split(col("text"), " ")).as("tok"))
@@ -820,6 +807,15 @@ object TextAnalysis {
           .cast("bigint").as("x"),
         floor(lit(1000000000.0) * log(col("c").cast("double")))
           .cast("bigint").as("y"))
+    logLogFit(xy, "n_ranks", "slope_milli")
+  }
+
+  /** Least-squares fit of y on x over `xy` (x, y: nano-scaled logs),
+    * one row (`n`, `slope` = 1000·b, r2_ppm = 10⁶·R²): the exact
+    * moments ride DECIMAL(38), the two ratios are one IEEE chain
+    * each — q180's Zipf and q190's Heaps exponents. */
+  private def logLogFit(xy: DataFrame, n: String, slope: String): DataFrame = {
+    val dec = (c: Column) => c.cast("decimal(38,0)")
     val m = xy.agg(count(lit(1)).as("n"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
       sum(dec(col("x")) * col("y")).as("sxy"),
@@ -831,11 +827,93 @@ object TextAnalysis {
       .cast("double")
     val dy = (dec(col("n")) * col("syy") - dec(col("sy")) * col("sy"))
       .cast("double")
-    m.select(col("n").as("n_ranks"),
-      floor(lit(1000.0) * num / dx).cast("bigint").as("slope_milli"),
+    m.select(col("n").as(n),
+      floor(lit(1000.0) * num / dx).cast("bigint").as(slope),
       floor(lit(1000000.0) * (num * num) / (dx * dy))
         .cast("bigint").as("r2_ppm"))
   }
+
+  /** The oracle side of [[logLogFit]] over the CTE `xy`: the CTE `m`
+    * and the final one-row SELECT. */
+  private def logLogFitSql(n: String, slope: String): String =
+    s"""m AS (
+       |  SELECT CAST(count(*) AS BIGINT) AS n,
+       |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+       |    sum(CAST(x AS HUGEINT) * y) AS sxy,
+       |    sum(CAST(x AS HUGEINT) * x) AS sxx,
+       |    sum(CAST(y AS HUGEINT) * y) AS syy
+       |  FROM xy)
+       |SELECT n AS $n,
+       |  CAST(floor(1000.0 *
+       |    CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE) /
+       |    CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE)) AS BIGINT)
+       |    AS $slope,
+       |  CAST(floor(1000000.0 *
+       |    (CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE) *
+       |     CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)) /
+       |    (CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE) *
+       |     CAST(n * syy - CAST(sy AS HUGEINT) * sy AS DOUBLE))) AS BIGINT)
+       |    AS r2_ppm
+       |FROM m""".stripMargin
+
+  /** Adjacent token pairs (extra..., x, y) of every `tk` array with
+    * at least two tokens: n-grams from `zip_with` over shifted
+    * slices, so no lambda re-splits the text per element. */
+  private def bigrams(df: DataFrame, extra: Seq[Column]): DataFrame = {
+    val tk = col("tk")
+    df.filter(size(tk) >= 2)
+      .select(extra :+ explode(zip_with(
+        slice(tk, lit(1), size(tk) - 1),
+        slice(tk, lit(2), size(tk) - 1),
+        (x, y) => struct(x.as("x"), y.as("y")))).as("p"): _*)
+      .select(extra :+ col("p.x").as("x") :+ col("p.y").as("y"): _*)
+  }
+
+  /** The oracle side of [[bigrams]], counted: the CTE `name`
+    * (extra..., x, y, `cnt`) over the `tk` arrays of `from`. */
+  private def bigramCountsSql(name: String, from: String,
+      extra: Seq[String], cnt: String): String =
+    s"""$name AS (
+       |  SELECT ${extra.map(_ + ", ").mkString}tk[CAST(i AS INT)] AS x, tk[CAST(i AS INT)+1] AS y,
+       |    CAST(count(*) AS BIGINT) AS $cnt
+       |  FROM $from, unnest(range(1, len(tk))) AS r(i) GROUP BY ${(1 to extra.size + 2).mkString(", ")})""".stripMargin
+
+  /** The held-out bigram LM's count tables, trained on the even-doc_id
+    * half and tested on the odd half (the q96/q101 split): vocabulary
+    * size `v` (vs), contexts `c1` (x, c1c), training bigrams `c2`
+    * (x, y, c2c) and per-language test bigrams `tb` (lang, x, y, m). */
+  private def bigramLm(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val tk = col("tk")
+    val docs = Tables.documents(s, dir)
+      .repartition(col("doc_id")) // single-file scan -> use every core
+      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("tk"))
+    val tr = docs.filter(col("doc_id") % 2 === 0)
+    val te = docs.filter(col("doc_id") % 2 === 1)
+    val uni = tr.select(explode(tk).as("x"))
+    val v = uni.agg(count_distinct(col("x")).as("vs"))
+    val c1 = uni.groupBy(col("x")).agg(count(lit(1)).as("c1c"))
+    val c2 = bigrams(tr, Seq.empty)
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("c2c"))
+    val tb = bigrams(te, Seq(col("lang")))
+      .groupBy(col("lang"), col("x"), col("y")).agg(count(lit(1)).as("m"))
+    (v, c1, c2, tb)
+  }
+
+  /** The oracle side of [[bigramLm]]'s training tables: the CTEs `tr`,
+    * `te`, `u`, `v`, `c1` and `c2` (test bigrams: [[bigramCountsSql]]
+    * over `te`). */
+  private def bigramLmSql: String =
+    s"""tr AS (
+       |  SELECT string_split(text, ' ') AS tk FROM documents
+       |  WHERE doc_id % 2 = 0),
+       |te AS (
+       |  SELECT lang, string_split(text, ' ') AS tk FROM documents
+       |  WHERE doc_id % 2 = 1),
+       |u AS (SELECT unnest(tk) AS x FROM tr),
+       |v AS (SELECT CAST(count(DISTINCT x) AS BIGINT) AS vs FROM u),
+       |c1 AS (SELECT x, CAST(count(*) AS BIGINT) AS c FROM u GROUP BY x),
+       |${bigramCountsSql("c2", "tr", Seq.empty, "c")}""".stripMargin
 
   /** q181 — held-out bigram-LM cross-entropy: train an add-one
     * smoothed bigram language model on the even-doc_id half (the
@@ -864,57 +942,23 @@ object TextAnalysis {
     * |langs| rows. */
   val q181BigramPpl: QueryDef = QueryDef(
     "q181_bigram_ppl",
-    """WITH tr AS (
-      |  SELECT string_split(text, ' ') AS tk FROM documents
-      |  WHERE doc_id % 2 = 0),
-      |te AS (
-      |  SELECT lang, string_split(text, ' ') AS tk FROM documents
-      |  WHERE doc_id % 2 = 1),
-      |u AS (SELECT unnest(tk) AS x FROM tr),
-      |v AS (SELECT CAST(count(DISTINCT x) AS BIGINT) AS vs FROM u),
-      |c1 AS (SELECT x, CAST(count(*) AS BIGINT) AS c FROM u GROUP BY x),
-      |c2 AS (
-      |  SELECT tk[CAST(i AS INT)] AS x, tk[CAST(i AS INT)+1] AS y,
-      |    CAST(count(*) AS BIGINT) AS c
-      |  FROM tr, unnest(range(1, len(tk))) AS r(i) GROUP BY 1, 2),
-      |tb AS (
-      |  SELECT lang, tk[CAST(i AS INT)] AS x, tk[CAST(i AS INT)+1] AS y,
-      |    CAST(count(*) AS BIGINT) AS m
-      |  FROM te, unnest(range(1, len(tk))) AS r(i) GROUP BY 1, 2, 3),
-      |sc AS (
-      |  SELECT tb.lang, tb.m,
-      |    CASE WHEN c2.c IS NULL THEN 1 ELSE 0 END AS oov,
-      |    CAST(floor(1000000000.0 *
-      |      (-ln(CAST(coalesce(c2.c, 0) + 1 AS DOUBLE) /
-      |           CAST(coalesce(c1.c, 0) + v.vs AS DOUBLE)))) AS BIGINT) AS nll_nn
-      |  FROM tb LEFT JOIN c2 ON tb.x = c2.x AND tb.y = c2.y
-      |  LEFT JOIN c1 ON tb.x = c1.x, v)
-      |SELECT lang, CAST(sum(m) AS BIGINT) AS n_bigrams,
-      |  CAST(sum(m * oov) AS BIGINT) AS n_unseen,
-      |  CAST(sum(CAST(m AS HUGEINT) * nll_nn) //
-      |       CAST(sum(m) AS HUGEINT) AS BIGINT) AS avg_nll_nn
-      |FROM sc GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
+    s"""WITH $bigramLmSql,
+       |${bigramCountsSql("tb", "te", Seq("lang"), "m")},
+       |sc AS (
+       |  SELECT tb.lang, tb.m,
+       |    CASE WHEN c2.c IS NULL THEN 1 ELSE 0 END AS oov,
+       |    CAST(floor(1000000000.0 *
+       |      (-ln(CAST(coalesce(c2.c, 0) + 1 AS DOUBLE) /
+       |           CAST(coalesce(c1.c, 0) + v.vs AS DOUBLE)))) AS BIGINT) AS nll_nn
+       |  FROM tb LEFT JOIN c2 ON tb.x = c2.x AND tb.y = c2.y
+       |  LEFT JOIN c1 ON tb.x = c1.x, v)
+       |SELECT lang, CAST(sum(m) AS BIGINT) AS n_bigrams,
+       |  CAST(sum(m * oov) AS BIGINT) AS n_unseen,
+       |  CAST(sum(CAST(m AS HUGEINT) * nll_nn) //
+       |       CAST(sum(m) AS HUGEINT) AS BIGINT) AS avg_nll_nn
+       |FROM sc GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val tk = col("tk")
-    def bigrams(df: DataFrame, extra: Seq[Column]): DataFrame =
-      df.filter(size(tk) >= 2)
-        .select(extra :+ explode(zip_with(
-          slice(tk, lit(1), size(tk) - 1),
-          slice(tk, lit(2), size(tk) - 1),
-          (x, y) => struct(x.as("x"), y.as("y")))).as("p"): _*)
-        .select(extra :+ col("p.x").as("x") :+ col("p.y").as("y"): _*)
-    val docs = Tables.documents(s, dir)
-      .repartition(col("doc_id")) // single-file scan -> use every core
-      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("tk"))
-    val tr = docs.filter(col("doc_id") % 2 === 0)
-    val te = docs.filter(col("doc_id") % 2 === 1)
-    val uni = tr.select(explode(tk).as("x"))
-    val v = uni.agg(count_distinct(col("x")).as("vs"))
-    val c1 = uni.groupBy(col("x")).agg(count(lit(1)).as("c1c"))
-    val c2 = bigrams(tr, Seq.empty)
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("c2c"))
-    val tb = bigrams(te, Seq(col("lang")))
-      .groupBy(col("lang"), col("x"), col("y")).agg(count(lit(1)).as("m"))
+    val (v, c1, c2, tb) = bigramLm(s, dir)
     val nll = floor(lit(1000000000.0) *
       (-log((coalesce(col("c2c"), lit(0L)) + 1).cast("double") /
         (coalesce(col("c1c"), lit(0L)) + col("vs")).cast("double"))))
@@ -1216,54 +1260,39 @@ object TextAnalysis {
     * memoized [[langIdConfusion]] build — one derivation per JVM. */
   lazy val q168ClassifierEval: QueryDef = QueryDef(
     "q168_classifier_eval",
-    """WITH grams AS (
-      |  SELECT doc_id, lang, substr(text, CAST(i AS INT), 3) AS g
-      |  FROM documents, unnest(range(1, len(text)-1)) AS t(i)
-      |  WHERE len(text) >= 3),
-      |prof AS (
-      |  SELECT lang, g FROM (
-      |    SELECT lang, g, row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, g) AS rn
-      |    FROM grams WHERE doc_id % 5 < 4 GROUP BY lang, g) WHERE rn <= 200),
-      |test AS (SELECT DISTINCT doc_id, g FROM grams WHERE doc_id % 5 = 4),
-      |scores AS (
-      |  SELECT t.doc_id, p.lang AS cand, count(*) AS hits
-      |  FROM test t JOIN prof p ON t.g = p.g GROUP BY t.doc_id, p.lang),
-      |best AS (
-      |  SELECT doc_id, cand AS pred FROM (
-      |    SELECT doc_id, cand, row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, cand) AS rn
-      |    FROM scores) WHERE rn = 1),
-      |cm AS (
-      |  SELECT d.lang AS actual, coalesce(b.pred, 'unknown') AS pred,
-      |    CAST(count(*) AS BIGINT) AS n
-      |  FROM (SELECT doc_id, lang FROM documents WHERE doc_id % 5 = 4) d
-      |  LEFT JOIN best b USING (doc_id) GROUP BY 1, 2),
-      |ra AS (SELECT actual AS cls, CAST(sum(n) AS BIGINT) AS n_actual FROM cm GROUP BY actual),
-      |rp AS (SELECT pred AS cls, CAST(sum(n) AS BIGINT) AS n_pred FROM cm GROUP BY pred),
-      |marg AS (
-      |  SELECT coalesce(ra.cls, rp.cls) AS cls,
-      |    coalesce(n_actual, 0) AS n_actual, coalesce(n_pred, 0) AS n_pred
-      |  FROM ra FULL OUTER JOIN rp ON ra.cls = rp.cls),
-      |tp AS (SELECT actual AS cls, CAST(sum(n) AS BIGINT) AS tp FROM cm
-      |       WHERE actual = pred GROUP BY actual),
-      |tot AS (
-      |  SELECT (SELECT CAST(sum(n) AS BIGINT) FROM cm) AS n_tot,
-      |    (SELECT CAST(coalesce(sum(tp), 0) AS BIGINT) FROM tp) AS diag,
-      |    (SELECT sum(CAST(n_actual AS HUGEINT) * n_pred) FROM marg) AS pe_num),
-      |k AS (
-      |  SELECT CASE WHEN CAST(n_tot AS HUGEINT) * n_tot - pe_num <> 0
-      |    THEN CAST(floor(1000.0 *
-      |      CAST(CAST(n_tot AS HUGEINT) * diag - pe_num AS DOUBLE) /
-      |      CAST(CAST(n_tot AS HUGEINT) * n_tot - pe_num AS DOUBLE)) AS BIGINT)
-      |    END AS kappa_milli
-      |  FROM tot)
-      |SELECT m.cls, m.n_actual, m.n_pred, coalesce(t.tp, 0) AS tp,
-      |  CASE WHEN m.n_pred > 0 THEN (1000000 * coalesce(t.tp, 0)) // m.n_pred END AS prec_ppm,
-      |  CASE WHEN m.n_actual > 0 THEN (1000000 * coalesce(t.tp, 0)) // m.n_actual END AS rec_ppm,
-      |  CASE WHEN m.n_actual + m.n_pred > 0
-      |       THEN (2000 * coalesce(t.tp, 0)) // (m.n_actual + m.n_pred) END AS f1_milli,
-      |  k.kappa_milli
-      |FROM marg m LEFT JOIN tp t ON t.cls = m.cls, k
-      |ORDER BY m.cls""".stripMargin) { (s, dir) =>
+    s"""WITH $langIdPredSql,
+       |cm AS (
+       |  SELECT d.lang AS actual, coalesce(b.pred, 'unknown') AS pred,
+       |    CAST(count(*) AS BIGINT) AS n
+       |  FROM (SELECT doc_id, lang FROM documents WHERE doc_id % 5 = 4) d
+       |  LEFT JOIN best b USING (doc_id) GROUP BY 1, 2),
+       |ra AS (SELECT actual AS cls, CAST(sum(n) AS BIGINT) AS n_actual FROM cm GROUP BY actual),
+       |rp AS (SELECT pred AS cls, CAST(sum(n) AS BIGINT) AS n_pred FROM cm GROUP BY pred),
+       |marg AS (
+       |  SELECT coalesce(ra.cls, rp.cls) AS cls,
+       |    coalesce(n_actual, 0) AS n_actual, coalesce(n_pred, 0) AS n_pred
+       |  FROM ra FULL OUTER JOIN rp ON ra.cls = rp.cls),
+       |tp AS (SELECT actual AS cls, CAST(sum(n) AS BIGINT) AS tp FROM cm
+       |       WHERE actual = pred GROUP BY actual),
+       |tot AS (
+       |  SELECT (SELECT CAST(sum(n) AS BIGINT) FROM cm) AS n_tot,
+       |    (SELECT CAST(coalesce(sum(tp), 0) AS BIGINT) FROM tp) AS diag,
+       |    (SELECT sum(CAST(n_actual AS HUGEINT) * n_pred) FROM marg) AS pe_num),
+       |k AS (
+       |  SELECT CASE WHEN CAST(n_tot AS HUGEINT) * n_tot - pe_num <> 0
+       |    THEN CAST(floor(1000.0 *
+       |      CAST(CAST(n_tot AS HUGEINT) * diag - pe_num AS DOUBLE) /
+       |      CAST(CAST(n_tot AS HUGEINT) * n_tot - pe_num AS DOUBLE)) AS BIGINT)
+       |    END AS kappa_milli
+       |  FROM tot)
+       |SELECT m.cls, m.n_actual, m.n_pred, coalesce(t.tp, 0) AS tp,
+       |  CASE WHEN m.n_pred > 0 THEN (1000000 * coalesce(t.tp, 0)) // m.n_pred END AS prec_ppm,
+       |  CASE WHEN m.n_actual > 0 THEN (1000000 * coalesce(t.tp, 0)) // m.n_actual END AS rec_ppm,
+       |  CASE WHEN m.n_actual + m.n_pred > 0
+       |       THEN (2000 * coalesce(t.tp, 0)) // (m.n_actual + m.n_pred) END AS f1_milli,
+       |  k.kappa_milli
+       |FROM marg m LEFT JOIN tp t ON t.cls = m.cls, k
+       |ORDER BY m.cls""".stripMargin) { (s, dir) =>
     val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val cm = langIdConfusion(s, dir) // memoized + checkpointed; shared with q22
     val ra = cm.groupBy(col("actual").as("cls")).agg(sum(col("n")).as("n_actual"))
@@ -1396,52 +1425,33 @@ object TextAnalysis {
     * bucket axis; no window ever sees fact-sized data. */
   val q190HeapsLaw: QueryDef = QueryDef(
     "q190_heaps_law",
-    """WITH mx AS (SELECT max(doc_id) AS maxid FROM documents),
-      |t AS (
-      |  SELECT least(19, (20 * d.doc_id) // (mx.maxid + 1)) AS bucket,
-      |    unnest(list_transform(range(1, len(string_split(d.text, ' ')) - 1),
-      |      i -> string_split(d.text, ' ')[i] || ' ' ||
-      |           string_split(d.text, ' ')[i+1] || ' ' ||
-      |           string_split(d.text, ' ')[i+2])) AS tri
-      |  FROM documents d, mx),
-      |per AS (
-      |  SELECT bucket, CAST(count(*) AS BIGINT) AS n_tri
-      |  FROM t GROUP BY bucket),
-      |nv AS (
-      |  SELECT fb AS bucket, CAST(count(*) AS BIGINT) AS n_new
-      |  FROM (SELECT tri, min(bucket) AS fb FROM t GROUP BY tri)
-      |  GROUP BY fb),
-      |cum AS (
-      |  SELECT p.bucket,
-      |    CAST(sum(p.n_tri) OVER (ORDER BY p.bucket
-      |         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS tok_cum,
-      |    CAST(sum(coalesce(nv.n_new, 0)) OVER (ORDER BY p.bucket
-      |         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS voc_cum
-      |  FROM per p LEFT JOIN nv ON nv.bucket = p.bucket),
-      |xy AS (
-      |  SELECT CAST(floor(1000000000.0 * ln(CAST(tok_cum AS DOUBLE))) AS BIGINT) AS x,
-      |    CAST(floor(1000000000.0 * ln(CAST(voc_cum AS DOUBLE))) AS BIGINT) AS y
-      |  FROM cum),
-      |m AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS n,
-      |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-      |    sum(CAST(x AS HUGEINT) * y) AS sxy,
-      |    sum(CAST(x AS HUGEINT) * x) AS sxx,
-      |    sum(CAST(y AS HUGEINT) * y) AS syy
-      |  FROM xy)
-      |SELECT n AS n_points,
-      |  CAST(floor(1000.0 *
-      |    CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE) /
-      |    CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE)) AS BIGINT)
-      |    AS beta_milli,
-      |  CAST(floor(1000000.0 *
-      |    (CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE) *
-      |     CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)) /
-      |    (CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE) *
-      |     CAST(n * syy - CAST(sy AS HUGEINT) * sy AS DOUBLE))) AS BIGINT)
-      |    AS r2_ppm
-      |FROM m""".stripMargin) { (s, dir) =>
-    val dec = (c: Column) => c.cast("decimal(38,0)")
+    s"""WITH mx AS (SELECT max(doc_id) AS maxid FROM documents),
+       |t AS (
+       |  SELECT least(19, (20 * d.doc_id) // (mx.maxid + 1)) AS bucket,
+       |    unnest(list_transform(range(1, len(string_split(d.text, ' ')) - 1),
+       |      i -> string_split(d.text, ' ')[i] || ' ' ||
+       |           string_split(d.text, ' ')[i+1] || ' ' ||
+       |           string_split(d.text, ' ')[i+2])) AS tri
+       |  FROM documents d, mx),
+       |per AS (
+       |  SELECT bucket, CAST(count(*) AS BIGINT) AS n_tri
+       |  FROM t GROUP BY bucket),
+       |nv AS (
+       |  SELECT fb AS bucket, CAST(count(*) AS BIGINT) AS n_new
+       |  FROM (SELECT tri, min(bucket) AS fb FROM t GROUP BY tri)
+       |  GROUP BY fb),
+       |cum AS (
+       |  SELECT p.bucket,
+       |    CAST(sum(p.n_tri) OVER (ORDER BY p.bucket
+       |         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS tok_cum,
+       |    CAST(sum(coalesce(nv.n_new, 0)) OVER (ORDER BY p.bucket
+       |         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS voc_cum
+       |  FROM per p LEFT JOIN nv ON nv.bucket = p.bucket),
+       |xy AS (
+       |  SELECT CAST(floor(1000000000.0 * ln(CAST(tok_cum AS DOUBLE))) AS BIGINT) AS x,
+       |    CAST(floor(1000000000.0 * ln(CAST(voc_cum AS DOUBLE))) AS BIGINT) AS y
+       |  FROM cum),
+       |${logLogFitSql("n_points", "beta_milli")}""".stripMargin) { (s, dir) =>
     val docs = Corpus.tokenized(s, dir) // shared corpus tokenize
     val mx = docs.agg(max(col("doc_id")).as("maxid"))
       .ckpt() // 1-row frame; keeps the max pass out of both shingle scans
@@ -1474,21 +1484,7 @@ object TextAnalysis {
           .cast("bigint").as("x"),
         floor(lit(1000000000.0) * log(col("voc_cum").cast("double")))
           .cast("bigint").as("y"))
-    val m = xy.agg(count(lit(1)).as("n"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(dec(col("x")) * col("y")).as("sxy"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("y")) * col("y")).as("syy"))
-    val num = (dec(col("n")) * col("sxy") - dec(col("sx")) * col("sy"))
-      .cast("double")
-    val dx = (dec(col("n")) * col("sxx") - dec(col("sx")) * col("sx"))
-      .cast("double")
-    val dy = (dec(col("n")) * col("syy") - dec(col("sy")) * col("sy"))
-      .cast("double")
-    m.select(col("n").as("n_points"),
-      floor(lit(1000.0) * num / dx).cast("bigint").as("beta_milli"),
-      floor(lit(1000000.0) * (num * num) / (dx * dy))
-        .cast("bigint").as("r2_ppm"))
+    logLogFit(xy, "n_points", "beta_milli")
   }
 
   /** q197 — keyword extraction by chi-square keyness: for each
@@ -1706,69 +1702,35 @@ object TextAnalysis {
     * left to Spark, two 1-row broadcast frames, |langs| output. */
   val q215KnPpl: QueryDef = QueryDef(
     "q215_kn_ppl",
-    """WITH tr AS (
-      |  SELECT string_split(text, ' ') AS tk FROM documents
-      |  WHERE doc_id % 2 = 0),
-      |te AS (
-      |  SELECT lang, string_split(text, ' ') AS tk FROM documents
-      |  WHERE doc_id % 2 = 1),
-      |u AS (SELECT unnest(tk) AS x FROM tr),
-      |v AS (SELECT CAST(count(DISTINCT x) AS BIGINT) AS vs FROM u),
-      |c1 AS (SELECT x, CAST(count(*) AS BIGINT) AS c FROM u GROUP BY x),
-      |c2 AS (
-      |  SELECT tk[CAST(i AS INT)] AS x, tk[CAST(i AS INT)+1] AS y,
-      |    CAST(count(*) AS BIGINT) AS c
-      |  FROM tr, unnest(range(1, len(tk))) AS r(i) GROUP BY 1, 2),
-      |n1p AS (SELECT x, CAST(count(*) AS BIGINT) AS n FROM c2 GROUP BY x),
-      |ncy AS (SELECT y, CAST(count(*) AS BIGINT) AS n FROM c2 GROUP BY y),
-      |tt AS (SELECT CAST(count(*) AS BIGINT) AS t FROM c2),
-      |tb AS (
-      |  SELECT lang, tk[CAST(i AS INT)] AS x, tk[CAST(i AS INT)+1] AS y,
-      |    CAST(count(*) AS BIGINT) AS m
-      |  FROM te, unnest(range(1, len(tk))) AS r(i) GROUP BY 1, 2, 3),
-      |sc AS (
-      |  SELECT tb.lang, tb.m,
-      |    CASE WHEN c1.c IS NULL OR n1p.n IS NULL THEN 1 ELSE 0 END AS oov_ctx,
-      |    CAST(floor(1000000000.0 * (-ln(
-      |      CASE WHEN c1.c IS NULL OR n1p.n IS NULL
-      |        THEN (CAST(coalesce(ncy.n, 0) AS DOUBLE) + 1.0) / (CAST(tt.t AS DOUBLE) + v.vs)
-      |        ELSE CAST(greatest(4 * coalesce(c2.c, 0) - 3, 0) AS DOUBLE) / (4.0 * c1.c)
-      |          + ((3.0 * n1p.n) / (4.0 * c1.c))
-      |            * ((CAST(coalesce(ncy.n, 0) AS DOUBLE) + 1.0) / (CAST(tt.t AS DOUBLE) + v.vs))
-      |      END))) AS BIGINT) AS nll_nn
-      |  FROM tb LEFT JOIN c2 ON tb.x = c2.x AND tb.y = c2.y
-      |  LEFT JOIN c1 ON tb.x = c1.x
-      |  LEFT JOIN n1p ON tb.x = n1p.x
-      |  LEFT JOIN ncy ON tb.y = ncy.y, tt, v)
-      |SELECT lang, CAST(sum(m) AS BIGINT) AS n_bigrams,
-      |  CAST(sum(m * oov_ctx) AS BIGINT) AS n_oov_ctx,
-      |  CAST(sum(CAST(m AS HUGEINT) * nll_nn) //
-      |       CAST(sum(m) AS HUGEINT) AS BIGINT) AS avg_nll_nn
-      |FROM sc GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
-    val tk = col("tk")
-    def bigrams(df: DataFrame, extra: Seq[Column]): DataFrame =
-      df.filter(size(tk) >= 2)
-        .select(extra :+ explode(zip_with(
-          slice(tk, lit(1), size(tk) - 1),
-          slice(tk, lit(2), size(tk) - 1),
-          (x, y) => struct(x.as("x"), y.as("y")))).as("p"): _*)
-        .select(extra :+ col("p.x").as("x") :+ col("p.y").as("y"): _*)
-    val docs = Tables.documents(s, dir)
-      .repartition(col("doc_id")) // single-file scan -> use every core
-      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("tk"))
-    val tr = docs.filter(col("doc_id") % 2 === 0)
-    val te = docs.filter(col("doc_id") % 2 === 1)
-    val uni = tr.select(explode(tk).as("x"))
-    val v = uni.agg(count_distinct(col("x")).as("vs"))
-    val c1 = uni.groupBy(col("x")).agg(count(lit(1)).as("c1c"))
-    val c2 = bigrams(tr, Seq.empty)
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("c2c"))
-      .ckpt() // feeds n1p, ncy, tt AND the score join
+    s"""WITH $bigramLmSql,
+       |n1p AS (SELECT x, CAST(count(*) AS BIGINT) AS n FROM c2 GROUP BY x),
+       |ncy AS (SELECT y, CAST(count(*) AS BIGINT) AS n FROM c2 GROUP BY y),
+       |tt AS (SELECT CAST(count(*) AS BIGINT) AS t FROM c2),
+       |${bigramCountsSql("tb", "te", Seq("lang"), "m")},
+       |sc AS (
+       |  SELECT tb.lang, tb.m,
+       |    CASE WHEN c1.c IS NULL OR n1p.n IS NULL THEN 1 ELSE 0 END AS oov_ctx,
+       |    CAST(floor(1000000000.0 * (-ln(
+       |      CASE WHEN c1.c IS NULL OR n1p.n IS NULL
+       |        THEN (CAST(coalesce(ncy.n, 0) AS DOUBLE) + 1.0) / (CAST(tt.t AS DOUBLE) + v.vs)
+       |        ELSE CAST(greatest(4 * coalesce(c2.c, 0) - 3, 0) AS DOUBLE) / (4.0 * c1.c)
+       |          + ((3.0 * n1p.n) / (4.0 * c1.c))
+       |            * ((CAST(coalesce(ncy.n, 0) AS DOUBLE) + 1.0) / (CAST(tt.t AS DOUBLE) + v.vs))
+       |      END))) AS BIGINT) AS nll_nn
+       |  FROM tb LEFT JOIN c2 ON tb.x = c2.x AND tb.y = c2.y
+       |  LEFT JOIN c1 ON tb.x = c1.x
+       |  LEFT JOIN n1p ON tb.x = n1p.x
+       |  LEFT JOIN ncy ON tb.y = ncy.y, tt, v)
+       |SELECT lang, CAST(sum(m) AS BIGINT) AS n_bigrams,
+       |  CAST(sum(m * oov_ctx) AS BIGINT) AS n_oov_ctx,
+       |  CAST(sum(CAST(m AS HUGEINT) * nll_nn) //
+       |       CAST(sum(m) AS HUGEINT) AS BIGINT) AS avg_nll_nn
+       |FROM sc GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
+    val (v, c1, c2Counts, tb) = bigramLm(s, dir)
+    val c2 = c2Counts.ckpt() // feeds n1p, ncy, tt AND the score join
     val n1p = c2.groupBy(col("x")).agg(count(lit(1)).as("n1pn"))
     val ncy = c2.groupBy(col("y")).agg(count(lit(1)).as("ncyn"))
     val tt = c2.agg(count(lit(1)).as("t"))
-    val tb = bigrams(te, Seq(col("lang")))
-      .groupBy(col("lang"), col("x"), col("y")).agg(count(lit(1)).as("m"))
     tb.join(c2, Seq("x", "y"), "left")
       .join(c1, Seq("x"), "left")
       .join(n1p, Seq("x"), "left")
@@ -1865,66 +1827,53 @@ object TextAnalysis {
     * q181; the fit runs on 4 rows. */
   val q221ScalingLaw: QueryDef = QueryDef(
     "q221_scaling_law",
-    """WITH sz AS (SELECT CAST(unnest([2, 4, 8, 16]) AS BIGINT) AS s),
-      |tr AS (
-      |  SELECT sz.s, string_split(text, ' ') AS tk
-      |  FROM documents CROSS JOIN sz
-      |  WHERE doc_id % 2 = 0 AND (doc_id // 2) % (sz.s // 2) = 0),
-      |te AS (
-      |  SELECT string_split(text, ' ') AS tk FROM documents
-      |  WHERE doc_id % 2 = 1),
-      |u AS (SELECT s, unnest(tk) AS x FROM tr),
-      |v AS (SELECT s, CAST(count(DISTINCT x) AS BIGINT) AS vs,
-      |      CAST(count(*) AS BIGINT) AS toks FROM u GROUP BY s),
-      |c1 AS (SELECT s, x, CAST(count(*) AS BIGINT) AS c FROM u GROUP BY 1, 2),
-      |c2 AS (
-      |  SELECT s, tk[CAST(i AS INT)] AS x, tk[CAST(i AS INT)+1] AS y,
-      |    CAST(count(*) AS BIGINT) AS c
-      |  FROM tr, unnest(range(1, len(tk))) AS r(i) GROUP BY 1, 2, 3),
-      |tb AS (
-      |  SELECT tk[CAST(i AS INT)] AS x, tk[CAST(i AS INT)+1] AS y,
-      |    CAST(count(*) AS BIGINT) AS m
-      |  FROM te, unnest(range(1, len(tk))) AS r(i) GROUP BY 1, 2),
-      |sc AS (
-      |  SELECT v.s, tb.m,
-      |    CAST(floor(1000000000.0 *
-      |      (-ln(CAST(coalesce(c2.c, 0) + 1 AS DOUBLE) /
-      |           CAST(coalesce(c1.c, 0) + v.vs AS DOUBLE)))) AS BIGINT) AS nll_nn
-      |  FROM tb CROSS JOIN v
-      |  LEFT JOIN c2 ON c2.s = v.s AND tb.x = c2.x AND tb.y = c2.y
-      |  LEFT JOIN c1 ON c1.s = v.s AND tb.x = c1.x),
-      |pt AS (
-      |  SELECT sc.s, v.toks,
-      |    CAST(sum(CAST(m AS HUGEINT) * nll_nn) // CAST(sum(m) AS HUGEINT)
-      |         AS BIGINT) AS avg_nll_nn
-      |  FROM sc JOIN v ON v.s = sc.s GROUP BY sc.s, v.toks),
-      |lg AS (
-      |  SELECT s, toks, avg_nll_nn,
-      |    CAST(floor(1000000000.0 * ln(CAST(toks AS DOUBLE))) AS BIGINT) AS lx,
-      |    CAST(floor(1000000000.0 * ln(CAST(avg_nll_nn AS DOUBLE) / 1000000000.0))
-      |         AS BIGINT) AS ly
-      |  FROM pt),
-      |fit AS (
-      |  SELECT CAST(floor((CAST(CAST(count(*) AS HUGEINT) * sum(CAST(lx AS HUGEINT) * ly)
-      |                          - CAST(sum(lx) AS HUGEINT) * sum(ly) AS DOUBLE) * 1000.0)
-      |             / CAST(CAST(count(*) AS HUGEINT) * sum(CAST(lx AS HUGEINT) * lx)
-      |                          - CAST(sum(lx) AS HUGEINT) * sum(lx) AS DOUBLE))
-      |       AS BIGINT) AS b_milli
-      |  FROM lg)
-      |SELECT CAST(s AS BIGINT) AS model, toks AS train_tokens, avg_nll_nn,
-      |  NULL AS b_milli
-      |FROM lg
-      |UNION ALL
-      |SELECT 0, NULL, NULL, b_milli FROM fit
-      |ORDER BY model""".stripMargin) { (s, dir) =>
+    s"""WITH sz AS (SELECT CAST(unnest([2, 4, 8, 16]) AS BIGINT) AS s),
+       |tr AS (
+       |  SELECT sz.s, string_split(text, ' ') AS tk
+       |  FROM documents CROSS JOIN sz
+       |  WHERE doc_id % 2 = 0 AND (doc_id // 2) % (sz.s // 2) = 0),
+       |te AS (
+       |  SELECT string_split(text, ' ') AS tk FROM documents
+       |  WHERE doc_id % 2 = 1),
+       |u AS (SELECT s, unnest(tk) AS x FROM tr),
+       |v AS (SELECT s, CAST(count(DISTINCT x) AS BIGINT) AS vs,
+       |      CAST(count(*) AS BIGINT) AS toks FROM u GROUP BY s),
+       |c1 AS (SELECT s, x, CAST(count(*) AS BIGINT) AS c FROM u GROUP BY 1, 2),
+       |${bigramCountsSql("c2", "tr", Seq("s"), "c")},
+       |${bigramCountsSql("tb", "te", Seq.empty, "m")},
+       |sc AS (
+       |  SELECT v.s, tb.m,
+       |    CAST(floor(1000000000.0 *
+       |      (-ln(CAST(coalesce(c2.c, 0) + 1 AS DOUBLE) /
+       |           CAST(coalesce(c1.c, 0) + v.vs AS DOUBLE)))) AS BIGINT) AS nll_nn
+       |  FROM tb CROSS JOIN v
+       |  LEFT JOIN c2 ON c2.s = v.s AND tb.x = c2.x AND tb.y = c2.y
+       |  LEFT JOIN c1 ON c1.s = v.s AND tb.x = c1.x),
+       |pt AS (
+       |  SELECT sc.s, v.toks,
+       |    CAST(sum(CAST(m AS HUGEINT) * nll_nn) // CAST(sum(m) AS HUGEINT)
+       |         AS BIGINT) AS avg_nll_nn
+       |  FROM sc JOIN v ON v.s = sc.s GROUP BY sc.s, v.toks),
+       |lg AS (
+       |  SELECT s, toks, avg_nll_nn,
+       |    CAST(floor(1000000000.0 * ln(CAST(toks AS DOUBLE))) AS BIGINT) AS lx,
+       |    CAST(floor(1000000000.0 * ln(CAST(avg_nll_nn AS DOUBLE) / 1000000000.0))
+       |         AS BIGINT) AS ly
+       |  FROM pt),
+       |fit AS (
+       |  SELECT CAST(floor((CAST(CAST(count(*) AS HUGEINT) * sum(CAST(lx AS HUGEINT) * ly)
+       |                          - CAST(sum(lx) AS HUGEINT) * sum(ly) AS DOUBLE) * 1000.0)
+       |             / CAST(CAST(count(*) AS HUGEINT) * sum(CAST(lx AS HUGEINT) * lx)
+       |                          - CAST(sum(lx) AS HUGEINT) * sum(lx) AS DOUBLE))
+       |       AS BIGINT) AS b_milli
+       |  FROM lg)
+       |SELECT CAST(s AS BIGINT) AS model, toks AS train_tokens, avg_nll_nn,
+       |  NULL AS b_milli
+       |FROM lg
+       |UNION ALL
+       |SELECT 0, NULL, NULL, b_milli FROM fit
+       |ORDER BY model""".stripMargin) { (s, dir) =>
     val tk = col("tk")
-    def bigrams(df: DataFrame, extra: Seq[Column]): DataFrame =
-      df.filter(size(tk) >= 2)
-        .select(extra :+ explode(zip_with(
-          slice(tk, lit(1), size(tk) - 1),
-          slice(tk, lit(2), size(tk) - 1),
-          (x, y) => struct(x.as("x"), y.as("y")))).as("p"): _*)
-        .select(extra :+ col("p.x").as("x") :+ col("p.y").as("y"): _*)
     val docs = Tables.documents(s, dir)
       .repartition(col("doc_id"))
       .select(col("doc_id"), split(col("text"), " ").as("tk"))
@@ -3448,6 +3397,82 @@ object TextAnalysis {
     }
   }
 
+  /** Per-doc features of the three binary document-quality raters
+    * (doc_id, len, ttr, mwl): length in chars, type-token ratio and
+    * mean word length, both in milli units. One token pass per doc. */
+  private[operators] def raterFeatures(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .select(col("doc_id"), length(col("text")).cast("bigint").as("len"),
+        split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), col("len"),
+        expr("(1000 * CAST(size(array_distinct(toks)) AS BIGINT)) div " +
+          "CAST(size(toks) AS BIGINT)").as("ttr"),
+        expr("(1000 * (len - CAST(size(toks) AS BIGINT) + 1)) div " +
+          "CAST(size(toks) AS BIGINT)").as("mwl"))
+
+  /** The oracle side of [[raterFeatures]]: the CTE `f`. */
+  private[operators] def raterFeaturesSql: String =
+    """f AS (
+      |  SELECT doc_id, CAST(length(text) AS BIGINT) AS len,
+      |    (1000 * CAST(len(list_distinct(string_split(text, ' ')))
+      |      AS BIGINT)) // CAST(len(string_split(text, ' ')) AS BIGINT)
+      |      AS ttr,
+      |    (1000 * (CAST(length(text) AS BIGINT) -
+      |      CAST(len(string_split(text, ' ')) AS BIGINT) + 1)) //
+      |      CAST(len(string_split(text, ' ')) AS BIGINT) AS mwl
+      |  FROM documents)""".stripMargin
+
+  /** The (axis, v) value domains of the three rater features with
+    * their counts `cnt`: ONE map-side ×3 expand into a
+    * partial-aggregable groupBy, never a per-axis (value,count)²
+    * θ-join (O(|domain|²), and data-dependent for `len`). */
+  private[operators] def raterDomains(f: DataFrame, cnt: String): DataFrame =
+    f.select(explode(array(
+        struct(lit("len").as("axis"), col("len").as("v")),
+        struct(lit("ttr").as("axis"), col("ttr").as("v")),
+        struct(lit("mwl").as("axis"), col("mwl").as("v")))).as("e"))
+      .select(col("e.axis").as("axis"), col("e.v").as("v"))
+      .groupBy(col("axis"), col("v")).agg(count(lit(1)).as(cnt))
+
+  /** The rater features `f` (checkpointed), the doc count `nn` (nd) and
+    * the 1-row exact medians (med_len, med_ttr, med_mwl): lower
+    * medians as the least value whose running count reaches
+    * ⌈nd/2⌉, from ONE grouped two-level prefix sum over
+    * [[raterDomains]]. */
+  private def raterMedians(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val f = raterFeatures(s, dir)
+      .ckpt() // one feature pass feeds the median cuts + votes
+    val nn = f.agg(count(lit(1)).as("nd"))
+    val meds = ScaleRank.withRunningSum(raterDomains(f, "cnt"), Seq("axis"),
+        Seq(col("v")), col("cnt"), "cum")
+      .crossJoin(broadcast(nn))
+      .filter(expr("cum >= (nd + 1) div 2"))
+      .groupBy(col("axis")).agg(min(col("v")).as("med"))
+      .agg(max(when(col("axis") === "len", col("med"))).as("med_len"),
+        max(when(col("axis") === "ttr", col("med"))).as("med_ttr"),
+        max(when(col("axis") === "mwl", col("med"))).as("med_mwl"))
+    (f, nn, meds)
+  }
+
+  /** The oracle side of [[raterMedians]]: the CTEs `f`, `nn` and, per
+    * axis, the domain `<axis>d` and the median `<axis>m` (med). */
+  private def raterMediansSql: String = {
+    def medCte(v: String) =
+      s"""${v}d AS (SELECT $v AS v, CAST(count(*) AS BIGINT) AS cnt
+         |  FROM f GROUP BY 1),
+         |${v}m AS (
+         |  SELECT min(a.v) AS med FROM (
+         |    SELECT a.v, sum(b.cnt) AS cum
+         |    FROM ${v}d a JOIN ${v}d b ON b.v <= a.v GROUP BY a.v) a, nn
+         |  WHERE a.cum >= (nn.nd + 1) // 2)""".stripMargin
+    s"""$raterFeaturesSql,
+       |nn AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM f),
+       |${medCte("len")},
+       |${medCte("ttr")},
+       |${medCte("mwl")}""".stripMargin
+  }
+
   /** q378 — Fleiss' κ multi-rater agreement (Fleiss '71) over three
     * independent document-quality heuristics: above-median character
     * length, above-median type-token ratio, above-median mean word
@@ -3480,29 +3505,9 @@ object TextAnalysis {
       "(1.0e0 - CAST(s1 AS DOUBLE) / (3.0e0 * CAST(nd AS DOUBLE))) * " +
       "(1.0e0 - CAST(s1 AS DOUBLE) / (3.0e0 * CAST(nd AS DOUBLE)))))) " +
       "AS BIGINT) END"
-    def medCte(src: String, v: String) =
-      s"""${v}d AS (SELECT $v AS v, CAST(count(*) AS BIGINT) AS cnt
-         |  FROM $src GROUP BY 1),
-         |${v}m AS (
-         |  SELECT min(a.v) AS med FROM (
-         |    SELECT a.v, sum(b.cnt) AS cum
-         |    FROM ${v}d a JOIN ${v}d b ON b.v <= a.v GROUP BY a.v) a, nn
-         |  WHERE a.cum >= (nn.nd + 1) // 2)""".stripMargin
     QueryDef(
       "q378_fleiss_kappa",
-      s"""WITH f AS (
-         |  SELECT doc_id, CAST(length(text) AS BIGINT) AS len,
-         |    (1000 * CAST(len(list_distinct(string_split(text, ' ')))
-         |      AS BIGINT)) // CAST(len(string_split(text, ' ')) AS BIGINT)
-         |      AS ttr,
-         |    (1000 * (CAST(length(text) AS BIGINT) -
-         |      CAST(len(string_split(text, ' ')) AS BIGINT) + 1)) //
-         |      CAST(len(string_split(text, ' ')) AS BIGINT) AS mwl
-         |  FROM documents),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM f),
-         |${medCte("f", "len")},
-         |${medCte("f", "ttr")},
-         |${medCte("f", "mwl")},
+      s"""WITH $raterMediansSql,
          |votes AS (
          |  SELECT doc_id,
          |    (CASE WHEN f.len > lenm.med THEN 1 ELSE 0 END +
@@ -3523,35 +3528,7 @@ object TextAnalysis {
          |  agg.p_len, agg.p_ttr, agg.p_mwl,
          |  $kap AS kappa_micro
          |FROM nn, agg""".stripMargin) { (s, dir) =>
-      val f = Tables.documents(s, dir)
-        .select(col("doc_id"), length(col("text")).cast("bigint").as("len"),
-          split(col("text"), " ").as("toks"))
-        .select(col("doc_id"), col("len"),
-          expr("(1000 * CAST(size(array_distinct(toks)) AS BIGINT)) div " +
-            "CAST(size(toks) AS BIGINT)").as("ttr"),
-          expr("(1000 * (len - CAST(size(toks) AS BIGINT) + 1)) div " +
-            "CAST(size(toks) AS BIGINT)").as("mwl"))
-        .ckpt() // one feature pass feeds three median cuts + votes
-      val nn = f.agg(count(lit(1)).as("nd"))
-      // ONE domain collapse for all three heuristics (map-side ×3
-      // expand), then ONE grouped two-level prefix sum for the three
-      // exact medians (q379/q385 discipline) — the `len` domain grows
-      // with max doc length, so a (value,count)² θ-join would be
-      // O(|D|²)
-      val dAll = f.select(explode(array(
-          struct(lit("len").as("axis"), col("len").as("v")),
-          struct(lit("ttr").as("axis"), col("ttr").as("v")),
-          struct(lit("mwl").as("axis"), col("mwl").as("v")))).as("e"))
-        .select(col("e.axis").as("axis"), col("e.v").as("v"))
-        .groupBy(col("axis"), col("v")).agg(count(lit(1)).as("cnt"))
-      val meds = ScaleRank.withRunningSum(dAll, Seq("axis"),
-          Seq(col("v")), col("cnt"), "cum")
-        .crossJoin(broadcast(nn))
-        .filter(expr("cum >= (nd + 1) div 2"))
-        .groupBy(col("axis")).agg(min(col("v")).as("med"))
-        .agg(max(when(col("axis") === "len", col("med"))).as("med_len"),
-          max(when(col("axis") === "ttr", col("med"))).as("med_ttr"),
-          max(when(col("axis") === "mwl", col("med"))).as("med_mwl"))
+      val (f, nn, meds) = raterMedians(s, dir)
       val votes = f
         .crossJoin(broadcast(meds))
         .select(
@@ -3600,29 +3577,9 @@ object TextAnalysis {
       "CAST(c3 AS DOUBLE) * CAST(c3 AS DOUBLE)) - " +
       "CAST(nv AS DOUBLE) * CAST(nv AS DOUBLE)) / " +
       "(3.0e0 * CAST(nv AS DOUBLE) - CAST(sr2 AS DOUBLE))) AS BIGINT)"
-    def medCte(src: String, v: String) =
-      s"""${v}d AS (SELECT $v AS v, CAST(count(*) AS BIGINT) AS cnt
-         |  FROM $src GROUP BY 1),
-         |${v}m AS (
-         |  SELECT min(a.v) AS med FROM (
-         |    SELECT a.v, sum(b.cnt) AS cum
-         |    FROM ${v}d a JOIN ${v}d b ON b.v <= a.v GROUP BY a.v) a, nn
-         |  WHERE a.cum >= (nn.nd + 1) // 2)""".stripMargin
     QueryDef(
       "q396_cochran_q",
-      s"""WITH f AS (
-         |  SELECT doc_id, CAST(length(text) AS BIGINT) AS len,
-         |    (1000 * CAST(len(list_distinct(string_split(text, ' ')))
-         |      AS BIGINT)) // CAST(len(string_split(text, ' ')) AS BIGINT)
-         |      AS ttr,
-         |    (1000 * (CAST(length(text) AS BIGINT) -
-         |      CAST(len(string_split(text, ' ')) AS BIGINT) + 1)) //
-         |      CAST(len(string_split(text, ' ')) AS BIGINT) AS mwl
-         |  FROM documents),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM f),
-         |${medCte("f", "len")},
-         |${medCte("f", "ttr")},
-         |${medCte("f", "mwl")},
+      s"""WITH $raterMediansSql,
          |votes AS (
          |  SELECT
          |    CASE WHEN f.len > lenm.med THEN 1 ELSE 0 END AS v1,
@@ -3642,30 +3599,7 @@ object TextAnalysis {
          |  CASE WHEN $qChain > 5991 THEN 1 ELSE 0 END AS reject_5pct
          |FROM nn, agg WHERE 3 * nv - sr2 > 0""".stripMargin) { (s, dir) =>
       val dec = (c: Column) => c.cast("decimal(38,0)")
-      val f = Tables.documents(s, dir)
-        .select(col("doc_id"), length(col("text")).cast("bigint").as("len"),
-          split(col("text"), " ").as("toks"))
-        .select(col("doc_id"), col("len"),
-          expr("(1000 * CAST(size(array_distinct(toks)) AS BIGINT)) div " +
-            "CAST(size(toks) AS BIGINT)").as("ttr"),
-          expr("(1000 * (len - CAST(size(toks) AS BIGINT) + 1)) div " +
-            "CAST(size(toks) AS BIGINT)").as("mwl"))
-        .ckpt() // one feature pass feeds the median cuts + votes
-      val nn = f.agg(count(lit(1)).as("nd"))
-      val dAll = f.select(explode(array(
-          struct(lit("len").as("axis"), col("len").as("v")),
-          struct(lit("ttr").as("axis"), col("ttr").as("v")),
-          struct(lit("mwl").as("axis"), col("mwl").as("v")))).as("e"))
-        .select(col("e.axis").as("axis"), col("e.v").as("v"))
-        .groupBy(col("axis"), col("v")).agg(count(lit(1)).as("cnt"))
-      val meds = ScaleRank.withRunningSum(dAll, Seq("axis"),
-          Seq(col("v")), col("cnt"), "cum")
-        .crossJoin(broadcast(nn))
-        .filter(expr("cum >= (nd + 1) div 2"))
-        .groupBy(col("axis")).agg(min(col("v")).as("med"))
-        .agg(max(when(col("axis") === "len", col("med"))).as("med_len"),
-          max(when(col("axis") === "ttr", col("med"))).as("med_ttr"),
-          max(when(col("axis") === "mwl", col("med"))).as("med_mwl"))
+      val (f, nn, meds) = raterMedians(s, dir)
       val votes = f.crossJoin(broadcast(meds))
         .select(when(col("len") > col("med_len"), 1L).otherwise(0L).as("v1"),
           when(col("ttr") > col("med_ttr"), 1L).otherwise(0L).as("v2"),

@@ -156,5 +156,20 @@ class YamlConfigSpec extends AnyFunSuite {
         |      csv_separator: ';'
         |""".stripMargin))
     assert(e2.getMessage.contains("original_fields"))
+    // an empty or wrongly typed field names its key path as well
+    val fields = Map("csv_separator" -> "';'", "original_fields" -> "{acc: acc_number}",
+      "surrogate_key_columns" -> "[acc_number]", "desired_fields" -> "[acc_number]")
+    val rows = Seq(
+      "csv_separator" -> "",
+      "debit_multiplier" -> "{D: minus}",
+      "surrogate_key_columns" -> "b",
+      "desired_fields" -> "[acc_number, null]",
+      "debit_multiplier" -> "{D: 3000000000}")
+    for ((key, value) <- rows) {
+      val bank = (fields + (key -> value)).map { case (k, v) => s"      $k: $v" }
+      val e3 = intercept[IllegalArgumentException](loadEtlConfig(
+        ("file_pattern: 'x'\nmapping:\n  stm:\n    bank1:" +: bank.toSeq).mkString("\n")))
+      assert(e3.getMessage.contains(s"mapping.stm.bank1.$key"), s"$key: $value -> ${e3.getMessage}")
+    }
   }
 }

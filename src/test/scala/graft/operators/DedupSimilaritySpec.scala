@@ -125,6 +125,22 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(rows.contains((0L, 1L)))
   }
 
+  test("q34: spark.graft.q34.kernelMaxRows = 0 takes the shuffle arm, same rows") {
+    def run(): (String, Seq[Row]) = {
+      val df = Dedup.q34NgramJaccard.build(spark, dir)
+      (df.queryExecution.executedPlan.toString, df.collect().toSeq)
+    }
+    val (kernelPlan, kernelRows) = run()
+    spark.conf.set("spark.graft.q34.kernelMaxRows", "0")
+    val (shufflePlan, shuffleRows) =
+      try run() finally spark.conf.unset("spark.graft.q34.kernelMaxRows")
+    // the kernel arm streams pairs out of a MapPartitions over a doc
+    // Range; the shuffle arm self-joins the hashed-key rows instead
+    assert(kernelPlan.contains("MapPartitions") && kernelPlan.contains("Range"), kernelPlan)
+    assert(!shufflePlan.contains("MapPartitions") && shufflePlan.contains("Join"), shufflePlan)
+    assert(kernelRows.nonEmpty && shuffleRows == kernelRows)
+  }
+
   test("q145: multi-probe recall is monotone in nprobe and the probes do find neighbors") {
     // candidate sets are nested by construction (crank <= np), so
     // recall and candidate count must be non-decreasing per query —

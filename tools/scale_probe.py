@@ -110,7 +110,7 @@ def loadavg():
         return []
 
 
-def bench(sf_dir, probe=None):
+def bench(sf_dir, probe=None, conf=None):
     # sf1/sf3 run 10-30x the bench data through ONE JVM whose default
     # heap (8g) is sized for sf0.1 — the r10 Corpus/DayAxis shared
     # checkpoints pushed the sf3 graph heavies over it (BlockManager
@@ -123,8 +123,12 @@ def bench(sf_dir, probe=None):
     # poisoned stage is identifiable from the committed artifact alone
     print(f"  loadavg at stage start: {' '.join(loadavg())}")
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_DRIVER_MEM=mem)
+    # session conf for the forked Bench JVM: SparkConf reads -Dspark.*
+    sets = [f'set javaOptions += "-D{k}={v}"'
+            for k, v in (conf or {}).items()]
     r = subprocess.run(
-        ["sbt", "-batch", f"runMain graft.Bench {','.join(probe or PROBE)}"],
+        ["sbt", "-batch", *sets,
+         f"runMain graft.Bench {','.join(probe or PROBE)}"],
         cwd="/root/repo", env=env, capture_output=True, text=True)
     if r.returncode != 0:
         print(r.stdout[-4000:], r.stderr[-2000:])
@@ -149,11 +153,11 @@ def main():
     # q34's dual path: the default dispatch rides the in-memory
     # postings kernel at every probe scale (rows <= 8M), so probe the
     # SHUFFLE (any-scale) arm explicitly by forcing the dispatch off
-    print("bench @ sf0.1 + sf1, q34 shuffle arm (GRAFT_Q34_KERNEL_MAX=0) ...")
-    os.environ["GRAFT_Q34_KERNEL_MAX"] = "0"
-    shuf_base = bench(SRC, ["q34_ngram_jaccard"])
-    shuf_big = bench(DST, ["q34_ngram_jaccard"])
-    del os.environ["GRAFT_Q34_KERNEL_MAX"]
+    print("bench @ sf0.1 + sf1, q34 shuffle arm "
+          "(spark.graft.q34.kernelMaxRows=0) ...")
+    shuffle_arm = {"spark.graft.q34.kernelMaxRows": 0}
+    shuf_base = bench(SRC, ["q34_ngram_jaccard"], shuffle_arm)
+    shuf_big = bench(DST, ["q34_ngram_jaccard"], shuffle_arm)
     print(f"bench @ sf3 (steep trio: {', '.join(STEEP)}) ...")
     big3 = bench(DST3, STEEP)
     rows = []
