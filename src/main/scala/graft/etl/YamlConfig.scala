@@ -25,7 +25,7 @@ import scala.jdk.CollectionConverters._
 object YamlConfig {
 
   /** Parse YAML text into Map[String, Any] / Vector[Any] / String /
-    * Long / Double / Boolean / null. Maps preserve key order (the
+    * Long / BigInt (an integer beyond Long) / Double / Boolean / null. Maps preserve key order (the
     * reference's `original_fields` keys double as a projection) and
     * their keys are strings. Malformed YAML is an
     * IllegalArgumentException carrying SnakeYAML's line/column mark. */
@@ -47,6 +47,7 @@ object YamlConfig {
     case null | (_: String) | (_: java.lang.Boolean) | (_: java.lang.Double) => v
     case i: java.lang.Integer => i.toLong
     case l: java.lang.Long => l.longValue
+    case b: java.math.BigInteger => BigInt(b)
     case c: AnyRef if seen.containsKey(c) =>
       Option(seen.get(c)).getOrElse(throw new IllegalArgumentException("YAML: recursive alias"))
     case c: AnyRef =>
@@ -72,7 +73,7 @@ object YamlConfig {
       s"config $path is not $want (got ${if (got == null) "null" else s"'$got'"})"))
 
   private def str(path: String)(v: Any): String = bind(path, "a scalar") {
-    case x @ (_: String | _: Long | _: Double | _: Boolean) => x.toString
+    case x @ (_: String | _: Long | _: BigInt | _: Double | _: Boolean) => x.toString
   }(v)
   private def strSeq(path: String)(v: Any): Seq[String] = bind(path, "a list") {
     case xs: Vector[Any] @unchecked => xs.zipWithIndex.map { case (x, i) => str(s"$path[$i]")(x) }

@@ -119,14 +119,12 @@ object Dedup {
       .filter(col("inter") * 2 >= col("na") + col("nb") - col("inter"))
       .select(col("a"), col("b"))
 
-  /** The oracle side of [[jaccardTruth]]: [[shinglePairsSql]] plus the
-    * CTE `truth` (a, b), MATERIALIZED where asked. */
-  private def jaccardTruthSql(materialized: Boolean): String =
-    s"""$shinglePairsSql,
-       |truth AS ${if (materialized) "MATERIALIZED " else ""}(
-       |  SELECT pi.a, pi.b
-       |  FROM pi JOIN sz za ON pi.a = za.doc_id JOIN sz zb ON pi.b = zb.doc_id
-       |  WHERE inter * 2 >= za.n + zb.n - inter)""".stripMargin
+  /** The oracle side of [[jaccardTruth]]: the body of a CTE `truth`
+    * (a, b) over [[shinglePairsSql]]'s `sz` and `pi`. */
+  private def jaccardTruthSql: String =
+    """SELECT pi.a, pi.b
+      |  FROM pi JOIN sz za ON pi.a = za.doc_id JOIN sz zb ON pi.b = zb.doc_id
+      |  WHERE inter * 2 >= za.n + zb.n - inter""".stripMargin
 
   /** MinHash signature matrix, pivoted: one row per doc with h0..h7 =
     * min over shingles of the k-th disjoint 8-hex-char slice of a
@@ -1133,7 +1131,9 @@ object Dedup {
          |  FROM toks, unnest(range(1, len(t)-1)) AS u(i) WHERE len(t) >= 3),
          |mh AS (SELECT doc_id, $mhOracleMins FROM sh GROUP BY doc_id),
          |srows AS (SELECT DISTINCT doc_id, shingle FROM sh),
-         |${jaccardTruthSql(materialized = true)},
+         |$shinglePairsSql,
+         |truth AS MATERIALIZED (
+         |  $jaccardTruthSql),
          |bks AS (${shapes.map(bucketSelects).mkString(" UNION ALL ")}),
          |cand AS MATERIALIZED (
          |  SELECT DISTINCT a.bands, a.doc_id AS a, b.doc_id AS b
@@ -1434,7 +1434,9 @@ object Dedup {
        |ds AS (
        |  SELECT doc_id, lang, text, n_chars FROM documents WHERE doc_id % 2 = 0),
        |srows AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE doc_id % 2 = 0),
-       |${jaccardTruthSql(materialized = false)},
+       |$shinglePairsSql,
+       |truth AS (
+       |  $jaccardTruthSql),
        |keys AS (
        |  SELECT doc_id, 'len100' AS strategy, CAST(n_chars // 100 AS VARCHAR) AS k FROM ds
        |  UNION ALL
@@ -2172,7 +2174,9 @@ object Dedup {
     s"""WITH $mhOracleCte,
        |$lshCandOracleCte,
        |srows AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE doc_id % 2 = 0),
-       |${jaccardTruthSql(materialized = false)},
+       |$shinglePairsSql,
+       |truth AS (
+       |  $jaccardTruthSql),
        |sc AS (SELECT a, b FROM cand WHERE a % 2 = 0 AND b % 2 = 0),
        |hit AS (SELECT t.a, t.b FROM truth t JOIN sc ON t.a = sc.a AND t.b = sc.b),
        |m AS (

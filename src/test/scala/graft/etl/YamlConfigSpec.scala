@@ -164,7 +164,8 @@ class YamlConfigSpec extends AnyFunSuite {
       "debit_multiplier" -> "{D: minus}",
       "surrogate_key_columns" -> "b",
       "desired_fields" -> "[acc_number, null]",
-      "debit_multiplier" -> "{D: 3000000000}")
+      "debit_multiplier" -> "{D: 3000000000}",
+      "debit_multiplier" -> "{D: 99999999999999999999}")
     for ((key, value) <- rows) {
       val bank = (fields + (key -> value)).map { case (k, v) => s"      $k: $v" }
       val e3 = intercept[IllegalArgumentException](loadEtlConfig(

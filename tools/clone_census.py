@@ -19,7 +19,7 @@ Prints one row per family (covered, removable, where the copies sit and
 which query definitions enclose them), then the totals. A measurement
 only: it gates nothing.
 
-    python3 tools/clone_census.py [--window 8] [--min-chars 120] [root ...]
+    python3 tools/clone_census.py [root ...]
 """
 import argparse
 import collections
@@ -28,6 +28,8 @@ import re
 import sys
 
 QUERY_RE = re.compile(r'QueryDef\(\s*"([^"]+)"')
+WINDOW = 8
+MIN_CHARS = 120
 VAL_RE = re.compile(r'^\s*(?:private\s+|lazy\s+|private\[\w+\]\s+)*(?:val|def)\s+(\w+)')
 
 
@@ -68,13 +70,13 @@ def enclosing_names(path):
     return names
 
 
-def census(roots, window, min_chars):
+def census(roots):
     files = {p: normalized(p) for p in scala_files(roots)}
     where = collections.defaultdict(list)  # window text -> [(path, index)]
     for p, lines in files.items():
-        for k in range(len(lines) - window + 1):
-            text = '\n'.join(t for _, t in lines[k:k + window])
-            if len(text) - (window - 1) >= min_chars:
+        for k in range(len(lines) - WINDOW + 1):
+            text = '\n'.join(t for _, t in lines[k:k + WINDOW])
+            if len(text) - (WINDOW - 1) >= MIN_CHARS:
                 where[text].append((p, k))
     dup = {t: locs for t, locs in where.items() if len(locs) >= 2}
     dup_at = {(p, k): t for t, locs in dup.items() for p, k in locs}
@@ -117,7 +119,7 @@ def census(roots, window, min_chars):
         spans = []
         for p, a, b in members:
             lines = files[p]
-            first, last = a, b + window - 1
+            first, last = a, b + WINDOW - 1
             spans.append((p, lines[first][0], lines[last][0], last - first + 1,
                           sorted({enclosing[p][lines[i][0]] or '?' for i in (first, last)})))
         covered = sum(s[3] for s in spans)
@@ -130,10 +132,8 @@ def census(roots, window, min_chars):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split('\n')[0])
     ap.add_argument('roots', nargs='*', default=['src/main'])
-    ap.add_argument('--window', type=int, default=8)
-    ap.add_argument('--min-chars', type=int, default=120)
     args = ap.parse_args()
-    rows = census(args.roots, args.window, args.min_chars)
+    rows = census(args.roots)
     for n, (removable, covered, spans) in enumerate(rows, 1):
         print(f'family {n}: covered {covered}, removable {removable}')
         for p, lo, hi, cnt, names in spans:
